@@ -26,8 +26,4 @@ object ColUtil {
 
   /** Exact sum of a money-scale double, returned as double. */
   def dsum(c: Column): Column = sum(money(c)).cast("double")
-
-  /** Exact average: decimal sum cast to double, divided by count (double
-    * division of identical operands is bit-deterministic in both engines). */
-  def davg(c: Column): Column = sum(money(c)).cast("double") / count(lit(1))
 }

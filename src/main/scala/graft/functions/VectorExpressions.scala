@@ -316,10 +316,6 @@ object VectorFunctions {
       FloatVectorDot(ColumnBridge.expression(a),
         ColumnBridge.expression(b)))
 
-  /** L2 norm via the native dot. */
-  def vec_norm(a: Column): Column =
-    org.apache.spark.sql.functions.sqrt(vec_dot(a, a))
-
   /** Column API for [[LongVectorDot]] (exact integer accumulation). */
   def vec_dot_long(a: Column, b: Column): Column =
     ColumnBridge.column(

@@ -262,15 +262,6 @@ object Dedup {
     survivors.drop("__sig").unionByName(shorties)
   }
 
-  /** Distinct word-k-shingles, exploded: (id, shingle). The inverted-index
-    * backbone for the near-dup operators (native codegen'd shingling —
-    * graft.functions.WordShingles). */
-  def explodedShingles(df: DataFrame, id: Column, text: Column, k: Int)
-      : DataFrame =
-    df.select(id.as("doc_id"),
-        explode(TextAnalysis.shingles(text, k)).as("shingle"))
-      .distinct()
-
   /** Exact n-gram Jaccard similarity pairs >= tau via inverted-index
     * self-join (candidates only materialize for docs sharing a shingle).
     *

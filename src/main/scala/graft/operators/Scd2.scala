@@ -111,7 +111,7 @@ object Scd2 {
         import graft.sinks.VersionedTable
         val spark = batch.sparkSession
         val next =
-          if (VersionedTable.versions(spark, root).isEmpty)
+          if (VersionedTable.headVersion(spark, root).isEmpty)
             init(batch, batchId + 1)
           else applyChanges(VersionedTable.read(spark, root), batch, keys,
             batchId + 1)

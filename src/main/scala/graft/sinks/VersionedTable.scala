@@ -3,7 +3,7 @@ package graft.sinks
 import java.nio.charset.StandardCharsets
 import java.util.UUID
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.analysis
 import org.apache.spark.sql.catalyst.expressions
@@ -176,18 +176,68 @@ object VersionedTable {
     } finally in.close()
   }
 
+  /** The `v<N>.json` entries of `_manifests/` as (N, status), ascending,
+    * valid or not (claims and rebase temps are not entries). One
+    * listing; no manifest is opened. */
+  private def listed(f: FileSystem, root: String): Seq[(Long, FileStatus)] =
+    (try f.listStatus(manifestDir(root)).toSeq
+    catch { case _: java.io.FileNotFoundException => Seq.empty })
+      .filter { st =>
+        val n = st.getPath.getName
+        n.startsWith("v") && n.endsWith(".json")
+      }
+      .map(st => st.getPath.getName.stripPrefix("v").stripSuffix(".json")
+        .toLong -> st)
+      .sortBy(_._1)
+
+  /** Every committed (valid) manifest, ascending by version — for the
+    * callers that need the whole log, not just the head. */
+  private def manifests(f: FileSystem, root: String): Seq[(Long, Manifest)] =
+    listed(f, root).flatMap { case (v, st) =>
+      readManifestRaw(f, st.getPath).map(v -> _) }
+
   /** All committed (valid) versions, ascending. */
-  def versions(spark: SparkSession, root: String): Seq[Long] = {
-    val f = fs(spark, root)
-    if (!f.exists(manifestDir(root))) Seq.empty
-    else f.listStatus(manifestDir(root)).toSeq
-      .map(_.getPath)
-      .collect { case p
-        if p.getName.startsWith("v") && p.getName.endsWith(".json") &&
-          readManifestRaw(f, p).isDefined =>
-        p.getName.stripPrefix("v").stripSuffix(".json").toLong }
-      .sorted
+  def versions(spark: SparkSession, root: String): Seq[Long] =
+    manifests(fs(spark, root), root).map(_._1)
+
+  /** The head as (version, manifest): one listing, then manifests read
+    * newest-first until one is valid — by construction the manifest of
+    * `versions(...).max`, without opening the older ones. Committed
+    * manifests are immutable, so an operation resolves the head once
+    * and hands it along. None on a table with no committed version. */
+  private def resolveHead(f: FileSystem, root: String)
+      : Option[(Long, Manifest)] =
+    listed(f, root).reverseIterator.flatMap { case (v, st) =>
+      readManifestRaw(f, st.getPath).map(v -> _) }.nextOption()
+
+  /** The head version, or None when nothing is committed under `root`. */
+  private[graft] def headVersion(spark: SparkSession, root: String)
+      : Option[Long] =
+    resolveHead(fs(spark, root), root).map(_._1)
+
+  /** Version `v`'s manifest; only `vN.json` is opened. A missing or
+    * invalid manifest is not a version — the rule [[versions]] applies. */
+  private def manifestAt(f: FileSystem, root: String, v: Long)
+      : Option[Manifest] =
+    readManifestRaw(f, manifestPath(root, v))
+
+  private def noCommit(root: String) =
+    new IllegalArgumentException(s"no committed version under $root")
+
+  /** `version` with its manifest, or the head when `version` is None.
+    * Fails naming the version when it is not committed, and with "no
+    * committed version" when nothing is. */
+  private def resolve(f: FileSystem, root: String,
+      version: Option[Long] = None): (Long, Manifest) = version match {
+    case None => resolveHead(f, root).getOrElse(throw noCommit(root))
+    case Some(v) => manifestAt(f, root, v).map(v -> _).getOrElse(
+      throw (if (resolveHead(f, root).isEmpty) noCommit(root)
+      else new IllegalArgumentException(
+        s"version $v is not committed under $root")))
   }
+
+  private def filesOf(head: Option[Manifest]): Seq[String] =
+    head.fold(Seq.empty[String])(_.files)
 
   /** Rewrite every committed manifest's file references that point
     * under `oldRoot` to the same relative location under `newRoot` —
@@ -253,11 +303,6 @@ object VersionedTable {
     }
   }
 
-  private def manifest(f: FileSystem, root: String, v: Long): Manifest =
-    readManifestRaw(f, manifestPath(root, v))
-      .getOrElse(throw new IllegalStateException(
-        s"manifest v$v under $root is missing or unterminated"))
-
   // ---- column mapping (round 10) ------------------------------------
   // RENAME COLUMN without rewriting data needs a level of indirection:
   // each field's PHYSICAL name (what the parquet files store, what the
@@ -306,7 +351,6 @@ object VersionedTable {
     * [[dropColumns]]). */
   def renameColumn(spark: SparkSession, root: String, from: String,
       to: String): Long = {
-    val f = fs(spark, root)
     require(to.nonEmpty && !to.exists(c => c == '\t' || c == '\n'),
       s"bad column name '$to'")
     var schema: StructType = null
@@ -316,10 +360,8 @@ object VersionedTable {
     // set inside the closure below is what the manifest write sees)
     var propsOverride: Option[Seq[(String, String)]] = None
     commitRetrying(spark, root, schema,
-      propertiesOverride = propsOverride) { prev =>
-      val vs = versions(spark, root)
-      require(vs.nonEmpty, s"no committed version under $root")
-      val m = manifest(f, root, vs.max)
+      propertiesOverride = propsOverride) { h =>
+      val m = h.getOrElse(throw noCommit(root))
       val head = m.schema
       require(head.fieldNames.exists(_.equalsIgnoreCase(from)),
         s"renameColumn: no such column '$from'")
@@ -348,7 +390,7 @@ object VersionedTable {
             if (c.equalsIgnoreCase(from)) to else c).mkString(",")
         case other => other
       })
-      prev // files unchanged: pure metadata commit
+      m.files // files unchanged: pure metadata commit
     }
   }
 
@@ -374,12 +416,9 @@ object VersionedTable {
     * and compact first). */
   def widenColumnType(spark: SparkSession, root: String, name: String,
       newType: DataType): Long = {
-    val f = fs(spark, root)
     var schema: StructType = null
-    commitRetrying(spark, root, schema) { prev =>
-      val vs = versions(spark, root)
-      require(vs.nonEmpty, s"no committed version under $root")
-      val m = manifest(f, root, vs.max)
+    commitRetrying(spark, root, schema) { h =>
+      val m = h.getOrElse(throw noCommit(root))
       val fd = m.schema.fields.find(_.name.equalsIgnoreCase(name))
         .getOrElse(throw new IllegalArgumentException(
           s"widenColumnType: no such column '$name'"))
@@ -398,7 +437,7 @@ object VersionedTable {
       schema = StructType(m.schema.fields.map(x =>
         if (x.name.equalsIgnoreCase(name)) x.copy(dataType = newType)
         else x))
-      prev // files unchanged: pure metadata commit
+      m.files // files unchanged: pure metadata commit
     }
   }
 
@@ -408,11 +447,7 @@ object VersionedTable {
     * back with the schema persisted in its manifest. */
   def read(spark: SparkSession, root: String,
       version: Option[Long] = None): DataFrame = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed version under $root")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v), s"version $v not in $vs")
-    val m = manifest(fs(spark, root), root, v)
+    val (_, m) = resolve(fs(spark, root), root, version)
     readFiles(spark, m.schema, m.files)
   }
 
@@ -435,12 +470,7 @@ object VersionedTable {
     * write, if the source's retention may outrun the clone. */
   def cloneShallow(spark: SparkSession, srcRoot: String, dstRoot: String,
       asOf: Option[Long] = None): Long = {
-    val f = fs(spark, srcRoot)
-    val vs = versions(spark, srcRoot)
-    require(vs.nonEmpty, s"no committed version under $srcRoot")
-    val v = asOf.getOrElse(vs.max)
-    require(vs.contains(v), s"version $v not in $vs")
-    val m = manifest(f, srcRoot, v)
+    val (_, m) = resolve(fs(spark, srcRoot), srcRoot, asOf)
     // carry the source's per-file stats through the staged-stats cache
     // (the commit writer resolves stats for "new" files from there)
     m.stats.foreach { case (p, st) => stagedStats.put(p, st) }
@@ -465,11 +495,7 @@ object VersionedTable {
     * binary, matching Spark's). */
   def statsAgg(spark: SparkSession, root: String, cols: Seq[String],
       version: Option[Long] = None): DataFrame = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed version under $root")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v), s"version $v not in $vs")
-    val m = manifest(fs(spark, root), root, v)
+    val (_, m) = resolve(fs(spark, root), root, version)
     val fieldOf = m.schema.fields.map(fd => fd.name -> fd).toMap
     cols.foreach { c =>
       require(fieldOf.contains(c), s"no column $c in ${m.schema.simpleString}")
@@ -616,12 +642,12 @@ object VersionedTable {
   def history(spark: SparkSession, root: String): DataFrame = {
     val f = fs(spark, root)
     import spark.implicits._
-    versions(spark, root).map { v =>
-      val m = manifest(f, root, v)
-      val mtime = f.getFileStatus(manifestPath(root, v)).getModificationTime
-      val bytes = m.files.map(p => f.getFileStatus(new Path(p)).getLen).sum
-      (v, new java.sql.Timestamp(mtime), m.files.size, bytes, m.batchId,
-        m.opInfo)
+    listed(f, root).flatMap { case (v, st) =>
+      readManifestRaw(f, st.getPath).map { m =>
+        val bytes = m.files.map(p => f.getFileStatus(new Path(p)).getLen).sum
+        (v, new java.sql.Timestamp(st.getModificationTime), m.files.size,
+          bytes, m.batchId, m.opInfo)
+      }
     }.toDF("version", "commit_time", "n_files", "total_bytes", "batch_id",
       "operation")
   }
@@ -638,7 +664,7 @@ object VersionedTable {
     require(name.nonEmpty && name.matches("[A-Za-z0-9._-]+"),
       s"tag names are [A-Za-z0-9._-]+: '$name'")
     val f = fs(spark, root)
-    require(versions(spark, root).contains(version),
+    require(manifestAt(f, root, version).isDefined,
       s"cannot tag missing version $version under $root")
     val p = tagPath(root, name)
     f.mkdirs(tagDir(root))
@@ -709,11 +735,13 @@ object VersionedTable {
   private[graft] def versionAtOrBefore(spark: SparkSession, root: String,
       asOf: Long): Option[Long] = {
     val f = fs(spark, root)
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed version under $root")
-    vs.filter(v =>
-      f.getFileStatus(manifestPath(root, v)).getModificationTime <= asOf)
-      .maxOption
+    listed(f, root).reverseIterator.collect {
+      case (v, st) if st.getModificationTime <= asOf &&
+        readManifestRaw(f, st.getPath).isDefined => v
+    }.nextOption().orElse {
+      if (resolveHead(f, root).isEmpty) throw noCommit(root)
+      None
+    }
   }
 
   /** Pinned snapshot descriptor — version + schema + the manifest's
@@ -727,11 +755,7 @@ object VersionedTable {
 
   private[graft] def snapshot(spark: SparkSession, root: String,
       version: Option[Long] = None): Snapshot = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed version under $root")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v), s"version $v not in $vs")
-    val m = manifest(fs(spark, root), root, v)
+    val (v, m) = resolve(fs(spark, root), root, version)
     Snapshot(root, v, m.schema, m.files, m.stats)
   }
 
@@ -952,28 +976,30 @@ object VersionedTable {
   /** Write `df` as new data files and commit them as the next version,
     * REPLACING the table's content. Returns the committed version.
     * Files are staged ONCE; only the cheap claim retries on races. */
-  def write(df: DataFrame, root: String): Long = {
-    val staged = stageFiles(df, root)
-    commitRetrying(df.sparkSession, root, df.schema)(_ => staged)
-  }
+  def write(df: DataFrame, root: String): Long =
+    replace(df, root, None)
 
   /** [[write]] with initial table properties in the same commit (the
     * CREATE TABLE path: declared TBLPROPERTIES and the `CLUSTER BY`
     * spec land atomically with version 0). */
   def write(df: DataFrame, root: String,
-      properties: Seq[(String, String)]): Long = {
-    val staged = stageFiles(df, root)
-    commitRetrying(df.sparkSession, root, df.schema,
-      propertiesOverride = Some(properties))(_ => staged)
+      properties: Seq[(String, String)]): Long =
+    replace(df, root, Some(properties))
+
+  private def replace(df: DataFrame, root: String,
+      properties: Option[Seq[(String, String)]]): Long = {
+    val spark = df.sparkSession
+    val staged = stageFiles(df, root,
+      resolveHead(fs(spark, root), root).map(_._2))
+    commitRetrying(spark, root, df.schema,
+      propertiesOverride = properties)(_ => staged)
   }
 
   /** The head version's CHECK constraints, in declaration order. */
   def constraints(spark: SparkSession, root: String)
-      : Seq[(String, String)] = {
-    val vs = versions(spark, root)
-    if (vs.isEmpty) Nil
-    else manifest(fs(spark, root), root, vs.max).constraints
-  }
+      : Seq[(String, String)] =
+    resolveHead(fs(spark, root), root).fold(Seq.empty[(String, String)])(
+      _._2.constraints)
 
   /** Add a named CHECK constraint (ANSI semantics: a row violates only
     * when the expression evaluates to FALSE; NULL passes). Existing
@@ -993,20 +1019,17 @@ object VersionedTable {
       s"constraint name must be tab/newline-free: '$name'")
     require(exprSql.nonEmpty && !exprSql.exists(_ == '\n'),
       "constraint expression must be newline-free")
-    val f = fs(spark, root)
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed version under $root")
-    val head = manifest(f, root, vs.max)
+    val (_, head) = resolve(fs(spark, root), root)
     require(!head.constraints.exists(_._1 == name),
       s"constraint '$name' already exists")
-    val bad = read(spark, root)
+    val bad = readFiles(spark, head.schema, head.files)
       .filter(!coalesce(expr(exprSql), lit(true))).count()
     require(bad == 0L,
       s"cannot add constraint '$name' ($exprSql): $bad existing row(s) " +
         "violate it")
     commitRetrying(spark, root, head.schema,
       constraintsOverride = Some(head.constraints :+ (name -> exprSql)))(
-      prev => prev)
+      filesOf)
   }
 
   /** The head version's table properties (declaration-ordered). Unlike
@@ -1015,11 +1038,9 @@ object VersionedTable {
     * storage behind `ALTER TABLE SET TBLPROPERTIES` and the
     * `CLUSTER BY` clustering spec ([[ClusteringProp]]). */
   def tableProperties(spark: SparkSession, root: String)
-      : Seq[(String, String)] = {
-    val vs = versions(spark, root)
-    if (vs.isEmpty) Nil
-    else manifest(fs(spark, root), root, vs.max).properties
-  }
+      : Seq[(String, String)] =
+    resolveHead(fs(spark, root), root).fold(Seq.empty[(String, String)])(
+      _._2.properties)
 
   /** The manifest property key holding a table's declared clustering
     * columns (comma-separated) — written by `CREATE TABLE ... CLUSTER
@@ -1047,60 +1068,46 @@ object VersionedTable {
       require(!v.exists(c => c == '\t' || c == '\n'),
         s"property values must be tab/newline-free ('$k')")
     }
-    val f = fs(spark, root)
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed version under $root")
-    val head = manifest(f, root, vs.max)
+    val (_, head) = resolve(fs(spark, root), root)
     val merged = head.properties.filterNot(p =>
       kvs.exists(_._1 == p._1)) ++ kvs
     commitRetrying(spark, root, head.schema,
-      propertiesOverride = Some(merged))(prev => prev)
+      propertiesOverride = Some(merged))(filesOf)
   }
 
   /** Unset table properties (missing keys are ignored, matching SQL
     * `UNSET TBLPROPERTIES IF EXISTS` pragmatics). */
   def unsetProperties(spark: SparkSession, root: String,
       keys: Seq[String]): Long = {
-    val f = fs(spark, root)
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed version under $root")
-    val head = manifest(f, root, vs.max)
+    val (_, head) = resolve(fs(spark, root), root)
     commitRetrying(spark, root, head.schema,
       propertiesOverride = Some(head.properties.filterNot(p =>
-        keys.contains(p._1))))(prev => prev)
+        keys.contains(p._1))))(filesOf)
   }
 
   /** The head commit's operation record (the `#op:` marker JSON written
     * by row-level commits), if any — surfaced in `DESCRIBE EXTENDED`. */
-  def lastOperation(spark: SparkSession, root: String): Option[String] = {
-    val vs = versions(spark, root)
-    if (vs.isEmpty) None
-    else manifest(fs(spark, root), root, vs.max).opInfo
-  }
+  def lastOperation(spark: SparkSession, root: String): Option[String] =
+    resolveHead(fs(spark, root), root).flatMap(_._2.opInfo)
 
   /** Drop a named CHECK constraint (a new commit; time travel before
     * it still shows the constraint in force for those versions). */
   def dropConstraint(spark: SparkSession, root: String, name: String)
       : Long = {
-    val f = fs(spark, root)
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed version under $root")
-    val head = manifest(f, root, vs.max)
+    val (_, head) = resolve(fs(spark, root), root)
     require(head.constraints.exists(_._1 == name),
       s"no constraint named '$name'")
     commitRetrying(spark, root, head.schema,
       constraintsOverride = Some(head.constraints.filterNot(_._1 == name)))(
-      prev => prev)
+      filesOf)
   }
 
-  /** One aggregation pass counting violations of every head constraint
+  /** One aggregation pass counting violations of every `head` constraint
     * over `df`; throws naming the first violated constraint. No-op
     * (and no extra job) when the table has no constraints. */
-  private def enforceConstraints(df: DataFrame, root: String): Unit = {
-    val spark = df.sparkSession
-    val vs = versions(spark, root)
-    if (vs.isEmpty) return
-    val cons = manifest(fs(spark, root), root, vs.max).constraints
+  private def enforceConstraints(df: DataFrame,
+      head: Option[Manifest]): Unit = {
+    val cons = head.fold(Seq.empty[(String, String)])(_.constraints)
     if (cons.isEmpty) return
     val counts = cons.map { case (n, e) =>
       sum(when(!coalesce(expr(e), lit(true)), 1L).otherwise(0L)).as(n)
@@ -1121,16 +1128,15 @@ object VersionedTable {
     * head files (= dropped columns whose bytes are still live). The
     * mergeSchema evolve path REFUSES on collision — its files are
     * staged under the logical name before the schema resolves, so the
-    * fresh-physical remap [[addColumns]] uses is not available there. */
-  private def poisonedPhysical(f: FileSystem, root: String): Set[String] = {
-    val vs = versions(SparkSession.active, root)
-    if (vs.isEmpty) return Set.empty
-    val headM = manifest(f, root, vs.max)
+    * fresh-physical remap [[addColumns]] uses is not available there.
+    * Lower-cased. Scanning the head's own manifest too adds nothing: its
+    * identity names are live logical names. */
+  private def poisonedPhysical(f: FileSystem, root: String,
+      headM: Manifest): Set[String] = {
     val headFiles = headM.files.toSet
     (headM.schema.fields.collect {
       case fd if physicalName(fd) != fd.name => physicalName(fd)
-    } ++ vs.init.flatMap { v =>
-      val m = manifest(f, root, v)
+    } ++ manifests(f, root).flatMap { case (_, m) =>
       if (m.files.exists(headFiles.contains))
         m.schema.fields.map(physicalName)
       else Nil
@@ -1139,10 +1145,10 @@ object VersionedTable {
   }
 
   private def requireUnpoisoned(f: FileSystem, root: String,
-      head: StructType, widened: StructType): Unit = {
-    val newCols = widened.fields.drop(head.fields.length)
+      head: Manifest, widened: StructType): Unit = {
+    val newCols = widened.fields.drop(head.schema.fields.length)
     if (newCols.isEmpty) return
-    val poisoned = poisonedPhysical(f, root)
+    val poisoned = poisonedPhysical(f, root, head)
     val bad = newCols.map(_.name).filter(n =>
       poisoned.contains(n.toLowerCase(java.util.Locale.ROOT)))
     require(bad.isEmpty,
@@ -1160,16 +1166,14 @@ object VersionedTable {
       mergeSchema: Boolean = false): Long = {
     val spark = df.sparkSession
     val f = fs(spark, root)
-    val staged = stageFiles(df, root)
+    val staged = stageFiles(df, root, resolveHead(f, root).map(_._2))
     var schema: StructType = df.schema
-    commitRetrying(spark, root, schema) { prev =>
-      val vs = versions(spark, root)
-      if (vs.nonEmpty) {
-        val head = manifest(f, root, vs.max).schema
-        schema = evolve(head, df.schema, mergeSchema)
-        requireUnpoisoned(f, root, head, schema)
+    commitRetrying(spark, root, schema) { h =>
+      h.foreach { m =>
+        schema = evolve(m.schema, df.schema, mergeSchema)
+        requireUnpoisoned(f, root, m, schema)
       }
-      prev ++ staged
+      filesOf(h) ++ staged
     }
   }
 
@@ -1194,9 +1198,7 @@ object VersionedTable {
       removed: Set[String], written: Seq[String],
       opJson: Seq[String] => Option[String] = _ => None): Long = {
     val f = fs(spark, root)
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed version under $root")
-    val headM = manifest(f, root, vs.max)
+    val (_, headM) = resolve(f, root)
     val schema = headM.schema
     f.mkdirs(dataDir(root))
     val moved = written.map { p0 =>
@@ -1209,7 +1211,7 @@ object VersionedTable {
     val staged = if (statsOn && moved.nonEmpty) {
       // staged row-level files carry PHYSICAL column names (the write
       // factory got the physical schema) — stats keys must match
-      collectStats(spark, physicalSchema(schema), moved, root) match {
+      collectStats(spark, physicalSchema(schema), moved, Some(headM)) match {
         case Some(nonEmpty) =>
           val (keep, empty) = moved.partition(nonEmpty.contains)
           empty.foreach(p => f.delete(new Path(p), false))
@@ -1220,7 +1222,7 @@ object VersionedTable {
     // same staged-materialization discipline as stageFiles: validate
     // the exact bytes the commit will publish
     if (staged.nonEmpty)
-      enforceConstraints(readFiles(spark, schema, staged), root)
+      enforceConstraints(readFiles(spark, schema, staged), Some(headM))
     val removedQ = removed.map(p => new Path(p).toString)
     // WRITE-SIDE CHANGE LOG: a table that declared its identity keys
     // (ChangeFeedKeysProp) gets this commit's net row diff persisted
@@ -1240,7 +1242,8 @@ object VersionedTable {
     try commitRetrying(spark, root, schema,
       opInfo = opJson(staged).filterNot(j =>
         j.exists(c => c == '\t' || c == '\n')),
-      changesFile = changesFile) { prev =>
+      changesFile = changesFile) { h =>
+      val prev = filesOf(h)
       val prevSet = prev.map(p => new Path(p).toString).toSet
       val gone = removedQ.diff(prevSet)
       require(gone.isEmpty,
@@ -1277,10 +1280,8 @@ object VersionedTable {
     require(cols.map(_.name.toLowerCase(java.util.Locale.ROOT))
       .distinct.size == cols.size, "addColumns: duplicate new column names")
     var schema: StructType = null
-    commitRetrying(spark, root, schema) { prev =>
-      val vs = versions(spark, root)
-      require(vs.nonEmpty, s"no committed version under $root")
-      val headM = manifest(f, root, vs.max)
+    commitRetrying(spark, root, schema) { h =>
+      val headM = h.getOrElse(throw noCommit(root))
       val head = headM.schema
       val clash = cols.map(_.name).filter(n =>
         head.fieldNames.exists(_.equalsIgnoreCase(n)))
@@ -1295,17 +1296,12 @@ object VersionedTable {
       // physical name used by the head OR by any retained manifest
       // whose files are still live — old bytes are simply never
       // projected, and the re-added column reads NULL everywhere
-      // (Delta's column-mapping semantics).
-      val headFiles = headM.files.toSet
-      val usedPhysical: Set[String] =
-        (head.fields.map(physicalName) ++ vs.init.flatMap { v =>
-          val m = manifest(f, root, v)
-          if (m.files.exists(headFiles.contains))
-            m.schema.fields.map(physicalName)
-          else Nil
-        }).map(_.toLowerCase(java.util.Locale.ROOT)).toSet
+      // (Delta's column-mapping semantics). The new names clash with no
+      // head column, so the names they must avoid are exactly the
+      // poisoned ones.
+      val poisoned = poisonedPhysical(f, root, headM)
       val mapped = cols.map { c =>
-        if (!usedPhysical.contains(
+        if (!poisoned.contains(
             c.name.toLowerCase(java.util.Locale.ROOT))) c
         else c.copy(metadata = new MetadataBuilder()
           .withMetadata(c.metadata)
@@ -1314,7 +1310,7 @@ object VersionedTable {
           .build())
       }
       schema = StructType(head.fields ++ mapped)
-      prev // files unchanged: pure schema-evolution commit
+      headM.files // files unchanged: pure schema-evolution commit
     }
   }
 
@@ -1327,13 +1323,10 @@ object VersionedTable {
     * layer. */
   def dropColumns(spark: SparkSession, root: String,
       names: Seq[String]): Long = {
-    val f = fs(spark, root)
     require(names.nonEmpty, "dropColumns: no columns given")
     var schema: StructType = null
-    commitRetrying(spark, root, schema) { prev =>
-      val vs = versions(spark, root)
-      require(vs.nonEmpty, s"no committed version under $root")
-      val m = manifest(f, root, vs.max)
+    commitRetrying(spark, root, schema) { h =>
+      val m = h.getOrElse(throw noCommit(root))
       val head = m.schema
       val missing = names.filterNot(n =>
         head.fieldNames.exists(_.equalsIgnoreCase(n)))
@@ -1356,7 +1349,7 @@ object VersionedTable {
         names.exists(_.equalsIgnoreCase(fd.name)))
       require(keep.nonEmpty, "dropColumns: cannot drop every column")
       schema = StructType(keep)
-      prev // files unchanged: pure schema-evolution commit
+      m.files // files unchanged: pure schema-evolution commit
     }
   }
 
@@ -1375,23 +1368,22 @@ object VersionedTable {
       batchId: Long): Option[Long] = {
     val spark = df.sparkSession
     val f = fs(spark, root)
-    def committed: Boolean = versions(spark, root)
-      .exists(v => manifest(f, root, v).batchId.contains(batchId))
-    if (committed) None
+    def committed(ms: Seq[(Long, Manifest)]): Boolean =
+      ms.exists(_._2.batchId.contains(batchId))
+    val ms = manifests(f, root)
+    if (committed(ms)) None
     else {
-      val staged = stageFiles(df, root)
+      val staged = stageFiles(df, root, ms.lastOption.map(_._2))
       // re-check inside the loop: the commit that raced us may have
       // been THIS batch's earlier delivery finally landing
       var out: Option[Long] = None
       try {
         out = Some(commitRetrying(spark, root, df.schema,
-          batchMarker = Some(batchId)) { prev =>
-          if (committed) throw new BatchAlreadyCommitted
-          val vs = versions(spark, root)
-          if (vs.nonEmpty) // strict: a stream's schema must not drift
-            evolve(manifest(f, root, vs.max).schema, df.schema,
-              mergeSchema = false)
-          prev ++ staged
+          batchMarker = Some(batchId)) { h =>
+          if (committed(manifests(f, root))) throw new BatchAlreadyCommitted
+          h.foreach(m => // strict: a stream's schema must not drift
+            evolve(m.schema, df.schema, mergeSchema = false))
+          filesOf(h) ++ staged
         })
       } catch {
         case _: BatchAlreadyCommitted =>
@@ -1430,12 +1422,8 @@ object VersionedTable {
   def readAppended(spark: SparkSession, root: String, afterV: Long,
       toV: Option[Long] = None): DataFrame = {
     val f = fs(spark, root)
-    val vs = versions(spark, root)
-    require(vs.contains(afterV), s"version $afterV not in $vs")
-    val to = toV.getOrElse(vs.max)
-    require(vs.contains(to), s"version $to not in $vs")
-    val m = manifest(f, root, to)
-    val baseFiles = manifest(f, root, afterV).files.toSet
+    val baseFiles = resolve(f, root, Some(afterV))._2.files.toSet
+    val (_, m) = resolve(f, root, toV)
     val added = m.files.filterNot(baseFiles)
     readFiles(spark, m.schema, added)
   }
@@ -1455,53 +1443,29 @@ object VersionedTable {
       mergeSchema: Boolean = false): Long = {
     val spark = updates.sparkSession
     val f = fs(spark, root)
-    var lastStaged: Seq[String] = Seq.empty
     var outSchema: StructType = updates.schema
-    // change log (ChangeFeedKeysProp): rewrite commits on opted-in
-    // tables record their net diff so changeFeed reads are pure scans
-    val cdcKeys = if (versions(spark, root).isEmpty) None
-      else declaredCdcKeys(manifest(f, root, versions(spark, root).max))
-    var lastChanges: Option[String] = None
-    commitRetrying(spark, root, outSchema,
-      changesFile = lastChanges) { prev =>
-      // a lost race abandons the previous attempt's staged files —
-      // reclaim them now instead of leaving orphans for vacuum
-      lastStaged.foreach(p => f.delete(new Path(p), false))
-      lastChanges.foreach(cf =>
-        scala.util.Try(f.delete(new Path(cf), true)))
-      lastChanges = None
-      if (prev.isEmpty) { lastStaged = stageFiles(updates, root); lastStaged }
-      else {
-        val schema = manifest(f, root, versions(spark, root).max).schema
-        outSchema = evolve(schema, updates.schema, mergeSchema)
-        requireUnpoisoned(f, root, schema, outSchema)
-        val head = readFiles(spark, schema, prev)
-        // touched = files holding at least one matching key. The probe
-        // reads ONLY the key columns (+ file metadata) and the file
-        // list is driver-resident by construction, so the collect is
-        // bounded by |files|, not rows.
-        val touched = head
-          .select(col("_metadata.file_path").as("_f"),
-            struct(keys.map(col): _*).as("_k"))
-          .join(updates.select(struct(keys.map(col): _*).as("_k")).distinct(),
-            Seq("_k"), "left_semi")
-          .select(col("_f")).distinct().collect()
-          .map(r => new Path(r.getString(0)).toString).toSet
-        val keep = prev.filterNot(p => touched.contains(new Path(p).toString))
-        val rewrite = prev.filter(p => touched.contains(new Path(p).toString))
-        val merged =
-          if (rewrite.isEmpty) updates
-          else readFiles(spark, schema, rewrite)
-            .join(updates.select(keys.map(col): _*).distinct(), keys,
-              "left_anti")
-            .unionByName(updates, allowMissingColumns = mergeSchema)
-        lastStaged = stageFiles(merged, root)
-        lastChanges = cdcKeys.map { ks =>
-          val dataCols = outSchema.fieldNames.filterNot(ks.contains).toSeq
-          writeChanges(f, root, keyedDiff(
-            readFiles(spark, outSchema, rewrite),
-            readFiles(spark, outSchema, lastStaged), ks, dataCols)) }
-        keep ++ lastStaged
+    rewriteCommit(spark, root, outSchema) { h =>
+      h.filter(_.files.nonEmpty) match {
+        case None => (Nil, Some(updates))
+        case Some(m) =>
+          outSchema = evolve(m.schema, updates.schema, mergeSchema)
+          requireUnpoisoned(f, root, m, outSchema)
+          // touched = files holding at least one matching key. The probe
+          // reads ONLY the key columns (+ file metadata)
+          val rewrite = touchedFiles(m.files, readFiles(spark, m.schema,
+              m.files)
+            .select(col("_metadata.file_path").as("_f"),
+              struct(keys.map(col): _*).as("_k"))
+            .join(updates.select(struct(keys.map(col): _*).as("_k"))
+              .distinct(), Seq("_k"), "left_semi")
+            .select(col("_f")))
+          val merged =
+            if (rewrite.isEmpty) updates
+            else readFiles(spark, m.schema, rewrite)
+              .join(updates.select(keys.map(col): _*).distinct(), keys,
+                "left_anti")
+              .unionByName(updates, allowMissingColumns = mergeSchema)
+          (rewrite, Some(merged))
       }
     }
   }
@@ -1524,35 +1488,18 @@ object VersionedTable {
       matchedDelete: Option[Column], matchedUpdate: Map[String, Column],
       insertUnmatched: Boolean = true): Long = {
     val spark = source.sparkSession
-    val f = fs(spark, root)
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed version under $root")
-    val schema = manifest(f, root, vs.max).schema
+    val schema = resolve(fs(spark, root), root)._2.schema
     require(matchedUpdate.keySet.forall(schema.fieldNames.contains),
       s"update assigns unknown columns: " +
         s"${matchedUpdate.keySet -- schema.fieldNames}")
-    var lastStaged: Seq[String] = Seq.empty
-    // change log (ChangeFeedKeysProp): rewrite commits on opted-in
-    // tables record their net diff so changeFeed reads are pure scans
-    val cdcKeys = if (versions(spark, root).isEmpty) None
-      else declaredCdcKeys(manifest(f, root, versions(spark, root).max))
-    var lastChanges: Option[String] = None
-    commitRetrying(spark, root, schema,
-      changesFile = lastChanges) { prev =>
-      lastStaged.foreach(p => f.delete(new Path(p), false))
-      lastChanges.foreach(cf =>
-        scala.util.Try(f.delete(new Path(cf), true)))
-      lastChanges = None
-      val head = readFiles(spark, schema, prev)
-      val touched = head
+    rewriteCommit(spark, root, schema) { h =>
+      val prev = filesOf(h)
+      val rewrite = touchedFiles(prev, readFiles(spark, schema, prev)
         .select(col("_metadata.file_path").as("_f"),
           struct(keys.map(col): _*).as("_k"))
         .join(source.select(struct(keys.map(col): _*).as("_k")).distinct(),
           Seq("_k"), "left_semi")
-        .select(col("_f")).distinct().collect()
-        .map(r => new Path(r.getString(0)).toString).toSet
-      val keep = prev.filterNot(p => touched.contains(new Path(p).toString))
-      val rewrite = prev.filter(p => touched.contains(new Path(p).toString))
+        .select(col("_f")))
       val src = source.select(keys.map(col) ++
         source.columns.filterNot(keys.contains)
           .map(c => col(c).as(s"src_$c")): _*)
@@ -1587,13 +1534,7 @@ object VersionedTable {
           Some(unmatched)
         }
       val out = inserts.fold(rewritten)(rewritten.unionByName(_))
-      lastStaged = if (out.isEmpty) Seq.empty else stageFiles(out, root)
-      lastChanges = cdcKeys.map { ks =>
-        val dataCols = schema.fieldNames.filterNot(ks.contains).toSeq
-        writeChanges(f, root, keyedDiff(
-          readFiles(spark, schema, rewrite),
-          readFiles(spark, schema, lastStaged), ks, dataCols)) }
-      keep ++ lastStaged
+      (rewrite, Some(out).filterNot(_.isEmpty))
     }
   }
 
@@ -1604,45 +1545,17 @@ object VersionedTable {
     * over the table's columns. */
   def deleteWhere(spark: SparkSession, root: String,
       condition: Column): Long = {
-    val f = fs(spark, root)
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed version under $root")
-    val schema = manifest(f, root, vs.max).schema
-    var lastStaged: Seq[String] = Seq.empty
-    // change log (ChangeFeedKeysProp): rewrite commits on opted-in
-    // tables record their net diff so changeFeed reads are pure scans
-    val cdcKeys = if (versions(spark, root).isEmpty) None
-      else declaredCdcKeys(manifest(f, root, versions(spark, root).max))
-    var lastChanges: Option[String] = None
-    commitRetrying(spark, root, schema,
-      changesFile = lastChanges) { prev =>
-      lastStaged.foreach(p => f.delete(new Path(p), false))
-      lastChanges.foreach(cf =>
-        scala.util.Try(f.delete(new Path(cf), true)))
-      lastChanges = None
-      val head = readFiles(spark, schema, prev)
-      // DELETE semantics: remove rows where the predicate is TRUE; rows
-      // where it is FALSE or NULL stay (matching SQL DELETE)
-      val del = coalesce(condition, lit(false))
-      val touched = head
+    val schema = resolve(fs(spark, root), root)._2.schema
+    // DELETE semantics: remove rows where the predicate is TRUE; rows
+    // where it is FALSE or NULL stay (matching SQL DELETE)
+    val del = coalesce(condition, lit(false))
+    rewriteCommit(spark, root, schema) { h =>
+      val prev = filesOf(h)
+      val rewrite = touchedFiles(prev, readFiles(spark, schema, prev)
         .filter(del)
-        .select(col("_metadata.file_path").as("_f")).distinct().collect()
-        .map(r => new Path(r.getString(0)).toString).toSet
-      val keep = prev.filterNot(p => touched.contains(new Path(p).toString))
-      val rewrite = prev.filter(p => touched.contains(new Path(p).toString))
-      lastStaged =
-        if (rewrite.isEmpty) Seq.empty
-        else {
-          val remaining = readFiles(spark, schema, rewrite)
-            .filter(!del)
-          if (remaining.isEmpty) Seq.empty else stageFiles(remaining, root)
-        }
-      lastChanges = cdcKeys.map { ks =>
-        val dataCols = schema.fieldNames.filterNot(ks.contains).toSeq
-        writeChanges(f, root, keyedDiff(
-          readFiles(spark, schema, rewrite),
-          readFiles(spark, schema, lastStaged), ks, dataCols)) }
-      keep ++ lastStaged
+        .select(col("_metadata.file_path").as("_f")))
+      (rewrite, remainder(readFiles(spark, schema, rewrite).filter(!del),
+        rewrite))
     }
   }
 
@@ -1658,48 +1571,79 @@ object VersionedTable {
   def deleteMatching(spark: SparkSession, root: String,
       keyRows: DataFrame, keys: Seq[String]): Long = {
     require(keys.nonEmpty, "deleteMatching needs key columns")
-    val f = fs(spark, root)
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed version under $root")
-    val schema = manifest(f, root, vs.max).schema
+    val schema = resolve(fs(spark, root), root)._2.schema
     val delKeys = keyRows
       .select(keys.map(k => col(k).as("__dk_" + k)): _*)
       .distinct().localCheckpoint()
     def cond(left: DataFrame): Column =
       keys.map(k => left(k) <=> delKeys("__dk_" + k)).reduce(_ && _)
-    var lastStaged: Seq[String] = Seq.empty
-    // change log (ChangeFeedKeysProp): rewrite commits on opted-in
-    // tables record their net diff so changeFeed reads are pure scans
-    val cdcKeys = if (versions(spark, root).isEmpty) None
-      else declaredCdcKeys(manifest(f, root, versions(spark, root).max))
-    var lastChanges: Option[String] = None
-    commitRetrying(spark, root, schema,
-      changesFile = lastChanges) { prev =>
-      lastStaged.foreach(p => f.delete(new Path(p), false))
-      lastChanges.foreach(cf =>
-        scala.util.Try(f.delete(new Path(cf), true)))
-      lastChanges = None
+    rewriteCommit(spark, root, schema) { h =>
+      val prev = filesOf(h)
       val head = readFiles(spark, schema, prev)
-      val touched = head
+      val rewrite = touchedFiles(prev, head
         .join(delKeys, cond(head), "left_semi")
-        .select(col("_metadata.file_path").as("_f")).distinct().collect()
-        .map(r => new Path(r.getString(0)).toString).toSet
-      val keep = prev.filterNot(p => touched.contains(new Path(p).toString))
-      val rewrite = prev.filter(p => touched.contains(new Path(p).toString))
-      lastStaged =
-        if (rewrite.isEmpty) Seq.empty
-        else {
-          val rw = readFiles(spark, schema, rewrite)
-          val remaining = rw.join(delKeys, cond(rw), "left_anti")
-          if (remaining.isEmpty) Seq.empty else stageFiles(remaining, root)
-        }
-      lastChanges = cdcKeys.map { ks =>
-        val dataCols = schema.fieldNames.filterNot(ks.contains).toSeq
-        writeChanges(f, root, keyedDiff(
-          readFiles(spark, schema, rewrite),
-          readFiles(spark, schema, lastStaged), ks, dataCols)) }
-      keep ++ lastStaged
+        .select(col("_metadata.file_path").as("_f")))
+      val rw = readFiles(spark, schema, rewrite)
+      (rewrite, remainder(rw.join(delKeys, cond(rw), "left_anti"), rewrite))
     }
+  }
+
+  /** The head files `probe` names: `probe` is a one-column frame of
+    * `_metadata.file_path` values over rows of those files. The collect
+    * is bounded by |files|, not rows (the file list is driver-resident
+    * by construction). */
+  private def touchedFiles(files: Seq[String], probe: DataFrame)
+      : Seq[String] = {
+    val hit = probe.distinct().collect()
+      .map(r => new Path(r.getString(0)).toString).toSet
+    files.filter(p => hit.contains(new Path(p).toString))
+  }
+
+  /** The rows a delete leaves in the `rewrite` files, or None when there
+    * are none (a file left empty is dropped from the manifest). */
+  private def remainder(remaining: => DataFrame, rewrite: Seq[String])
+      : Option[DataFrame] =
+    if (rewrite.isEmpty) None
+    else Some(remaining).filterNot(_.isEmpty)
+
+  /** The copy-on-write commit loop behind [[upsert]], [[merge]],
+    * [[deleteWhere]], [[deleteMatching]], [[compact]] and
+    * [[compactZOrdered]]. Each attempt hands `plan` the head it resolved
+    * — merging against the CURRENT head, since a version race means
+    * another writer moved it and a stale snapshot would lose its rows.
+    * `plan` returns the head files to rewrite and the rows replacing
+    * them (None: nothing to stage). Those rows are staged, the other
+    * head files carry over by identity, and a table that declared
+    * [[ChangeFeedKeysProp]] records the commit's net diff so changeFeed
+    * reads are pure scans — EMPTY, without a join, for a `layoutOnly`
+    * rewrite, whose content is identical by construction. A lost race
+    * or a failure deletes the attempt's staged files and change log
+    * instead of leaving orphans for vacuum. */
+  private def rewriteCommit(spark: SparkSession, root: String,
+      schema: => StructType, layoutOnly: Boolean = false)(
+      plan: Option[Manifest] => (Seq[String], Option[DataFrame])): Long = {
+    val f = fs(spark, root)
+    var lastStaged: Seq[String] = Seq.empty
+    var lastChanges: Option[String] = None
+    def reclaim(): Unit = {
+      lastStaged.foreach(p => f.delete(new Path(p), false))
+      lastChanges.foreach(cf => scala.util.Try(f.delete(new Path(cf), true)))
+      lastStaged = Seq.empty
+      lastChanges = None
+    }
+    try commitRetrying(spark, root, schema, changesFile = lastChanges) { h =>
+      reclaim()
+      val (rewrite, rows) = plan(h)
+      lastStaged = rows.fold(Seq.empty[String])(stageFiles(_, root, h))
+      lastChanges = h.flatMap(declaredCdcKeys).map { ks =>
+        writeChanges(f, root,
+          if (layoutOnly) emptyDiffFrame(spark, schema, ks)
+          else keyedDiff(readFiles(spark, schema, rewrite),
+            readFiles(spark, schema, lastStaged), ks,
+            schema.fieldNames.filterNot(ks.contains).toSeq))
+      }
+      filesOf(h).filterNot(rewrite.toSet) ++ lastStaged
+    } catch { case e: Throwable => reclaim(); throw e }
   }
 
   /** Row-level change feed between two committed snapshots: one row per
@@ -1707,57 +1651,22 @@ object VersionedTable {
     * and inserts carry the `toV` image, deletes the `fromV` image.
     * Change detection is exact column-by-column null-safe comparison
     * (no row-hash collisions); rows identical in both snapshots are
-    * dropped. One key-shuffle full-outer join — the unavoidable cost of
-    * row-level CDC without per-commit change logs; consumers that only
-    * need appended rows should instead read the manifests' added files. */
-  /** Exact keyed CDC between two snapshots. CONTRACT (caller-facing):
-    * snapshots must be key-unique and the lake copy-on-write — the
-    * churned-files-only read below is exact ONLY under that contract.
-    * If it is violated (e.g. a plain append adds a second row for an
-    * existing key whose old row sits in a file both manifests share),
-    * the shared file is invisible to the diff and the new row reports
-    * as an 'insert' where a full-snapshot join would have reported an
-    * 'update' (plus duplicate-key fanout). There is no runtime
-    * detection; keep appends key-disjoint or use upsert/merge. */
+    * dropped. One key-shuffle full-outer join over the CHURNED files
+    * only — consumers that only need appended rows should instead read
+    * the manifests' added files.
+    *
+    * CONTRACT (caller-facing): snapshots must be key-unique and the lake
+    * copy-on-write — the churned-files-only read is exact ONLY under
+    * that contract. If it is violated (e.g. a plain append adds a second
+    * row for an existing key whose old row sits in a file both
+    * manifests share), the shared file is invisible to the diff and the
+    * new row reports as an 'insert' where a full-snapshot join would
+    * have reported an 'update' (plus duplicate-key fanout). There is no
+    * runtime detection; keep appends key-disjoint or use upsert/merge. */
   def diff(spark: SparkSession, root: String, keys: Seq[String],
       fromV: Long, toV: Long): DataFrame = {
-    // churned-files-only reads (r10 optimization): a file referenced by
-    // BOTH manifests is immutable, so its rows appear identically on
-    // both sides of the keyed full-outer join and can only produce
-    // change_type-NULL rows the filter drops. Under diff's keyed-row-set
-    // contract (key-unique snapshots — the same assumption the
-    // full-outer join itself encodes), restricting each side to the
-    // file-list symmetric difference is therefore EXACT, and the CDC
-    // cost becomes O(churned files) instead of O(two full snapshots) —
-    // the per-commit shape changeFeed's join fallback already uses.
-    val f = fs(spark, root)
-    val vs = versions(spark, root)
-    require(vs.contains(fromV), s"version $fromV not in $vs")
-    require(vs.contains(toV), s"version $toV not in $vs")
-    val mOld = manifest(f, root, fromV)
-    val mNew = manifest(f, root, toV)
-    val newSet = mNew.files.toSet
-    val oldSet = mOld.files.toSet
-    val old = readFiles(spark, mOld.schema, mOld.files.filterNot(newSet))
-    val neu = readFiles(spark, mNew.schema, mNew.files.filterNot(oldSet))
-    val dataCols = old.columns.filterNot(keys.contains).toSeq
-    def tagged(df: DataFrame, p: String) = df.select(
-      keys.map(col) ++ dataCols.map(c => col(c).as(p + c))
-        :+ lit(true).as(p + "present"): _*)
-    val j = tagged(old, "_o_").join(tagged(neu, "_n_"), keys, "full_outer")
-    val changed =
-      if (dataCols.isEmpty) lit(false)
-      else !dataCols.map(c => col("_o_" + c) <=> col("_n_" + c))
-        .reduce(_ && _)
-    val change = when(col("_o_present").isNull, "insert")
-      .when(col("_n_present").isNull, "delete")
-      .when(changed, "update")
-    j.withColumn("change_type", change)
-      .filter(col("change_type").isNotNull)
-      .select(keys.map(col) ++ dataCols.map(c =>
-        when(col("change_type") === "delete", col("_o_" + c))
-          .otherwise(col("_n_" + c)).as(c))
-        :+ col("change_type"): _*)
+    val (old, neu, dataCols) = churned(spark, root, keys, fromV, toV)
+    keyedDiff(old, neu, keys, dataCols)
   }
 
   /** [[diff]] plus the BEFORE-image of every update as an extra
@@ -1772,28 +1681,7 @@ object VersionedTable {
     * delete, so churned-files-only preimages are complete. */
   def diffWithPreimages(spark: SparkSession, root: String,
       keys: Seq[String], fromV: Long, toV: Long): DataFrame = {
-    val f = fs(spark, root)
-    val vs = versions(spark, root)
-    require(vs.contains(fromV), s"version $fromV not in $vs")
-    require(vs.contains(toV), s"version $toV not in $vs")
-    val mOld = manifest(f, root, fromV)
-    val mNew = manifest(f, root, toV)
-    val newSet = mNew.files.toSet
-    val oldSet = mOld.files.toSet
-    val old = readFiles(spark, mOld.schema, mOld.files.filterNot(newSet))
-    val neu = readFiles(spark, mNew.schema, mNew.files.filterNot(oldSet))
-    val dataCols = old.columns.filterNot(keys.contains).toSeq
-    def tagged(df: DataFrame, p: String) = df.select(
-      keys.map(col) ++ dataCols.map(c => col(c).as(p + c))
-        :+ lit(true).as(p + "present"): _*)
-    val j = tagged(old, "_o_").join(tagged(neu, "_n_"), keys, "full_outer")
-    val changed =
-      if (dataCols.isEmpty) lit(false)
-      else !dataCols.map(c => col("_o_" + c) <=> col("_n_" + c))
-        .reduce(_ && _)
-    val change = when(col("_o_present").isNull, "insert")
-      .when(col("_n_present").isNull, "delete")
-      .when(changed, "update")
+    val (old, neu, dataCols) = churned(spark, root, keys, fromV, toV)
     def img(side: String, ct: Column) = struct(
       (keys.map(col) ++ dataCols.map(c => col(side + c).as(c))
         :+ ct.as("change_type")): _*)
@@ -1803,10 +1691,32 @@ object VersionedTable {
       .when(col("change_type") === "delete",
         array(img("_o_", col("change_type"))))
       .otherwise(array(img("_n_", col("change_type"))))
-    j.withColumn("change_type", change)
-      .filter(col("change_type").isNotNull)
+    classifiedJoin(old, neu, keys, dataCols)
       .select(explode(rows).as("_r"))
       .select(col("_r.*"))
+  }
+
+  /** The churned rows of two snapshots — `fromV`'s files that `toV` no
+    * longer references, and `toV`'s files `fromV` did not — each read
+    * under its own version's schema, plus the data (non-key) columns.
+    * A file referenced by BOTH manifests is immutable, so its rows
+    * appear identically on both sides of the keyed full-outer join and
+    * can only produce change_type-NULL rows the classification drops.
+    * Under diff's keyed-row-set contract (key-unique snapshots — the
+    * same assumption the full-outer join itself encodes) restricting
+    * each side to the file-list symmetric difference is therefore
+    * EXACT, and the CDC cost is O(churned files), not O(two full
+    * snapshots). */
+  private def churned(spark: SparkSession, root: String, keys: Seq[String],
+      fromV: Long, toV: Long): (DataFrame, DataFrame, Seq[String]) = {
+    val f = fs(spark, root)
+    val (_, mOld) = resolve(f, root, Some(fromV))
+    val (_, mNew) = resolve(f, root, Some(toV))
+    val newSet = mNew.files.toSet
+    val oldSet = mOld.files.toSet
+    val old = readFiles(spark, mOld.schema, mOld.files.filterNot(newSet))
+    val neu = readFiles(spark, mNew.schema, mNew.files.filterNot(oldSet))
+    (old, neu, old.columns.filterNot(keys.contains).toSeq)
   }
 
   /** The head's declared change-log identity keys
@@ -1844,10 +1754,21 @@ object VersionedTable {
   /** Net row diff between two keyed row sets: one row per change with
     * `change_type` in {insert, update, delete}; updates/inserts carry
     * the NEW image, deletes the old. Output columns: keys ++ dataCols
-    * ++ change_type. The shared kernel of [[changeFeed]]'s join
-    * fallback and the write-side change log ([[ChangeFeedKeysProp]]).
-    * One keyed full-outer join over only the two row sets given. */
+    * ++ change_type. The shared kernel of [[diff]], [[changeFeed]]'s
+    * join fallback and the write-side change log
+    * ([[ChangeFeedKeysProp]]). */
   private def keyedDiff(oldDf: DataFrame, newDf: DataFrame,
+      keys: Seq[String], dataCols: Seq[String]): DataFrame =
+    classifiedJoin(oldDf, newDf, keys, dataCols)
+      .select(keys.map(col) ++ dataCols.map(c =>
+        when(col("change_type") === "delete", col("_o_" + c))
+          .otherwise(col("_n_" + c)).as(c))
+        :+ col("change_type"): _*)
+
+  /** One keyed full-outer join over only the two row sets given: each
+    * side's data columns `_o_`/`_n_`-prefixed with a presence flag, and
+    * `change_type` classified; rows identical on both sides dropped. */
+  private def classifiedJoin(oldDf: DataFrame, newDf: DataFrame,
       keys: Seq[String], dataCols: Seq[String]): DataFrame = {
     def tagged(df: DataFrame, p: String) = df.select(
       keys.map(col) ++ dataCols.map(c => col(c).as(p + c))
@@ -1863,10 +1784,6 @@ object VersionedTable {
       .when(changed, "update")
     j.withColumn("change_type", change)
       .filter(col("change_type").isNotNull)
-      .select(keys.map(col) ++ dataCols.map(c =>
-        when(col("change_type") === "delete", col("_o_" + c))
-          .otherwise(col("_n_" + c)).as(c))
-        :+ col("change_type"): _*)
   }
 
   /** CHANGE FEED (the readChangeFeed analogue): net row-level changes
@@ -1894,13 +1811,15 @@ object VersionedTable {
   def changeFeed(spark: SparkSession, root: String, keys: Seq[String],
       fromV: Long, toV: Option[Long] = None): DataFrame = {
     require(keys.nonEmpty, "changeFeed needs key columns")
-    val f = fs(spark, root)
-    val vs = versions(spark, root)
+    val ms = manifests(fs(spark, root), root)
+    val vs = ms.map(_._1)
     require(vs.contains(fromV), s"version $fromV not in $vs")
     val to = toV.getOrElse(vs.max)
     require(vs.contains(to), s"version $to not in $vs")
-    val window = vs.filter(v => v > fromV && v <= to)
-    val outSchema = manifest(f, root, to).schema
+    // (previous committed manifest, commit) for each commit in the window
+    val window = ms.zip(ms.drop(1)).filter { case (_, (v, _)) =>
+      v > fromV && v <= to }
+    val outSchema = ms.find(_._1 == to).get._2.schema
     keys.foreach(k => require(outSchema.fieldNames.contains(k),
       s"changeFeed: no key column '$k' in ${outSchema.simpleString}"))
     def readF(files: Seq[String]): DataFrame =
@@ -1911,8 +1830,7 @@ object VersionedTable {
       StructField("_commit_version", LongType, nullable = false)))
     val empty =
       spark.createDataFrame(new java.util.ArrayList[Row](), feedSchema)
-    val perCommit = window.map { v =>
-      val mv = manifest(f, root, v)
+    val perCommit = window.map { case ((_, mPrev), (v, mv)) =>
       mv.changesFile match {
         // write-side change log recorded at commit time
         // (ChangeFeedKeysProp): the commit's net diff is a PURE SCAN —
@@ -1925,10 +1843,7 @@ object VersionedTable {
             .withColumn("_commit_version", lit(v))
             .select(feedSchema.fieldNames.toSeq.map(col): _*)
         case None =>
-          val prevFiles = manifest(f, root, v - 1 match {
-            case p if vs.contains(p) => p
-            case _ => vs.filter(_ < v).max
-          }).files
+          val prevFiles = mPrev.files
           val curFiles = mv.files
           val removed = prevFiles.filterNot(curFiles.toSet)
           val added = curFiles.filterNot(prevFiles.toSet)
@@ -1964,32 +1879,16 @@ object VersionedTable {
       smallBytes: Long = 32L << 20,
       targetBytes: Long = 128L << 20): Option[Long] = {
     val f = fs(spark, root)
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed version under $root")
-    val schema = manifest(f, root, vs.max).schema
-    var lastStaged: Seq[String] = Seq.empty
-    val cdcKeys = declaredCdcKeys(manifest(f, root, vs.max))
-    var lastChanges: Option[String] = None
-    try Some(commitRetrying(spark, root, schema,
-      changesFile = lastChanges) { prev =>
-      lastStaged.foreach(p => f.delete(new Path(p), false))
-      lastChanges.foreach(cf =>
-        scala.util.Try(f.delete(new Path(cf), true)))
-      // layout-only commit: content identical BY CONSTRUCTION — an
-      // opted-in table records an EMPTY diff without computing one, so
-      // changeFeed skips even the join fallback on compactions
-      lastChanges = cdcKeys.map(ks => writeChanges(f, root,
-        emptyDiffFrame(spark, schema, ks)))
-      val sized = prev.map(p => p -> f.getFileStatus(new Path(p)).getLen)
-      val small = sized.filter(_._2 < smallBytes)
-      if (small.size < 2) throw new NothingToCompact // before any claim
-      val keep = sized.filterNot(_._2 < smallBytes).map(_._1)
+    val schema = resolve(f, root)._2.schema
+    try Some(rewriteCommit(spark, root, schema, layoutOnly = true) { h =>
+      val small = filesOf(h).map(p => p -> f.getFileStatus(new Path(p)).getLen)
+        .filter(_._2 < smallBytes)
+      // before any staging, change log or claim
+      if (small.size < 2) throw new NothingToCompact
       val totalBytes = small.map(_._2).sum
       val nOut = ((totalBytes + targetBytes - 1) / targetBytes).toInt.max(1)
-      val merged = readFiles(spark, schema, small.map(_._1))
-        .coalesce(nOut)
-      lastStaged = stageFiles(merged, root)
-      keep ++ lastStaged
+      val rewrite = small.map(_._1)
+      (rewrite, Some(readFiles(spark, schema, rewrite).coalesce(nOut)))
     })
     catch { case _: NothingToCompact => None }
   }
@@ -2008,33 +1907,15 @@ object VersionedTable {
     * patterns warrant it, not an every-commit cost. */
   def compactZOrdered(spark: SparkSession, root: String,
       cols: Seq[Column], nFiles: Int, bitsPerCol: Int = 16): Long = {
-    val f = fs(spark, root)
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed version under $root")
-    val schema = manifest(f, root, vs.max).schema
-    var lastStaged: Seq[String] = Seq.empty
-    val cdcKeys = declaredCdcKeys(manifest(f, root, vs.max))
-    var lastChanges: Option[String] = None
-    commitRetrying(spark, root, schema,
-      changesFile = lastChanges) { prev =>
-      lastStaged.foreach(p => f.delete(new Path(p), false))
-      lastChanges.foreach(cf =>
-        scala.util.Try(f.delete(new Path(cf), true)))
-      lastChanges = cdcKeys.map(ks => writeChanges(f, root,
-        emptyDiffFrame(spark, schema, ks))) // layout-only: empty diff
+    val schema = resolve(fs(spark, root), root)._2.schema
+    rewriteCommit(spark, root, schema, layoutOnly = true) { h =>
+      val prev = filesOf(h)
       require(prev.nonEmpty, "cannot z-order an empty snapshot")
-      val head = readFiles(spark, schema, prev)
-      lastStaged = stageFiles(
-        graft.operators.Layout.zOrdered(head, cols, nFiles, bitsPerCol),
-        root)
-      lastStaged
+      (prev, Some(graft.operators.Layout.zOrdered(
+        readFiles(spark, schema, prev), cols, nFiles, bitsPerCol)))
     }
   }
 
-  /** Delete data files referenced by no retained manifest, and expired
-    * manifests themselves. Keeps the newest `keepVersions`; never
-    * touches files younger than `graceMs` (a concurrent commit may
-    * have staged them ahead of its claim). Returns files deleted. */
   /** RESTORE: roll the table back to `toVersion` as a NEW commit (the
     * RESTORE TABLE ... TO VERSION shape). The head becomes a manifest
     * with exactly the target version's file list and schema — history is
@@ -2047,27 +1928,29 @@ object VersionedTable {
     * readWhere pruning keeps working across a restore. Safe under
     * concurrent writers via the usual exclusive version claim. */
   def restore(spark: SparkSession, root: String, toVersion: Long): Long = {
-    val f = fs(spark, root)
-    val vs = versions(spark, root)
-    require(vs.contains(toVersion),
-      s"version $toVersion does not exist under $root (have: $vs)")
-    val target = manifest(f, root, toVersion)
+    val (_, target) = resolve(fs(spark, root), root, Some(toVersion))
     // seed the stage cache so the commit resolves the restored files'
     // stats even when the current head no longer lists them
     target.stats.foreach { case (p, s) => stagedStats.put(p, s) }
     commitRetrying(spark, root, target.schema)(_ => target.files)
   }
 
+  /** Delete data files referenced by no retained manifest, and expired
+    * manifests themselves. Keeps the newest `keepVersions`; never
+    * touches files younger than `graceMs` (a concurrent commit may
+    * have staged them ahead of its claim). Returns files deleted. */
   def vacuum(spark: SparkSession, root: String, keepVersions: Int,
       graceMs: Long = 3600000L): Int = {
     require(keepVersions >= 1, "must retain at least the latest version")
     val f = fs(spark, root)
-    val vs = versions(spark, root)
+    val ms = manifests(f, root)
+    val vs = ms.map(_._1)
     // tagged versions are pinned: a release pointer must keep reading
     // no matter how the retention window moves
     val tagged = tags(spark, root).map(_._2).toSet
     val keep = (vs.takeRight(keepVersions) ++ vs.filter(tagged)).distinct
-    val live = keep.flatMap(v => manifest(f, root, v).files).toSet
+    val kept = ms.collect { case (v, m) if keep.contains(v) => m }
+    val live = kept.flatMap(_.files).toSet
     val cutoff = System.currentTimeMillis() - graceMs
     val dead = f.listStatus(dataDir(root)).toSeq
       .filter(s => s.getModificationTime < cutoff &&
@@ -2081,8 +1964,7 @@ object VersionedTable {
     // change-log dirs referenced by NO retained manifest (their
     // commit was vacuumed, or a crash left one unreferenced) age out
     // with the same grace window
-    val liveChanges = keep.flatMap(v =>
-      manifest(f, root, v).changesFile).toSet
+    val liveChanges = kept.flatMap(_.changesFile).toSet
     val chDir = new Path(root, "_changes")
     if (f.exists(chDir))
       f.listStatus(chDir).toSeq
@@ -2145,8 +2027,15 @@ object VersionedTable {
     case _ => false
   }
 
+  /** Serializes the session-conf swap in [[stageFiles]] (the timestamp
+    * output type has no per-write option). */
+  private object TsConfLock
+
   /** Stage `df` under data/ as immutable files; return their qualified
     * paths (vacuum compares against listStatus, which qualifies).
+    * `head` is the manifest the commit builds on (None for a new
+    * table): its column mapping, bloom columns and CHECK constraints
+    * apply to the staged files.
     * One extra pass over ONLY the newly staged files collects per-file
     * min/max/null stats for the manifest's data-skipping index — and,
     * as a byproduct, identifies EMPTY part files (a write with more
@@ -2155,24 +2044,17 @@ object VersionedTable {
     * entries (at ingest rate, a real file-count leak). With the stats
     * pass disabled the empties can't be told apart cheaply and are
     * committed as before (harmless to readers). */
-  /** Serializes the session-conf swap in [[stageFiles]] (the timestamp
-    * output type has no per-write option). */
-  private object TsConfLock
-
-  private def stageFiles(df0: DataFrame, root: String): Seq[String] = {
+  private def stageFiles(df0: DataFrame, root: String,
+      head: Option[Manifest]): Seq[String] = {
     val spark = df0.sparkSession
     val f = fs(spark, root)
     // column mapping: staged parquet stores PHYSICAL names (the head
     // manifest's mapping, matched by logical name), so files written
     // after a RENAME COLUMN stay name-compatible with files written
     // before it. Identity (no mapped column) is a no-op.
-    val headMapping: Map[String, String] = {
-      val vs = versions(spark, root)
-      if (vs.isEmpty) Map.empty
-      else manifest(f, root, vs.max).schema.fields
-        .map(fd => fd.name -> physicalName(fd))
-        .filter { case (l, p) => l != p }.toMap
-    }
+    val headMapping: Map[String, String] = head.fold(Map.empty[String, String])(
+      _.schema.fields.map(fd => fd.name -> physicalName(fd))
+        .filter { case (l, p) => l != p }.toMap)
     val df =
       if (headMapping.isEmpty) df0
       else df0.toDF(df0.columns.map(c =>
@@ -2211,7 +2093,7 @@ object VersionedTable {
     val statsOn = spark.conf
       .getOption("spark.graft.lake.stats.enabled").forall(_.toBoolean)
     val staged = if (statsOn && moved.nonEmpty) {
-      val stated = collectStats(spark, df.schema, moved, root)
+      val stated = collectStats(spark, df.schema, moved, head)
       stated match {
         case Some(nonEmpty) => // stats ran: files with no stats row are
           // zero-row part files — drop them from disk and the commit
@@ -2236,7 +2118,7 @@ object VersionedTable {
       try enforceConstraints( // physical bytes, LOGICAL names (the
         // constraint expressions reference logical columns)
         spark.read.schema(df.schema).parquet(staged: _*)
-          .toDF(df0.columns.toIndexedSeq: _*), root)
+          .toDF(df0.columns.toIndexedSeq: _*), head)
       catch { case t: Throwable =>
         staged.foreach(p => f.delete(new Path(p), false))
         throw t
@@ -2249,16 +2131,10 @@ object VersionedTable {
     * one on newly staged files — an upsert or compact from a session
     * without the conf must not silently degrade the table's point-lookup
     * pruning. */
-  private def inheritedBloomCols(spark: SparkSession, root: String)
-      : Seq[String] =
-    try {
-      val f = fs(spark, root)
-      val vs = versions(spark, root)
-      if (vs.isEmpty) Seq.empty
-      else manifest(f, root, vs.max).stats.values
-        .flatMap(_.collect { case (c, st) if st.bloom.nonEmpty => c })
-        .toSeq.distinct
-    } catch { case scala.util.control.NonFatal(_) => Seq.empty }
+  private def inheritedBloomCols(head: Option[Manifest]): Seq[String] =
+    head.toSeq.flatMap(_.stats.values
+      .flatMap(_.collect { case (c, st) if st.bloom.nonEmpty => c }))
+      .distinct
 
   /** Returns the set of paths that produced a stats row (= the
     * non-empty files), or None when no column is stat-eligible and the
@@ -2281,13 +2157,13 @@ object VersionedTable {
     * FooterStatsSpec pins byte-identical ColStat output between the two
     * paths across every eligible type. */
   private def collectStats(spark: SparkSession, schema: StructType,
-      files: Seq[String], root: String): Option[Set[String]] = {
+      files: Seq[String], head: Option[Manifest]): Option[Set[String]] = {
     val cols = schema.fields.filter(fd => statEligible(fd.dataType))
       .map(_.name).toSeq
     if (cols.isEmpty) return None
     val footerOn = spark.conf
       .getOption("spark.graft.lake.stats.footer").forall(_.toBoolean)
-    val anyBloom = bloomColsFor(spark, root, cols).nonEmpty
+    val anyBloom = bloomColsFor(spark, head, cols).nonEmpty
     if (footerOn && !anyBloom) footerStats(spark, schema, files) match {
       case Some(perFile) =>
         if (stagedStats.size() > 100000) stagedStats.clear()
@@ -2297,17 +2173,17 @@ object VersionedTable {
           case (p, (n, _)) if n > 0 => p }.toSet)
       case None => () // unreadable footer etc. — fall through to scan
     }
-    collectStatsByScan(spark, schema, files, root, cols)
+    collectStatsByScan(spark, schema, files, head, cols)
   }
 
   /** The bloom-opted columns for this table (session conf ∪ columns
     * already carrying blooms in the head manifest), restricted to
     * stat-eligible ones. */
-  private def bloomColsFor(spark: SparkSession, root: String,
+  private def bloomColsFor(spark: SparkSession, head: Option[Manifest],
       cols: Seq[String]): Seq[String] =
     (spark.conf.getOption("spark.graft.lake.bloom.cols")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq.empty) ++ inheritedBloomCols(spark, root))
+      .getOrElse(Seq.empty) ++ inheritedBloomCols(head))
       .distinct.filter(cols.contains)
 
   /** Footer-metadata stats for freshly staged files: returns
@@ -2463,14 +2339,14 @@ object VersionedTable {
   /** The original one-aggregation-pass stats collection (also the bloom
     * path — bloom filters need the values, footers can't provide them). */
   private def collectStatsByScan(spark: SparkSession, schema: StructType,
-      files: Seq[String], root: String, cols: Seq[String])
+      files: Seq[String], head: Option[Manifest], cols: Seq[String])
       : Option[Set[String]] = {
     // bloom opt-in: per-file filters over the listed columns (sized by
     // lake.bloom.bits, default 128 Kibit ≈ 16 KiB base64 per col per
     // file) — the point-lookup complement to min/max range stats; the
     // head manifest's bloom columns are inherited so the property
     // sticks to the table across sessions
-    val bloomCols = bloomColsFor(spark, root, cols)
+    val bloomCols = bloomColsFor(spark, head, cols)
     val bloomBits = spark.conf.getOption("spark.graft.lake.bloom.bits")
       .map(_.toLong).getOrElse(131072L)
     // float/double: NaN/±Inf have no canonical-string form, and a
@@ -2518,7 +2394,9 @@ object VersionedTable {
     Some(rows.map(r => new Path(r.getAs[String]("_f")).toString).toSet)
   }
 
-  /** Claim `nextFiles(headFiles)` as the next version. The claim is the
+  /** Claim `nextFiles(head)` as the next version, `head` being the
+    * manifest this attempt resolved (None on a new table) — callers
+    * read the head from it and never resolve it again. The claim is the
     * ATOMIC creation of `vN.json.claim` (see [[atomicCreate]] — the
     * manifest create itself is not atomic-exclusive on local FS, and
     * the OCC-torture spec caught two writers both "winning" vN through
@@ -2536,10 +2414,10 @@ object VersionedTable {
       propertiesOverride: => Option[Seq[(String, String)]] = None,
       opInfo: Option[String] = None,
       changesFile: => Option[String] = None)
-      (nextFiles: Seq[String] => Seq[String]): Long = {
+      (nextFiles: Option[Manifest] => Seq[String]): Long = {
     // `schema` is by-name: nextFiles may resolve the (possibly evolved)
-    // schema against the head it just read, and the manifest write below
-    // must see that resolution, re-done on every retry
+    // schema against the head it is handed, and the manifest write
+    // below must see that resolution, re-done on every retry
     val f = fs(spark, root)
     f.mkdirs(manifestDir(root))
     var attempts = 0
@@ -2552,30 +2430,25 @@ object VersionedTable {
       // jittered pause keeps N losers from re-colliding in lockstep
       if (attempts > 1)
         Thread.sleep(10L + scala.util.Random.nextInt(40 * attempts))
-      val vs = versions(spark, root)
-      val (prev, prevStats, prevCons, prevProps) =
-        if (vs.isEmpty)
-          (Seq.empty[String], Map.empty[String, FileStats],
-            Seq.empty[(String, String)], Seq.empty[(String, String)])
-        else {
-          val m = manifest(f, root, vs.max)
-          (m.files, m.stats, m.constraints, m.properties)
-        }
+      val head = resolveHead(f, root)
+      val prev = head.map(_._2)
       val files = nextFiles(prev)
       // constraints and table properties ride every commit unchanged
       // unless this commit IS the change (add/drop/set/unset).
       // Evaluated AFTER nextFiles: propertiesOverride is by-name, so a
       // closure that resolves its override against the head it just
       // read (renameColumn's clustering rewrite) is honored.
-      val cons = constraintsOverride.getOrElse(prevCons)
-      val props = propertiesOverride.getOrElse(prevProps)
+      val cons = constraintsOverride.getOrElse(
+        prev.fold(Seq.empty[(String, String)])(_.constraints))
+      val props = propertiesOverride.getOrElse(
+        prev.fold(Seq.empty[(String, String)])(_.properties))
       val chFile = changesFile
-      val v = if (vs.isEmpty) 0L else vs.max + 1
+      val v = head.fold(0L)(_._1 + 1)
       val target = manifestPath(root, v)
       // per-file stats: carried-over files keep the previous manifest's
       // entry; newly staged files resolve from this process's stage cache
       def statsLine(p: String): String =
-        prevStats.get(p).orElse(Option(stagedStats.get(p)))
+        prev.flatMap(_.stats.get(p)).orElse(Option(stagedStats.get(p)))
           .fold("")(s => "\t" + statsToJson(s))
       // crashed-writer recovery: a dead claim (claim file present, no
       // valid manifest behind it, older than the grace window) blocks

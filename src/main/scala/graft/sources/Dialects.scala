@@ -242,10 +242,4 @@ object Dialects {
 
   def apply(name: String): SqlDialect =
     reg.getOrElse(name, throw new NoSuchElementException(s"dialect: $name"))
-
-  def unregisterAll(): Unit = {
-    reg.clear()
-    reg += MySqlStyle.name -> MySqlStyle
-    reg += OracleStyle.name -> OracleStyle
-  }
 }

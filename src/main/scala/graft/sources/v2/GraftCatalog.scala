@@ -82,7 +82,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private def dirOf(ident: Identifier): Path =
     new Path(dirOf(ident.namespace.toIndexedSeq), checkPart(ident.name))
   private def isTable(dir: Path): Boolean =
-    VersionedTable.versions(spark, dir.toString).nonEmpty
+    VersionedTable.headVersion(spark, dir.toString).nonEmpty
 
   // tables ------------------------------------------------------------
   override def tableExists(ident: Identifier): Boolean =

@@ -89,7 +89,7 @@ class GraftLakeSource extends TableProvider with DataSourceRegister
       parameters: Map[String, String]): (String, StructType) = {
     val spark = sqlContext.sparkSession
     val root = streamRoot(parameters)
-    require(VersionedTable.versions(spark, root).nonEmpty,
+    require(VersionedTable.headVersion(spark, root).nonEmpty,
       s"graft stream: no committed version under $root — streaming " +
         "reads need an existing table (write one first)")
     val pinned = GraftLakeSource.relaxed(
@@ -166,7 +166,7 @@ class GraftLakeSource extends TableProvider with DataSourceRegister
     val root = parameters.getOrElse("path",
       throw new IllegalArgumentException("graft needs a path"))
     val spark = data.sparkSession
-    val exists = VersionedTable.versions(spark, root).nonEmpty
+    val exists = VersionedTable.headVersion(spark, root).nonEmpty
     mode match {
       case org.apache.spark.sql.SaveMode.ErrorIfExists if exists =>
         throw new IllegalStateException(
@@ -221,7 +221,7 @@ class GraftLakeSource extends TableProvider with DataSourceRegister
       // (version -1): reads fail with a clear error at scan planning,
       // while the write path works — the first
       // `df.write.format("graft").save(root)` CREATES the table
-      if (version.isEmpty && VersionedTable.versions(spark, root).isEmpty)
+      if (version.isEmpty && VersionedTable.headVersion(spark, root).isEmpty)
         VersionedTable.Snapshot(root, -1L, new StructType(), Nil, Map.empty)
       else {
         val snap = VersionedTable.snapshot(spark, root, version)
@@ -509,7 +509,7 @@ private[v2] class GraftWriteBuilder(root: String, replace: Boolean,
               case None => aligned
             }
             if (replace || overwrite ||
-                VersionedTable.versions(spark, root).isEmpty)
+                VersionedTable.headVersion(spark, root).isEmpty)
               VersionedTable.write(toWrite, root)
             else VersionedTable.append(toWrite, root)
             ()

@@ -77,8 +77,7 @@ private[v2] class GraftStreamSource(spark: SparkSession, root: String,
   override def schema: StructType = pinnedSchema
 
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap =
-      VersionedTable.versions(spark, root).sorted.lastOption
+    availableNowCap = VersionedTable.headVersion(spark, root)
 
   /** Versions are the admission unit: `maxVersionsPerTrigger` rides
     * the engine's maxFiles read-limit slot (a version IS a file set). */
@@ -92,7 +91,7 @@ private[v2] class GraftStreamSource(spark: SparkSession, root: String,
   override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 = {
     val base = Option(start).map(o => o.json.trim.toLong)
       .orElse(startingVersion).getOrElse(Long.MinValue)
-    val vs = VersionedTable.versions(spark, root).sorted
+    val vs = VersionedTable.versions(spark, root)
     val pending = vs.filter(v => v > base &&
       availableNowCap.forall(v <= _))
     val capped = limit match {
@@ -103,11 +102,11 @@ private[v2] class GraftStreamSource(spark: SparkSession, root: String,
   }
 
   override def reportLatestOffset(): OffsetV2 =
-    VersionedTable.versions(spark, root).sorted.lastOption
+    VersionedTable.headVersion(spark, root)
       .map(GraftSourceOffset(_)).orNull
 
   override def getOffset: Option[Offset] = {
-    val vs = VersionedTable.versions(spark, root).sorted
+    val vs = VersionedTable.versions(spark, root)
     val pending = vs.filter(_ > lastEnd)
     val end = maxVersionsPerTrigger match {
       case Some(m) if pending.nonEmpty => Some(pending.take(m).last)

@@ -36,16 +36,6 @@ object EventsPipeline {
         col("window.end").as("window_end"), col("event_type"),
         col("n"), col("sum_value"))
 
-  /** Sliding-window user activity. */
-  def slidingUserActivity(events: DataFrame): DataFrame =
-    withEventTime(events)
-      .withWatermark("event_time", "10 minutes")
-      .groupBy(window(col("event_time"), "10 minutes", "5 minutes"),
-        col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("window.start").as("window_start"), col("user_id"),
-        col("n_events"))
-
   /** Session windows via the built-in session_window (30-min gap). */
   def sessionWindows(events: DataFrame, gap: String = "30 minutes")
       : DataFrame =

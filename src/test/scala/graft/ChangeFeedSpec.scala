@@ -249,6 +249,25 @@ class ChangeFeedSpec extends SparkSpec {
     spark.catalog.dropTempView("wl_src")
   }
 
+  test("a no-op compact on an opted-in table returns None and writes no " +
+      "change log") {
+    val root = s"${tmpBase("cf7")}/t"
+    VersionedTable.write((1L to 10L).map(k => (k, k * 2)).toDF("k", "v")
+      .coalesce(1), root, Seq(VersionedTable.ChangeFeedKeysProp -> "k"))
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration)
+    val changes = new org.apache.hadoop.fs.Path(root, "_changes")
+    def logs: Set[String] =
+      if (!fs.exists(changes)) Set.empty
+      else fs.listStatus(changes).map(_.getPath.getName).toSet
+    val before = logs
+    val vs = VersionedTable.versions(spark, root)
+    // one small file: nothing to compact
+    assert(VersionedTable.compact(spark, root, smallBytes = 1L << 30).isEmpty)
+    assert(logs == before, "a no-op compact must leave _changes/ unchanged")
+    assert(VersionedTable.versions(spark, root) == vs)
+  }
+
   test("vacuum sweeps orphaned .stage-/.rlstage- dirs past the grace " +
       "window (crashed-writer leftovers)") {
     val base = tmpBase("cf5")

@@ -281,6 +281,10 @@ class VersionedTableSpec extends SparkSpec {
     // the retraction set (update_preimage + delete) must equal the old
     // formulation: from-snapshot semi-joined on updated/deleted keys
     val cdc = VersionedTable.diff(spark, root, Seq("k"), 0L, 2L)
+    // the preimage explode is diffWithPreimages' alone
+    assert(cdc.queryExecution.optimizedPlan.collect {
+      case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
+    }.isEmpty)
     val old = VersionedTable.read(spark, root, Some(0L))
       .join(cdc.filter(col("change_type").isin("update", "delete"))
         .select("k"), Seq("k"), "leftsemi")
@@ -683,6 +687,58 @@ class VersionedTableSpec extends SparkSpec {
     val v = VersionedTable.append(Seq((2L, "b")).toDF("k", "v"), root)
     assert(v == 1L)
     assert(VersionedTable.read(spark, root).count() == 2)
+  }
+
+  test("every operation resolves the head beneath a crashed writer's " +
+      "newest-numbered junk manifest") {
+    val root = tmpRoot()
+    VersionedTable.write((1L to 6L).map(k => (k, s"v$k")).toDF("k", "v")
+      .repartition(3), root)
+    VersionedTable.append(Seq((7L, "v7")).toDF("k", "v"), root)
+    val f = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // an unterminated manifest one past the head, aged past the
+    // in-flight grace window: a writer that crashed mid-write
+    def plantJunk(): Long = {
+      val v = VersionedTable.versions(spark, root).max + 1
+      val junk = new org.apache.hadoop.fs.Path(root,
+        f"_manifests/v$v%012d.json")
+      val out = f.create(junk, true)
+      out.write("{\"type\":\"struct\",\"fields\":[]}\npartial"
+        .getBytes("UTF-8"))
+      out.close()
+      f.setTimes(junk, System.currentTimeMillis() - 60000L, -1L)
+      v
+    }
+    val junk = plantJunk()
+    assert(VersionedTable.versions(spark, root) == Seq(0L, 1L))
+    // reads see the valid head v1 beneath the junk
+    assert(VersionedTable.readWhere(spark, root, col("k") <= 3L).count() == 3)
+    val agg = VersionedTable.statsAgg(spark, root, Seq("k")).head()
+    assert((agg.getLong(0), agg.getLong(1), agg.getLong(2)) == ((7L, 1L, 7L)))
+    assert(VersionedTable.changeFeed(spark, root, Seq("k"), 0L)
+      .select("k", "change_type").as[(Long, String)].collect().toSeq ==
+      Seq((7L, "insert")))
+    val miss = intercept[IllegalArgumentException] {
+      VersionedTable.read(spark, root, Some(junk))
+    }
+    assert(miss.getMessage.contains(s"version $junk"), miss.getMessage)
+    // each commit builds on that head, and recovery hands it the junk's
+    // version number
+    assert(VersionedTable.upsert(Seq((1L, "u1")).toDF("k", "v"), root,
+      Seq("k")) == junk)
+    val j2 = plantJunk()
+    assert(VersionedTable.merge(Seq((2L, "m2"), (8L, "m8")).toDF("k", "v"),
+      root, Seq("k"), None, Map("v" -> col("src_v"))) == j2)
+    val j3 = plantJunk()
+    assert(VersionedTable.deleteWhere(spark, root, col("k") === 3L) == j3)
+    val j4 = plantJunk()
+    assert(VersionedTable.compact(spark, root, smallBytes = 1L << 30)
+      .contains(j4))
+    assert(VersionedTable.read(spark, root).as[(Long, String)].collect()
+      .sorted.toSeq == Seq((1L, "u1"), (2L, "m2"), (4L, "v4"), (5L, "v5"),
+        (6L, "v6"), (7L, "v7"), (8L, "m8")))
+    assert(VersionedTable.versions(spark, root) == (0L to j4))
   }
 
   test("OCC torture: 8 writers, mixed ops, nothing lost, chain contiguous") {
