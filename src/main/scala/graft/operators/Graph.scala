@@ -1058,16 +1058,6 @@ object Graph {
     // the frontier then knows its current node's degree without a
     // per-step degree join — ONE probe join per step, the other half
     // paid once at build time
-    // EXPLICIT partition count: an un-numbered repartition(col...) is
-    // AQE-coalescible, and the coalesced partitioning does NOT survive
-    // as a join-compatible HashPartitioning through the checkpoint — so
-    // every step re-shuffled the FULL adjacency (measured 154 MB of
-    // per-step exchange at sf0.1; the probe join was supposed to move
-    // only the frontier). Numbered repartitions are left alone by AQE,
-    // and the count follows the session shuffle-partition conf, so it
-    // stays scale-adaptive. The sortWithinPartitions pins the (src, rk)
-    // ordering so the per-step sort-merge probe skips its adjacency-
-    // side sort too (checkpoint preserves outputOrdering).
     // pinned WITHOUT a probe-key repartition: the layout exchange never
     // survived the AQE-built checkpoint (the scan reports Unknown
     // partitioning — see Pin.workingSetPartitioned), so the per-step

@@ -85,8 +85,11 @@ object Preference {
             .otherwise(0L))
         .observe(obs, sum(col("__pn").cast("decimal(38,0)")).as("__tot"))
         .localCheckpoint()
+      // an empty frame observes a null total and an all-zero round a
+      // zero one: both divide by 1 (every __pn is then 0, so p stays 0)
       val tot = Option(obs.get.get("__tot").orNull)
-        .map(_.toString).filter(_ != "0").getOrElse("1") // empty frame
+        .map(_.asInstanceOf[java.math.BigDecimal])
+        .filter(_.signum != 0).fold("1")(_.toString)
       p = raw.select(col("i"),
         expr(s"CAST((CAST(__pn AS DECIMAL(38,0)) * $nItems * $Scale)" +
           s" div CAST('$tot' AS DECIMAL(38,0)) AS BIGINT)").as("p"))

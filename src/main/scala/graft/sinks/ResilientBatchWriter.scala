@@ -64,13 +64,24 @@ object RetryJudge {
     * non-SQL exceptions UNDER the SQLException (Derby hangs a
     * StandardException off every server error), so the deepest cause is
     * the wrong level to classify at — scan every level of the chain and
-    * classify on what any of them says. */
+    * classify on what any of them says. A JDBC batch failure
+    * (`BatchUpdateException`) often carries the real error as its
+    * `getNextException` rather than its cause, so both links are
+    * followed. */
   private def causeChain(e: Throwable): List[Throwable] = {
     val buf = scala.collection.mutable.ListBuffer.empty[Throwable]
-    var c = e
-    var hops = 0
-    while (c != null && hops < 32 && !buf.exists(_ eq c)) {
-      buf += c; c = c.getCause; hops += 1
+    var todo = List(e)
+    while (todo.nonEmpty && buf.size < 32) {
+      val c = todo.head
+      todo = todo.tail
+      if (c != null && !buf.exists(_ eq c)) {
+        buf += c
+        val next = c match {
+          case s: java.sql.SQLException => s.getNextException
+          case _ => null
+        }
+        todo = c.getCause :: next :: todo
+      }
     }
     buf.toList
   }

@@ -8,6 +8,7 @@ import java.sql.{Connection, DriverManager, PreparedStatement, ResultSetMetaData
 import java.util.Properties
 import scala.collection.mutable
 import scala.util.Using
+import scala.util.control.NonFatal
 
 /** Live JDBC execution of the dialect/split/writer seams — the reference's
   * actual runtime act (reader/job.go:122-187 executes the generated SQL
@@ -203,16 +204,22 @@ object JdbcLive {
 
 /** [[RowSink]] over a live `java.sql.Connection`: one connection per
   * partition task (the reference's per-task DB session, writer/task.go:
-  * 17-32), multi-row inserts prepared per batch size and reused, bind
-  * args flowing through the dialect's write conventions
-  * ([[SqlDialect.rowBindArgs]]: '' IS NULL, to_date-wrapped temporals).
-  * The transaction seams map 1:1 onto JDBC autocommit control, so
-  * [[ExecMode]] Tx/StmtTx run genuine transactions. */
+  * 17-32). Every batch binds into ONE single-row prepared insert, kept
+  * for the life of the sink: one row is one `executeUpdate`, more rows
+  * are one `addBatch` each and a single `executeBatch` — JDBC batch
+  * write, the reference's single-row statement bound over a whole batch
+  * (db.go:266-378, oracle/table.go:95-153). Bind args flow through the
+  * dialect's write conventions ([[SqlDialect.rowBindArgs]]: '' IS NULL,
+  * to_date-wrapped temporals). A JDBC batch is not atomic the way one
+  * statement is, so a multi-statement write runs under [[atomically]]:
+  * a failed `writeBatch` leaves nothing behind. The transaction seams
+  * map 1:1 onto JDBC autocommit control, so [[ExecMode]] Tx/StmtTx run
+  * genuine transactions. */
 class JdbcRowSink(url: String, dialect: SqlDialect, table: TableId,
     schema: StructType) extends RowSink {
 
   @transient protected var conn: Connection = _
-  @transient private var stmts: mutable.HashMap[(String, Int), PreparedStatement] = _
+  @transient private var stmts: mutable.HashMap[String, PreparedStatement] = _
   protected val colsTyped: Seq[(String, DataType)] =
     schema.fields.toSeq.map(f => (f.name, f.dataType))
 
@@ -221,22 +228,59 @@ class JdbcRowSink(url: String, dialect: SqlDialect, table: TableId,
     stmts = mutable.HashMap.empty
   }
 
-  /** Prepared statements cached per (kind, batch size) — reused across
-    * same-size batches, the reference's stmt reuse (db.go:280-309). */
-  protected def preparedFor(kind: String, rows: Int)(
-      sql: => String): PreparedStatement =
-    stmts.getOrElseUpdate((kind, rows), conn.prepareStatement(sql))
+  /** One single-row statement per kind, prepared on first use and reused
+    * for every batch — the reference's stmt reuse (db.go:280-309). */
+  protected def preparedFor(kind: String)(sql: => String): PreparedStatement =
+    stmts.getOrElseUpdate(kind, conn.prepareStatement(sql))
 
-  private def prepared(rows: Int): PreparedStatement =
-    preparedFor("insert", rows)(dialect.insertSqlTyped(table, colsTyped, rows))
-
-  def writeBatch(rows: Seq[Row]): Unit = if (rows.nonEmpty) {
-    val ps = prepared(rows.size)
+  /** Binds each of `rows` into the single-row statement `ps` and runs
+    * them: one row as one `executeUpdate`, more as one JDBC batch. Only a
+    * single row is atomic on its own. */
+  protected def execRows(ps: PreparedStatement, rows: Seq[Row]): Unit = {
     val args = dialect.rowBindArgs(rows)
-    var i = 0
-    while (i < args.length) { ps.setObject(i + 1, args(i)); i += 1 }
-    ps.executeUpdate()
+    val width = args.length / rows.size
+    def bind(off: Int): Unit = {
+      var j = 0
+      while (j < width) { ps.setObject(j + 1, args(off + j)); j += 1 }
+    }
+    if (rows.size == 1) { bind(0); ps.executeUpdate() }
+    else {
+      ps.clearBatch() // drop what a batch that failed mid-bind left queued
+      var off = 0
+      while (off < args.length) { bind(off); ps.addBatch(); off += width }
+      ps.executeBatch()
+    }
   }
+
+  /** Runs `body` so that none of its writes persist if it throws: inside
+    * an open transaction through a savepoint, under autocommit as a
+    * transaction of its own. */
+  protected def atomically(body: => Unit): Unit = {
+    def undo(e: Throwable)(step: => Unit): Unit =
+      try step catch { case NonFatal(u) => e.addSuppressed(u) }
+    if (conn.getAutoCommit) {
+      conn.setAutoCommit(false)
+      try { body; conn.commit() }
+      catch {
+        case NonFatal(e) =>
+          undo(e)(conn.rollback()); undo(e)(conn.setAutoCommit(true))
+          throw e
+      }
+      conn.setAutoCommit(true)
+    } else {
+      val sp = conn.setSavepoint()
+      try { body; conn.releaseSavepoint(sp) }
+      catch { case NonFatal(e) => undo(e)(conn.rollback(sp)); throw e }
+    }
+  }
+
+  protected def insertRows(rows: Seq[Row]): Unit =
+    execRows(preparedFor("insert")(dialect.insertSqlTyped(table, colsTyped, 1)),
+      rows)
+
+  def writeBatch(rows: Seq[Row]): Unit =
+    if (rows.size == 1) insertRows(rows)
+    else if (rows.nonEmpty) atomically(insertRows(rows))
 
   override def begin(): Unit = conn.setAutoCommit(false)
   override def commit(): Unit = { conn.commit(); conn.setAutoCommit(true) }
@@ -266,10 +310,10 @@ class JdbcRowSink(url: String, dialect: SqlDialect, table: TableId,
   * only ones. Use with [[graft.sinks.ExecMode.Normal]] — the per-batch
   * begin/commit seams are intentionally inert here (one tx per
   * partition IS the semantics). The writer's retry/degrade paths stay
-  * sound inside the partition tx because a failed multi-row INSERT is
-  * statement-atomic (nothing from the failed attempt persists, so a
-  * retried batch or a row-wise replay inserts each surviving row
-  * exactly once into the uncommitted tx). */
+  * sound inside the partition tx because a failed `writeBatch` leaves
+  * nothing behind ([[JdbcRowSink.atomically]] rolls a failed batch back
+  * to its savepoint), so a retried batch or a row-wise replay inserts
+  * each surviving row exactly once into the uncommitted tx. */
 class JdbcLedgerSink(url: String, dialect: SqlDialect, table: TableId,
     ledger: TableId, schema: StructType, epochId: Long)
     extends JdbcRowSink(url, dialect, table, schema) {
@@ -338,11 +382,12 @@ object JdbcLedgerSink {
 /** Upsert-by-key [[RowSink]]: each batch deletes the incoming keys then
   * inserts the new images — the operational semantics of MySQL
   * `replace into` (mysql/table.go:63-69), expressed as two statements
-  * because Derby's MERGE takes only base-table sources. Under
-  * [[graft.sinks.ExecMode.Tx]] the pair commits atomically, and because
-  * replace-by-key is idempotent the sink composes with at-least-once
-  * delivery (streaming foreachBatch redelivery, whole-batch retries)
-  * into exactly-once-per-key effects. */
+  * because Derby's MERGE takes only base-table sources. Both run as
+  * single-key/single-row JDBC batches inside ONE [[atomically]] unit in
+  * every exec mode, so a failed insert never leaves its keys deleted;
+  * and because replace-by-key is idempotent the sink composes with
+  * at-least-once delivery (streaming foreachBatch redelivery,
+  * whole-batch retries) into exactly-once-per-key effects. */
 final class JdbcUpsertRowSink(url: String, dialect: SqlDialect,
     table: TableId, schema: StructType, keys: Seq[String])
     extends JdbcRowSink(url, dialect, table, schema) {
@@ -353,15 +398,12 @@ final class JdbcUpsertRowSink(url: String, dialect: SqlDialect,
   private val keySchema = StructType(keyIdx.map(schema.fields))
   private val keysTyped = keySchema.fields.toSeq.map(f => (f.name, f.dataType))
 
-  override def writeBatch(rows: Seq[Row]): Unit = if (rows.nonEmpty) {
-    val del = preparedFor("delete", rows.size)(
-      dialect.deleteByKeysSql(table, keysTyped, rows.size))
-    val keyRows = rows.map(r => new org.apache.spark.sql.catalyst.expressions
-      .GenericRowWithSchema(keyIdx.map(r.get).toArray, keySchema): Row)
-    val delArgs = dialect.rowBindArgs(keyRows)
-    var i = 0
-    while (i < delArgs.length) { del.setObject(i + 1, delArgs(i)); i += 1 }
-    del.executeUpdate()
-    super.writeBatch(rows)
-  }
+  override def writeBatch(rows: Seq[Row]): Unit = if (rows.nonEmpty)
+    atomically {
+      val keyRows = rows.map(r => new org.apache.spark.sql.catalyst.expressions
+        .GenericRowWithSchema(keyIdx.map(r.get).toArray, keySchema): Row)
+      execRows(preparedFor("delete")(
+        dialect.deleteByKeysSql(table, keysTyped, 1)), keyRows)
+      insertRows(rows)
+    }
 }

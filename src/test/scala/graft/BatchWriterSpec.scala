@@ -196,6 +196,32 @@ class BatchWriterSpec extends SparkSpec {
     assert(RetryJudge.forDialect("other") eq RetryJudge.dataErrorsOnly)
   }
 
+  test("judges see a bad connection hung off a BatchUpdateException") {
+    // JDBC drivers report a failed batch as BatchUpdateException and
+    // chain the underlying error through getNextException, not getCause
+    def batchFailure(next: java.sql.SQLException) = {
+      val e = new java.sql.BatchUpdateException("batch failed", "08006", 0,
+        Array.emptyIntArray)
+      e.setNextException(next)
+      e
+    }
+    val badConn = batchFailure(new java.sql.SQLRecoverableException("gone"))
+    val server = batchFailure(new java.sql.SQLException("ORA-00001", "23000", 1))
+    for (j <- Seq(RetryJudge.mysql, RetryJudge.oracle)) {
+      assert(j.shouldRetry(badConn) && !j.isDataError(badConn))
+      assert(!j.shouldRetry(server) && j.isDataError(server))
+    }
+    // through the writer: the batch retries whole and nothing is
+    // quarantined
+    reset()
+    val dlq = ResilientBatchWriter.write(df(8), cfg, RetryJudge.oracle,
+      _ => new JdbcishSink("-none-", 2,
+        () => batchFailure(new java.sql.SQLRecoverableException("conn lost"))))
+    assert(dlq.count() == 0)
+    assert(transientFailures == 2)
+    assert(written.asScala.flatten.size == 8)
+  }
+
   test("idle-timeout flush fires while the iterator is stalled (W2)") {
     reset()
     // rows 0,1 arrive instantly; the upstream then stalls 1200 ms before

@@ -232,6 +232,63 @@ class JdbcLiveSpec extends SparkSpec {
       """select count(*) from "facts" where "id" = 999""") == Seq(1L))
   }
 
+  test("ledger sink: a rejected row mid-batch reaches the DLQ, good rows land once") {
+    // the partition transaction stays open across batches, so a failed
+    // multi-row batch must roll back to its own savepoint before the
+    // row-wise replay re-inserts its good rows
+    val url = memUrl("ledgerdlqdb")
+    val t = TableId(name = "facts_ck")
+    val lt = TableId(name = "facts_ck_ledger")
+    exec(url, """create table "facts_ck"("id" bigint, "v" double, """ +
+      """constraint "v_nonneg" check ("v" >= 0))""")
+    JdbcLedgerSink.createLedger(url, d, lt)
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("v", DoubleType)))
+    import spark.implicits._
+    val df = (0L until 20L).map(i => (i, if (i == 9L) -1.0 else i * 0.5))
+      .toDF("id", "v").repartition(2)
+    val cfg = WriterConfig(table = t, execMode = ExecMode.Normal,
+      batchSize = 6)
+    val dial = DerbyStyle
+    val dlq = ResilientBatchWriter.write(df, cfg,
+      RetryJudge.forDialect(dial.name),
+      _ => new JdbcLedgerSink(url, dial, t, lt, schema, 1L))
+    val bad = dlq.collect()
+    assert(bad.length == 1 && bad.head.getString(0).contains("\"id\":9"),
+      bad.toSeq)
+    assert(queryLongs(url, """select count(*) from "facts_ck"""") == Seq(19L))
+    assert(queryLongs(url,
+      """select count(distinct "id") from "facts_ck"""") == Seq(19L))
+    assert(queryLongs(url, """select count(*) from "facts_ck_ledger"""")
+      == Seq(2L))
+  }
+
+  test("live upsert sink: a rejected replace keeps the key's old image (Normal mode)") {
+    // outside a writer transaction the delete and the insert of a batch
+    // still form one unit: the row that fails its insert must not lose
+    // the image it was meant to replace
+    val url = memUrl("upsertckdb")
+    val t = TableId(name = "ups_ck")
+    exec(url, """create table "ups_ck"("k" bigint not null primary key, """ +
+      """"n" double, constraint "n_nonneg" check ("n" >= 0))""")
+    val schema = StructType(Seq(
+      StructField("k", LongType), StructField("n", DoubleType)))
+    import spark.implicits._
+    val cfg = WriterConfig(table = t, execMode = ExecMode.Normal,
+      batchSize = 10)
+    val dial = DerbyStyle
+    def put(rows: (Long, Double)*) = ResilientBatchWriter.write(
+      rows.toDF("k", "n").coalesce(1), cfg, RetryJudge.forDialect(dial.name),
+      _ => new JdbcUpsertRowSink(url, dial, t, schema, Seq("k")))
+    assert(put((1L, 1.0), (2L, 2.0), (3L, 3.0)).count() == 0)
+    val bad = put((1L, 10.0), (2L, -1.0), (3L, 30.0), (4L, 40.0)).collect()
+    assert(bad.length == 1 && bad.head.getString(0).contains("\"k\":2"),
+      bad.toSeq)
+    assert(queryLongs(url,
+      """select cast("n" as bigint) from "ups_ck" order by "k"""")
+      == Seq(10L, 2L, 30L, 40L))
+  }
+
   test("live degrade: real constraint violations quarantine row-wise to the DLQ") {
     val url = memUrl("dlqdb")
     JdbcLive.createTable(url, d, TableId(name = "uniq_tbl"), StructType(Seq(
