@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints exactly one JSON line.
   *
@@ -17,19 +15,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
       .max(1)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    Tables.RequiredConf.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val spark = Sessions.local(cpus, "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
 
     // dev loop only: SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the run

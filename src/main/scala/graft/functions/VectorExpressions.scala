@@ -210,9 +210,9 @@ object SetOps {
   // null elements fail LOUD (r11 ADVICE fix): getLong on a null
   // UnsafeArrayData slot silently reads 0, which would count a null as
   // the value 0 where size(array_intersect) treats null as a set
-  // member — a silent divergence. The check rides the sortedness walk
-  // (which already touches every element) and the fallback's copy, so
-  // the null-free hot path pays one branch per element.
+  // member — a silent divergence. The check is its own pre-pass over
+  // both arrays, before the sortedness walk: the sorted hot path scans
+  // each array twice.
   private def noNulls(a: ArrayData): ArrayData = {
     val n = a.numElements()
     var i = 0

@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * a driver-side argmax of ONE row. Driver state is the merge list
   * (nMerges pairs), never data rows. The per-iteration symbol rewrite is
   * the native codegen'd [[graft.functions.BpeMerge]] expression;
-  * `localCheckpoint` truncates the growing lineage each iteration (the
-  * established iterative-loop discipline, see Dedup.nearDupClusters).
+  * a [[Pin]] truncates the growing lineage each iteration (the
+  * established iterative-loop discipline, see Dedup.connectedComponents).
   *
   * The argmax tie-break is total and deterministic — (weight DESC, a ASC,
   * b ASC) — so the learned vocabulary is identical across partitionings
@@ -58,7 +58,7 @@ object Bpe {
   def train(docs: DataFrame, text: Column, nMerges: Int)
       : Seq[(String, String)] = {
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var syms = asSymbols(wordCounts(docs, text)).localCheckpoint()
+    var syms = Pin.workingSet(asSymbols(wordCounts(docs, text)))
     var i = 0
     var done = false
     while (i < nMerges && !done) {
@@ -70,8 +70,8 @@ object Bpe {
       else {
         val (a, b) = (top(0).getString(0), top(0).getString(1))
         merges += ((a, b))
-        syms = syms.withColumn("sym",
-          BpeFunctions.bpe_merge(col("sym"), a, b)).localCheckpoint()
+        syms = Pin.workingSet(syms.withColumn("sym",
+          BpeFunctions.bpe_merge(col("sym"), a, b)))
       }
       i += 1
     }

@@ -59,16 +59,13 @@ object Coreset {
     require(clash.isEmpty,
       s"kCenter reserves output columns ${reserved.mkString(", ")}; " +
         s"input already has: ${clash.mkString(", ")}")
-    val base = df.select(col(idCol), vecCol.as("__kc_v"))
+    // pinned: re-scanned once per selected center (k rounds)
+    val base = Pin.workingSet(df.select(col(idCol), vecCol.as("__kc_v"))
       .filter(col("__kc_v").isNotNull && size(col("__kc_v")) > 0)
       .select(col(idCol), q(col("__kc_v"), scale).as("__kc_q"))
       .withColumn("__kc_xx",
         graft.functions.VectorFunctions
-          .vec_dot_long(col("__kc_q"), col("__kc_q")))
-      // localCheckpoint, not cache(): re-scanned once per selected
-      // center (k rounds) — per-scan columnar array decode dominates
-      // (see Graph.pageRank's ew note)
-      .localCheckpoint()
+          .vec_dot_long(col("__kc_q"), col("__kc_q"))))
     try {
       val seed = base.orderBy(col(idCol)).limit(1)
         .select(col(idCol), col("__kc_q")).collect()

@@ -26,13 +26,12 @@ object CorpusOverlap {
   def pairwiseShingleOverlap(df: DataFrame, sourceCol: Column,
       text: Column, n: Int): DataFrame = {
     require(n >= 1, s"shingle width must be >= 1: $n")
-    val postings = df
+    val postings = Pin.workingSet(df
       .filter(text.isNotNull && sourceCol.isNotNull)
       .select(sourceCol.as("__co_src"),
         explode(array_distinct(TextAnalysis.shingles(text, n)))
           .as("__co_sh"))
-      .distinct()
-      .localCheckpoint() // consumed three times below (sizes + both join sides)
+      .distinct()) // consumed three times below (sizes + both join sides)
     val sizes = postings.groupBy(col("__co_src"))
       .agg(count(lit(1)).as("__co_n"))
     val common = postings.as("a")

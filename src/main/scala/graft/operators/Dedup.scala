@@ -114,14 +114,13 @@ object Dedup {
         hashed.join(spark.read.parquet(indexPath), Seq("content_hash"),
           "left_anti")
       else hashed
-    // batch-internal dedup (min id per hash); localCheckpoint CUTS the
-    // plan's lineage to the index files — a persist() would be
-    // invalidated by the index write's own refreshByPath and silently
-    // recompute against the post-write index (= drop everything)
-    unseen.join(
+    // batch-internal dedup (min id per hash); the pin CUTS the plan's
+    // lineage to the index files — recomputed after the index write's
+    // refreshByPath, it would run against the post-write index and drop
+    // everything
+    Pin.workingSet(unseen.join(
       unseen.groupBy(col("content_hash")).agg(min(col(idCol)).as(idCol)),
-      Seq(idCol, "content_hash"), "left_semi")
-      .localCheckpoint()
+      Seq(idCol, "content_hash"), "left_semi"))
   }
 
   /** Phase 2 of [[exactKeepIncremental]]: record the staged survivors'
@@ -244,11 +243,10 @@ object Dedup {
       .filter(est(col("a.__sig"), col("b.__sig")) >= tau)
       .select(col("b.__id").as("__id"))
     val dups = dupVsIndex.union(dupInBatch).distinct()
-    // localCheckpoint CUTS lineage to the index files before the index
-    // write below refreshes the path (same trap as exactKeepIncremental)
-    val survivors = withSig
-      .join(dups, withSig(idCol) === dups("__id"), "left_anti")
-      .localCheckpoint()
+    // the pin CUTS lineage to the index files before the index write
+    // below refreshes the path (same trap as exactKeepIncremental)
+    val survivors = Pin.workingSet(withSig
+      .join(dups, withSig(idCol) === dups("__id"), "left_anti"))
     val newEntries = survivors.select(col(idCol).as("__id"), col("__sig"),
         posexplode(bandHashes))
       .select(col("pos").as("band"), col("col").as("band_hash"),
@@ -572,9 +570,8 @@ object Dedup {
     * (labels-x-labels join) — the path-halving step that makes rounds
     * O(log n) instead of O(diameter), so a 1M-link chain converges in
     * ~20 rounds, not 1M. All shuffle-on-key, no driver data paths; the
-    * only driver-side value is the convergence count, riding the
-    * checkpoint job as an observed metric (ONE action per iteration).
-    * Lineage is cut per iteration with localCheckpoint.
+    * only driver-side value is the convergence count, observed on the
+    * iteration's pin ([[Pin.round]]: ONE action per iteration).
     *
     * Throws IllegalStateException if maxIter rounds don't converge —
     * silently returning partial labels would be a wrong dedup.
@@ -597,12 +594,10 @@ object Dedup {
     // are partitioning-independent (same components -> same min id),
     // so results are unchanged.
     //
-    // localCheckpoint, not cache(): the edge set is re-scanned every
-    // pointer-jumping round, and the columnar in-memory cache pays a
-    // decompress+decode per scan; the pin also cuts the (often
-    // expensive) pair-generation lineage out of every round's plan.
-    // Null endpoints are dropped up front — a null side never joined to
-    // any label, so this is exactly the old behavior.
+    // The star edge set is pinned: it is re-scanned every
+    // pointer-jumping round. Null endpoints are dropped up front — a
+    // null side never joined to any label, so this is exactly the old
+    // behavior.
     val spark0 = pairs.sparkSession
     import spark0.implicits._
     val stars = pairs
@@ -637,10 +632,10 @@ object Dedup {
         out.result().iterator
       }
       .toDF("u", "v")
-    val edges = stars.localCheckpoint()
+    val edges = Pin.workingSet(stars)
     try {
-      var labels = nodes.select(col(nodeCol).as("node")).distinct()
-        .withColumn("component", col("node")).localCheckpoint()
+      var labels = Pin.workingSet(nodes.select(col(nodeCol).as("node"))
+        .distinct().withColumn("component", col("node")))
       var converged = false
       var i = 0
       while (!converged && i < maxIter) {
@@ -655,19 +650,17 @@ object Dedup {
         // halves every label chain each round
         val parents = labels
           .select(col("node").as("p_node"), col("component").as("p_comp"))
-        val obs = new org.apache.spark.sql.Observation(s"cc_changed_$i")
-        val next = viaNbr
+        val (next, nChanged) = Pin.round[Long](viaNbr
           .join(parents, viaNbr("comp1") === parents("p_node"), "left")
           .select(col("node"),
             least(col("comp1"), coalesce(col("p_comp"), col("comp1")))
               .as("new_comp"),
             col("component"))
           .select(col("node"), col("new_comp").as("component"),
-            (col("new_comp") < col("component")).as("changed"))
-          .observe(obs, sum(col("changed").cast("long")).as("n_changed"))
-          .localCheckpoint()
+            (col("new_comp") < col("component")).as("changed")),
+          s"cc_changed_$i", sum(col("changed").cast("long")))
         // sum over an empty frame is null -> converged
-        converged = obs.get.get("n_changed").forall(v => v == null || v == 0L)
+        converged = nChanged.forall(_ == 0L)
         labels = next.drop("changed")
         i += 1
       }

@@ -69,7 +69,7 @@ object EntityResolution {
     require(mNum >= 1 && mNum < mDen,
       s"m must be a fraction in (0,1): $mNum/$mDen")
     import graft.functions.FixedLog.log2Fp
-    val keyed = records.select(
+    val keyed = Pin.workingSet(records.select(
       (idCol +: attrs).distinct.map(col) ++
         blockKeys.zipWithIndex.map { case (k, i) => k.as(s"__fs_k$i") }: _*)
       // hash-repartition on the id BEFORE pinning: the record table
@@ -80,8 +80,8 @@ object EntityResolution {
       // parallelism makes pair generation scale with the cluster, not
       // with the file count (partition count follows
       // spark.sql.shuffle.partitions / AQE, no constant baked in).
-      .repartition(col(idCol))
-      .localCheckpoint() // consumed by |attrs| u-aggs + both join sides
+      // pinned: consumed by |attrs| u-aggs + both join sides
+      .repartition(col(idCol)))
     val recs = keyed
     // exact u per attribute: collision probability of two random
     // non-null values, as the integer fraction (sum f(f-1), N(N-1))

@@ -39,7 +39,7 @@ object Graph {
     * Scale posture: each iteration is ONE shuffle join (edges x ranks on
     * src) + ONE aggregation (sum by dst) — the textbook shape; the node
     * count enters the plan as a broadcast 1-row scalar, never a driver
-    * value; lineage is cut per iteration with localCheckpoint so the
+    * value; each iteration's ranks are pinned ([[Pin]]) so the
     * 10-iteration plan does not nest 10 joins deep. Edge dedup + degree
     * are computed once and cached across iterations.
     */
@@ -53,13 +53,11 @@ object Graph {
     * every seed converge to exactly 0 — both facts the oracle replays
     * identically. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int, checkpointEvery: Int = 1,
-      edgesDistinct: Boolean = false,
+      iters: Int, edgesDistinct: Boolean = false,
       weightCol: Option[String] = None,
       seeds: Option[Seq[Long]] = None): DataFrame = {
     require(seeds.forall(_.nonEmpty), "seeds, when given, must be non-empty")
     require(iters >= 1 && iters <= 100, s"iters=$iters out of [1,100]")
-    require(checkpointEvery >= 1, s"checkpointEvery=$checkpointEvery")
     // WEIGHTED generalization, same fixed-point arithmetic: an edge of
     // integer weight w carries (rank(u) * w) div strength(u), where
     // strength = sum of outgoing weights. With w = 1 every division
@@ -91,23 +89,17 @@ object Graph {
       .groupBy(col("node")).agg(sum(col("o")).as("od"))
       .cache()
     val nn = broadcast(nd.agg(count(lit(1)).as("n")))
-    // edge working set pre-joined with out-strength AND pre-partitioned
-    // on the join key: the per-iteration join then shuffles only the
-    // rank side (|V| rows), never the |E|-row edge table — the
-    // iterative-join layout every Pregel-style engine uses
+    // edge working set pre-joined with out-strength and clustered on
+    // the join key; a pin under AQE hides that layout from the planner
+    // (see [[Pin]]), so a round's join exchanges the edge side too
+    // unless AQE broadcasts the |V|-row rank side
     val deg = nd.filter(col("od") > 0)
       .select(col("node").as("src"), col("od"))
-    // localCheckpoint, not cache(): the working set is re-SCANNED once
-    // per iteration, and the columnar in-memory cache pays a
-    // decompress+decode on every scan — measured 10-17 s executor time
-    // per iteration at sf0.1 (32 cores) just re-reading it. The
-    // checkpoint stores finished UnsafeRows (scan = iterate, no decode)
-    // and still preserves the hash partitioning for the per-iteration
-    // join (LogicalRDD keeps outputPartitioning).
-    val ew = e.join(deg, "src").repartition(col("src")).localCheckpoint()
+    // pinned: re-scanned once per iteration
+    val ew = Pin.workingSet(e.join(deg, "src").repartition(col("src")))
     try {
       // per-node init rank + teleport term, computed once (tiny: |V|)
-      val base = (seeds match {
+      val base = Pin.workingSet(seeds match {
         case None => nd.crossJoin(nn)
           .select(col("node"), expr(s"$Scale div n").as("rank"),
             expr(s"(15 * ($Scale div n)) div 100").as("tp"))
@@ -119,7 +111,7 @@ object Graph {
               .as("rank"),
             when(isSeed, expr(s"(15 * ($Scale div $k)) div 100"))
               .otherwise(lit(0L)).as("tp"))
-      }).localCheckpoint()
+      })
       var ranks = base.select(col("node"), col("rank"))
       var i = 0
       while (i < iters) {
@@ -130,15 +122,12 @@ object Graph {
           .select(base("node"),
             expr("tp + (85 * coalesce(s, 0L)) div 100").as("rank"))
         i += 1
-        // lineage cut cadence: interval 1 (default) materializes each
-        // round — measured fastest here, since one compact job per round
-        // beats one mega-job whose 3-exchanges-per-round dag AQE
-        // re-optimizes stage by stage; raising the interval trades
-        // scheduler round-trips for plan depth on long runs
-        if (i % checkpointEvery == 0 && i < iters)
-          ranks = ranks.localCheckpoint()
+        // every round is pinned: one compact job per round measured
+        // faster than one mega-job whose 3-exchanges-per-round dag AQE
+        // re-optimizes stage by stage
+        if (i < iters) ranks = Pin.workingSet(ranks)
       }
-      ranks.localCheckpoint()
+      Pin.workingSet(ranks)
     } finally { ew.unpersist(); nd.unpersist(); e.unpersist() }
   }
 
@@ -172,27 +161,20 @@ object Graph {
           greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
         .filter(col("a") < col("b"))
         .distinct()
-    var cur = raw.localCheckpoint()
-    var curCnt = cur.count()
+    // the surviving-edge count that drives the exit test is observed
+    // on each round's pin, the initial one included
+    var (cur, curCnt) = Pin.round[Long](raw, "kcore_n_init", count(lit(1)))
     var r = 0
-    var fixed = curCnt == 0L
+    var fixed = curCnt.forall(_ == 0L)
     while (r < maxRounds && !fixed) {
       val deg = cur.select(explode(array(col("a"), col("b"))).as("node"))
         .groupBy(col("node")).agg(count(lit(1)).as("d"))
       val keep = deg.filter(col("d") >= k).select(col("node"))
-      // one action per round (r11): the surviving-edge count that
-      // drives the exit test rides the checkpoint job as an observed
-      // metric instead of a second full scan of the pinned frame
-      val obs = new org.apache.spark.sql.Observation(s"kcore_n_$r")
-      val next = cur
+      val (next, nextCnt) = Pin.round[Long](cur
         .join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
-        .select(col("a"), col("b"))
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint()
-      val nextCnt = Option(obs.get.get("n").orNull)
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      fixed = nextCnt == curCnt || nextCnt == 0L
+        .select(col("a"), col("b")), s"kcore_n_$r", count(lit(1)))
+      fixed = nextCnt == curCnt || nextCnt.forall(_ == 0L)
       cur = next
       curCnt = nextCnt
       r += 1
@@ -216,8 +198,8 @@ object Graph {
     * Labels flow src -> dst; symmetrize first for undirected community
     * semantics (as the gate query does).
     *
-    * Scale posture: per round, ONE join against the pre-partitioned
-    * edge working set (only the |V|-row label side shuffles), ONE
+    * Scale posture: per round, ONE join against the pinned edge
+    * working set, ONE
     * map-side-partial count by (node, label), ONE argmax by node — the
     * argmax is a struct max aggregate, not a window, so partials
     * combine before the exchange; lineage is cut per round. */
@@ -227,16 +209,14 @@ object Graph {
     val raw = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
-    // localCheckpoint, not cache(): re-scanned every round, and the
-    // columnar cache pays a decompress per scan (see pageRank's ew note;
-    // measured there). Partitioning on src survives the checkpoint.
-    val e = (if (edgesDistinct) raw else raw.distinct())
-      .repartition(col("src")).localCheckpoint()
+    // pinned: re-scanned every round
+    val e = Pin.workingSet((if (edgesDistinct) raw else raw.distinct())
+      .repartition(col("src")))
     try {
       val nodes = e.select(explode(array(col("src"), col("dst")))
         .as("node")).distinct()
-      var labels = nodes.select(col("node"), col("node").as("lab"))
-        .localCheckpoint()
+      var labels = Pin.workingSet(
+        nodes.select(col("node"), col("node").as("lab")))
       var i = 0
       while (i < iters) {
         val cnt = e.join(labels, e("src") === labels("node"))
@@ -251,10 +231,9 @@ object Graph {
           .select(labels("node"),
             coalesce(col("plab"), col("lab")).as("lab"))
         i += 1
-        if (i < iters) labels = labels.localCheckpoint()
+        if (i < iters) labels = Pin.workingSet(labels)
       }
-      labels.select(col("node"), col("lab").as("community"))
-        .localCheckpoint()
+      Pin.workingSet(labels.select(col("node"), col("lab").as("community")))
     } finally e.unpersist()
   }
 
@@ -308,9 +287,8 @@ object Graph {
         .agg(count(lit(1)).as("n_triangles"))
       val sizes = w.und.agg(count(lit(1)).as("n_edges"))
         .crossJoin(w.deg.agg(count(lit(1)).as("n_nodes")))
-      sizes.crossJoin(tri)
-        .select(col("n_nodes"), col("n_edges"), col("n_triangles"))
-        .localCheckpoint()
+      Pin.workingSet(sizes.crossJoin(tri)
+        .select(col("n_nodes"), col("n_edges"), col("n_triangles")))
     } finally w.und.unpersist()
   }
 
@@ -350,13 +328,12 @@ object Graph {
           tris.select(explode(array(col("u"), col("v1"), col("v2")))
             .as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("n_tri"))
-      w.deg.join(corners, Seq("node"), "left")
+      Pin.workingSet(w.deg.join(corners, Seq("node"), "left")
         .select(col("node"), col("d").as("degree"),
           coalesce(col("n_tri"), lit(0L)).as("n_tri"),
           when(col("d") < 2, lit(0.0d)).otherwise(
             (coalesce(col("n_tri"), lit(0L)) * 2).cast("double") /
-              (col("d") * (col("d") - 1)).cast("double")).as("lcc"))
-        .localCheckpoint()
+              (col("d") * (col("d") - 1)).cast("double")).as("lcc")))
     } finally w.und.unpersist()
   }
 
@@ -389,7 +366,7 @@ object Graph {
           greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
         .filter(col("a") < col("b"))
         .distinct()
-    val und = raw.localCheckpoint()
+    val und = Pin.workingSet(raw)
     val sym = und.select(explode(array(
         struct(col("a").as("u"), col("b").as("v")),
         struct(col("b").as("u"), col("a").as("v")))).as("e"))
@@ -434,13 +411,9 @@ object Graph {
           greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
         .filter(col("a") < col("b"))
         .distinct()
-    // localCheckpoint, not cache(): the canonical edge set is scanned
-    // five times (degree agg, both degree joins, idRange, the size
-    // census) and the columnar cache pays a decode per scan (measured
-    // 4-11 s executor time per re-scan at sf0.1 — see pageRank's ew
-    // note); the checkpoint also cuts the upstream edge-derivation
-    // lineage (the co-purchase join) out of every consumer.
-    val und = raw.localCheckpoint()
+    // pinned: the canonical edge set is scanned five times (degree agg,
+    // both degree joins, idRange, the size census)
+    val und = Pin.workingSet(raw)
     val deg = und.select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("d"))
     val withDeg = und
@@ -448,15 +421,14 @@ object Graph {
       .join(deg.select(col("node").as("b"), col("d").as("db")), "b")
     // orient toward the (degree, node)-larger endpoint; carry the
     // head's degree so wedge pairs can be ordered by the same relation
-    val oriented = withDeg.select(
+    val oriented = Pin.workingSet(withDeg.select(
       when(col("da") < col("db") ||
           (col("da") === col("db") && col("a") < col("b")),
         struct(col("a").as("u"), col("b").as("v"), col("db").as("dv")))
         .otherwise(
           struct(col("b").as("u"), col("a").as("v"), col("da").as("dv")))
         .as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"), col("e.dv").as("dv"))
-      .localCheckpoint()
+      .select(col("e.u").as("u"), col("e.v").as("v"), col("e.dv").as("dv")))
     val w1 = oriented.select(col("u"), col("v").as("v1"),
       col("dv").as("dv1"))
     val w2 = oriented.select(col("u"), col("v").as("v2"),
@@ -492,34 +464,31 @@ object Graph {
       seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame = {
     require(maxHops >= 0 && maxHops <= 50, s"maxHops=$maxHops out of [0,50]")
     // r11 a/b REJECTED a partitioned pin here (AQE-off repartition+sort
-    // on src, Pin.workingSetPartitioned): 2.99 -> 3.88 s at sf0.1/32c.
-    // The frontier side is small enough that AQE broadcasts it, so the
-    // pinned layout is never probed by a sort-merge join and the extra
-    // exchange+sort in the pin is pure cost.
-    val e = edges.select(col(srcCol).cast("long").as("src"),
+    // on src): 2.99 -> 3.88 s at sf0.1/32c. The frontier side is small
+    // enough that AQE broadcasts it, so the pinned layout is never
+    // probed by a sort-merge join and the extra exchange+sort in the pin
+    // is pure cost.
+    val e = Pin.workingSet(edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
-      .repartition(col("src")).localCheckpoint()
-    var visited = seeds.select(col(seedCol).cast("long").as("node"))
-      .where(col("node").isNotNull).distinct()
-      .withColumn("hops", lit(0L)).localCheckpoint()
+      .repartition(col("src")))
+    // ONE action per round, the seed pin included: the frontier size
+    // is observed on the round's pin. The visited set is not re-pinned
+    // per round (an O(|V|) copy each round); the anti-join scans the
+    // lazy union of the pinned per-hop legs.
+    var (visited, n) = Pin.round[Long](
+      seeds.select(col(seedCol).cast("long").as("node"))
+        .where(col("node").isNotNull).distinct()
+        .withColumn("hops", lit(0L)), "bfs_next_0", count(lit(1)))
     var frontier = visited.select(col("node"))
     var h = 0L
-    var done = frontier.isEmpty
-    while (h < maxHops && !done) {
+    while (h < maxHops && !n.forall(_ == 0L)) {
       h += 1
-      // ONE action per round (r11): the frontier-size probe rides the
-      // checkpoint job as an observed metric (the CC loop's pattern) —
-      // the separate isEmpty action and the per-round re-checkpoint of
-      // the whole visited set (an O(|V|) copy each round) are gone; the
-      // anti-join scans the lazy union of the pinned per-hop legs.
-      val obs = new org.apache.spark.sql.Observation(s"bfs_next_$h")
-      val next = frontier.join(e, col("node") === col("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(visited, Seq("node"), "left_anti")
-        .withColumn("hops", lit(h))
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint()
-      done = obs.get.get("n").forall(v => v == null || v == 0L)
+      val (next, nNext) = Pin.round[Long](
+        frontier.join(e, col("node") === col("src"))
+          .select(col("dst").as("node")).distinct()
+          .join(visited, Seq("node"), "left_anti")
+          .withColumn("hops", lit(h)), s"bfs_next_$h", count(lit(1)))
+      n = nNext
       visited = visited.unionByName(next)
       frontier = next.select(col("node"))
     }
@@ -546,27 +515,25 @@ object Graph {
       seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame = {
     require(maxHops >= 1 && maxHops <= 50,
       s"maxHops=$maxHops out of [1,50]")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
+    val e = Pin.workingSet(edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
-      .repartition(col("src")).localCheckpoint()
-    var visited = seeds.select(col(seedCol).cast("long").as("seed"))
-      .where(col("seed").isNotNull).distinct()
-      .select(col("seed"), col("seed").as("node"),
-        lit(0L).as("hops")).localCheckpoint()
+      .repartition(col("src")))
+    // one action per round — see shortestHops
+    var (visited, n) = Pin.round[Long](
+      seeds.select(col(seedCol).cast("long").as("seed"))
+        .where(col("seed").isNotNull).distinct()
+        .select(col("seed"), col("seed").as("node"), lit(0L).as("hops")),
+      "closeness_next_0", count(lit(1)))
     var frontier = visited.select(col("seed"), col("node"))
     var h = 0L
-    var done = frontier.isEmpty
-    while (h < maxHops && !done) {
+    while (h < maxHops && !n.forall(_ == 0L)) {
       h += 1
-      // one action per round — see shortestHops (r11)
-      val obs = new org.apache.spark.sql.Observation(s"closeness_next_$h")
-      val next = frontier.join(e, col("node") === col("src"))
-        .select(col("seed"), col("dst").as("node")).distinct()
-        .join(visited, Seq("seed", "node"), "left_anti")
-        .withColumn("hops", lit(h))
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint()
-      done = obs.get.get("n").forall(v => v == null || v == 0L)
+      val (next, nNext) = Pin.round[Long](
+        frontier.join(e, col("node") === col("src"))
+          .select(col("seed"), col("dst").as("node")).distinct()
+          .join(visited, Seq("seed", "node"), "left_anti")
+          .withColumn("hops", lit(h)), s"closeness_next_$h", count(lit(1)))
+      n = nNext
       visited = visited.unionByName(next)
       frontier = next.select(col("seed"), col("node"))
     }
@@ -598,37 +565,34 @@ object Graph {
       weightCol: String, seeds: DataFrame, seedCol: String,
       maxHops: Int): DataFrame = {
     require(maxHops >= 0 && maxHops <= 50, s"maxHops=$maxHops out of [0,50]")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
+    val e = Pin.workingSet(edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"),
         col(weightCol).cast("long").as("w"))
-      .repartition(col("src")).localCheckpoint()
-    var dist = seeds.select(col(seedCol).cast("long").as("node"))
-      .where(col("node").isNotNull).distinct()
-      .withColumn("cost", lit(0L)).localCheckpoint()
+      .repartition(col("src")))
+    // one action for the improved-set probe — see shortestHops
+    var (dist, n) = Pin.round[Long](
+      seeds.select(col(seedCol).cast("long").as("node"))
+        .where(col("node").isNotNull).distinct()
+        .withColumn("cost", lit(0L)), "bf_improved_0", count(lit(1)))
     var frontier = dist
     var h = 0
-    var done = frontier.isEmpty
-    while (h < maxHops && !done) {
+    while (h < maxHops && !n.forall(_ == 0L)) {
       h += 1
       val cand = frontier.join(e, col("node") === col("src"))
         .select(col("dst").as("node"), (col("cost") + col("w")).as("c"))
         .groupBy(col("node")).agg(min(col("c")).as("cand_cost"))
-      // one action for the improved-set probe — see shortestHops (r11)
-      val obs = new org.apache.spark.sql.Observation(s"bf_improved_$h")
-      val improved = cand
+      val (improved, nImproved) = Pin.round[Long](cand
         .join(dist.withColumnRenamed("cost", "cur"), Seq("node"), "left")
         .filter(col("cur").isNull || col("cand_cost") < col("cur"))
-        .select(col("node"), col("cand_cost").as("cost"))
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint()
-      done = obs.get.get("n").forall(v => v == null || v == 0L)
-      dist = dist.withColumnRenamed("cost", "a")
+        .select(col("node"), col("cand_cost").as("cost")),
+        s"bf_improved_$h", count(lit(1)))
+      n = nImproved
+      dist = Pin.workingSet(dist.withColumnRenamed("cost", "a")
         .join(improved.withColumnRenamed("cost", "b"), Seq("node"),
           "full_outer")
         .select(col("node"),
           least(coalesce(col("a"), col("b")), coalesce(col("b"), col("a")))
-            .as("cost"))
-        .localCheckpoint()
+            .as("cost")))
       frontier = improved
     }
     dist
@@ -649,42 +613,36 @@ object Graph {
     * arithmetic integral, and normalization choice doesn't change the
     * RANKING fixed point, only the scale.)
     *
-    * Scale shape: edges dedup once and cache pre-partitioned; each
-    * half-round shuffles only the |V|-row score table against the
-    * cached edges plus one 1-row total broadcast; scores localCheckpoint
-    * per round (bounded lineage). Output: (node, auth, hub). */
+    * Scale shape: edges dedup once and are pinned; each half-round
+    * joins the |V|-row score table against them, and its raw scores
+    * are pinned (bounded lineage) with their L1 total observed on the
+    * pin. Output: (node, auth, hub). */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, edgesDistinct: Boolean = false): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters=$iters out of [1,50]")
     val raw = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
-    // localCheckpoint, not cache(): scanned TWICE per round (auth and
-    // hub half-rounds) — the per-scan columnar decode dominates (see
-    // pageRank's ew note)
-    val e = (if (edgesDistinct) raw else raw.distinct()).localCheckpoint()
+    // pinned: scanned TWICE per round (auth and hub half-rounds)
+    val e = Pin.workingSet(if (edgesDistinct) raw else raw.distinct())
     try {
-      val nodes = e.select(explode(array(col("src"), col("dst")))
-        .as("node")).distinct().localCheckpoint()
+      val nodes = Pin.workingSet(e.select(explode(array(col("src"),
+        col("dst"))).as("node")).distinct())
       var halfRound = 0
       def normalized(rawScores: DataFrame, keyed: String, out: String) = {
-        // ONE action per half-round (r11, the Bradley-Terry pattern):
-        // the raw per-node sums (|V| rows) checkpoint once — without
-        // the cut the half-round's |E| join would execute twice
-        // (measured ~2x the whole operator in r9) — and the L1 total
-        // rides that SAME job as an observed metric, landing in the
-        // normalize projection as a literal. The old shape ran a
-        // second checkpoint action per half-round plus a broadcast
-        // cross-join just to move the one scalar. The normalize join
-        // itself stays lazy: its single consumer is the next
-        // half-round's pinned aggregate (or the final join).
+        // ONE action per half-round: the raw per-node sums (|V| rows)
+        // are pinned once — without the cut the half-round's |E| join
+        // would execute twice (measured ~2x the whole operator in r9) —
+        // and the L1 total is observed on that pin and lands in the
+        // normalize projection as a literal. The normalize join itself
+        // stays lazy: each one feeds the next half-round's pinned
+        // aggregate, and the last hub feeds only the returned join. The
+        // last auth feeds both the last hub half-round and the returned
+        // join, so that one O(|V|) join runs twice.
         halfRound += 1
-        val obs = new org.apache.spark.sql.Observation(
-          s"hits_tot_$halfRound")
-        val raw = rawScores.observe(obs, sum(col("s")).as("t"))
-          .localCheckpoint()
-        val t = Option(obs.get.get("t").orNull)
-          .map(_.asInstanceOf[Long]).getOrElse(0L)
+        val (raw, tot) = Pin.round[Long](rawScores, s"hits_tot_$halfRound",
+          sum(col("s")))
+        val t = tot.getOrElse(0L)
         val normalize =
           if (t != 0L) nodes.join(raw, nodes("node") === raw(keyed), "left")
             .select(nodes("node"), expr(
@@ -753,10 +711,9 @@ object Graph {
     val raw = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
-    // localCheckpoint, not cache(): scanned by the degree agg, the
-    // center filter and both wedge sides — per-scan decode dominates
-    // (see pageRank's ew note)
-    val e = raw.distinct().localCheckpoint()
+    // pinned: scanned by the degree agg, the center filter and both
+    // wedge sides
+    val e = Pin.workingSet(raw.distinct())
     try {
       val deg = e.groupBy(col("src").as("node"))
         .agg(count(lit(1)).as("deg"))
@@ -836,19 +793,16 @@ object Graph {
     require(maxVerifyArrayDeg >= 1, s"maxVerifyArrayDeg")
     val rows = perms / bands
     val P = graft.functions.SketchUtil.MinhashP
-    // the deduped edge list is pinned ONCE (localCheckpoint): the
-    // banding, the hub probe, the adjacency build and the verify all
-    // re-reference it, and an upstream edge DERIVATION (a join, in the
-    // gate) would otherwise re-execute per job — the same edge
-    // working-set pinning the exact tier does. Caveat: lineage-
-    // truncated blocks stay pinned for the session (Spark has no safe
-    // auto-unpersist), so a driver loop calling this repeatedly pays
-    // storage, not recompute.
-    val e = edges.select(col(srcCol).cast("long").as("src"),
+    // the deduped edge list is pinned ONCE: the banding, the hub probe,
+    // the adjacency build and the verify all re-reference it, and an
+    // upstream edge DERIVATION (a join, in the gate) would otherwise
+    // re-execute per job. Caveat: lineage-truncated blocks stay pinned
+    // for the session (Spark has no safe auto-unpersist), so a driver
+    // loop calling this repeatedly pays storage, not recompute.
+    val e = Pin.workingSet(edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     // ONE groupBy, bounded state: deg + `perms` running mins per node —
     // min(h(n) for n in set) == min-aggregate over the (distinct) edge
     // rows; state is |V| x (perms+1) longs, never a neighbor array.
@@ -858,10 +812,10 @@ object Graph {
         min(pmod(pmod(col("dst"), lit(P)) * lit(a) + lit(b), lit(P)))
           .as(s"__sig$i")
       }
-    val sigs = e.groupBy(col("src").as("node"))
-      .agg(sigAggs.head, sigAggs.tail: _*)
-      .localCheckpoint() // |V| x (perms+1) longs; makes the hub probe
-                         // and the deg joins O(|V|) re-reads
+    // pinned (|V| x (perms+1) longs): the hub probe and the deg joins
+    // become O(|V|) re-reads
+    val sigs = Pin.workingSet(e.groupBy(col("src").as("node"))
+      .agg(sigAggs.head, sigAggs.tail: _*))
     // band key: each slot value is < P, so a band of rows<=2 packs
     // INJECTIVELY into one long (sig0*P + sig1 < P^2 < 2^62) — same
     // bucket equality as the old "sig0:sig1" string key (r11: the
@@ -1058,27 +1012,23 @@ object Graph {
     // the frontier then knows its current node's degree without a
     // per-step degree join — ONE probe join per step, the other half
     // paid once at build time
-    // pinned WITHOUT a probe-key repartition: the layout exchange never
-    // survived the AQE-built checkpoint (the scan reports Unknown
-    // partitioning — see Pin.workingSetPartitioned), so the per-step
-    // probe join re-exchanges the adjacency regardless and the build-
-    // time repartition was pure waste; a/b'd against both a partitioned
-    // two-stage pin (worse: double materialization) and an AQE-off pin
-    // (worse: loses the runtime broadcast of the degree join)
-    val adj = e.select(col("src"),
+    // pinned WITHOUT a probe-key repartition: a pin under AQE reports
+    // unknown partitioning (see [[Pin]]), so the per-step probe join
+    // re-exchanges the adjacency regardless; a/b'd against both a
+    // partitioned two-stage pin (worse: double materialization) and an
+    // AQE-off pin (worse: loses the runtime broadcast of the degree join)
+    val adj = Pin.workingSet(e.select(col("src"),
         (row_number().over(Window.partitionBy(col("src"))
           .orderBy(col("dst"))) - 1).cast("long").as("rk"),
         col("dst"))
       .join(degs.select(col("node").as("dst"),
-        col("deg").as("dst_deg")), Seq("dst"), "left")
-      .localCheckpoint()
+        col("deg").as("dst_deg")), Seq("dst"), "left"))
     try {
       val reps = explode(sequence(lit(0), lit(walksPerNode - 1))).as("rep")
-      var frontier = degs
+      var frontier = Pin.workingSet(degs
         .select(col("node").as("start"), reps, col("deg"))
         .select(col("start"), col("rep").cast("long").as("rep"),
-          col("start").as("cur"), col("deg").as("cur_deg"))
-        .localCheckpoint()
+          col("start").as("cur"), col("deg").as("cur_deg")))
       val out = Seq.newBuilder[DataFrame]
       out += frontier.select(col("start"), col("rep"),
         lit(0L).as("step"), col("cur").as("node"))
@@ -1090,11 +1040,10 @@ object Graph {
         val idx = frontier.where(col("cur_deg").isNotNull)
           .select(col("start"), col("rep"), col("cur"),
             pmod(draw, col("cur_deg")).as("idx"))
-        frontier = idx.join(adj,
+        frontier = Pin.workingSet(idx.join(adj,
             idx("cur") === adj("src") && idx("idx") === adj("rk"))
           .select(col("start"), col("rep"), col("dst").as("cur"),
-            col("dst_deg").as("cur_deg"))
-          .localCheckpoint()
+            col("dst_deg").as("cur_deg")))
         t += 1
         out += frontier.select(col("start"), col("rep"),
           lit(t.toLong).as("step"), col("cur").as("node"))

@@ -48,8 +48,7 @@ object Ids {
     // the whole upstream (often the query's expensive aggregate) plus
     // the range exchange and window would execute twice (r10
     // optimization — measured 2x on abc_classification's revenue agg)
-    val local = parted.withColumn("__run", sum(v).over(w))
-      .localCheckpoint()
+    val local = Pin.workingSet(parted.withColumn("__run", sum(v).over(w)))
     val totals = local.groupBy(col("__pid"))
       .agg(sum(v).as("__tot")).orderBy(col("__pid")).collect()
     val spark = df.sparkSession
@@ -114,14 +113,14 @@ object Ids {
     // is (partitionId << 33) + local index, so the pinned frame carries
     // its own (pid, index) pair; job 1 counts rows per pid (map-side
     // partial), job 2 adds the broadcast per-pid offset. The eager
-    // localCheckpoint pins ONE materialized layout for both jobs (range
+    // pin keeps ONE materialized layout for both jobs (range
     // boundaries are sampled per execution, so unpinned re-runs could
     // disagree).
-    val parted = numPartitions.fold(df.repartitionByRange(order: _*))(
-        n => df.repartitionByRange(n, order: _*))
-      .sortWithinPartitions(order: _*)
-      .withColumn("__dg_mid", monotonically_increasing_id())
-      .localCheckpoint()
+    val parted = Pin.workingSet(
+      numPartitions.fold(df.repartitionByRange(order: _*))(
+          n => df.repartitionByRange(n, order: _*))
+        .sortWithinPartitions(order: _*)
+        .withColumn("__dg_mid", monotonically_increasing_id()))
     val sizes = parted
       .groupBy(shiftrightunsigned(col("__dg_mid"), 33).as("__dg_pid"))
       .agg(count(lit(1)).as("__dg_n"))

@@ -1,29 +1,49 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 
-/** The ONE pinning point for iterative / multi-consumer working sets.
+/** The one place where graft materializes a working set. Every operator
+  * that re-scans an intermediate (graph iteration edge sets and ranks,
+  * CC labels, k-means vectors, ER blocking inputs, prefix-sum frames)
+  * pins it here, and every iterative loop takes its rounds through
+  * [[round]], so the materialization policy is written once.
   *
-  * Every operator that re-scans an intermediate (graph iteration edge
-  * sets, CC labels, k-means vectors, ER blocking inputs, prefix-sum
-  * frames) pins it here instead of calling `localCheckpoint()` inline,
-  * so the materialization posture is a single switch:
+  * Why a checkpoint and not `cache()`: a pinned frame is scanned again
+  * and again (once per round of a loop, or once per consumer of a
+  * shared intermediate), and the columnar in-memory cache pays a
+  * decompress+decode on every scan — measured 10-17 s of executor time
+  * per pageRank iteration at sf0.1 on 32 cores just re-reading the edge
+  * working set. A checkpoint stores finished UnsafeRows (a scan is an
+  * iteration, no decode) and cuts the lineage: a loop's plan does not
+  * nest one join per round, an expensive upstream (a pair generation,
+  * a co-purchase join) leaves every consumer's plan, and the rows stay
+  * fixed across a later `refreshByPath` of the files they were read
+  * from (which invalidates a persisted plan and would silently
+  * recompute it against the rewritten files).
   *
-  *  - default: eager `localCheckpoint()` — blocks live on executors,
-  *    lineage is cut, per-scan columnar decode is avoided (guide §5;
-  *    measured 10-17 s/iteration of re-scan saved on pageRank at
-  *    sf0.1/32 cores in r10).
+  * Partitioning: under AQE (Spark's default, and every graft session) a
+  * pin reports UnknownPartitioning, even when its input was
+  * hash-partitioned right before it — the checkpoint records the
+  * partitioning its physical plan reports, and an adaptive plan
+  * reports Unknown. A join of a pinned frame on the key it was
+  * clustered by therefore exchanges it again unless the other side
+  * broadcasts.
+  * Without AQE the pin keeps its input's HashPartitioning (PinSpec
+  * checks both on Spark 4.1.2).
+  *
+  * Two modes, one switch:
+  *  - default: eager `localCheckpoint()` — blocks live on executors.
   *  - `spark.graft.pin.reliable=true` AND a `SparkContext.setCheckpointDir`
   *    directory set: reliable `checkpoint()` — blocks go to the
   *    checkpoint dir and survive executor loss. `localCheckpoint` is NOT
   *    fault-tolerant: on a real cluster one lost executor (or dynamic
   *    allocation reclaiming one) makes the pinned RDD unrecoverable, so
-  *    a 100 TB deployment must flip this switch (the speed cost is one
+  *    a large deployment must flip this switch (the speed cost is one
   *    write+read of the working set through the checkpoint FS).
   *
   * Both modes return a DataFrame with the SAME rows and schema; the
-  * choice can never change query results (PinSpec asserts plan-output
-  * equivalence in local mode).
+  * choice can never change query results (PinSpec runs kCore, pageRank
+  * and connected components both ways).
   */
 object Pin {
   /** Config key: set "true" (with a checkpoint dir) for fault-tolerant
@@ -38,32 +58,17 @@ object Pin {
     if (reliable) df.checkpoint() else df.localCheckpoint()
   }
 
-  /** [[workingSet]] for frames whose PARTITIONING (and ordering) the
-    * consumer relies on — pre-partitioned iteration working sets that
-    * downstream joins probe by key every round.
-    *
-    * Under AQE the checkpoint loses the partitioning: `Dataset
-    * .localCheckpoint` records `physicalPlan.outputPartitioning`, and an
-    * `AdaptiveSparkPlanExec` reports Unknown — so every consumer join
-    * re-shuffled the WHOLE pinned frame per round (measured on
-    * randomWalks at sf0.1: 19 MB x walkLen of adjacency re-exchange that
-    * the layout was built to avoid). Disabling AQE just for the
-    * materialization keeps the declared HashPartitioning/ordering on the
-    * checkpointed scan; the consuming queries still run with AQE. */
-  def workingSetPartitioned(df: DataFrame): DataFrame = {
-    val conf = df.sparkSession.conf
-    val key = "spark.sql.adaptive.enabled"
-    val prev = conf.get(key, "true")
-    conf.set(key, "false")
-    try workingSet(df) finally conf.set(key, prev)
-  }
-
-  /** Import for the `.pinned()` postfix form — a drop-in replacement at
-    * the former inline `.localCheckpoint()` call sites. */
-  object syntax {
-    implicit class PinnedDataFrame(private val df: DataFrame)
-        extends AnyVal {
-      def pinned(): DataFrame = Pin.workingSet(df)
-    }
+  /** One round of an iterative loop: pins `df` with the aggregate
+    * `metric` observed on the pinning job itself, so the value that
+    * drives the loop's exit test (a count, a changed-row sum, an L1
+    * total) costs no second action. Returns the pinned frame and the
+    * observed value; a null aggregate (a sum over an empty frame) comes
+    * back as None. `name` labels the observation and must not repeat
+    * within one plan — callers number it by round. */
+  def round[T](df: DataFrame, name: String, metric: Column)
+      : (DataFrame, Option[T]) = {
+    val obs = Observation(name)
+    val pinned = workingSet(df.observe(obs, metric.as("v")))
+    (pinned, Option(obs.get("v")).map(_.asInstanceOf[T]))
   }
 }

@@ -31,8 +31,8 @@ object Preference {
     *
     * Scale shape: counts collapse the comparison stream to the
     * distinct ordered-pair domain first; each round is one pair⋈item
-    * join + one groupBy over that domain, localCheckpoint'd (bounded:
-    * |items| rows) so round r+1 rereads results, not lineage. Driver
+    * join + one groupBy over that domain, pinned (bounded: |items|
+    * rows) so round r+1 rereads results, not lineage. Driver
     * state: none beyond the checkpoint bookkeeping.
     *
     * Output: (item, wins, games, strength_fp, strength) with
@@ -45,22 +45,21 @@ object Preference {
         col("w") =!= col("l"))
     // directed win counts, then the symmetric games-per-ordered-pair
     // table (i, j, n_ij) and per-item win totals
-    val wins = wl.groupBy(col("w"), col("l")).agg(count(lit(1)).as("n"))
-      .localCheckpoint()
-    val sym = wins.select(col("w").as("i"), col("l").as("j"), col("n"))
-      .unionByName(wins.select(col("l").as("i"), col("w").as("j"),
-        col("n")))
-      .groupBy(col("i"), col("j")).agg(sum(col("n")).as("nij"))
-      .localCheckpoint()
-    val items = sym.select(col("i")).distinct().localCheckpoint()
-    val totW = items.join(
+    val wins = Pin.workingSet(
+      wl.groupBy(col("w"), col("l")).agg(count(lit(1)).as("n")))
+    val sym = Pin.workingSet(
+      wins.select(col("w").as("i"), col("l").as("j"), col("n"))
+        .unionByName(wins.select(col("l").as("i"), col("w").as("j"),
+          col("n")))
+        .groupBy(col("i"), col("j")).agg(sum(col("n")).as("nij")))
+    // |items| once, observed on the items pin — it never changes
+    val (items, nItemsObs) = Pin.round[Long](
+      sym.select(col("i")).distinct(), "bt_items", count(lit(1)))
+    val nItems = nItemsObs.getOrElse(0L)
+    val totW = Pin.workingSet(items.join(
         wins.groupBy(col("w")).agg(sum(col("n")).as("wins")),
         items("i") === col("w"), "left")
-      .select(col("i"), coalesce(col("wins"), lit(0L)).as("wins"))
-      .localCheckpoint()
-    // |items| once, before the loop — it never changes, and the old
-    // per-round broadcast cross-join re-aggregated it every round
-    val nItems = items.count()
+      .select(col("i"), coalesce(col("wins"), lit(0L)).as("wins")))
 
     var p = items.select(col("i"), lit(Scale).as("p"))
     var r = 0
@@ -72,24 +71,19 @@ object Preference {
           expr(s"(CAST(nij AS DECIMAL(38,0)) * $Scale2)" +
             " div (__pi + __pj)"))
         .groupBy(col("i")).agg(sum(col("__t")).as("__S"))
-      // ONE action per round (r11): the L1 total rides the round's
-      // checkpoint job as an observed metric (decimal: Σp' can outrun
-      // int64 when |items| is huge) and lands in the next projection as
-      // a LITERAL — the old shape ran a second checkpoint plus two
-      // broadcast cross-joins per round to move two scalars
-      val obs = new org.apache.spark.sql.Observation(s"bt_tot_$r")
-      val raw = totW.join(scored, "i")
-        .withColumn("__pn",
-          when(col("__S") > 0,
-            expr(s"(CAST(wins AS DECIMAL(38,0)) * $Scale2) div __S"))
-            .otherwise(0L))
-        .observe(obs, sum(col("__pn").cast("decimal(38,0)")).as("__tot"))
-        .localCheckpoint()
+      // ONE action per round: the L1 total is observed on the round's
+      // pin (decimal: Σp' can outrun int64 when |items| is huge) and
+      // lands in the next projection as a LITERAL
+      val (raw, obsTot) = Pin.round[java.math.BigDecimal](
+        totW.join(scored, "i")
+          .withColumn("__pn",
+            when(col("__S") > 0,
+              expr(s"(CAST(wins AS DECIMAL(38,0)) * $Scale2) div __S"))
+              .otherwise(0L)),
+        s"bt_tot_$r", sum(col("__pn").cast("decimal(38,0)")))
       // an empty frame observes a null total and an all-zero round a
       // zero one: both divide by 1 (every __pn is then 0, so p stays 0)
-      val tot = Option(obs.get.get("__tot").orNull)
-        .map(_.asInstanceOf[java.math.BigDecimal])
-        .filter(_.signum != 0).fold("1")(_.toString)
+      val tot = obsTot.filter(_.signum != 0).fold("1")(_.toString)
       p = raw.select(col("i"),
         expr(s"CAST((CAST(__pn AS DECIMAL(38,0)) * $nItems * $Scale)" +
           s" div CAST('$tot' AS DECIMAL(38,0)) AS BIGINT)").as("p"))

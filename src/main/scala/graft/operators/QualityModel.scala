@@ -123,12 +123,11 @@ object QualityModel {
     // the fences aggregate, the training pass, and the scoring pass all
     // consume it, and lazily each would re-run the bigram explode + two
     // vocabulary joins (this single line is a ~2x on the whole loop)
-    val lm = TextAnalysis.bigramLmScore(df, idCol, text)
+    val lm = Pin.workingSet(TextAnalysis.bigramLmScore(df, idCol, text)
       .withColumn("__qm_lm",
         when(col("n_bigrams") > 0,
           col("score").cast("double") / col("n_bigrams")).otherwise(0.0))
-      .select(col(idCol), col("__qm_lm"))
-      .localCheckpoint()
+      .select(col(idCol), col("__qm_lm")))
     // exact quartile fences, one 2-double row broadcast back onto the
     // corpus (the iqrOutliers pattern) — no global sort, no window
     val fences = lm.agg(

@@ -70,8 +70,8 @@ object SequenceModel {
     require(k >= 1, s"k must be positive: $k")
     // ONE window pass: persist the transition stream so the model fit
     // and the scoring join share it instead of re-shuffling the events
-    val tr = transitions(events, userCol, tsCol, tieCol, typeCol)
-      .localCheckpoint()
+    val tr = Pin.workingSet(
+      transitions(events, userCol, tsCol, tieCol, typeCol))
     val model = broadcast(modelOfTransitions(tr))
     tr.join(model, Seq("__prev", "__next"))
       .groupBy(col("__u"))

@@ -645,7 +645,7 @@ object Similarity {
     // pin the quantized training set ONCE (r11): the init collect plus
     // every Lloyd iteration's treeAggregate otherwise re-executes the
     // upstream scan + quantize cast per action (iters+1 re-executions)
-    val base = graft.operators.Pin.workingSet(base0)
+    val base = Pin.workingSet(base0)
     val initRows = base.orderBy(col("vec_id")).limit(k)
       .select(col("q4")).collect().map(_.getSeq[Long](0).toArray)
     var books: Array[Array[Array[Long]]] = Array.tabulate(m)(s =>
@@ -696,7 +696,7 @@ object Similarity {
       dim: Int): Array[Array[Long]] = {
     require(k >= 1 && iters >= 0)
     // pinned once — see kMeansIntSubspaces (r11)
-    val q = graft.operators.Pin.workingSet(q0)
+    val q = Pin.workingSet(q0)
     var cents: Array[Array[Long]] = q.orderBy(col("vec_id")).limit(k)
       .select(col("q4")).collect().map(_.getSeq[Long](0).toArray)
     var t = 0
@@ -1302,14 +1302,10 @@ object Similarity {
     * (their centroid had no points), so the codebook may shrink below k.
     */
   def kMeansCodebook(df: DataFrame, k: Int, maxIter: Int = 8): DataFrame = {
-    // localCheckpoint the cast vectors: every iteration scans them twice
-    // (assign + update) and nothing upstream changes between iterations;
-    // a columnar cache() would pay an array-decode on every scan (see
-    // Graph.pageRank's ew note — measured there), the checkpoint stores
-    // finished rows
-    val vecs = df.select(col("vec_id"),
-      transform(col("embedding"), _.cast("double")).as("v"))
-      .localCheckpoint()
+    // pin the cast vectors: every iteration scans them twice (assign +
+    // update) and nothing upstream changes between iterations
+    val vecs = Pin.workingSet(df.select(col("vec_id"),
+      transform(col("embedding"), _.cast("double")).as("v")))
     try {
       var centers: Array[Seq[Double]] = vecs.orderBy(col("vec_id")).limit(k)
         .select(col("v")).collect()
@@ -1621,11 +1617,9 @@ object Similarity {
       if (estRows <= MaxTrainRows) corpus
       else corpus.filter(
         pmod(xxhash64(col("vec_id")), lit(estRows / MaxTrainRows + 1)) === 0)
-    // localCheckpoint, not cache(): re-scanned every training iteration
-    // (see kMeansCodebook's note)
-    val sub = trainSet
-      .select(col("vec_id"), posexplode(subs).as(Seq("s", "v")))
-      .localCheckpoint()
+    // pinned: re-scanned every training iteration
+    val sub = Pin.workingSet(trainSet
+      .select(col("vec_id"), posexplode(subs).as(Seq("s", "v"))))
     try {
       var centers: Array[Array[Seq[Double]]] = {
         val rows = trainSet.orderBy(col("vec_id")).limit(kCodes)

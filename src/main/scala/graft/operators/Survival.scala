@@ -42,13 +42,12 @@ object Survival {
     // window feeding the gate query) would recompute per action —
     // measured 3.9 s -> the domain is bounded by the observation
     // window, so the checkpoint is tiny at any corpus scale
-    val perDur = df
+    val perDur = Pin.workingSet(df
       .select(t.cast("long").as("t"), event.cast("long").as("__e"))
       .groupBy(col("t"))
       .agg(sum(col("__e")).as("n_events"),
         sum(lit(1L) - col("__e")).as("n_censored"),
-        count(lit(1)).as("__all"))
-      .localCheckpoint()
+        count(lit(1)).as("__all")))
     val total = perDur.agg(sum(col("__all")).as("__n"))
     // at risk at step t = subjects with duration >= t: total minus the
     // EXCLUSIVE prefix count (inclusive cum minus own row)

@@ -181,11 +181,10 @@ object TextAnalysis {
       .select(col(idCol), explode(tokens(text)).as("__sc_t"))
       .groupBy(col(idCol), col("__sc_t")).agg(count(lit(1)).as("__sc_tf"))
     val dfc = tf.groupBy(col("__sc_t")).agg(count(lit(1)).as("__sc_df"))
-    val w = tf.join(dfc, "__sc_t")
+    val w = Pin.workingSet(tf.join(dfc, "__sc_t")
       .filter(col("__sc_df") <= maxDf)
       .select(col(idCol).as("__sc_id"), col("__sc_t"),
-        (col("__sc_tf") * expr(s"$scale div __sc_df")).as("__sc_w"))
-      .localCheckpoint()
+        (col("__sc_tf") * expr(s"$scale div __sc_df")).as("__sc_w")))
     val norms = w.groupBy(col("__sc_id"))
       .agg(sum(col("__sc_w") * col("__sc_w")).as("__sc_n2"))
     val pairs = w.as("a").join(w.as("b"),

@@ -76,7 +76,7 @@ object Unigram {
   def train(docs: DataFrame, text: Column, vocabSize: Int,
       emIters: Int = 2, seedFactor: Int = 4): Seq[(String, Long)] = {
     require(vocabSize > 0 && emIters >= 1, "vocabSize/emIters must be >= 1")
-    val words = Bpe.wordCounts(docs, text).localCheckpoint()
+    val words = Pin.workingSet(Bpe.wordCounts(docs, text))
     val seed = seedPieces(words, vocabSize * seedFactor)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
     var vocab = toCosts(seed)

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.{Decontaminate, Dedup, Sampling, Scrub, TextAnalysis, Urls}
+import graft.operators.{Decontaminate, Dedup, Pin, Sampling, Scrub, TextAnalysis, Urls}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -299,13 +299,12 @@ object PrepOps {
       // one survivor per CANONICAL url (min doc_id). The dedup stages
       // below are SELF-joins — without a materialization barrier each
       // branch re-executes the whole strip+normalize chain (PlanDump
-      // showed it three times); localCheckpoint computes the cleaned
+      // showed it three times); the pin computes the cleaned
       // intermediate once, exactly where a production pipeline would
       // persist it
-      val canon = gated.withColumn("url_canon",
+      val canon = Pin.workingSet(gated.withColumn("url_canon",
           Urls.canonicalize(col("url")))
-        .select(col("doc_id"), col("url_canon"), col("text_norm"))
-        .localCheckpoint()
+        .select(col("doc_id"), col("url_canon"), col("text_norm")))
       val urlKept = canon.join(
         canon.groupBy(col("url_canon")).agg(min(col("doc_id")).as("doc_id")),
         Seq("doc_id", "url_canon"), "left_semi")

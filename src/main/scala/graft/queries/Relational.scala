@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{ColUtil, Tables}
 import graft.ColUtil._
+import graft.operators.Pin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -718,11 +719,10 @@ object Relational {
     "abc_classification" -> ((s, d) => {
       // pinned: consumed by the prefix sum AND the total — unpinned,
       // the lineitem aggregate would execute twice (r10 optimization)
-      val rev = Tables.lineitem(s, d)
+      val rev = Pin.workingSet(Tables.lineitem(s, d)
         .groupBy(col("l_partkey"))
         .agg(sum(money(col("l_extendedprice")) *
-          frac(lit(1) - col("l_discount"))).as("rev"))
-        .localCheckpoint()
+          frac(lit(1) - col("l_discount"))).as("rev")))
       val cum = graft.operators.Ids.prefixSum(rev,
         Seq(col("rev").desc, col("l_partkey")), col("rev"), "cum_rev")
       val tot = rev.agg(sum(col("rev")).as("total_rev"))

@@ -3,7 +3,7 @@ package graft.queries
 import java.io.ByteArrayInputStream
 
 import graft.Tables
-import graft.operators.{Bloom, Decontaminate, TextAnalysis}
+import graft.operators.{Bloom, Decontaminate, Pin, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.CountMinSketch
@@ -1559,10 +1559,10 @@ object SketchOps {
            |WHEN MATCHED THEN UPDATE SET c = m.c2, state = 'u'""".stripMargin)
       s.sql(s"INSERT INTO $cat.t VALUES (${hi + 7}, 42, 'i')")
       // change-feed batch read over (baseV, head]
-      val feed = s.read.format("graft")
+      // pinned: the matview + audit read it twice
+      val feed = Pin.workingSet(s.read.format("graft")
         .option("readChangeFeed", "true").option("changeFeedKeys", "k")
-        .option("startingVersion", baseV).load(s"$wh/t")
-        .localCheckpoint() // pin: the matview + audit read it twice
+        .option("startingVersion", baseV).load(s"$wh/t"))
       // incremental matview: apply the feed to the PRE-merge snapshot
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("k").orderBy(col("_commit_version").desc)

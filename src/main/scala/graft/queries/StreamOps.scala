@@ -463,10 +463,11 @@ object StreamOps {
 
     // late-data accounting end to end: the corpus replays as THREE
     // ordered micro-batches (1/2, 1/4, 1/4 by event_id % 4 — seeds,
-    // watermark-advancer, late tail). Probed Spark semantics
-    // (tools.LateProbe): the watermark batch N runs under is
-    // computed at batch N-1's close (max event time - delay); windows
-    // whose end <= that watermark were EVICTED at batch close, so a
+    // watermark-advancer, late tail). Spark's semantics (StreamingSpec
+    // "late rows beyond the watermark are dropped" checks the drop):
+    // the watermark batch N runs under is computed at batch N-1's
+    // close (max event time - delay); windows whose end <= that
+    // watermark were EVICTED at batch close, so a
     // batch-2 row into such a window DROPS (numRowsDroppedByWatermark)
     // while a late row into a still-live window still aggregates.
     // Append mode emits exactly the windows the FINAL watermark closed.
@@ -1135,11 +1136,12 @@ object StreamOps {
       """SELECT event_type, COUNT(DISTINCT user_id) AS n_users
         |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin,
 
-    // three-batch watermark replay (probed semantics, tools.LateProbe):
-    // windows whose end <= max(b1 time) - 10min are EVICTED at b2's
-    // close (b2 itself merges into still-live states); b3 rows into
-    // those evicted windows DROP; the final watermark over all rows
-    // finalizes the emitted set; counts aggregate the kept rows
+    // three-batch watermark replay (the semantics noted at the
+    // stream_late_data query): windows whose end <= max(b1 time) - 10min
+    // are EVICTED at b2's close (b2 itself merges into still-live
+    // states); b3 rows into those evicted windows DROP; the final
+    // watermark over all rows finalizes the emitted set; counts
+    // aggregate the kept rows
     "stream_lake_pipeline" ->
       """SELECT event_type, COUNT(*) AS n_events,
         |  CAST(SUM(CAST(FLOOR(value * 100) AS BIGINT)) AS BIGINT)

@@ -3,6 +3,7 @@ package graft.sinks
 import java.nio.charset.StandardCharsets
 import java.util.UUID
 
+import graft.operators.Pin
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.analysis
@@ -1566,15 +1567,15 @@ object VersionedTable {
     * — but the match set is a DataFrame, so the commit is bounded by
     * cluster memory, never by driver state or Catalyst expression size
     * (an OR-of-ANDs literal predicate grows linearly in the key count
-    * and blows up analysis/codegen). The key set is pinned with
-    * localCheckpoint so OCC retries re-plan against identical keys. */
+    * and blows up analysis/codegen). The key set is pinned so OCC
+    * retries re-plan against identical keys. */
   def deleteMatching(spark: SparkSession, root: String,
       keyRows: DataFrame, keys: Seq[String]): Long = {
     require(keys.nonEmpty, "deleteMatching needs key columns")
     val schema = resolve(fs(spark, root), root)._2.schema
-    val delKeys = keyRows
+    val delKeys = Pin.workingSet(keyRows
       .select(keys.map(k => col(k).as("__dk_" + k)): _*)
-      .distinct().localCheckpoint()
+      .distinct())
     def cond(left: DataFrame): Column =
       keys.map(k => left(k) <=> delKeys("__dk_" + k)).reduce(_ && _)
     rewriteCommit(spark, root, schema) { h =>
@@ -2568,10 +2569,9 @@ object VersionedTable {
     val iChanged = !stateEq("into_", "b_")
     val fChanged = !stateEq("from_", "b_")
     val convergent = stateEq("into_", "from_")
-    val classified = j.withColumn("__take",
+    val classified = Pin.workingSet(j.withColumn("__take",
         fChanged && !iChanged)
-      .withColumn("__conflict", iChanged && fChanged && !convergent)
-      .localCheckpoint()
+      .withColumn("__conflict", iChanged && fChanged && !convergent))
     val conflictCols: Seq[Column] = keys.map(col) ++
       dataCols.map(c => col("into_" + c)) ++ Seq(col("into_present")) ++
       dataCols.map(c => col("from_" + c)) ++ Seq(col("from_present"))

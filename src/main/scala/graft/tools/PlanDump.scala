@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run one SparkEntry query and dump its EXECUTED plan (post-AQE,
   * so ReusedExchange / skew splits / runtime broadcasts are visible —
   * `df.explain` before an action shows only the initial plan).
@@ -12,16 +10,8 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val cpus = if (args.length > 2) args(2) else "8"
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    graft.Tables.RequiredConf.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val cpus = if (args.length > 2) args(2).toInt else 8
+    val spark = graft.Sessions.local(cpus, "graft-plandump")
     spark.sparkContext.setLogLevel("ERROR")
     val df = graft.SparkEntry.queries(name)(spark, sfDir)
     val t0 = System.nanoTime()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: write `explain("formatted")` of named SparkEntry queries to
   * plans/<outdir>/<query>_<suffix>.txt (the optimization-round evidence
   * files). Usage:
@@ -13,17 +11,8 @@ object PlanText {
     val suffix = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = if (args.length > 4) args(4) else "32"
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plantext")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    graft.Tables.RequiredConf.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val cpus = if (args.length > 4) args(4).toInt else 32
+    val spark = graft.Sessions.local(cpus, "graft-plantext")
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>

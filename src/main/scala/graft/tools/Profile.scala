@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -23,18 +22,9 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = if (args.length > 2) args(2) else "32"
+    val cpus = if (args.length > 2) args(2).toInt else 32
     val iters = if (args.length > 3) args(3).toInt else 2
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-profile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    graft.Tables.RequiredConf.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val spark = graft.Sessions.local(cpus, "graft-profile")
     spark.sparkContext.setLogLevel("WARN")
 
     val bySite = mutable.LinkedHashMap.empty[String, Acc]

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: derive a larger scale factor from an existing fixture dir by
@@ -29,13 +29,7 @@ object ScaleFixtures {
     val dst = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
     require(factor >= 1, s"factor: $factor")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-scale-fixtures")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(8, "graft-scale-fixtures")
     spark.sparkContext.setLogLevel("ERROR")
 
     val docs = spark.read.parquet(s"$src/documents.parquet")
