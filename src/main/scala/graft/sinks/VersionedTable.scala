@@ -1207,19 +1207,10 @@ object VersionedTable {
       require(f.rename(new Path(p0), dst), s"stage move failed: $p0 -> $dst")
       f.makeQualified(dst).toString
     }
-    val statsOn = spark.conf
-      .getOption("spark.graft.lake.stats.enabled").forall(_.toBoolean)
-    val staged = if (statsOn && moved.nonEmpty) {
-      // staged row-level files carry PHYSICAL column names (the write
-      // factory got the physical schema) — stats keys must match
-      collectStats(spark, physicalSchema(schema), moved, Some(headM)) match {
-        case Some(nonEmpty) =>
-          val (keep, empty) = moved.partition(nonEmpty.contains)
-          empty.foreach(p => f.delete(new Path(p), false))
-          keep
-        case None => moved
-      }
-    } else moved
+    // staged row-level files carry PHYSICAL column names (the write
+    // factory got the physical schema) — stats keys must match
+    val staged =
+      dropEmpty(f, spark, physicalSchema(schema), moved, Some(headM))
     // same staged-materialization discipline as stageFiles: validate
     // the exact bytes the commit will publish
     if (staged.nonEmpty)
@@ -1444,12 +1435,11 @@ object VersionedTable {
       mergeSchema: Boolean = false): Long = {
     val spark = updates.sparkSession
     val f = fs(spark, root)
-    var outSchema: StructType = updates.schema
-    rewriteCommit(spark, root, outSchema) { h =>
+    rewriteCommit(spark, root) { h =>
       h.filter(_.files.nonEmpty) match {
-        case None => (Nil, Some(updates))
+        case None => (updates.schema, Nil, Some(updates))
         case Some(m) =>
-          outSchema = evolve(m.schema, updates.schema, mergeSchema)
+          val outSchema = evolve(m.schema, updates.schema, mergeSchema)
           requireUnpoisoned(f, root, m, outSchema)
           // touched = files holding at least one matching key. The probe
           // reads ONLY the key columns (+ file metadata)
@@ -1466,7 +1456,7 @@ object VersionedTable {
               .join(updates.select(keys.map(col): _*).distinct(), keys,
                 "left_anti")
               .unionByName(updates, allowMissingColumns = mergeSchema)
-          (rewrite, Some(merged))
+          (outSchema, rewrite, Some(merged))
       }
     }
   }
@@ -1482,81 +1472,78 @@ object VersionedTable {
     *
     * File-pruned identically to upsert: only files holding a matching
     * key rewrite (the probe reads key columns + file metadata; collects
-    * are file-path lists bounded by |files|); every unmatched-source
-    * key is by construction absent from kept files, so inserts
-    * anti-join only the rewritten rows. */
+    * are file-path lists bounded by |files|). The rewritten files then
+    * join the source ONCE on `keys` — full outer with `insertUnmatched`,
+    * left without (the source then needs only its keys and the columns
+    * the conditions name): target-only rows carry over, matched rows
+    * delete or update, source-only rows insert. That equals the
+    * rewritten-rows-plus-anti-joined-inserts plan because
+    *  - the source is key-unique by contract, so no target row fans out;
+    *  - a null key never matches on either plan (equi-join), so a
+    *    null-keyed target row carries over and a null-keyed source row
+    *    inserts, both ways;
+    *  - a source key matching no rewritten file matches no head file
+    *    (the probe would have rewritten it), so source-only rows ARE the
+    *    unmatched source rows — absent from carried files by construction.
+    * The rows stage unprobed: an empty outcome stages zero-row part
+    * files, which staging drops (see [[dropEmpty]]). */
   def merge(source: DataFrame, root: String, keys: Seq[String],
       matchedDelete: Option[Column], matchedUpdate: Map[String, Column],
       insertUnmatched: Boolean = true): Long = {
     val spark = source.sparkSession
-    val schema = resolve(fs(spark, root), root)._2.schema
-    require(matchedUpdate.keySet.forall(schema.fieldNames.contains),
-      s"update assigns unknown columns: " +
-        s"${matchedUpdate.keySet -- schema.fieldNames}")
-    rewriteCommit(spark, root, schema) { h =>
-      val prev = filesOf(h)
-      val rewrite = touchedFiles(prev, readFiles(spark, schema, prev)
+    val src = source.select(keys.map(col) ++
+      source.columns.filterNot(keys.contains)
+        .map(c => col(c).as(s"src_$c")): _*)
+      .withColumn("__matched", lit(true))
+    rewriteCommit(spark, root) { h =>
+      val m = h.getOrElse(throw noCommit(root))
+      val schema = m.schema
+      require(matchedUpdate.keySet.forall(schema.fieldNames.contains),
+        s"update assigns unknown columns: " +
+          s"${matchedUpdate.keySet -- schema.fieldNames}")
+      val rewrite = touchedFiles(m.files, readFiles(spark, schema, m.files)
         .select(col("_metadata.file_path").as("_f"),
           struct(keys.map(col): _*).as("_k"))
         .join(source.select(struct(keys.map(col): _*).as("_k")).distinct(),
           Seq("_k"), "left_semi")
         .select(col("_f")))
-      val src = source.select(keys.map(col) ++
-        source.columns.filterNot(keys.contains)
-          .map(c => col(c).as(s"src_$c")): _*)
-        .withColumn("__matched", lit(1))
-      val rewritten =
-        if (rewrite.isEmpty) spark.createDataFrame(
-          new java.util.ArrayList[Row](), schema)
-        else {
-          val joined = readFiles(spark, schema, rewrite)
-            .join(src, keys, "left")
-          val isM = col("__matched").isNotNull
-          val del = matchedDelete
-            .map(c => isM && coalesce(c, lit(false)))
-            .getOrElse(lit(false))
-          joined.filter(!del)
-            .select(schema.fieldNames.toSeq.map { c =>
-              matchedUpdate.get(c)
-                .map(u => when(isM, u).otherwise(col(c)).as(c))
-                .getOrElse(col(c))
-            }: _*)
-        }
-      val inserts =
-        if (!insertUnmatched) None
-        else {
-          val existing =
-            if (rewrite.isEmpty) Seq.empty
-            else Seq(readFiles(spark, schema, rewrite)
-              .select(keys.map(col): _*).distinct())
-          val unmatched = existing.foldLeft(
-            source.select(schema.fieldNames.toSeq.map(col): _*))(
-            (s, e) => s.join(e, keys, "left_anti"))
-          Some(unmatched)
-        }
-      val out = inserts.fold(rewritten)(rewritten.unionByName(_))
-      (rewrite, Some(out).filterNot(_.isEmpty))
+      val isT = col("__target").isNotNull
+      val isM = isT && col("__matched").isNotNull
+      val del = matchedDelete
+        .map(c => isM && coalesce(c, lit(false)))
+        .getOrElse(lit(false))
+      val rows = Option.when(rewrite.nonEmpty || insertUnmatched)(
+        readFiles(spark, schema, rewrite).withColumn("__target", lit(true))
+          .join(src, keys, if (insertUnmatched) "full_outer" else "left")
+          .filter(!del)
+          .select(schema.fieldNames.toSeq.map { c =>
+            val kept = matchedUpdate.get(c)
+              .fold(col(c))(u => when(isM, u).otherwise(col(c)))
+            (if (insertUnmatched && !keys.contains(c))
+              when(isT, kept).otherwise(col(s"src_$c"))
+            else kept).as(c)
+          }: _*))
+      (schema, rewrite, rows)
     }
   }
 
   /** Row-deleting commit, file-pruned like [[upsert]]: files with no
     * matching row are carried over untouched; files with matches are
-    * rewritten without the matching rows (a file left empty is simply
-    * dropped from the manifest). `condition` is any Catalyst predicate
-    * over the table's columns. */
+    * rewritten without the matching rows (a file left empty stages a
+    * zero-row part file that [[dropEmpty]] drops). `condition` is any
+    * Catalyst predicate over the table's columns. */
   def deleteWhere(spark: SparkSession, root: String,
       condition: Column): Long = {
-    val schema = resolve(fs(spark, root), root)._2.schema
     // DELETE semantics: remove rows where the predicate is TRUE; rows
     // where it is FALSE or NULL stay (matching SQL DELETE)
     val del = coalesce(condition, lit(false))
-    rewriteCommit(spark, root, schema) { h =>
-      val prev = filesOf(h)
-      val rewrite = touchedFiles(prev, readFiles(spark, schema, prev)
+    rewriteCommit(spark, root) { h =>
+      val m = h.getOrElse(throw noCommit(root))
+      val rewrite = touchedFiles(m.files, readFiles(spark, m.schema, m.files)
         .filter(del)
         .select(col("_metadata.file_path").as("_f")))
-      (rewrite, remainder(readFiles(spark, schema, rewrite).filter(!del),
-        rewrite))
+      (m.schema, rewrite, Option.when(rewrite.nonEmpty)(
+        readFiles(spark, m.schema, rewrite).filter(!del)))
     }
   }
 
@@ -1572,20 +1559,20 @@ object VersionedTable {
   def deleteMatching(spark: SparkSession, root: String,
       keyRows: DataFrame, keys: Seq[String]): Long = {
     require(keys.nonEmpty, "deleteMatching needs key columns")
-    val schema = resolve(fs(spark, root), root)._2.schema
     val delKeys = Pin.workingSet(keyRows
       .select(keys.map(k => col(k).as("__dk_" + k)): _*)
       .distinct())
     def cond(left: DataFrame): Column =
       keys.map(k => left(k) <=> delKeys("__dk_" + k)).reduce(_ && _)
-    rewriteCommit(spark, root, schema) { h =>
-      val prev = filesOf(h)
-      val head = readFiles(spark, schema, prev)
-      val rewrite = touchedFiles(prev, head
+    rewriteCommit(spark, root) { h =>
+      val m = h.getOrElse(throw noCommit(root))
+      val head = readFiles(spark, m.schema, m.files)
+      val rewrite = touchedFiles(m.files, head
         .join(delKeys, cond(head), "left_semi")
         .select(col("_metadata.file_path").as("_f")))
-      val rw = readFiles(spark, schema, rewrite)
-      (rewrite, remainder(rw.join(delKeys, cond(rw), "left_anti"), rewrite))
+      val rw = readFiles(spark, m.schema, rewrite)
+      (m.schema, rewrite, Option.when(rewrite.nonEmpty)(
+        rw.join(delKeys, cond(rw), "left_anti")))
     }
   }
 
@@ -1600,30 +1587,26 @@ object VersionedTable {
     files.filter(p => hit.contains(new Path(p).toString))
   }
 
-  /** The rows a delete leaves in the `rewrite` files, or None when there
-    * are none (a file left empty is dropped from the manifest). */
-  private def remainder(remaining: => DataFrame, rewrite: Seq[String])
-      : Option[DataFrame] =
-    if (rewrite.isEmpty) None
-    else Some(remaining).filterNot(_.isEmpty)
-
   /** The copy-on-write commit loop behind [[upsert]], [[merge]],
     * [[deleteWhere]], [[deleteMatching]], [[compact]] and
     * [[compactZOrdered]]. Each attempt hands `plan` the head it resolved
     * — merging against the CURRENT head, since a version race means
     * another writer moved it and a stale snapshot would lose its rows.
-    * `plan` returns the head files to rewrite and the rows replacing
-    * them (None: nothing to stage). Those rows are staged, the other
-    * head files carry over by identity, and a table that declared
+    * `plan` returns the schema to commit under (the head's, or upsert's
+    * evolution of it — so a retry after a concurrent schema change
+    * commits the new schema), the head files to rewrite and the rows
+    * replacing them (None: nothing to stage). Those rows are staged, the
+    * other head files carry over by identity, and a table that declared
     * [[ChangeFeedKeysProp]] records the commit's net diff so changeFeed
     * reads are pure scans — EMPTY, without a join, for a `layoutOnly`
     * rewrite, whose content is identical by construction. A lost race
     * or a failure deletes the attempt's staged files and change log
     * instead of leaving orphans for vacuum. */
   private def rewriteCommit(spark: SparkSession, root: String,
-      schema: => StructType, layoutOnly: Boolean = false)(
-      plan: Option[Manifest] => (Seq[String], Option[DataFrame])): Long = {
+      layoutOnly: Boolean = false)(plan: Option[Manifest] =>
+        (StructType, Seq[String], Option[DataFrame])): Long = {
     val f = fs(spark, root)
+    var schema: StructType = null
     var lastStaged: Seq[String] = Seq.empty
     var lastChanges: Option[String] = None
     def reclaim(): Unit = {
@@ -1634,7 +1617,8 @@ object VersionedTable {
     }
     try commitRetrying(spark, root, schema, changesFile = lastChanges) { h =>
       reclaim()
-      val (rewrite, rows) = plan(h)
+      val (s, rewrite, rows) = plan(h)
+      schema = s
       lastStaged = rows.fold(Seq.empty[String])(stageFiles(_, root, h))
       lastChanges = h.flatMap(declaredCdcKeys).map { ks =>
         writeChanges(f, root,
@@ -1800,10 +1784,17 @@ object VersionedTable {
     * (rows in carried files are identical by file identity), so
     *  - an append-only commit (nothing removed) emits its added files'
     *    rows as inserts — a pure parquet scan, NO join;
-    *  - a rewrite commit (MERGE/UPDATE/DELETE/upsert) joins ONLY the
-    *    removed files against ONLY the added files on `keys` —
+    *  - a rewrite commit (MERGE/UPDATE/DELETE/upsert) diffs ONLY its
+    *    removed files against ONLY its added files on `keys` —
     *    O(churned data), not O(table). A 100 TB table whose MERGE
-    *    rewrote 3 files diffs 3 files.
+    *    rewrote 3 files diffs 3 files;
+    *  - a commit that recorded its change log ([[ChangeFeedKeysProp]])
+    *    is a pure scan of that log.
+    * The rewrite commits share ONE keyed join: every removed side,
+    * tagged with its `_commit_version`, unions into one frame, every
+    * added side into another, and the join keys are `keys` plus
+    * `_commit_version` — rows of different commits never meet, so the
+    * result is the union of the per-commit diffs, in one shuffle.
     * Layout-only commits (compact/zorder: files churn, content
     * doesn't) still diff their churned files and correctly emit
     * nothing. Reads use the TO version's schema on both sides (columns
@@ -1823,48 +1814,47 @@ object VersionedTable {
     val outSchema = ms.find(_._1 == to).get._2.schema
     keys.foreach(k => require(outSchema.fieldNames.contains(k),
       s"changeFeed: no key column '$k' in ${outSchema.simpleString}"))
-    def readF(files: Seq[String]): DataFrame =
-      readFiles(spark, outSchema, files)
+    def readF(v: Long, files: Seq[String]): DataFrame =
+      readFiles(spark, outSchema, files).withColumn("_commit_version", lit(v))
     val dataCols = outSchema.fieldNames.filterNot(keys.contains).toSeq
     val feedSchema = StructType(outSchema.fields ++ Seq(
       StructField("change_type", StringType, nullable = false),
       StructField("_commit_version", LongType, nullable = false)))
     val empty =
       spark.createDataFrame(new java.util.ArrayList[Row](), feedSchema)
-    val perCommit = window.map { case ((_, mPrev), (v, mv)) =>
-      mv.changesFile match {
-        // write-side change log recorded at commit time
-        // (ChangeFeedKeysProp): the commit's net diff is a PURE SCAN —
-        // no keyed join at read time. The recorded diff used the
-        // table's declared identity keys, which is authoritative.
-        case Some(cf) =>
-          spark.read.schema(StructType(outSchema.fields :+
-              StructField("change_type", StringType)))
-            .parquet(cf)
-            .withColumn("_commit_version", lit(v))
-            .select(feedSchema.fieldNames.toSeq.map(col): _*)
-        case None =>
-          val prevFiles = mPrev.files
-          val curFiles = mv.files
-          val removed = prevFiles.filterNot(curFiles.toSet)
-          val added = curFiles.filterNot(prevFiles.toSet)
-          if (removed.isEmpty) // append-only commit: adds are inserts
-            readF(added)
-              .withColumn("change_type", lit("insert"))
-              .withColumn("_commit_version", lit(v))
-          else
-            // a key present only on the REMOVED side may still exist
-            // in a carried file (rewrites move rows between files only
-            // on compact/zorder, which add their files in the same
-            // commit) — with file-granular COW the removed side's keys
-            // are complete for the rewritten groups, so absence on the
-            // added side IS deletion within this commit
-            keyedDiff(readF(removed), readF(added), keys, dataCols)
-              .withColumn("_commit_version", lit(v))
-              .select(feedSchema.fieldNames.toSeq.map(col): _*)
-      }
+    // (version, removed files, added files) of each commit without a log
+    val churn = window.collect { case ((_, mPrev), (v, mv))
+        if mv.changesFile.isEmpty =>
+      (v, mPrev.files.filterNot(mv.files.toSet),
+        mv.files.filterNot(mPrev.files.toSet)) }
+    val (appends, rewrites) = churn.partition(_._2.isEmpty)
+    val scans = window.flatMap { case (_, (v, mv)) =>
+      // write-side change log recorded at commit time
+      // (ChangeFeedKeysProp): the commit's net diff is a PURE SCAN —
+      // no keyed join at read time. The recorded diff used the
+      // table's declared identity keys, which is authoritative.
+      mv.changesFile.map(cf =>
+        spark.read.schema(StructType(outSchema.fields :+
+            StructField("change_type", StringType)))
+          .parquet(cf)
+          .withColumn("_commit_version", lit(v)))
+    } ++ appends.map { case (v, _, added) => // append-only: adds insert
+      readF(v, added).withColumn("change_type", lit("insert"))
     }
-    perCommit.foldLeft(empty)(_.unionByName(_))
+    // a key present only on a commit's REMOVED side may still exist in
+    // a carried file (rewrites move rows between files only on
+    // compact/zorder, which add their files in the same commit) — with
+    // file-granular COW the removed side's keys are complete for the
+    // rewritten groups, so absence on the added side IS deletion within
+    // that commit
+    val joined = Option.when(rewrites.nonEmpty)(keyedDiff(
+      rewrites.map { case (v, removed, _) => readF(v, removed) }
+        .reduce(_.unionByName(_)),
+      rewrites.map { case (v, _, added) => readF(v, added) }
+        .reduce(_.unionByName(_)),
+      keys :+ "_commit_version", dataCols))
+    (scans ++ joined).foldLeft(empty)((acc, df) =>
+      acc.unionByName(df.select(feedSchema.fieldNames.toSeq.map(col): _*)))
   }
 
   /** Small-file compaction as a commit (the OPTIMIZE half of table
@@ -1880,16 +1870,17 @@ object VersionedTable {
       smallBytes: Long = 32L << 20,
       targetBytes: Long = 128L << 20): Option[Long] = {
     val f = fs(spark, root)
-    val schema = resolve(f, root)._2.schema
-    try Some(rewriteCommit(spark, root, schema, layoutOnly = true) { h =>
-      val small = filesOf(h).map(p => p -> f.getFileStatus(new Path(p)).getLen)
+    try Some(rewriteCommit(spark, root, layoutOnly = true) { h =>
+      val m = h.getOrElse(throw noCommit(root))
+      val small = m.files.map(p => p -> f.getFileStatus(new Path(p)).getLen)
         .filter(_._2 < smallBytes)
       // before any staging, change log or claim
       if (small.size < 2) throw new NothingToCompact
       val totalBytes = small.map(_._2).sum
       val nOut = ((totalBytes + targetBytes - 1) / targetBytes).toInt.max(1)
       val rewrite = small.map(_._1)
-      (rewrite, Some(readFiles(spark, schema, rewrite).coalesce(nOut)))
+      (m.schema, rewrite,
+        Some(readFiles(spark, m.schema, rewrite).coalesce(nOut)))
     })
     catch { case _: NothingToCompact => None }
   }
@@ -1908,12 +1899,11 @@ object VersionedTable {
     * patterns warrant it, not an every-commit cost. */
   def compactZOrdered(spark: SparkSession, root: String,
       cols: Seq[Column], nFiles: Int, bitsPerCol: Int = 16): Long = {
-    val schema = resolve(fs(spark, root), root)._2.schema
-    rewriteCommit(spark, root, schema, layoutOnly = true) { h =>
-      val prev = filesOf(h)
-      require(prev.nonEmpty, "cannot z-order an empty snapshot")
-      (prev, Some(graft.operators.Layout.zOrdered(
-        readFiles(spark, schema, prev), cols, nFiles, bitsPerCol)))
+    rewriteCommit(spark, root, layoutOnly = true) { h =>
+      val m = h.getOrElse(throw noCommit(root))
+      require(m.files.nonEmpty, "cannot z-order an empty snapshot")
+      (m.schema, m.files, Some(graft.operators.Layout.zOrdered(
+        readFiles(spark, m.schema, m.files), cols, nFiles, bitsPerCol)))
     }
   }
 
@@ -2038,13 +2028,12 @@ object VersionedTable {
     * table): its column mapping, bloom columns and CHECK constraints
     * apply to the staged files.
     * One extra pass over ONLY the newly staged files collects per-file
-    * min/max/null stats for the manifest's data-skipping index — and,
-    * as a byproduct, identifies EMPTY part files (a write with more
-    * shuffle partitions than rows produces them): those are deleted
-    * instead of committed, so manifests never accumulate zero-row
-    * entries (at ingest rate, a real file-count leak). With the stats
-    * pass disabled the empties can't be told apart cheaply and are
-    * committed as before (harmless to readers). */
+    * min/max/null stats for the manifest's data-skipping index, and
+    * EMPTY part files (a write with more shuffle partitions than rows,
+    * or a rewrite whose rows all went, produces them) are deleted
+    * instead of committed — see [[dropEmpty]] — so manifests never
+    * accumulate zero-row entries (at ingest rate, a real file-count
+    * leak), whether or not the stats pass is enabled. */
   private def stageFiles(df0: DataFrame, root: String,
       head: Option[Manifest]): Seq[String] = {
     val spark = df0.sparkSession
@@ -2088,22 +2077,7 @@ object VersionedTable {
       f.makeQualified(dst).toString
     }
     f.delete(stage, true)
-    // the stats pass doubles a commit's job count — free at test scale,
-    // a real choice at ingest rate. Opt out per session; files committed
-    // without stats simply aren't prunable (readWhere keeps them).
-    val statsOn = spark.conf
-      .getOption("spark.graft.lake.stats.enabled").forall(_.toBoolean)
-    val staged = if (statsOn && moved.nonEmpty) {
-      val stated = collectStats(spark, df.schema, moved, head)
-      stated match {
-        case Some(nonEmpty) => // stats ran: files with no stats row are
-          // zero-row part files — drop them from disk and the commit
-          val (keep, empty) = moved.partition(nonEmpty.contains)
-          empty.foreach(p => f.delete(new Path(p), false))
-          keep
-        case None => moved // no stat-eligible column: can't tell, keep
-      }
-    } else moved
+    val staged = dropEmpty(f, spark, df.schema, moved, head)
     // stageFiles is the single choke point where data enters the lake
     // (write/append/appendBatch/upsert/merge/compact all stage through
     // here), so CHECK constraints are enforced HERE — and on the
@@ -2125,6 +2099,28 @@ object VersionedTable {
         throw t
       }
     staged
+  }
+
+  /** Freshly staged `files` minus the zero-row ones, deleted from disk
+    * instead of committed: those without a stats row when the stats
+    * pass runs, else (stats off — files without stats just aren't
+    * prunable — or nothing stat-eligible) those whose footers count no
+    * rows, recording no ColStat. An unreadable footer keeps its file. */
+  private def dropEmpty(f: FileSystem, spark: SparkSession,
+      schema: StructType, files: Seq[String], head: Option[Manifest])
+      : Seq[String] = {
+    if (files.isEmpty) return files
+    val statsOn = spark.conf
+      .getOption("spark.graft.lake.stats.enabled").forall(_.toBoolean)
+    val nonEmpty =
+      (if (statsOn) collectStats(spark, schema, files, head) else None)
+        .orElse(footerStats(spark, new StructType(), files)
+          .map(_.collect { case (p, (n, _)) if n > 0 => p }.toSet))
+    nonEmpty.fold(files) { keep =>
+      val (kept, empty) = files.partition(keep.contains)
+      empty.foreach(p => f.delete(new Path(p), false))
+      kept
+    }
   }
 
   /** Bloom columns are STICKY per table: beyond the session conf, any

@@ -92,6 +92,46 @@ class ChangeFeedSpec extends SparkSpec {
       s"one update from the upsert, NOTHING from the compact: $rows")
   }
 
+  test("a window mixing rewrite, append and change-log commits equals " +
+      "the union of per-commit diffs") {
+    val root = s"${tmpBase("cf8")}/t"
+    mkTable(root)
+    val v0 = VersionedTable.versions(spark, root).max
+    // two rewrite commits without a change log, one append
+    VersionedTable.upsert(Seq((10L, -1L, "u"), (150L, -2L, "u"),
+      (999L, -3L, "i")).toDF("k", "v", "tag"), root, Seq("k"))
+    VersionedTable.deleteWhere(spark, root, col("k").between(140L, 160L))
+    VersionedTable.merge(Seq((20L, -4L, "m"), (301L, 0L, "d"),
+      (998L, -5L, "i")).toDF("k", "v", "tag"), root, Seq("k"),
+      matchedDelete = Some(col("src_v") === 0L),
+      matchedUpdate = Map("v" -> col("src_v"), "tag" -> col("src_tag")))
+    VersionedTable.append(Seq((1000L, 1L, "a")).toDF("k", "v", "tag"),
+      root)
+    // then commits that record their change log
+    VersionedTable.setProperties(spark, root,
+      Seq(VersionedTable.ChangeFeedKeysProp -> "k"))
+    VersionedTable.upsert(Seq((30L, -6L, "u"), (1000L, 2L, "u"))
+      .toDF("k", "v", "tag"), root, Seq("k"))
+    VersionedTable.deleteWhere(spark, root, col("k") === 999L)
+    val vs = VersionedTable.versions(spark, root).filter(_ >= v0)
+    assert(vs.size == 8)
+    assert(new java.io.File(root, "_changes").list().length == 2,
+      "the last two commits must have recorded their change logs")
+    val cols = Seq("k", "v", "tag", "change_type", "_commit_version")
+    val feed = VersionedTable.changeFeed(spark, root, Seq("k"), v0)
+      .select(cols.map(col): _*).collect().toSeq
+    val perCommit = vs.zip(vs.drop(1)).flatMap { case (a, b) =>
+      VersionedTable.diff(spark, root, Seq("k"), a, b)
+        .withColumn("_commit_version", lit(b))
+        .select(cols.map(col): _*).collect().toSeq
+    }
+    assert(feed.size == perCommit.size && feed.toSet == perCommit.toSet,
+      s"feed\n${feed.sortBy(_.toString)}\nper-commit diffs\n" +
+        perCommit.sortBy(_.toString))
+    assert(feed.map(_.getString(3)).toSet ==
+      Set("insert", "update", "delete"))
+  }
+
   test("batch format read: readChangeFeed=true serves the same net " +
       "changes through spark.read") {
     val base = tmpBase("cf3")

@@ -846,6 +846,106 @@ class VersionedTableSpec extends SparkSpec {
     }
   }
 
+  test("merge: insertUnmatched=false needs only the source columns it " +
+      "names") {
+    val root = tmpRoot()
+    VersionedTable.write(Seq((1L, 10L, "a"), (2L, 20L, "b"))
+      .toDF("k", "v", "tag"), root)
+    // the source has no `v` and no `tag`; k=7 matches nothing
+    VersionedTable.merge(Seq((1L, 11L), (7L, 70L)).toDF("k", "nv"), root,
+      Seq("k"), matchedDelete = None,
+      matchedUpdate = Map("v" -> col("src_nv")), insertUnmatched = false)
+    val got = VersionedTable.read(spark, root)
+      .orderBy("k").as[(Long, Long, String)].collect().toSeq
+    assert(got == Seq((1L, 11L, "a"), (2L, 20L, "b")))
+  }
+
+  test("a rewrite that empties a file commits no zero-row file, with " +
+      "the stats pass on or off") {
+    Seq("true", "false").foreach { statsOn =>
+      val root = tmpRoot()
+      spark.conf.set("spark.graft.lake.stats.enabled", statsOn)
+      try {
+        VersionedTable.write((1L to 10L).toDF("k").repartition(1), root)
+        VersionedTable.append((11L to 20L).toDF("k").repartition(1), root)
+        VersionedTable.deleteWhere(spark, root, col("k") > 10L)
+        // and a merge whose whole outcome is empty
+        VersionedTable.merge(Seq(1L).toDF("k"), root, Seq("k"),
+          matchedDelete = Some(lit(true)), matchedUpdate = Map.empty,
+          insertUnmatched = false)
+        val files = VersionedTable.read(spark, root).inputFiles.toSeq
+        assert(files.size == 1, s"stats $statsOn: $files")
+        assert(files.forall(p => spark.read.parquet(p).count() > 0),
+          s"stats $statsOn: the head lists a zero-row file")
+        assert(VersionedTable.read(spark, root).as[Long].collect().sorted
+          .toSeq == (2L to 10L))
+      } finally spark.conf.unset("spark.graft.lake.stats.enabled")
+    }
+  }
+
+  /** The SQL executions `body` runs, in order. Listener delivery is
+    * async: a marked action after `body` shows when all have arrived. */
+  private def executions(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.QueryExecution] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val seen = scala.collection.mutable.ArrayBuffer.empty[QueryExecution]
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        seen.synchronized { seen += qe }
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = seen.synchronized { seen += qe }
+    }
+    def isMark(qe: QueryExecution) =
+      qe.analyzed.toString.contains("executions_end_mark")
+    spark.listenerManager.register(l)
+    try {
+      body
+      spark.range(1).select(lit("executions_end_mark")).collect()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!seen.synchronized(seen.exists(isMark)) &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+      seen.synchronized {
+        assert(seen.exists(isMark), "listener events never arrived")
+        seen.takeWhile(!isMark(_)).toSeq
+      }
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  test("commit plans run once: merge and deleteWhere are probe + " +
+      "write, merge writes through one join, a change-feed window " +
+      "reads in one execution with one join") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val root = tmpRoot()
+    VersionedTable.write((1L to 40L).map(k => (k, k * 10, k % 4))
+      .toDF("k", "v", "g").repartition(4), root)
+    val v0 = VersionedTable.versions(spark, root).max
+    val src = Seq((3L, -1L, 0L), (5L, 55L, 0L), (99L, 990L, 3L))
+      .toDF("k", "v", "g")
+    val merge = executions(VersionedTable.merge(src, root, Seq("k"),
+      matchedDelete = Some(col("src_v") < 0),
+      matchedUpdate = Map("v" -> col("src_v"))))
+    assert(merge.size == 2, merge.map(_.analyzed.nodeName))
+    val writes = merge.filter(_.analyzed.toString
+      .contains("InsertIntoHadoopFsRelationCommand"))
+    assert(writes.size == 1, merge.map(_.analyzed.nodeName))
+    val joins = writes.head.optimizedPlan.collect { case j: Join => j }
+    assert(joins.size == 1 && joins.head.joinType.sql == "FULL OUTER",
+      joins.map(_.joinType))
+    val delete = executions(
+      VersionedTable.deleteWhere(spark, root, col("g") === 1L))
+    assert(delete.size == 2, delete.map(_.analyzed.nodeName))
+    val feedDf = VersionedTable.changeFeed(spark, root, Seq("k"), v0)
+    assert(feedDf.queryExecution.optimizedPlan
+      .collect { case j: Join => j }.size == 1,
+      "two rewrite commits must share one keyed join")
+    var feed = Seq.empty[org.apache.spark.sql.Row]
+    assert(executions { feed = feedDf.collect().toSeq }.size == 1)
+    assert(feed.map(r => (r.getAs[Long]("k"), r.getAs[String]("change_type")))
+      .toSet == Set((3L, "delete"), (5L, "update"), (99L, "insert")) ++
+      (1L to 40L).filter(_ % 4 == 1).map(_ -> "delete"))
+    assert(VersionedTable.read(spark, root).count() == 40 - 1 - 10 + 1)
+  }
+
   test("statsAgg answers from the manifest alone: exact after edits, " +
       "zero data files touched") {
     val root = tmpRoot()
