@@ -28,16 +28,21 @@ object Bench {
     val queries = only.fold(SparkEntry.queries)(names =>
       SparkEntry.queries.view.filterKeys(names).toMap)
 
+    // a failing query is still timed (the stdout line keeps its shape),
+    // but never silently: each failure goes to stderr, as in Verify
+    def run(name: String, fn: SparkEntry.Q, dir: String): Unit =
+      try fn(spark, dir).count()
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e")
+      }
+
     val warmupDir = "/root/testdata/sf0.001"
-    queries.foreach { case (_, fn) =>
-      try fn(spark, warmupDir).count()
-      catch { case _: Throwable => () }
-    }
+    queries.foreach { case (name, fn) => run(name, fn, warmupDir) }
 
     val results = queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val times = (0 until iters).map { _ =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
+        run(name, fn, sfDir)
         (System.nanoTime() - t0) / 1e9
       }
       name -> times.min

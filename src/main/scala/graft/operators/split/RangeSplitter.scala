@@ -166,11 +166,6 @@ object RangeSplitter {
     }.reduce(_ unionAll _)
   }
 
-  /** Split scan over a TIMESTAMP key at the given accuracy unit (X2 time
-    * domain, default day — reference split.go:312-327). The domain is
-    * quantized by floor division, so the final closed bound uses the TRUE
-    * max timestamp: `floor(max)*unit` would silently drop rows with
-    * intra-unit components. */
   /** Split scan over an epoch-NANOS long key (the TIMESTAMP(NANOS)
     * parquet shape read under nanosAsLong — e.g. events.ts) at any
     * accuracy tier of [[AccuracyNanos]], including exact "ns": the key is
@@ -198,6 +193,11 @@ object RangeSplitter {
     }.reduce(_ unionAll _)
   }
 
+  /** Split scan over a TIMESTAMP key at the given accuracy unit (X2 time
+    * domain, default day — reference split.go:312-327). The domain is
+    * quantized by floor division, so the final closed bound uses the TRUE
+    * max timestamp: `floor(max)*unit` would silently drop rows with
+    * intra-unit components. */
   def splitScanTime(df: DataFrame, keyCol: String, n: Int,
       unitMicros: Long = 86400000000L): DataFrame = {
     // keys may be TIMESTAMP or TIMESTAMP_NTZ depending on the parquet

@@ -117,8 +117,7 @@ object EventOps {
     // oracle replays the join relationally from the raw table: pruning
     // must never change results
     "join_dpp_prune" -> ((s, d) => {
-      val root = java.nio.file.Files.createTempDirectory("dpp")
-        .toString + "/ev"
+      val root = Scratch.dir("join_dpp_prune", d) + "/ev"
       val DayNs = 86400000000000L
       Tables.events(s, d)
         .withColumn("day", expr(s"ts div ${DayNs}L"))

@@ -45,20 +45,15 @@ object SketchOps {
     // catalog-instance cache (bench re-runs the gate in one session).
     "versioned_sql_asof" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val wh = java.nio.file.Files.createTempDirectory("sqlasof")
-        .toString
-      val cat = "g" + java.util.UUID.randomUUID().toString
-        .replace("-", "").take(12)
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.v2.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", wh)
+      val wh = Scratch.dir("versioned_sql_asof", d)
+      val cat = Scratch.catalog(s, wh)
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
       VersionedTable.write(docs.filter(col("doc_id") % 2 === 0),
         s"$wh/t")
       VersionedTable.append(docs.filter(col("doc_id") % 2 === 1),
         s"$wh/t")
-      val result = s.sql(
+      s.sql(
         s"""SELECT h.source, h.n_head, h.chars_head, v.n_v0, v.chars_v0
            |FROM (SELECT source, COUNT(*) AS n_head,
            |        CAST(SUM(n_chars) AS BIGINT) AS chars_head
@@ -68,11 +63,6 @@ object SketchOps {
            |      FROM $cat.t VERSION AS OF 0 GROUP BY source) v
            |  USING (source)
            |ORDER BY source""".stripMargin)
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      val p = new org.apache.hadoop.fs.Path(wh)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     // round-8 item 3: aggregate pushdown through the SQL front door —
@@ -82,8 +72,7 @@ object SketchOps {
     // exactly through the bounded fallback scan. Values oracle-checked.
     "versioned_agg_pushdown" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val root = java.nio.file.Files.createTempDirectory("aggpd")
-        .toString + "/t"
+      val root = Scratch.dir("versioned_agg_pushdown", d) + "/t"
       val ord = Tables.orders(s, d).select(col("o_orderkey"),
         col("o_totalprice"), col("o_orderdate"))
       VersionedTable.append(ord.filter(col("o_orderkey") % 3 === 0), root)
@@ -111,15 +100,12 @@ object SketchOps {
       val rH = s.sql(aggSql("agg_pd_head")).collect().head
       s.catalog.dropTempView("agg_pd_v0")
       s.catalog.dropTempView("agg_pd_head")
-      val result = s.createDataFrame(
+      s.createDataFrame(
         java.util.Arrays.asList(org.apache.spark.sql.Row.fromSeq(
           r0.toSeq ++ rH.toSeq)),
         org.apache.spark.sql.types.StructType(
           r0.schema.fields.map(f => f.copy(name = f.name + "_v0")) ++
             rH.schema.fields.map(f => f.copy(name = f.name + "_head"))))
-      val p = new org.apache.hadoop.fs.Path(root).getParent
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      result
     }),
 
     // the SQL maintenance loop end to end (round-8 ProcedureCatalog):
@@ -131,13 +117,8 @@ object SketchOps {
     // both the head and the tagged release — all values oracle-exact.
     "versioned_sql_maintenance" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val wh = java.nio.file.Files.createTempDirectory("sqlmaint")
-        .toString
-      val cat = "g" + java.util.UUID.randomUUID().toString
-        .replace("-", "").take(12)
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.v2.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", wh)
+      val wh = Scratch.dir("versioned_sql_maintenance", d)
+      val cat = Scratch.catalog(s, wh)
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
       docs.createOrReplaceTempView("maint_src")
@@ -159,7 +140,8 @@ object SketchOps {
       // post-insert version — proving rollback through SQL
       s.sql(s"CALL $cat.system.compact('t')")
       s.sql(s"CALL $cat.system.restore('t', 3)")
-      val result = s.sql(
+      s.catalog.dropTempView("maint_src")
+      s.sql(
         s"""SELECT h.source, h.n_head, h.chars_head, v.n_tag
            |FROM (SELECT source, COUNT(*) AS n_head,
            |        CAST(SUM(n_chars) AS BIGINT) AS chars_head
@@ -168,12 +150,6 @@ object SketchOps {
            |      FROM $cat.t VERSION AS OF 1 GROUP BY source) v
            |  USING (source)
            |ORDER BY source""".stripMargin)
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      s.catalog.dropTempView("maint_src")
-      val p = new org.apache.hadoop.fs.Path(wh)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     // round-9 item 2: OPTIMIZE ZORDER through the SQL CALL surface —
@@ -186,13 +162,8 @@ object SketchOps {
     // the rewrite (content-identical commit) and oracle-exact.
     "versioned_sql_zorder" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val wh = java.nio.file.Files.createTempDirectory("sqlzord")
-        .toString
-      val cat = "g" + java.util.UUID.randomUUID().toString
-        .replace("-", "").take(12)
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.v2.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", wh)
+      val wh = Scratch.dir("versioned_sql_zorder", d)
+      val cat = Scratch.catalog(s, wh)
       // two decorrelated uniform dims at EVERY scale factor (plain
       // `div 64` saturates below 64 values at small SF and the
       // quadrant filter stops being a quadrant)
@@ -210,8 +181,7 @@ object SketchOps {
       val filesBefore = graft.sources.v2.GraftScan.lastPlannedFiles.get
       s.sql(s"CALL $cat.system.optimize_zorder('t', 'x,y', 4)")
       graft.sources.v2.GraftScan.lastPlannedFiles.set(-1)
-      val result = quadrant
-      val after = result.collect().toSeq
+      val after = quadrant.collect().toSeq
       val filesAfter = graft.sources.v2.GraftScan.lastPlannedFiles.get
       require(filesBefore >= 7,
         s"hash-scattered layout must be unprunable, planned $filesBefore")
@@ -220,11 +190,7 @@ object SketchOps {
           s"$filesBefore -> $filesAfter files")
       require(before == after,
         s"z-order rewrite must be content-identical: $before vs $after")
-      val p = new org.apache.hadoop.fs.Path(wh)
-      val rows = java.util.Arrays.asList(after: _*)
-      val schema = result.schema
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
+      quadrant
     }),
 
     // round-9 item 3: schema evolution through pure SQL — ALTER TABLE
@@ -235,13 +201,8 @@ object SketchOps {
     // boundary with the ORIGINAL schema. Head + pre-evolution version
     // aggregated in one statement, oracle-exact.
     "versioned_sql_evolve" -> ((s, d) => {
-      val wh = java.nio.file.Files.createTempDirectory("sqlevol")
-        .toString
-      val cat = "g" + java.util.UUID.randomUUID().toString
-        .replace("-", "").take(12)
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.v2.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", wh)
+      val wh = Scratch.dir("versioned_sql_evolve", d)
+      val cat = Scratch.catalog(s, wh)
       Tables.documents(s, d)
         .select(col("doc_id"), col("n_chars"), col("lang"))
         .createOrReplaceTempView("evolve_src")
@@ -257,17 +218,12 @@ object SketchOps {
         s.sql(s"INSERT INTO $cat.t VALUES (999999, -1, 'xx')"))
       require(bad.isFailure,
         "TBLPROPERTIES-added constraint must reject n_chars < 0")
-      val result = s.sql(
+      s.catalog.dropTempView("evolve_src")
+      s.sql(
         s"""SELECT COALESCE(lang_tag, '_legacy') AS tag,
            |  COUNT(*) AS n, CAST(SUM(n_chars) AS BIGINT) AS chars,
            |  (SELECT COUNT(*) FROM $cat.t VERSION AS OF 1) AS n_v1
            |FROM $cat.t GROUP BY 1 ORDER BY 1""".stripMargin)
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      s.catalog.dropTempView("evolve_src")
-      val p = new org.apache.hadoop.fs.Path(wh)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     // round-9 item 8: SQL MERGE INTO through Spark's row-level-
@@ -280,13 +236,8 @@ object SketchOps {
     // update + insert arms all exercised) is oracle-exact.
     "versioned_sql_merge" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val wh = java.nio.file.Files.createTempDirectory("sqlmerge")
-        .toString
-      val cat = "g" + java.util.UUID.randomUUID().toString
-        .replace("-", "").take(12)
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.v2.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", wh)
+      val wh = Scratch.dir("versioned_sql_merge", d)
+      val cat = Scratch.catalog(s, wh)
       val o = Tables.orders(s, d).select(col("o_orderkey").as("k"),
         col("o_custkey").as("c"))
       val hi = o.agg(max(col("k"))).head().getLong(0)
@@ -318,17 +269,12 @@ object SketchOps {
       require(s.read.format("graft").option("versionAsOf", 3)
         .load(s"$wh/t").count() == preCount,
         "pre-merge version must time-travel intact")
-      val result = s.sql(
+      s.catalog.dropTempView("merge_src")
+      s.sql(
         s"""SELECT state, COUNT(*) AS n,
            |  CAST(SUM(k) AS BIGINT) AS sum_k,
            |  CAST(SUM(c) AS BIGINT) AS sum_c
            |FROM $cat.t GROUP BY state ORDER BY state""".stripMargin)
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      s.catalog.dropTempView("merge_src")
-      val p = new org.apache.hadoop.fs.Path(wh)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     // round-9 lifecycle gate: CALL clone (zero-copy branch) +
@@ -338,13 +284,8 @@ object SketchOps {
     // drops the source's manifest references). Final state of both
     // tables oracle-exact in one statement.
     "versioned_sql_clone" -> ((s, d) => {
-      val wh = java.nio.file.Files.createTempDirectory("sqlclone")
-        .toString
-      val cat = "g" + java.util.UUID.randomUUID().toString
-        .replace("-", "").take(12)
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.v2.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", wh)
+      val wh = Scratch.dir("versioned_sql_clone", d)
+      val cat = Scratch.catalog(s, wh)
       Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
         .createOrReplaceTempView("clone_src")
@@ -354,17 +295,12 @@ object SketchOps {
       s.sql(s"INSERT INTO $cat.t2 " +
         "SELECT * FROM clone_src WHERE doc_id % 2 = 1") // diverge
       s.sql(s"TRUNCATE TABLE $cat.t") // source emptied AFTER the clone
-      val result = s.sql(
+      s.catalog.dropTempView("clone_src")
+      s.sql(
         s"""SELECT source, COUNT(*) AS n,
            |  CAST(SUM(n_chars) AS BIGINT) AS chars,
            |  (SELECT COUNT(*) FROM $cat.t) AS n_src
            |FROM $cat.t2 GROUP BY source ORDER BY source""".stripMargin)
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      s.catalog.dropTempView("clone_src")
-      val p = new org.apache.hadoop.fs.Path(wh)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     // round-9 companion to versioned_sql_merge: SQL UPDATE (row-level
@@ -376,13 +312,8 @@ object SketchOps {
     // deleteWhere). Final state oracle-exact.
     "versioned_sql_update" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val wh = java.nio.file.Files.createTempDirectory("sqlupd")
-        .toString
-      val cat = "g" + java.util.UUID.randomUUID().toString
-        .replace("-", "").take(12)
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.v2.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", wh)
+      val wh = Scratch.dir("versioned_sql_update", d)
+      val cat = Scratch.catalog(s, wh)
       val o = Tables.orders(s, d).select(col("o_orderkey").as("k"),
         col("o_custkey").as("c"))
       val hi = o.agg(max(col("k"))).head().getLong(0)
@@ -404,16 +335,11 @@ object SketchOps {
       s.sql(s"DELETE FROM $cat.t WHERE k > ${hi / 2} AND k % 2 = 1")
       // metadata-path DELETE (pure range: SupportsDelete fast path)
       s.sql(s"DELETE FROM $cat.t WHERE k > ${hi * 3 / 4}")
-      val result = s.sql(
+      s.sql(
         s"""SELECT state, COUNT(*) AS n,
            |  CAST(SUM(k) AS BIGINT) AS sum_k,
            |  CAST(SUM(c) AS BIGINT) AS sum_c
            |FROM $cat.t GROUP BY state ORDER BY state""".stripMargin)
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      val p = new org.apache.hadoop.fs.Path(wh)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     // round-9 item 4: LIMIT pushdown gated (was spec-only) — an
@@ -424,8 +350,7 @@ object SketchOps {
     // observable; Spark's own Limit still re-applies above the scan).
     "versioned_limit_pushdown" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val base = java.nio.file.Files.createTempDirectory("limpush")
-      val root = base.toString + "/t"
+      val root = Scratch.dir("versioned_limit_pushdown", d) + "/t"
       val o = Tables.orders(s, d).select(col("o_orderkey"))
       val n = o.count()
       val w = org.apache.spark.sql.expressions.Window
@@ -452,8 +377,6 @@ object SketchOps {
           s"planned $filesCut")
       require(filesOver == 4,
         s"LIMIT past the table must keep all 4 files, planned $filesOver")
-      val p = new org.apache.hadoop.fs.Path(base.toString)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       import s.implicits._
       Seq((nCut, over.getAs[Long]("n"), over.getAs[Long]("mx")))
         .toDF("n_cut", "n_all", "max_k")
@@ -468,8 +391,8 @@ object SketchOps {
     // is measured in DataSourceV2Spec (4 files -> 1).
     "versioned_runtime_prune" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val base = java.nio.file.Files.createTempDirectory("rtprune")
-      val root = base.toString + "/t"
+      val base = Scratch.dir("versioned_runtime_prune", d)
+      val root = base + "/t"
       val li = Tables.lineitem(s, d).select(col("l_orderkey"),
         col("l_partkey"), col("l_quantity"))
       val hi = li.agg(max(col("l_orderkey"))).head().getLong(0)
@@ -478,7 +401,7 @@ object SketchOps {
           col("l_orderkey") > b * hi / 4 &&
             col("l_orderkey") <= (b + 1) * hi / 4).coalesce(1), root)
       }
-      val dimPath = base.toString + "/dim"
+      val dimPath = base + "/dim"
       Tables.orders(s, d).select(col("o_orderkey"), col("o_orderpriority"))
         .write.parquet(dimPath)
       val dim = s.read.parquet(dimPath)
@@ -489,21 +412,15 @@ object SketchOps {
           sum(col("l_quantity").cast("long")).as("sum_qty"),
           max(col("l_orderkey")).as("max_okey"),
           min(col("l_partkey")).as("min_pkey"))
-      val result = joined.collect()
       require(joined.queryExecution.executedPlan.toString
         .toLowerCase.contains("dynamicpruning"),
         "expected a runtime dynamic-pruning filter on the graft scan")
-      val rows = java.util.Arrays.asList(result: _*)
-      val schema = joined.schema
-      val p = new org.apache.hadoop.fs.Path(base.toString)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
+      joined
     }),
 
     "versioned_dsv2_read" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val root = java.nio.file.Files.createTempDirectory("dsv2")
-        .toString + "/t"
+      val root = Scratch.dir("versioned_dsv2_read", d) + "/t"
       val cust = Tables.customer(s, d).select(col("c_custkey"),
         col("c_nationkey"), col("c_acctbal"), col("c_mktsegment"))
       // three key-range-disjoint commits -> three prunable file groups
@@ -513,7 +430,7 @@ object SketchOps {
           col("c_custkey") > b * hi / 3 &&
             col("c_custkey") <= (b + 1) * hi / 3), root)
       }
-      val result = s.read.format("graft").load(root)
+      s.read.format("graft").load(root)
         .filter(col("c_acctbal") >= 5000 && col("c_mktsegment") =!= "AUTOMOBILE")
         .groupBy(col("c_nationkey"))
         .agg(count(lit(1)).as("n_cust"),
@@ -524,11 +441,6 @@ object SketchOps {
             .as("sum_bal_cents"),
           max(col("c_custkey")).as("max_key"))
         .orderBy(col("c_nationkey"))
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      val p = new org.apache.hadoop.fs.Path(root).getParent
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     // DSv2 WRITE path end-to-end: create-on-first-write through the
@@ -536,8 +448,7 @@ object SketchOps {
     // full-replace commit with the old version still time-travelable —
     // all four states read back through the format and oracle-rebuilt
     "versioned_dsv2_write" -> ((s, d) => {
-      val root = java.nio.file.Files.createTempDirectory("dsv2w")
-        .toString + "/t"
+      val root = Scratch.dir("versioned_dsv2_write", d) + "/t"
       val ord = Tables.orders(s, d).select(col("o_orderkey"),
         col("o_custkey"), col("o_orderpriority"))
       ord.filter(col("o_orderkey") % 2 === 0)
@@ -549,18 +460,13 @@ object SketchOps {
       def agg(df: DataFrame, n: String) = df
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as(n))
-      val result = agg(s.read.format("graft")
+      agg(s.read.format("graft")
           .option("versionAsOf", 1).load(root), "n_full")
         .join(agg(s.read.format("graft").load(root), "n_head"),
           Seq("o_orderpriority"), "left")
         .select(col("o_orderpriority"), col("n_full"),
           coalesce(col("n_head"), lit(0L)).as("n_head"))
         .orderBy(col("o_orderpriority"))
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      val p = new org.apache.hadoop.fs.Path(root).getParent
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     // time travel through DSv2 read options: versionAsOf pins the first
@@ -568,8 +474,7 @@ object SketchOps {
     // all three states aggregated in one relation and oracle-rebuilt
     "versioned_dsv2_timetravel" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val root = java.nio.file.Files.createTempDirectory("dsv2tt")
-        .toString + "/t"
+      val root = Scratch.dir("versioned_dsv2_timetravel", d) + "/t"
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
       VersionedTable.write(docs.filter(col("doc_id") % 2 === 0), root)
@@ -581,15 +486,10 @@ object SketchOps {
       val head = s.read.format("graft").load(root)
       val v0 = s.read.format("graft").option("versionAsOf", 0).load(root)
       val tagged = s.read.format("graft").option("tag", "seed").load(root)
-      val result = agg(head, "n_head", "chars_head")
+      agg(head, "n_head", "chars_head")
         .join(agg(v0, "n_v0", "chars_v0"), "source")
         .join(agg(tagged, "n_tag", "chars_tag"), "source")
         .orderBy(col("source"))
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      val p = new org.apache.hadoop.fs.Path(root).getParent
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     // z-order layout round trip through the gate: lineitem written
@@ -599,8 +499,7 @@ object SketchOps {
     // measured in PlanSpec ("z-order layout prunes selective filters on
     // EITHER dimension")
     "layout_zorder_read" -> ((s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("zorder-q")
-        .toString + "/t"
+      val dir = Scratch.dir("layout_zorder_read", d) + "/t"
       val li = Tables.lineitem(s, d).select(col("l_orderkey"),
         col("l_partkey"), col("l_suppkey"), col("l_quantity"))
       graft.operators.Layout.writeZOrdered(li, dir,
@@ -623,7 +522,7 @@ object SketchOps {
     // merged table relationally.
     "versioned_branch_merge" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val base = java.nio.file.Files.createTempDirectory("vbm").toString
+      val base = Scratch.dir("versioned_branch_merge", d)
       val src = base + "/main"; val dst = base + "/branch"
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
@@ -657,16 +556,11 @@ object SketchOps {
         baseRoot = src, baseVersion = 0L)
       require(m2.nUpserts == 0 && m2.nDeletes == 0 &&
         m2.nConflicts == expect, "re-merge must apply nothing")
-      val result = VersionedTable.read(s, src)
+      VersionedTable.read(s, src)
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_chars")).as("sum_chars"))
         .orderBy(col("source"))
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      val p = new org.apache.hadoop.fs.Path(base)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     // Hilbert layout: same box query as the Z-order gate but clustered
@@ -674,8 +568,7 @@ object SketchOps {
     // plain scan (the oracle), locality properties spec'd in PlanSpec/
     // LayoutSpec territory (each file's 2-D bounding box is connected)
     "layout_hilbert_read" -> ((s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("hilbert-q")
-        .toString + "/t"
+      val dir = Scratch.dir("layout_hilbert_read", d) + "/t"
       val li = Tables.lineitem(s, d).select(col("l_orderkey"),
         col("l_partkey"), col("l_suppkey"), col("l_quantity"))
       graft.operators.Layout.writeHilbertOrdered(li, dir,
@@ -702,8 +595,7 @@ object SketchOps {
     // The oracle replays the two surviving writes relationally.
     "versioned_constraints" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val root = java.nio.file.Files.createTempDirectory("vc")
-        .toString + "/t"
+      val root = Scratch.dir("versioned_constraints", d) + "/t"
       val cust = Tables.customer(s, d).select(col("c_custkey"),
         col("c_mktsegment"), col("c_acctbal"))
       VersionedTable.write(cust.filter(col("c_acctbal") >= 0), root)
@@ -728,8 +620,7 @@ object SketchOps {
 
     "versioned_merge" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val root = java.nio.file.Files.createTempDirectory("vm")
-        .toString + "/t"
+      val root = Scratch.dir("versioned_merge", d) + "/t"
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
       VersionedTable.write(docs, root)
@@ -760,8 +651,7 @@ object SketchOps {
     // the edits and aggregates the data directly
     "versioned_stats_agg" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val root = java.nio.file.Files.createTempDirectory("vsa")
-        .toString + "/t"
+      val root = Scratch.dir("versioned_stats_agg", d) + "/t"
       val orders = Tables.orders(s, d).select(col("o_orderkey"),
         col("o_totalprice"), col("o_orderdate"), col("o_orderpriority"))
       VersionedTable.write(orders, root)
@@ -771,13 +661,8 @@ object SketchOps {
         root, Seq("o_orderkey"))
       VersionedTable.deleteWhere(s, root,
         col("o_orderpriority") === "1-URGENT")
-      val result = VersionedTable.statsAgg(s, root, Seq("o_orderkey",
+      VersionedTable.statsAgg(s, root, Seq("o_orderkey",
         "o_totalprice", "o_orderdate", "o_orderpriority"))
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      val p = new org.apache.hadoop.fs.Path(root).getParent
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     // shallow clone: branch the table by manifest reference (zero data
@@ -785,7 +670,7 @@ object SketchOps {
     // isolation and clone time travel in one relation
     "versioned_clone_read" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val base = java.nio.file.Files.createTempDirectory("vtc").toString
+      val base = Scratch.dir("versioned_clone_read", d)
       val src = base + "/src"; val dst = base + "/clone"
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
@@ -799,22 +684,16 @@ object SketchOps {
           .withColumn("n_chars", col("n_chars") + 1), dst, Seq("doc_id"))
       def sums(df: org.apache.spark.sql.DataFrame, as: String) =
         df.groupBy(col("source")).agg(sum(col("n_chars")).as(as))
-      val result = sums(VersionedTable.read(s, dst), "clone_chars")
+      sums(VersionedTable.read(s, dst), "clone_chars")
         .join(sums(VersionedTable.read(s, dst, Some(0L)), "v0_chars"),
           "source")
         .join(sums(VersionedTable.read(s, src), "src_chars"), "source")
         .orderBy(col("source"))
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      val p = new org.apache.hadoop.fs.Path(base)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     "versioned_upsert_read" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val root = java.nio.file.Files.createTempDirectory("vt")
-        .toString + "/t"
+      val root = Scratch.dir("versioned_upsert_read", d) + "/t"
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
       VersionedTable.write(docs, root)
@@ -828,17 +707,10 @@ object SketchOps {
       val v0 = VersionedTable.read(s, root, Some(0L))
         .groupBy(col("source"))
         .agg(sum(col("n_chars")).as("v0_chars"))
-      val result = latest.join(v0, "source")
+      latest.join(v0, "source")
         .select(col("source"), col("n_docs"), col("latest_chars"),
           col("v0_chars"))
         .orderBy(col("source"))
-      // materialize, then remove the scratch table — repeated gate and
-      // min-of-N bench runs must not accumulate /tmp copies
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      val p = new org.apache.hadoop.fs.Path(root).getParent
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     // bloom-filter file skipping: documents committed hash-partitioned
@@ -850,22 +722,16 @@ object SketchOps {
     // via inputFiles in VersionedTableSpec.
     "versioned_bloom_skip" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val root = java.nio.file.Files.createTempDirectory("vb")
-        .toString + "/t"
+      val root = Scratch.dir("versioned_bloom_skip", d) + "/t"
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
       val confKey = "spark.graft.lake.bloom.cols"
       s.conf.set(confKey, "doc_id")
       try VersionedTable.write(docs.repartition(8, col("source")), root)
       finally s.conf.unset(confKey)
-      val result = VersionedTable.readWhere(s, root,
+      VersionedTable.readWhere(s, root,
           col("doc_id").isin(7L, 123L, 250L, 444L))
         .orderBy(col("doc_id"))
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      val p = new org.apache.hadoop.fs.Path(root).getParent
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     // SCD Type-2 dimension maintenance through the versioned lake:
@@ -883,8 +749,7 @@ object SketchOps {
     // rejecting type drift is spec-pinned in VersionedTableSpec)
     "versioned_schema_evolve" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val root = java.nio.file.Files.createTempDirectory("evolve")
-        .toString + "/t"
+      val root = Scratch.dir("versioned_schema_evolve", d) + "/t"
       val docs = Tables.documents(s, d)
       VersionedTable.write(
         docs.filter(col("doc_id") % 2 === 0)
@@ -894,19 +759,13 @@ object SketchOps {
           .select(col("doc_id"), col("n_chars"),
             (col("n_chars") > 500).cast("long").as("quality_flag")),
         root, mergeSchema = true)
-      val result = VersionedTable.read(s, root).orderBy(col("doc_id"))
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      val p = new org.apache.hadoop.fs.Path(root).getParent
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
+      VersionedTable.read(s, root).orderBy(col("doc_id"))
     }),
 
     "versioned_scd2" -> ((s, d) => {
       import graft.sinks.VersionedTable
       import graft.operators.Scd2
-      val root = java.nio.file.Files.createTempDirectory("scd2")
-        .toString + "/t"
+      val root = Scratch.dir("versioned_scd2", d) + "/t"
       val sup = Tables.supplier(s, d)
       val k = col("s_suppkey")
       VersionedTable.write(Scd2.init(sup, 1L), root)
@@ -919,13 +778,8 @@ object SketchOps {
       val next = Scd2.applyChanges(VersionedTable.read(s, root),
         changes, Seq("s_suppkey"), 2L)
       VersionedTable.write(next, root)
-      val result = VersionedTable.read(s, root)
+      VersionedTable.read(s, root)
         .orderBy(col("s_suppkey"), col("effective_from"))
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      val p = new org.apache.hadoop.fs.Path(root).getParent
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     // row-level CDC over the versioned table, end-to-end: v0 = the
@@ -936,8 +790,7 @@ object SketchOps {
     // oracle reconstructs the same change set relationally.
     "versioned_diff" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val root = java.nio.file.Files.createTempDirectory("vd")
-        .toString + "/t"
+      val root = Scratch.dir("versioned_diff", d) + "/t"
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
       VersionedTable.write(docs, root)
@@ -949,13 +802,8 @@ object SketchOps {
       VersionedTable.upsert(updates.unionByName(inserts), root,
         Seq("doc_id"))
       val v2 = VersionedTable.deleteWhere(s, root, col("source") === "src19")
-      val result = VersionedTable.diff(s, root, Seq("doc_id"), 0L, v2)
+      VersionedTable.diff(s, root, Seq("doc_id"), 0L, v2)
         .orderBy(col("doc_id"), col("change_type"))
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      val p = new org.apache.hadoop.fs.Path(root).getParent
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     // incremental matview maintenance: bootstrap a per-source count/sum
@@ -966,8 +814,7 @@ object SketchOps {
     "versioned_matview" -> ((s, d) => {
       import graft.sinks.VersionedTable
       import graft.operators.Matview
-      val root = java.nio.file.Files.createTempDirectory("mv")
-        .toString + "/t"
+      val root = Scratch.dir("versioned_matview", d) + "/t"
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
       val v0 = VersionedTable.write(docs, root)
@@ -988,14 +835,9 @@ object SketchOps {
         .select(col("doc_id"))
       val removed = VersionedTable.read(s, root, Some(v0))
         .join(removedKeys, Seq("doc_id"), "leftsemi")
-      val result = Matview.maintainSums(agg0, inserted, removed,
+      Matview.maintainSums(agg0, inserted, removed,
           Seq("source"), Seq("n_chars"))
         .orderBy(col("source"))
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      val p = new org.apache.hadoop.fs.Path(root).getParent
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     // incremental JOIN-view maintenance end-to-end: orders JOIN customer
@@ -1016,7 +858,7 @@ object SketchOps {
       val prevStats = s.conf.getOption(statsKey)
       s.conf.set(statsKey, "false")
       try {
-      val dir = java.nio.file.Files.createTempDirectory("jmv").toString
+      val dir = Scratch.dir("versioned_join_matview", d)
       val (lRoot, rRoot, vRoot) = (s"$dir/l", s"$dir/r", s"$dir/v")
       // a quarter of orders keeps the gate SF-proportional while the
       // uniform %10 edit pattern (which defeats file pruning by design
@@ -1066,15 +908,10 @@ object SketchOps {
         VersionedTable.read(s, rRoot, Some(rv0)), rI, rD, "o_custkey",
         on = Seq("o_custkey"))
       Matview.applyJoinDelta(s, vRoot, delta, "o_orderkey", "o_custkey")
-      val result = VersionedTable.read(s, vRoot)
+      VersionedTable.read(s, vRoot)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           col("c_nationkey"), col("c_mktsegment"))
         .orderBy(col("o_orderkey"))
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
       } finally prevStats match {
         case Some(v) => s.conf.set(statsKey, v)
         case None => s.conf.unset(statsKey)
@@ -1091,21 +928,15 @@ object SketchOps {
     // rewrite)
     "versioned_zorder_read" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val root = java.nio.file.Files.createTempDirectory("vz")
-        .toString + "/t"
+      val root = Scratch.dir("versioned_zorder_read", d) + "/t"
       val cust = Tables.customer(s, d)
         .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"))
       VersionedTable.write(cust.repartition(16), root)
       VersionedTable.compactZOrdered(s, root,
         Seq(col("c_custkey"), col("c_acctbal")), nFiles = 16)
-      val result = VersionedTable.readWhere(s, root,
+      VersionedTable.readWhere(s, root,
           col("c_custkey") <= 400L && col("c_acctbal") >= 5000.0)
         .orderBy(col("c_custkey"))
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      val p = new org.apache.hadoop.fs.Path(root).getParent
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     // RESTORE end-to-end: v0 = documents, v1 = a predicate delete,
@@ -1114,8 +945,7 @@ object SketchOps {
     // oracle recomputes both states from the source table.
     "versioned_restore_read" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val root = java.nio.file.Files.createTempDirectory("vr")
-        .toString + "/t"
+      val root = Scratch.dir("versioned_restore_read", d) + "/t"
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
       VersionedTable.write(docs, root)
@@ -1128,15 +958,10 @@ object SketchOps {
       val v1 = VersionedTable.read(s, root, Some(1L))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_after_delete"))
-      val result = head.join(v1, Seq("source"), "left")
+      head.join(v1, Seq("source"), "left")
         .select(col("source"), col("n_docs"), col("sum_chars"),
           coalesce(col("n_after_delete"), lit(0L)).as("n_after_delete"))
         .orderBy(col("source"))
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      val p = new org.apache.hadoop.fs.Path(root).getParent
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     // retention end-to-end: a 4-file write, a delete commit, a compact
@@ -1148,8 +973,7 @@ object SketchOps {
     // breaks the exact compare.
     "versioned_vacuum_read" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val root = java.nio.file.Files.createTempDirectory("vv")
-        .toString + "/t"
+      val root = Scratch.dir("versioned_vacuum_read", d) + "/t"
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
       VersionedTable.write(docs.repartition(4), root)
@@ -1164,16 +988,11 @@ object SketchOps {
         try { VersionedTable.read(s, root, Some(0L)).count(); false }
         catch { case _: Throwable => true }
       require(timeTravelGone, "vacuumed version 0 still readable")
-      val result = VersionedTable.read(s, root)
+      VersionedTable.read(s, root)
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_chars")).as("sum_chars"))
         .orderBy(col("source"))
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      val p = new org.apache.hadoop.fs.Path(root).getParent
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     // incremental consumption end-to-end: three append commits, then
@@ -1182,8 +1001,7 @@ object SketchOps {
     // which the oracle reconstructs from the same doc_id ranges
     "versioned_incremental" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val root = java.nio.file.Files.createTempDirectory("vi")
-        .toString + "/t"
+      val root = Scratch.dir("versioned_incremental", d) + "/t"
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
       val vs = (0 until 3).map { i =>
@@ -1191,7 +1009,7 @@ object SketchOps {
           docs.filter(expr("doc_id DIV 167") === i), root)
       }
       val windows = (0L +: vs.dropRight(1)).zip(vs).zipWithIndex
-      val result = windows.map { case ((from, to), i) =>
+      windows.map { case ((from, to), i) =>
           val w = if (i == 0) VersionedTable.read(s, root, Some(vs.head))
             else VersionedTable.readAppended(s, root, from, Some(to))
           w.agg(count(lit(1)).as("n_docs"),
@@ -1203,11 +1021,6 @@ object SketchOps {
         .select(col("window_id"), col("n_docs"), col("sum_chars"),
           col("min_id"), col("max_id"))
         .orderBy(col("window_id"))
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      val p = new org.apache.hadoop.fs.Path(root).getParent
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     // manifest-stats data skipping end-to-end: documents committed as
@@ -1218,22 +1031,16 @@ object SketchOps {
     // in VersionedTableSpec)
     "versioned_skip_read" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val root = java.nio.file.Files.createTempDirectory("vs")
-        .toString + "/t"
+      val root = Scratch.dir("versioned_skip_read", d) + "/t"
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
       (0 until 4).foreach { i =>
         VersionedTable.append(
           docs.filter(expr("doc_id DIV 125") === i).repartition(1), root)
       }
-      val result = VersionedTable.readWhere(s, root,
+      VersionedTable.readWhere(s, root,
           col("doc_id").between(120, 180) || col("source") === "src19")
         .orderBy(col("doc_id"))
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      val p = new org.apache.hadoop.fs.Path(root).getParent
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     // bloom-prefiltered fact join: the small side (urgent 1997+ orders)
@@ -1426,12 +1233,8 @@ object SketchOps {
     // audit counts surfaced as result columns the oracle predicts.
     "versioned_sql_merge_exact" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val wh = java.nio.file.Files.createTempDirectory("xmerge").toString
-      val cat = "g" + java.util.UUID.randomUUID().toString
-        .replace("-", "").take(12)
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.v2.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", wh)
+      val wh = Scratch.dir("versioned_sql_merge_exact", d)
+      val cat = Scratch.catalog(s, wh)
       val o = Tables.orders(s, d).select(
         (col("o_orderkey") % 97).as("a"), col("o_orderkey").as("k"),
         col("o_custkey").as("c"))
@@ -1462,18 +1265,13 @@ object SketchOps {
         op.contains("\"rewritten_files\":1") &&
         op.contains("\"table_files\":4"),
         s"commit must audit the exact prune: $op")
-      val result = s.sql(
+      s.catalog.dropTempView("xmerge_src")
+      s.sql(
         s"""SELECT CAST(SUM(a) AS BIGINT) AS sum_a,
            |  CAST(SUM(c) AS BIGINT) AS sum_c, COUNT(*) AS n,
            |  1 AS scanned_files, 1 AS rewritten_files,
            |  4 AS table_files
            |FROM $cat.t""".stripMargin)
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      s.catalog.dropTempView("xmerge_src")
-      val p = new org.apache.hadoop.fs.Path(wh)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     // round-10 item 3: CREATE TABLE ... CLUSTER BY through pure SQL —
@@ -1486,12 +1284,8 @@ object SketchOps {
     // quadrant's own aggregate.
     "versioned_sql_cluster_by" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val wh = java.nio.file.Files.createTempDirectory("clby").toString
-      val cat = "g" + java.util.UUID.randomUUID().toString
-        .replace("-", "").take(12)
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.v2.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", wh)
+      val wh = Scratch.dir("versioned_sql_cluster_by", d)
+      val cat = Scratch.catalog(s, wh)
       s.sql(s"CREATE TABLE $cat.t (x BIGINT, y BIGINT, c BIGINT) " +
         "CLUSTER BY (x, y)")
       // hash-scattered insert: interleaved x/y with no ingest-order
@@ -1509,19 +1303,14 @@ object SketchOps {
         require(quadrant.inputFiles.length < snap.files.size,
           s"z-order from the CLUSTER BY spec must quadrant-prune: " +
             s"read ${quadrant.inputFiles.length} of ${snap.files.size}")
-      val result = s.sql(
+      s.catalog.dropTempView("clby_src")
+      s.sql(
         s"""SELECT COUNT(*) AS n, CAST(SUM(x) AS BIGINT) AS sum_x,
            |  CAST(SUM(y) AS BIGINT) AS sum_y,
            |  CAST(SUM(c) AS BIGINT) AS sum_c,
            |  (SELECT CAST(SUM(c) AS BIGINT) FROM $cat.t
            |   WHERE x < 25 AND y < 22) AS quadrant_c
            |FROM $cat.t""".stripMargin)
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      s.catalog.dropTempView("clby_src")
-      val p = new org.apache.hadoop.fs.Path(wh)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     // round-10 item 4: the CHANGE FEED end-to-end — SQL MERGE
@@ -1534,12 +1323,8 @@ object SketchOps {
     // audited columns.
     "versioned_change_feed" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val wh = java.nio.file.Files.createTempDirectory("chfeed").toString
-      val cat = "g" + java.util.UUID.randomUUID().toString
-        .replace("-", "").take(12)
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.v2.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", wh)
+      val wh = Scratch.dir("versioned_change_feed", d)
+      val cat = Scratch.catalog(s, wh)
       val o = Tables.orders(s, d).select(col("o_orderkey").as("k"),
         col("o_custkey").as("c"))
       val hi = o.agg(max(col("k"))).head().getLong(0)
@@ -1576,18 +1361,13 @@ object SketchOps {
         .unionByName(survivors)
       val counts = feed.groupBy("change_type").count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val result = matview.agg(count(lit(1)).as("n"),
+      s.catalog.dropTempView("cf_src")
+      matview.agg(count(lit(1)).as("n"),
           sum(col("k")).cast("bigint").as("sum_k"),
           sum(col("c")).cast("bigint").as("sum_c"))
         .withColumn("n_insert", lit(counts.getOrElse("insert", 0L)))
         .withColumn("n_update", lit(counts.getOrElse("update", 0L)))
         .withColumn("n_delete", lit(counts.getOrElse("delete", 0L)))
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      s.catalog.dropTempView("cf_src")
-      val p = new org.apache.hadoop.fs.Path(wh)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     // round-10 companion to versioned_change_feed: the WRITE-SIDE
@@ -1599,12 +1379,8 @@ object SketchOps {
     // diff must equal what the join would have derived.
     "versioned_change_log" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val wh = java.nio.file.Files.createTempDirectory("chlog").toString
-      val cat = "g" + java.util.UUID.randomUUID().toString
-        .replace("-", "").take(12)
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.v2.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", wh)
+      val wh = Scratch.dir("versioned_change_log", d)
+      val cat = Scratch.catalog(s, wh)
       val o = Tables.orders(s, d).select(col("o_orderkey").as("k"),
         col("o_custkey").as("c"))
       val hi = o.agg(max(col("k"))).head().getLong(0)
@@ -1642,18 +1418,13 @@ object SketchOps {
         .join(last.select("k"), Seq("k"), "left_anti")
         .unionByName(last.filter(col("change_type") =!= "delete")
           .select(col("k"), col("c"), col("state")))
-      val result = matview.agg(count(lit(1)).as("n"),
+      s.catalog.dropTempView("cl_src")
+      matview.agg(count(lit(1)).as("n"),
           sum(col("k")).cast("bigint").as("sum_k"),
           sum(col("c")).cast("bigint").as("sum_c"))
         .withColumn("n_insert", lit(counts.getOrElse("insert", 0L)))
         .withColumn("n_update", lit(counts.getOrElse("update", 0L)))
         .withColumn("n_delete", lit(counts.getOrElse("delete", 0L)))
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      s.catalog.dropTempView("cl_src")
-      val p = new org.apache.hadoop.fs.Path(wh)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     // round-10 follow-on (VERDICT r9 missing #3's second half): ALTER
@@ -1664,12 +1435,8 @@ object SketchOps {
     // with the 2^40 outlier in the sum.
     "versioned_sql_widen" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val wh = java.nio.file.Files.createTempDirectory("widen").toString
-      val cat = "g" + java.util.UUID.randomUUID().toString
-        .replace("-", "").take(12)
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.v2.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", wh)
+      val wh = Scratch.dir("versioned_sql_widen", d)
+      val cat = Scratch.catalog(s, wh)
       val o = Tables.orders(s, d).select(
         col("o_orderkey").cast("int").as("k"),
         col("o_custkey").cast("int").as("c"))
@@ -1687,15 +1454,10 @@ object SketchOps {
       require(kept.inputFiles.length <= 2,
         s"int-era file bounds must still prune the widened column: " +
           s"planned ${kept.inputFiles.length}")
-      val result = s.sql(
+      s.sql(
         s"""SELECT COUNT(*) AS n, SUM(k) AS sum_k, SUM(c) AS sum_c,
            |  MAX(k) AS max_k
            |FROM $cat.t""".stripMargin)
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      val p = new org.apache.hadoop.fs.Path(wh)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     })
   )
 

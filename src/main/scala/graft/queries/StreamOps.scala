@@ -2,9 +2,10 @@ package graft.queries
 
 import graft.Tables
 import graft.streaming.EventsPipeline
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery,
+  Trigger}
 
 /** Oracle-gated Structured-Streaming queries (SURVEY.md §2.10).
   *
@@ -53,62 +54,73 @@ object StreamOps {
     Tables.normalizeEventTs(raw)
   }
 
+  /** The stream harness: run `writer` to completion as one
+    * `Trigger.AvailableNow` drain, checkpointed under `base`.
+    *
+    * Stateful streaming cost scales with state-store instances = shuffle
+    * partitions (a stream-stream join keeps FOUR stores per partition,
+    * each check-pointed every micro-batch), so the run caps the
+    * streaming job's parallelism: a bounded gate run isn't dominated by
+    * empty-store checkpoint IO. The cap is restored once the query has
+    * started (it captures its own copy) — batch queries keep the
+    * session's setting. At production scale this knob is sized to state
+    * volume, not fixed.
+    *
+    * A long-lived session (the bench JVM runs the whole surface)
+    * otherwise accumulates every terminated StreamingQuery — plans,
+    * progress, state references — in the StreamingQueryManager; ~100 of
+    * them turn GC pressure into a 5-10x slowdown of the streaming family
+    * (measured: stream_interval_join 3.5 s isolated vs 33 s at the end
+    * of a full bench run), so the run always resets the terminated
+    * queries. The returned query still serves `recentProgress`. */
+  private def runStream(s: SparkSession, base: String,
+      writer: DataStreamWriter[Row]): StreamingQuery = {
+    val partsKey = "spark.sql.shuffle.partitions"
+    val prevParts = s.conf.get(partsKey)
+    s.conf.set(partsKey, math.min(8, prevParts.toInt).toString)
+    val q = try writer.option("checkpointLocation", s"$base/ckpt")
+        .trigger(Trigger.AvailableNow()).start()
+      finally s.conf.set(partsKey, prevParts)
+    try q.awaitTermination() finally s.streams.resetTerminated()
+    q
+  }
+
   /** Run a streaming frame to a fresh parquet target and read the result
     * back. Append rides the native file sink; complete/update ride
     * foreachBatch (overwrite resp. append semantics), the file-sink
     * analogue for the modes it cannot accept. */
-  private def runStream(s: SparkSession, out: DataFrame, name: String,
+  private def streamToParquet(s: SparkSession, out: DataFrame, name: String,
       d: String, mode: String): DataFrame = {
-    val base = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      s"graft-stream/$name-${new java.io.File(d).getName}")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
-    if (base.exists) rm(base)
-    val data = new java.io.File(base, "data").toString
-    val ckpt = new java.io.File(base, "ckpt").toString
-    // Stateful streaming cost scales with state-store instances =
-    // shuffle partitions (a stream-stream join keeps FOUR stores per
-    // partition, each check-pointed every micro-batch): cap the
-    // streaming job's parallelism so a bounded gate run isn't dominated
-    // by empty-store checkpoint IO. Restored after the run — batch
-    // queries keep the session's setting. At production scale this knob
-    // is sized to state volume, not fixed.
-    val partsKey = "spark.sql.shuffle.partitions"
-    val prevParts = s.conf.get(partsKey)
-    s.conf.set(partsKey, math.min(8, prevParts.toInt).toString)
-    val q = try mode match {
-      case "append" =>
-        out.writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .format("parquet").option("path", data).start()
-      case "complete" =>
-        out.writeStream.outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch((df: DataFrame, _: Long) =>
-            df.write.mode("overwrite").parquet(data))
-          .start()
-      case "update" =>
-        out.writeStream.outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch((df: DataFrame, _: Long) =>
-            df.write.mode("append").parquet(data))
-          .start()
-    } finally s.conf.set(partsKey, prevParts)
-    q.awaitTermination()
-    // a long-lived session (the 255-query bench JVM) otherwise
-    // accumulates every terminated StreamingQuery — plans, progress,
-    // state references — in the StreamingQueryManager; ~100 of them
-    // turn GC pressure into a 5-10x slowdown of the streaming family
-    // (measured: stream_interval_join 3.5 s isolated vs 33 s at the
-    // end of a full bench run before this line)
-    s.streams.resetTerminated()
+    val base = Scratch.dir(name, d)
+    val data = s"$base/data"
+    val w = out.writeStream.outputMode(mode)
+    runStream(s, base, mode match {
+      case "append" => w.format("parquet").option("path", data)
+      case "complete" => w.foreachBatch((df: DataFrame, _: Long) =>
+        df.write.mode("overwrite").parquet(data))
+      case "update" => w.foreachBatch((df: DataFrame, _: Long) =>
+        df.write.mode("append").parquet(data))
+    })
     s.read.parquet(data)
+  }
+
+  /** Stage `df` as ONE file `<base>/src/<name>.parquet` with modification
+    * time `mtime`: FileStreamSource orders files by mod time, so with
+    * maxFilesPerTrigger=1 each staged file is one ordered micro-batch. */
+  private def stage(base: String, df: DataFrame, name: String,
+      mtime: Long): Unit = {
+    val tmp = s"$base/stage-$name"
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = new java.io.File(tmp).listFiles
+      .find(_.getName.endsWith(".parquet")).get
+    val dst = new java.io.File(s"$base/src/$name.parquet")
+    dst.getParentFile.mkdirs()
+    java.nio.file.Files.move(part.toPath, dst.toPath)
+    // micro-batch ORDER rides on mtime: a filesystem that ignores the
+    // update returns false and would silently reorder batches — fail
+    // loud instead
+    require(dst.setLastModified(mtime),
+      s"setLastModified($mtime) failed for $dst")
   }
 
   val defs: Map[String, Q] = Map(
@@ -131,7 +143,7 @@ object StreamOps {
         .select(col("window_us"), col("event_type"),
           (col("pos") + 1).cast("long").as("rn"),
           col("e.id").as("event_id"), col("e.score").as("value"))
-      runStream(s, agg, "topk", d, "complete")
+      streamToParquet(s, agg, "topk", d, "complete")
         .orderBy(col("window_us"), col("event_type"), col("rn"))
     }),
 
@@ -156,7 +168,7 @@ object StreamOps {
           count(lit(1)).as("n_events"))
         .select(unix_micros(col("window.start")).as("window_us"),
           col("event_type"), col("__est"), col("n_events"))
-      val streamed = runStream(s, agg, "hllu", d, "complete")
+      val streamed = streamToParquet(s, agg, "hllu", d, "complete")
       val exact = Tables.events(s, d)
         .select(expr("((ts div 1000) div 3600000000) * 3600000000")
             .as("window_us"),
@@ -199,7 +211,7 @@ object StreamOps {
         .join(broadcast(baseline), "bucket")
         .select(col("window_us"), col("bucket"), col("n"),
           col("expected"), (col("n") - col("expected")).as("drift"))
-      runStream(s, agg, "valuehist", d, "complete")
+      streamToParquet(s, agg, "valuehist", d, "complete")
         .orderBy(col("window_us"), col("bucket"))
     }),
 
@@ -230,7 +242,7 @@ object StreamOps {
           (col("n_pos").cast("double") / col("n").cast("double"))
             .as("acc"))
         .withColumn("gap", abs(col("conf") - col("acc")))
-      runStream(s, agg, "mlcalib", d, "complete")
+      streamToParquet(s, agg, "mlcalib", d, "complete")
         .orderBy(col("window_us"), col("bin"))
     }),
 
@@ -253,7 +265,7 @@ object StreamOps {
         .select(unix_micros(col("window.start")).as("window_us"),
           element_at(typedLit(pats), col("pi") + 1).as("pattern"),
           col("n_events"), col("n_hits"))
-      runStream(s, agg, "blocklist", d, "complete")
+      streamToParquet(s, agg, "blocklist", d, "complete")
         .orderBy(col("window_us"), col("pattern"))
     }),
 
@@ -266,7 +278,7 @@ object StreamOps {
         .select(unix_micros(col("window.start")).as("window_us"),
           col("event_type"), col("n_events"),
           col("sum_dec").cast("double").as("sum_value"))
-      runStream(s, agg, "tumbling", d, "complete")
+      streamToParquet(s, agg, "tumbling", d, "complete")
         .orderBy(col("window_us"), col("event_type"))
     }),
 
@@ -281,15 +293,8 @@ object StreamOps {
     // the final watermark closed: a duplicated batch, a lost window,
     // or a stats/manifest race all break the exact compare.
     "stream_lake_sink" -> ((s, d) => {
-      val base = new java.io.File(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-stream/lakesink-${new java.io.File(d).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      if (base.exists) rm(base)
-      val root = new java.io.File(base, "lake").toString
+      val base = Scratch.dir("stream_lake_sink", d)
+      val root = s"$base/lake"
       val agg = EventsPipeline.withEventTime(eventsStream(s, d))
         .withWatermark("event_time", "10 minutes")
         .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
@@ -298,24 +303,14 @@ object StreamOps {
         .select(unix_micros(col("window.start")).as("window_us"),
           col("event_type"), col("n_events"),
           col("sum_dec").cast("double").as("sum_value"))
-      val partsKey = "spark.sql.shuffle.partitions"
-      val prevParts = s.conf.get(partsKey)
-      s.conf.set(partsKey, math.min(8, prevParts.toInt).toString)
-      val q = try agg.writeStream.outputMode("append")
-          .option("checkpointLocation",
-            new java.io.File(base, "ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            graft.sinks.VersionedTable.appendBatch(b, root, id)
-            // the at-least-once redelivery, replayed deliberately:
-            // the same batch id must be skipped, never re-appended
-            require(graft.sinks.VersionedTable.appendBatch(b, root, id)
-              .isEmpty, s"batch $id re-delivery was not idempotent")
-            ()
-          }.start()
-        finally s.conf.set(partsKey, prevParts)
-      q.awaitTermination()
-      s.streams.resetTerminated()
+      runStream(s, base, agg.writeStream.outputMode("append")
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          graft.sinks.VersionedTable.appendBatch(b, root, id)
+          // the at-least-once redelivery, replayed deliberately:
+          // the same batch id must be skipped, never re-appended
+          require(graft.sinks.VersionedTable.appendBatch(b, root, id)
+            .isEmpty, s"batch $id re-delivery was not idempotent")
+        })
       graft.sinks.VersionedTable.read(s, root)
         .orderBy(col("window_us"), col("event_type"))
     }),
@@ -329,54 +324,36 @@ object StreamOps {
     // stages (the index drops everything already seen, the lake skips
     // the committed batch id)
     "stream_dedup_ingest" -> ((s, d) => {
-      val base = new java.io.File(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-stream/dedupingest-${new java.io.File(d).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      if (base.exists) rm(base)
-      val root = new java.io.File(base, "lake").toString
-      val idx = new java.io.File(base, "index").toString
+      val base = Scratch.dir("stream_dedup_ingest", d)
+      val (root, idx) = (s"$base/lake", s"$base/index")
       val src = eventsStream(s, d)
         .select(col("event_id"), col("event_type"),
           concat_ws("|", col("event_type"),
             coalesce(col("props"), lit("ø"))).as("content"))
-      val partsKey = "spark.sql.shuffle.partitions"
-      val prevParts = s.conf.get(partsKey)
-      s.conf.set(partsKey, math.min(8, prevParts.toInt).toString)
-      val q = try src.writeStream.outputMode("append")
-          .option("checkpointLocation",
-            new java.io.File(base, "ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            // SINK-FIRST ordering: stage survivors (index untouched),
-            // commit the lake, THEN record the hashes — index-first has
-            // a crash window where the redelivered batch dedups itself
-            // away against the half-committed index and its rows are
-            // lost forever (sink-first is safe in both crash positions)
-            val staged = graft.operators.Dedup
-              .exactKeepStage(b, "event_id", "content", idx)
-            graft.sinks.VersionedTable.appendBatch(
-              staged.select(col("event_id"), col("event_type")), root, id)
-            graft.operators.Dedup.exactKeepCommit(staged, idx)
-            // deliberate at-least-once replay: the index now knows every
-            // hash, so the replayed batch must fully dedup away — and
-            // the lake must skip the committed batch id either way
-            val replay = graft.operators.Dedup
-              .exactKeepStage(b, "event_id", "content", idx)
-            require(replay.isEmpty,
-              s"index replay of batch $id was not idempotent")
-            require(graft.sinks.VersionedTable.appendBatch(
-              staged.select(col("event_id"), col("event_type")),
-              root, id).isEmpty,
-              s"lake re-delivery of batch $id was not idempotent")
-            ()
-          }.start()
-        finally s.conf.set(partsKey, prevParts)
-      q.awaitTermination()
-      s.streams.resetTerminated()
+      runStream(s, base, src.writeStream.outputMode("append")
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          // SINK-FIRST ordering: stage survivors (index untouched),
+          // commit the lake, THEN record the hashes — index-first has
+          // a crash window where the redelivered batch dedups itself
+          // away against the half-committed index and its rows are
+          // lost forever (sink-first is safe in both crash positions)
+          val staged = graft.operators.Dedup
+            .exactKeepStage(b, "event_id", "content", idx)
+          graft.sinks.VersionedTable.appendBatch(
+            staged.select(col("event_id"), col("event_type")), root, id)
+          graft.operators.Dedup.exactKeepCommit(staged, idx)
+          // deliberate at-least-once replay: the index now knows every
+          // hash, so the replayed batch must fully dedup away — and
+          // the lake must skip the committed batch id either way
+          val replay = graft.operators.Dedup
+            .exactKeepStage(b, "event_id", "content", idx)
+          require(replay.isEmpty,
+            s"index replay of batch $id was not idempotent")
+          require(graft.sinks.VersionedTable.appendBatch(
+            staged.select(col("event_id"), col("event_type")),
+            root, id).isEmpty,
+            s"lake re-delivery of batch $id was not idempotent")
+        })
       graft.sinks.VersionedTable.read(s, root)
         .orderBy(col("event_id"))
     }),
@@ -392,7 +369,7 @@ object StreamOps {
     "stream_quota_cap" -> ((s, d) => {
       val admitted = EventsPipeline.statefulQuotaCap(s,
         eventsStream(s, d), cap = 20L)
-      runStream(s, admitted, "quota", d, "append")
+      streamToParquet(s, admitted, "quota", d, "append")
         .orderBy(col("user_id"), col("us"), col("event_id"))
     }),
 
@@ -403,17 +380,8 @@ object StreamOps {
     // history rows closed at version 2, unchanged rows untouched (the
     // null-safe no-op compare), inserts opened at version 2
     "stream_scd2_sink" -> ((s, d) => {
-      val base = new java.io.File(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-stream/scd2sink-${new java.io.File(d).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      if (base.exists) rm(base)
-      val srcDir = new java.io.File(base, "changes")
-      srcDir.mkdirs()
-      val root = new java.io.File(base, "dim").toString
+      val base = Scratch.dir("stream_scd2_sink", d)
+      val root = s"$base/dim"
       val sup = Tables.supplier(s, d).select(col("s_suppkey"),
         col("s_name"), col("s_nationkey"), col("s_acctbal"))
       val k = col("s_suppkey")
@@ -423,40 +391,14 @@ object StreamOps {
             .otherwise(col("s_acctbal")))
         .unionByName(sup.filter(k % 11 === 0)
           .withColumn("s_suppkey", k + 10000))
-      // stage each change batch as ONE file with an increasing mod time
-      // (FileStreamSource orders by mod time, maxFilesPerTrigger=1 ->
-      // one micro-batch per staged file)
-      def stage(df: DataFrame, name: String, mtime: Long): Unit = {
-        val tmp = new java.io.File(base, s"stage-$name").toString
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(srcDir, s"$name.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        // micro-batch ORDER rides on mtime (FileStreamSource sorts by
-        // timestamp): a filesystem that ignores the update returns
-        // false and would silently reorder batches — fail loud instead
-        require(dst.setLastModified(mtime),
-          s"setLastModified($mtime) failed for $dst")
-        ()
-      }
+      // each change batch is one staged file, one micro-batch
       val t0 = System.currentTimeMillis() - 120000L
-      stage(sup, "b1", t0)
-      stage(b2, "b2", t0 + 60000L)
+      stage(base, sup, "b1", t0)
+      stage(base, b2, "b2", t0 + 60000L)
       val changes = s.readStream.schema(sup.schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir.toString)
-      val partsKey = "spark.sql.shuffle.partitions"
-      val prevParts = s.conf.get(partsKey)
-      s.conf.set(partsKey, math.min(8, prevParts.toInt).toString)
-      val q = try graft.operators.Scd2
-          .streamingSink(changes, root, Seq("s_suppkey"))
-          .option("checkpointLocation",
-            new java.io.File(base, "ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        finally s.conf.set(partsKey, prevParts)
-      q.awaitTermination()
-      s.streams.resetTerminated()
+        .option("maxFilesPerTrigger", 1).parquet(s"$base/src")
+      runStream(s, base,
+        graft.operators.Scd2.streamingSink(changes, root, Seq("s_suppkey")))
       graft.sinks.VersionedTable.read(s, root)
         .orderBy(col("s_suppkey"), col("effective_from"))
     }),
@@ -475,52 +417,28 @@ object StreamOps {
     // own dropped-row metric; the oracle replays batch-split watermark
     // arithmetic, the drop rule, and the finalization cut.
     "stream_late_data" -> ((s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("latedata")
-        .toFile
-      val srcDir = new java.io.File(base, "src"); srcDir.mkdirs()
+      val base = Scratch.dir("stream_late_data", d)
       val ev = EventsPipeline.withEventTime(Tables.events(s, d))
         .select(col("event_id"), col("event_time"), col("event_type"))
-      def stage(df: DataFrame, name: String, mtime: Long): Unit = {
-        val tmp = new java.io.File(base, s"stage-$name").toString
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(srcDir, s"$name.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        // micro-batch ORDER rides on mtime (FileStreamSource sorts by
-        // timestamp): a filesystem that ignores the update returns
-        // false and would silently reorder batches — fail loud instead
-        require(dst.setLastModified(mtime),
-          s"setLastModified($mtime) failed for $dst")
-        ()
-      }
       val t0 = System.currentTimeMillis() - 120000L
       // three batches: b1 seeds states and the max event time; b2 runs
       // under wm = max(b1) - 10min and EVICTS closed windows at its
       // close; b3's rows into those evicted windows drop
-      stage(ev.filter(col("event_id") % 4 === 1 ||
+      stage(base, ev.filter(col("event_id") % 4 === 1 ||
         col("event_id") % 4 === 2), "b1", t0)
-      stage(ev.filter(col("event_id") % 4 === 3), "b2", t0 + 40000L)
-      stage(ev.filter(col("event_id") % 4 === 0), "b3", t0 + 80000L)
+      stage(base, ev.filter(col("event_id") % 4 === 3), "b2", t0 + 40000L)
+      stage(base, ev.filter(col("event_id") % 4 === 0), "b3", t0 + 80000L)
       val stream = s.readStream
         .schema("event_id BIGINT, event_time TIMESTAMP, event_type STRING")
-        .option("maxFilesPerTrigger", 1).parquet(srcDir.toString)
+        .option("maxFilesPerTrigger", 1).parquet(s"$base/src")
       val agg = stream.withWatermark("event_time", "10 minutes")
         .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n_events"))
         .select(unix_micros(col("window.start")).as("window_us"),
           col("event_type"), col("n_events"))
-      val out = new java.io.File(base, "out").toString
-      val partsKey = "spark.sql.shuffle.partitions"
-      val prevParts = s.conf.get(partsKey)
-      s.conf.set(partsKey, math.min(8, prevParts.toInt).toString)
-      val q = try agg.writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation",
-            new java.io.File(base, "ckpt").toString)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        finally s.conf.set(partsKey, prevParts)
-      q.awaitTermination()
-      s.streams.resetTerminated()
+      val out = s"$base/out"
+      val q = runStream(s, base, agg.writeStream.format("parquet")
+        .option("path", out).outputMode("append"))
       val metricDropped = q.recentProgress.map(p =>
         p.stateOperators.map(_.numRowsDroppedByWatermark).sum).sum
       // the TRUE dropped count from the same replay arithmetic the
@@ -556,9 +474,8 @@ object StreamOps {
     // independent and fully SQL-replayable.
     "stream_lake_source" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val base = java.nio.file.Files.createTempDirectory("lakesrc")
-        .toFile
-      val root = new java.io.File(base, "lake").toString
+      val base = Scratch.dir("stream_lake_source", d)
+      val root = s"$base/lake"
       val ev = EventsPipeline.withEventTime(Tables.events(s, d))
         .select(col("event_id"), col("event_time"), col("event_type"))
       val mm = ev.agg(min(unix_micros(col("event_time"))),
@@ -577,28 +494,14 @@ object StreamOps {
         .agg(count(lit(1)).as("n_events"))
         .select(unix_micros(col("window.start")).as("window_us"),
           col("event_type"), col("n_events"))
-      val out = new java.io.File(base, "out").toString
-      val partsKey = "spark.sql.shuffle.partitions"
-      val prevParts = s.conf.get(partsKey)
-      s.conf.set(partsKey, math.min(8, prevParts.toInt).toString)
-      val q = try agg.writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation",
-            new java.io.File(base, "ckpt").toString)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        finally s.conf.set(partsKey, prevParts)
-      q.awaitTermination()
-      s.streams.resetTerminated()
+      val out = s"$base/out"
+      val q = runStream(s, base, agg.writeStream.format("parquet")
+        .option("path", out).outputMode("append"))
       // the pacing contract is part of the gate: three commits at one
       // version per trigger must land as three data-carrying batches
       require(q.recentProgress.count(_.numInputRows > 0) == 3,
         "expected 3 paced micro-batches (one per lake commit)")
-      val result = s.read.parquet(out)
-        .orderBy(col("window_us"), col("event_type"))
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      val p = new org.apache.hadoop.fs.Path(base.toString)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
+      s.read.parquet(out).orderBy(col("window_us"), col("event_type"))
     }),
 
     // the full lake-to-lake streaming pipeline behind format names:
@@ -610,10 +513,8 @@ object StreamOps {
     // (stateless transform), so the oracle is a plain batch replay.
     "stream_lake_pipeline" -> ((s, d) => {
       import graft.sinks.VersionedTable
-      val base = java.nio.file.Files.createTempDirectory("lakepipe")
-        .toFile
-      val src = new java.io.File(base, "src").toString
-      val dst = new java.io.File(base, "dst").toString
+      val base = Scratch.dir("stream_lake_pipeline", d)
+      val (src, dst) = (s"$base/src", s"$base/dst")
       val ev = EventsPipeline.withEventTime(Tables.events(s, d))
         .select(col("event_id"), col("event_time"), col("event_type"),
           col("value"))
@@ -631,34 +532,25 @@ object StreamOps {
         .filter(col("event_type") =!= "view")
         .select(col("event_id"), col("event_type"),
           floor(col("value") * 100).cast("long").as("value_cents"))
-      val q = stream.writeStream.format("graft")
-        .option("checkpointLocation",
-          new java.io.File(base, "ckpt").toString)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start(dst)
-      q.awaitTermination()
-      s.streams.resetTerminated()
+      runStream(s, base, stream.writeStream.format("graft")
+        .option("path", dst).outputMode("append"))
       // exactly-once shape: one lake commit per micro-batch, batch ids
       // recorded — a paced 3-commit source must land as 3 commits
       require(VersionedTable.versions(s, dst).size == 3,
         "expected one dst lake commit per paced micro-batch")
-      val result = VersionedTable.read(s, dst)
+      VersionedTable.read(s, dst)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           sum(col("value_cents")).as("sum_cents"),
           min(col("event_id")).as("min_eid"),
           max(col("event_id")).as("max_eid"))
         .orderBy(col("event_type"))
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      val p = new org.apache.hadoop.fs.Path(base.toString)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     "stream_dedup_users" -> ((s, d) => {
       val deduped = EventsPipeline.dedupStream(eventsStream(s, d),
         Seq("user_id", "event_type"))
-      runStream(s, deduped, "dedup", d, "append")
+      streamToParquet(s, deduped, "dedup", d, "append")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_users"))
         .orderBy(col("event_type"))
@@ -684,7 +576,7 @@ object StreamOps {
         .toMap
       val scored = EventsPipeline.statefulSequenceScore(s,
         eventsStream(s, d), model)
-      runStream(s, scored, "seqscore", d, "update")
+      streamToParquet(s, scored, "seqscore", d, "update")
         .select(col("user_id"), col("n_trans"), col("surprise_fp"),
           expr("surprise_fp div n_trans").as("avg_surprise_fp"))
         .orderBy(col("user_id"))
@@ -692,7 +584,7 @@ object StreamOps {
 
     "stream_stateful_user_counts" -> ((s, d) => {
       val totals = EventsPipeline.statefulUserTotals(s, eventsStream(s, d))
-      runStream(s, totals, "stateful", d, "update")
+      streamToParquet(s, totals, "stateful", d, "update")
         .select(col("user_id"), col("n_events"))
         .orderBy(col("user_id"))
     }),
@@ -708,7 +600,7 @@ object StreamOps {
       try {
         val totals =
           EventsPipeline.statefulUserTotalsTws(s, eventsStream(s, d))
-        runStream(s, totals, "tws", d, "update")
+        streamToParquet(s, totals, "tws", d, "update")
           .select(col("user_id"), col("n_events"))
           .orderBy(col("user_id"))
       } finally prev match {
@@ -725,7 +617,7 @@ object StreamOps {
     "stream_funnel" -> ((s, d) => {
       val emitted = EventsPipeline.statefulFunnel(s, eventsStream(s, d),
         Seq("view", "click", "purchase"), 7L * 86400000000L)
-      runStream(s, emitted, "funnel", d, "append")
+      streamToParquet(s, emitted, "funnel", d, "append")
         .groupBy(col("stage_idx"))
         .agg(count(lit(1)).as("n_entities"))
         .orderBy(col("stage_idx"))
@@ -736,7 +628,7 @@ object StreamOps {
     // lag window's transition counts (events_transitions' own oracle).
     "stream_transitions" -> ((s, d) => {
       val tr = EventsPipeline.statefulTransitions(s, eventsStream(s, d))
-      runStream(s, tr, "transitions", d, "append")
+      streamToParquet(s, tr, "transitions", d, "append")
         .groupBy(col("prev_type"), col("next_type"))
         .agg(count(lit(1)).as("n"))
         .orderBy(col("prev_type"), col("next_type"))
@@ -761,7 +653,7 @@ object StreamOps {
         .agg(count(lit(1)).as("c_cur"))
         .select(unix_micros(col("window.start")).as("window_us"),
           col("bucket"), col("c_cur"))
-      val hist = runStream(s, binned, "psi", d, "complete")
+      val hist = streamToParquet(s, binned, "psi", d, "complete")
       // batch post-processing over the WINDOW-COUNT table (bounded by
       // |windows| x 8): spine, baseline, exact fixed-point scoring
       val base = Tables.events(s, d).filter(col("value").isNotNull)
@@ -801,7 +693,7 @@ object StreamOps {
     // the same session_end <= final-watermark emission filter.
     "stream_session_windows" -> ((s, d) => {
       val sess = EventsPipeline.sessionWindows(eventsStream(s, d))
-      runStream(s, sess, "session", d, "append")
+      streamToParquet(s, sess, "session", d, "append")
         .select(col("user_id"),
           unix_micros(col("session_start")).as("session_start_us"),
           unix_micros(col("session_end")).as("session_end_us"),
@@ -837,28 +729,14 @@ object StreamOps {
       val sinkSchema = agg.schema
       JdbcLive.dropTableIfExists(url, DerbyStyle, t)
       JdbcLive.createTable(url, DerbyStyle, t, sinkSchema, primaryKey = keys)
-      val base = new java.io.File(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-stream/jdbcsink-${new java.io.File(d).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      if (base.exists) rm(base)
-      val dlq = new java.io.File(base, "dlq").toString
-      val partsKey = "spark.sql.shuffle.partitions"
-      val prevParts = s.conf.get(partsKey)
-      s.conf.set(partsKey, math.min(8, prevParts.toInt).toString)
-      val q = try EventsPipeline.resilientSink(agg,
-          WriterConfig(table = t, batchSize = 200,
-            execMode = graft.sinks.ExecMode.Tx),
-          graft.sinks.RetryJudge.forDialect(DerbyStyle.name),
-          _ => new JdbcUpsertRowSink(url, DerbyStyle, t, sinkSchema, keys),
-          dlq)
-        .option("checkpointLocation", new java.io.File(base, "ckpt").toString)
-        .trigger(Trigger.AvailableNow()).start()
-      finally s.conf.set(partsKey, prevParts)
-      q.awaitTermination()
+      val base = Scratch.dir("stream_jdbc_sink", d)
+      val dlq = s"$base/dlq"
+      runStream(s, base, EventsPipeline.resilientSink(agg,
+        WriterConfig(table = t, batchSize = 200,
+          execMode = graft.sinks.ExecMode.Tx),
+        graft.sinks.RetryJudge.forDialect(DerbyStyle.name),
+        _ => new JdbcUpsertRowSink(url, DerbyStyle, t, sinkSchema, keys),
+        dlq))
       require(!new java.io.File(dlq).exists, "JDBC stream sink quarantined rows")
       JdbcLive.read(s, url, ReaderConfig(table = t,
           split = SplitConfig(key = "window_us"), numPartitions = 4),
@@ -888,31 +766,16 @@ object StreamOps {
       JdbcLive.dropTableIfExists(url, DerbyStyle, lt)
       JdbcLive.createTable(url, DerbyStyle, t, sinkSchema)
       JdbcLedgerSink.createLedger(url, DerbyStyle, lt)
-      val base = new java.io.File(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-stream/jdbcledger-${new java.io.File(d).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      if (base.exists) rm(base)
-      val partsKey = "spark.sql.shuffle.partitions"
-      val prevParts = s.conf.get(partsKey)
-      s.conf.set(partsKey, math.min(8, prevParts.toInt).toString)
-      val q = try deduped.writeStream.outputMode("append")
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-              batchId: Long) =>
+      runStream(s, Scratch.dir("stream_jdbc_ledger", d),
+        deduped.writeStream.outputMode("append")
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
             val dlq = graft.sinks.ResilientBatchWriter.write(batch,
               WriterConfig(table = t, batchSize = 500),
               graft.sinks.RetryJudge.forDialect(DerbyStyle.name),
               pid => new JdbcLedgerSink(url, DerbyStyle, t, lt,
                 sinkSchema, batchId))
             require(dlq.isEmpty, "ledger stream sink quarantined rows")
-          }
-          .option("checkpointLocation", new java.io.File(base, "ckpt").toString)
-          .trigger(Trigger.AvailableNow()).start()
-      finally s.conf.set(partsKey, prevParts)
-      q.awaitTermination()
+          })
       JdbcLive.read(s, url, ReaderConfig(table = t,
           split = SplitConfig(key = "event_id"), numPartitions = 4),
           DerbyStyle)
@@ -948,7 +811,7 @@ object StreamOps {
           Spatial.hexCoord(col("event_id"), 4, 3), r))
         .join(index, Seq("cell")) // stream-static inner: stateless
         .select(col("event_id"), col("n_nearby"))
-      runStream(s, ev, "spatial-enrich", d, "append")
+      streamToParquet(s, ev, "spatial-enrich", d, "append")
         .groupBy(col("n_nearby"))
         .agg(count(lit(1)).as("n_points"))
         .orderBy(col("n_nearby"))
@@ -962,7 +825,7 @@ object StreamOps {
       val enriched = EventsPipeline
         .enrichWithDim(ev, dim, "user_id", "c_custkey")
         .select(col("event_id"), col("c_nationkey"), col("value"))
-      runStream(s, enriched, "enrich", d, "append")
+      streamToParquet(s, enriched, "enrich", d, "append")
         .groupBy(col("c_nationkey"))
         .agg(count(lit(1)).as("n_purchases"),
           sum(col("value").cast("decimal(12,4)"))
@@ -979,7 +842,7 @@ object StreamOps {
       val joined = EventsPipeline.purchaseClickJoin(
         ev.filter(col("event_type") === "purchase"),
         ev.filter(col("event_type") === "click"))
-      runStream(s, joined, "ssjoin", d, "append")
+      streamToParquet(s, joined, "ssjoin", d, "append")
         .select(col("purchase_id"), col("user_id"),
           unix_micros(col("p_time")).as("p_us"),
           col("click_id"), unix_micros(col("c_time")).as("c_us"))
@@ -1000,7 +863,7 @@ object StreamOps {
         .select(unix_micros(col("w.start")).as("window_us"),
           col("n_a"), col("n_b"), col("mean_a"), col("mean_b"),
           col("t_stat"), col("dof"))
-      runStream(s, out, "ab-welch", d, "complete")
+      streamToParquet(s, out, "ab-welch", d, "complete")
         .orderBy(col("window_us"))
     })
   )

@@ -146,7 +146,7 @@ object TextDedup {
     // batch) and reproduces the exact survivor set. Cross-batch planted
     // dups stay spec'd in DedupSpec.
     "dedup_minhash_incremental" -> ((s, d) => {
-      val root = java.nio.file.Files.createTempDirectory("mki").toString
+      val root = Scratch.dir("dedup_minhash_incremental", d)
       val idx = s"$root/lsh_index"
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"),
         col("source"))
@@ -156,13 +156,8 @@ object TextDedup {
       val survivors2 = Dedup.minhashKeepIncremental(
         docs.filter(col("doc_id") >= cut), "doc_id", "text", idx,
         tau = 0.5, replayableHash = true)
-      val result = survivors2.select(col("doc_id"), col("source"))
+      survivors2.select(col("doc_id"), col("source"))
         .orderBy(col("doc_id"))
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val schema = result.schema
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.createDataFrame(rows, schema)
     }),
 
     // SimHash near-dup pairs, FULLY oracle-checked: the m-of-b chunk

@@ -1231,10 +1231,15 @@ object VersionedTable {
       }
     def dropChanges(): Unit = changesFile.foreach(cf =>
       scala.util.Try(f.delete(new Path(cf), true)))
-    try commitRetrying(spark, root, schema,
+    // the commit publishes the schema of the head each attempt claims
+    // against: a concurrent addColumns/renameColumn that landed after
+    // `headM` was read must not be rolled back by this commit
+    var commitSchema = schema
+    try commitRetrying(spark, root, commitSchema,
       opInfo = opJson(staged).filterNot(j =>
         j.exists(c => c == '\t' || c == '\n')),
       changesFile = changesFile) { h =>
+      commitSchema = h.getOrElse(throw noCommit(root)).schema
       val prev = filesOf(h)
       val prevSet = prev.map(p => new Path(p).toString).toSet
       val gone = removedQ.diff(prevSet)

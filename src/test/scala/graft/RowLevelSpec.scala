@@ -170,6 +170,33 @@ class RowLevelSpec extends SparkSpec {
       "failed row-level commit must not publish a version")
   }
 
+  test("commitReplace: an addColumns that lands between the statement's " +
+      "head read and its commit survives the row-level commit") {
+    import org.apache.spark.sql.types.{StringType, StructField}
+    val root = freshTable("race")
+    val victim = VersionedTable.snapshot(spark, root).files.head
+    val stage = s"$warehouse/race-stage"
+    spark.read.parquet(victim).filter(col("k") % 2 === 0).coalesce(1)
+      .write.parquet(stage)
+    val written = new java.io.File(stage).listFiles.toSeq
+      .filter(_.getName.endsWith(".parquet")).map(_.toString)
+    // opJson runs after commitReplace has read the head and before the
+    // commit loop claims a version: the concurrent writer's window
+    VersionedTable.commitReplace(spark, root, Set(victim), written,
+      opJson = _ => {
+        VersionedTable.addColumns(spark, root,
+          Seq(StructField("note", StringType)))
+        None
+      })
+    val head = VersionedTable.snapshot(spark, root)
+    assert(head.schema.fieldNames.contains("note"),
+      s"the row-level commit republished a stale schema: ${head.schema}")
+    assert(!head.files.contains(victim))
+    val back = spark.read.format("graft").load(root)
+    assert(back.count() == 350 &&
+      back.filter(col("note").isNotNull).count() == 0)
+  }
+
   test("spark.graft.rowlevel.groupFilterColumn redirects group " +
       "filtering to the clustered column") {
     warehouse
