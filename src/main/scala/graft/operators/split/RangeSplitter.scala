@@ -62,41 +62,12 @@ object RangeSplitter {
     sb.reverse.toString
   }
 
-  // ---- typed domains ----------------------------------------------------
-
-  sealed trait KeyDomain {
-    def toBig(v: Any): BigInt
-    def fromBig(b: BigInt): Any
-    def literal(b: BigInt): Column
-  }
-
-  case object LongDomain extends KeyDomain {
-    def toBig(v: Any): BigInt = BigInt(v.toString)
-    def fromBig(b: BigInt): Any = b.toLong
-    def literal(b: BigInt): Column = lit(b.toLong)
-  }
-
-  case object StringDomain extends KeyDomain {
-    def toBig(v: Any): BigInt = string2BigInt(v.toString)
-    def fromBig(b: BigInt): Any = bigInt2String(b)
-    def literal(b: BigInt): Column = lit(bigInt2String(b))
-  }
-
   // FLOOR division: BigInt `/` truncates toward zero, which for
   // pre-epoch (negative) keys would quantize the min upward and let the
   // first slice exclude the true minimum rows.
   private def floorDivBig(v: BigInt, unit: Long): BigInt = {
     val q = v / unit
     if (v.signum < 0 && q * unit != v) q - 1 else q
-  }
-
-  /** Timestamp keys normalized by accuracy unit (reference
-    * split.go:312-327: day/min/s/ms/us/ns), here over epoch micros. */
-  final case class TimeDomain(unitMicros: Long) extends KeyDomain {
-    def toBig(v: Any): BigInt = floorDivBig(BigInt(v.toString), unitMicros)
-    def fromBig(b: BigInt): Any = b.toLong * unitMicros
-    def literal(b: BigInt): Column =
-      timestamp_micros(lit(b.toLong * unitMicros))
   }
 
   /** Accuracy units in NANOS — the full reference matrix incl. the
@@ -110,17 +81,6 @@ object RangeSplitter {
     "us" -> 1000L,
     "ns" -> 1L)
 
-  /** Range predicates for the slices: `key >= lo AND key < hi`, last slice
-    * `<= hi` — composable with a user WHERE exactly like the reference
-    * (`(user) and (split)`, reader/job.go:179-181). */
-  def predicates(key: Column, slices: Seq[Slice], dom: KeyDomain)
-      : Seq[Column] =
-    slices.map { s =>
-      val upper =
-        if (s.closed) key <= dom.literal(s.hi) else key < dom.literal(s.hi)
-      key >= dom.literal(s.lo) && upper
-    }
-
   /** SQL-text predicates (for JDBC `predicates: Array[String]` hand-off). */
   def predicateSql(key: String, slices: Seq[Slice], quote: BigInt => String)
       : Seq[String] =
@@ -129,95 +89,83 @@ object RangeSplitter {
       s"$key >= ${quote(s.lo)} and $key $op ${quote(s.hi)}"
     }
 
-  /** Plan + execute a split scan over a long key: min/max via one agg
-    * (the reference's A1/A2 fetchMin/fetchMax), then a union of n
-    * predicate-filtered scans. Functionally identical to the plain scan —
-    * the point is the partitioned-ingest plan shape (and the driver's
-    * oracle checks exactly that). */
-  def splitScan(df: DataFrame, keyCol: String, n: Int): DataFrame = {
-    val Array(mn, mx) = df.agg(min(col(keyCol)), max(col(keyCol)))
-      .collect()(0).toSeq.toArray
-    if (mn == null) return df
-    val slices =
-      split(BigInt(mn.toString), BigInt(mx.toString), n)
-    predicates(col(keyCol), slices, LongDomain)
-      .map(p => df.filter(p))
-      .reduce(_ unionAll _)
-  }
+  /** A split key's domain: `measure` is what min/max aggregate over,
+    * `ordinal` maps an aggregated value onto the BigInt line, `unit`
+    * quantizes that line by floor division before slicing (1 = exact),
+    * and `literal` is the key-typed literal at a point of the line.
+    * `literal(ordinal(v))` must be `v` itself, so the last slice closes
+    * at the true max (the string codec holds this for keys without a
+    * leading NUL, the same keys whose min it can represent). */
+  private final case class KeyDomain(ordinal: Any => BigInt,
+      literal: BigInt => Column, unit: Long = 1L,
+      measure: Column => Column = identity)
 
-  /** Split scan over an ASCII STRING key (X2 string domain): bounds via
-    * min/max, base-128 positional codec to BigInt, equal-width slices,
-    * string-literal range predicates. Slice boundaries are only a true
-    * partition when base-128 order agrees with lexicographic order —
-    * i.e. equal-length keys, the reference codec's effective constraint
-    * (split.go:263-287; RangeSplitterSpec property). Mixed-length key
-    * domains should split on a length-normalized surrogate instead. */
-  def splitScanString(df: DataFrame, keyCol: String, n: Int): DataFrame = {
-    val Array(mn, mx) = df.agg(min(col(keyCol)), max(col(keyCol)))
+  /** The split scan every key domain shares: min/max via one agg (the
+    * reference's A1/A2 fetchMin/fetchMax), equal-width slices over the
+    * quantized domain, then a union of predicate-filtered scans
+    * (`key >= lo and key < hi`). The last slice is closed at the TRUE
+    * max: `floor(max)*unit` would drop rows with intra-unit components.
+    * Functionally identical to the plain scan — the point is the
+    * partitioned-ingest plan shape (and the driver's oracle checks
+    * exactly that). An all-null (or empty) key returns `df`. */
+  private def splitOver(df: DataFrame, keyCol: String, n: Int,
+      dom: KeyDomain): DataFrame = {
+    val key = col(keyCol)
+    val Array(mn, mx) = df.agg(min(dom.measure(key)), max(dom.measure(key)))
       .collect()(0).toSeq.toArray
     if (mn == null) return df
-    val slices =
-      split(string2BigInt(mn.toString), string2BigInt(mx.toString), n)
-    slices.map { s =>
+    val top = dom.ordinal(mx)
+    split(floorDivBig(dom.ordinal(mn), dom.unit), floorDivBig(top, dom.unit),
+        n).map { s =>
       val upper =
-        if (s.closed) col(keyCol) <= lit(mx.toString)
-        else col(keyCol) < lit(bigInt2String(s.hi))
-      df.filter(col(keyCol) >= lit(bigInt2String(s.lo)) && upper)
+        if (s.closed) key <= dom.literal(top)
+        else key < dom.literal(s.hi * dom.unit)
+      df.filter(key >= dom.literal(s.lo * dom.unit) && upper)
     }.reduce(_ unionAll _)
   }
 
+  /** Split scan over a long (or any integral) key. */
+  def splitScan(df: DataFrame, keyCol: String, n: Int): DataFrame =
+    splitOver(df, keyCol, n,
+      KeyDomain(v => BigInt(v.toString), b => lit(b.toLong)))
+
+  /** Split scan over an ASCII STRING key (X2 string domain): base-128
+    * positional codec to BigInt, string-literal range predicates. Slice
+    * boundaries are only a true partition when base-128 order agrees
+    * with lexicographic order — i.e. equal-length keys, the reference
+    * codec's effective constraint (split.go:263-287; RangeSplitterSpec
+    * property). Mixed-length key domains should split on a
+    * length-normalized surrogate instead. */
+  def splitScanString(df: DataFrame, keyCol: String, n: Int): DataFrame =
+    splitOver(df, keyCol, n, KeyDomain(v => string2BigInt(v.toString),
+      b => lit(bigInt2String(b))))
+
   /** Split scan over an epoch-NANOS long key (the TIMESTAMP(NANOS)
     * parquet shape read under nanosAsLong — e.g. events.ts) at any
-    * accuracy tier of [[AccuracyNanos]], including exact "ns": the key is
-    * quantized by floor division in BigInt, slices planned on quantized
-    * units, and predicates compare the RAW nanos longs so the union is
-    * bit-exact to the plain scan even with sub-microsecond components. */
+    * accuracy tier of [[AccuracyNanos]], including exact "ns": slices
+    * are planned on quantized units and predicates compare the RAW
+    * nanos longs, so the union is bit-exact to the plain scan even with
+    * sub-microsecond components. */
   def splitScanNanos(df: DataFrame, keyCol: String, n: Int,
       accuracy: String = "ns"): DataFrame = {
     val unit = AccuracyNanos.getOrElse(accuracy,
       throw new IllegalArgumentException(
         s"unknown time accuracy '$accuracy' " +
           s"(expected ${AccuracyNanos.keys.mkString("|")})"))
-    val Array(mn, mx) = df.agg(min(col(keyCol)), max(col(keyCol)))
-      .collect()(0).toSeq.toArray
-    if (mn == null) return df
-    val slices = split(floorDivBig(BigInt(mn.toString), unit),
-      floorDivBig(BigInt(mx.toString), unit), n)
-    slices.map { s =>
-      // final closed bound uses the TRUE max (floor(max)*unit would drop
-      // rows with intra-unit components)
-      val upper =
-        if (s.closed) col(keyCol) <= lit(mx.toString.toLong)
-        else col(keyCol) < lit((s.hi * unit).toLong)
-      df.filter(col(keyCol) >= lit((s.lo * unit).toLong) && upper)
-    }.reduce(_ unionAll _)
+    splitOver(df, keyCol, n,
+      KeyDomain(v => BigInt(v.toString), b => lit(b.toLong), unit))
   }
 
   /** Split scan over a TIMESTAMP key at the given accuracy unit (X2 time
-    * domain, default day — reference split.go:312-327). The domain is
-    * quantized by floor division, so the final closed bound uses the TRUE
-    * max timestamp: `floor(max)*unit` would silently drop rows with
-    * intra-unit components. */
+    * domain, default day — reference split.go:312-327), over epoch
+    * micros. Keys may be TIMESTAMP or TIMESTAMP_NTZ depending on the
+    * parquet writer; literals compare in the column's own type (UTC
+    * session makes the tz<->ntz casts identity). */
   def splitScanTime(df: DataFrame, keyCol: String, n: Int,
       unitMicros: Long = 86400000000L): DataFrame = {
-    // keys may be TIMESTAMP or TIMESTAMP_NTZ depending on the parquet
-    // writer; compare in the column's own type (UTC session makes the
-    // tz<->ntz casts identity)
     val keyType = df.schema(keyCol).dataType
-    val asMicros = (c: Column) => unix_micros(c.cast("timestamp"))
-    val asKey = (b: BigInt) =>
-      timestamp_micros(lit(b.toLong)).cast(keyType)
-    val Array(mn, mx) = df
-      .agg(min(asMicros(col(keyCol))), max(asMicros(col(keyCol))))
-      .collect()(0).toSeq.toArray
-    if (mn == null) return df
-    val dom = TimeDomain(unitMicros)
-    val slices = split(dom.toBig(mn), dom.toBig(mx), n)
-    slices.map { s =>
-      val upper =
-        if (s.closed) col(keyCol) <= asKey(BigInt(mx.toString))
-        else col(keyCol) < asKey(s.hi * unitMicros)
-      df.filter(col(keyCol) >= asKey(s.lo * unitMicros) && upper)
-    }.reduce(_ unionAll _)
+    splitOver(df, keyCol, n, KeyDomain(v => BigInt(v.toString),
+      b => timestamp_micros(lit(b.toLong)).cast(keyType), unitMicros,
+      c => unix_micros(c.cast("timestamp"))))
   }
 }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph-analytics query surface (operators.Graph).
@@ -86,42 +86,28 @@ object GraphOps {
       .distinct()
   }
 
-  private def tradeEdges(s: SparkSession, d: String): DataFrame = {
-    val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-    val l = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
-    val pairs = l.join(o, l("l_orderkey") === o("o_orderkey"))
-      .select((col("o_custkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"))
-      .distinct()
-    // symmetrize in ONE map-side explode pass — a union of pairs with
-    // its reversal would execute the join+distinct subplan twice; and
-    // the result stays distinct by construction (endpoint parity
-    // differs), so pageRank can skip its own dedup shuffle
-    pairs.select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-  }
+  private def tradeEdges(s: SparkSession, d: String): DataFrame =
+    symmetrized(directedTradeEdges(s, d))
 
   /** tradeEdges with a deterministic small-integer weight per edge
-    * ((custkey + suppkey) % 5 + 1, symmetric by construction) — small
-    * weights keep the oracle's hop-bounded closure at O(V * maxCost)
-    * distinct rows. */
-  private def weightedTradeEdges(s: SparkSession, d: String): DataFrame = {
-    val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-    val l = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
-    val pairs = l.join(o, l("l_orderkey") === o("o_orderkey"))
-      .select((col("o_custkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"),
-        ((col("o_custkey") + col("l_suppkey")) % 5 + 1).as("w"))
-      .distinct()
+    * ((custkey + suppkey) % 5 + 1, read back off the parity encoding;
+    * symmetric by construction) — small weights keep the oracle's
+    * hop-bounded closure at O(V * maxCost) distinct rows. */
+  private def weightedTradeEdges(s: SparkSession, d: String): DataFrame =
+    symmetrized(directedTradeEdges(s, d), ((shiftright(col("src"), 1) +
+      shiftright(col("dst"), 1)) % 5 + 1).as("w"))
+
+  /** Each (src, dst) pair in both directions, `attrs` riding along — in
+    * ONE map-side explode pass: a union of the pairs with their reversal
+    * would execute the join+distinct subplan twice. The result stays
+    * distinct by construction (endpoint parity differs), so pageRank can
+    * skip its own dedup shuffle. */
+  private def symmetrized(pairs: DataFrame, attrs: Column*): DataFrame =
     pairs.select(explode(array(
-        struct(col("src"), col("dst"), col("w")),
-        struct(col("dst").as("src"), col("src").as("dst"), col("w"))))
+        struct(col("src") +: col("dst") +: attrs: _*),
+        struct(col("dst").as("src") +: col("src").as("dst") +: attrs: _*)))
         .as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"),
-        col("e.w").as("w"))
-  }
+      .select("e.*")
 
   /** Part co-purchase graph: parts linked when they appear in the same
     * order — naturally sparse (~0.6% density at sf0.1) and SF-scaled;

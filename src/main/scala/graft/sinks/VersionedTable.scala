@@ -472,10 +472,9 @@ object VersionedTable {
   def cloneShallow(spark: SparkSession, srcRoot: String, dstRoot: String,
       asOf: Option[Long] = None): Long = {
     val (_, m) = resolve(fs(spark, srcRoot), srcRoot, asOf)
-    // carry the source's per-file stats through the staged-stats cache
-    // (the commit writer resolves stats for "new" files from there)
-    m.stats.foreach { case (p, st) => stagedStats.put(p, st) }
-    commitRetrying(spark, dstRoot, m.schema)(_ => m.files)
+    // the source's per-file stats ride the commit: it stages no file
+    commitRetrying(spark, dstRoot, m.schema, staged = Staged(stats = m.stats))(
+      _ => m.files)
   }
 
   /** METADATA-ONLY aggregation: `COUNT(*)` plus `MIN`/`MAX` of the
@@ -993,7 +992,7 @@ object VersionedTable {
     val staged = stageFiles(df, root,
       resolveHead(fs(spark, root), root).map(_._2))
     commitRetrying(spark, root, df.schema,
-      propertiesOverride = properties)(_ => staged)
+      propertiesOverride = properties, staged = staged)(_ => staged.files)
   }
 
   /** The head version's CHECK constraints, in declaration order. */
@@ -1007,10 +1006,9 @@ object VersionedTable {
     * data must already satisfy it — the add scans the head snapshot
     * and fails loud on any violation, like Delta's ADD CONSTRAINT.
     * From this commit on, every write path validates its staged rows
-    * ([[stageFiles]] is the choke point) and a violating write throws
-    * BEFORE any commit: the table is untouched and no orphan files
-    * are left (enforcement precedes staging output registration;
-    * rejected stages are plain uncommitted temp dirs for vacuum).
+    * ([[publish]] is the choke point) and a violating write throws
+    * BEFORE any commit: the table is untouched and the rejected files
+    * are deleted.
     * Check-then-commit window: a concurrent writer racing the add can
     * land unvalidated rows between the scan and the constraint commit
     * — the same single-alterer assumption Delta documents. */
@@ -1169,12 +1167,12 @@ object VersionedTable {
     val f = fs(spark, root)
     val staged = stageFiles(df, root, resolveHead(f, root).map(_._2))
     var schema: StructType = df.schema
-    commitRetrying(spark, root, schema) { h =>
+    commitRetrying(spark, root, schema, staged = staged) { h =>
       h.foreach { m =>
         schema = evolve(m.schema, df.schema, mergeSchema)
         requireUnpoisoned(f, root, m, schema)
       }
-      filesOf(h) ++ staged
+      filesOf(h) ++ staged.files
     }
   }
 
@@ -1184,10 +1182,13 @@ object VersionedTable {
     * replace `removed` (the files the row-level scan READ — group
     * granularity is the file) with the content the executors staged
     * under a temp dir (`written`, raw parquet from Spark's own
-    * OutputWriter). The staged files take the same path as
+    * OutputWriter). The staged files go through [[publish]] like
     * [[stageFiles]] output: moved to immutable UUID names under data/,
     * footer-stats'd (empties dropped), and CHECK-constraint-validated
-    * on their OWN read-back before the commit publishes them.
+    * on their OWN read-back before the commit publishes them. A table
+    * that declared [[ChangeFeedKeysProp]] gets the commit's change log
+    * (see [[changeLog]]). A commit that fails deletes the published
+    * files and the change log.
     *
     * Concurrency: write-serializable per table. A concurrent commit
     * that REMOVED one of the scanned files (another rewrite of the
@@ -1201,44 +1202,22 @@ object VersionedTable {
     val f = fs(spark, root)
     val (_, headM) = resolve(f, root)
     val schema = headM.schema
-    f.mkdirs(dataDir(root))
-    val moved = written.map { p0 =>
-      val dst = new Path(dataDir(root), s"${UUID.randomUUID()}.parquet")
-      require(f.rename(new Path(p0), dst), s"stage move failed: $p0 -> $dst")
-      f.makeQualified(dst).toString
-    }
     // staged row-level files carry PHYSICAL column names (the write
     // factory got the physical schema) — stats keys must match
-    val staged =
-      dropEmpty(f, spark, physicalSchema(schema), moved, Some(headM))
-    // same staged-materialization discipline as stageFiles: validate
-    // the exact bytes the commit will publish
-    if (staged.nonEmpty)
-      enforceConstraints(readFiles(spark, schema, staged), Some(headM))
+    val published = publish(f, spark, root, written.map(new Path(_)),
+      physicalSchema(schema), schema.fieldNames.toSeq, Some(headM))
+    val staged = discardOnFailure(f, published)(published.copy(
+      changes = changeLog(spark, f, root, Some(headM), schema,
+        removed.toSeq, published.files)))
     val removedQ = removed.map(p => new Path(p).toString)
-    // WRITE-SIDE CHANGE LOG: a table that declared its identity keys
-    // (ChangeFeedKeysProp) gets this commit's net row diff persisted
-    // under _changes/ and referenced from the manifest — changeFeed
-    // then serves the commit as a pure scan. Keys that no longer match
-    // the schema (never expected: renameColumn rewrites the property)
-    // skip recording; the read-side join fallback stays correct.
-    val changesFile: Option[String] = declaredCdcKeys(headM)
-      .map { keys =>
-        val dataCols = schema.fieldNames.filterNot(keys.contains).toSeq
-        writeChanges(f, root, keyedDiff(
-          readFiles(spark, schema, removed.toSeq),
-          readFiles(spark, schema, staged), keys, dataCols))
-      }
-    def dropChanges(): Unit = changesFile.foreach(cf =>
-      scala.util.Try(f.delete(new Path(cf), true)))
     // the commit publishes the schema of the head each attempt claims
     // against: a concurrent addColumns/renameColumn that landed after
     // `headM` was read must not be rolled back by this commit
     var commitSchema = schema
-    try commitRetrying(spark, root, commitSchema,
-      opInfo = opJson(staged).filterNot(j =>
+    commitRetrying(spark, root, commitSchema,
+      opInfo = opJson(staged.files).filterNot(j =>
         j.exists(c => c == '\t' || c == '\n')),
-      changesFile = changesFile) { h =>
+      staged = staged) { h =>
       commitSchema = h.getOrElse(throw noCommit(root)).schema
       val prev = filesOf(h)
       val prevSet = prev.map(p => new Path(p).toString).toSet
@@ -1248,13 +1227,7 @@ object VersionedTable {
           "file(s) were rewritten/removed by a concurrent commit — " +
           "retry the statement against the new snapshot")
       prev.filterNot(p => removedQ.contains(new Path(p).toString)) ++
-        staged
-    } catch {
-      case e: Throwable => // failed commit: reclaim staged + change log
-        staged.foreach(p =>
-          scala.util.Try(f.delete(new Path(p), false)))
-        dropChanges()
-        throw e
+        staged.files
     }
   }
 
@@ -1372,21 +1345,16 @@ object VersionedTable {
     else {
       val staged = stageFiles(df, root, ms.lastOption.map(_._2))
       // re-check inside the loop: the commit that raced us may have
-      // been THIS batch's earlier delivery finally landing
-      var out: Option[Long] = None
-      try {
-        out = Some(commitRetrying(spark, root, df.schema,
-          batchMarker = Some(batchId)) { h =>
-          if (committed(manifests(f, root))) throw new BatchAlreadyCommitted
-          h.foreach(m => // strict: a stream's schema must not drift
-            evolve(m.schema, df.schema, mergeSchema = false))
-          filesOf(h) ++ staged
-        })
-      } catch {
-        case _: BatchAlreadyCommitted =>
-          staged.foreach(p => f.delete(new Path(p), false)) // orphans
-      }
-      out
+      // been THIS batch's earlier delivery finally landing (the failed
+      // commit deletes what it staged)
+      try Some(commitRetrying(spark, root, df.schema,
+          batchMarker = Some(batchId), staged = staged) { h =>
+        if (committed(manifests(f, root))) throw new BatchAlreadyCommitted
+        h.foreach(m => // strict: a stream's schema must not drift
+          evolve(m.schema, df.schema, mergeSchema = false))
+        filesOf(h) ++ staged.files
+      })
+      catch { case _: BatchAlreadyCommitted => None }
     }
   }
 
@@ -1601,39 +1569,26 @@ object VersionedTable {
     * evolution of it — so a retry after a concurrent schema change
     * commits the new schema), the head files to rewrite and the rows
     * replacing them (None: nothing to stage). Those rows are staged, the
-    * other head files carry over by identity, and a table that declared
-    * [[ChangeFeedKeysProp]] records the commit's net diff so changeFeed
-    * reads are pure scans — EMPTY, without a join, for a `layoutOnly`
-    * rewrite, whose content is identical by construction. A lost race
-    * or a failure deletes the attempt's staged files and change log
-    * instead of leaving orphans for vacuum. */
+    * other head files carry over by identity, and the commit writes its
+    * change log (see [[changeLog]]). A lost race deletes the attempt's
+    * staged files and change log before the next attempt restages; a
+    * failed commit deletes them in [[commitRetrying]]. */
   private def rewriteCommit(spark: SparkSession, root: String,
       layoutOnly: Boolean = false)(plan: Option[Manifest] =>
         (StructType, Seq[String], Option[DataFrame])): Long = {
     val f = fs(spark, root)
     var schema: StructType = null
-    var lastStaged: Seq[String] = Seq.empty
-    var lastChanges: Option[String] = None
-    def reclaim(): Unit = {
-      lastStaged.foreach(p => f.delete(new Path(p), false))
-      lastChanges.foreach(cf => scala.util.Try(f.delete(new Path(cf), true)))
-      lastStaged = Seq.empty
-      lastChanges = None
-    }
-    try commitRetrying(spark, root, schema, changesFile = lastChanges) { h =>
-      reclaim()
+    var staged = Staged()
+    commitRetrying(spark, root, schema, staged = staged) { h =>
+      discard(f, staged)
+      staged = Staged()
       val (s, rewrite, rows) = plan(h)
       schema = s
-      lastStaged = rows.fold(Seq.empty[String])(stageFiles(_, root, h))
-      lastChanges = h.flatMap(declaredCdcKeys).map { ks =>
-        writeChanges(f, root,
-          if (layoutOnly) emptyDiffFrame(spark, schema, ks)
-          else keyedDiff(readFiles(spark, schema, rewrite),
-            readFiles(spark, schema, lastStaged), ks,
-            schema.fieldNames.filterNot(ks.contains).toSeq))
-      }
-      filesOf(h).filterNot(rewrite.toSet) ++ lastStaged
-    } catch { case e: Throwable => reclaim(); throw e }
+      staged = rows.fold(Staged())(stageFiles(_, root, h))
+      staged = staged.copy(changes = changeLog(spark, f, root, h, schema,
+        rewrite, staged.files, layoutOnly))
+      filesOf(h).filterNot(rewrite.toSet) ++ staged.files
+    }
   }
 
   /** Row-level change feed between two committed snapshots: one row per
@@ -1718,6 +1673,26 @@ object VersionedTable {
         v0.split(",").map(_.trim).filter(_.nonEmpty).toSeq }
       .filter(ks => ks.nonEmpty &&
         ks.forall(m.schema.fieldNames.contains))
+
+  /** WRITE-SIDE CHANGE LOG: when `head` declared its identity keys
+    * ([[ChangeFeedKeysProp]]), persist the commit's net row diff —
+    * `removed` files against `staged` ones, read under `schema` — and
+    * return its path for the manifest, so [[changeFeed]] serves the
+    * commit as a pure scan. A `layoutOnly` rewrite (compact/zorder) logs
+    * an EMPTY diff without a join: its content is identical by
+    * construction. None when the table has not opted in, or its keys no
+    * longer match the schema (never expected: renameColumn rewrites the
+    * property); the read-side join fallback stays correct then. */
+  private def changeLog(spark: SparkSession, f: FileSystem, root: String,
+      head: Option[Manifest], schema: StructType, removed: Seq[String],
+      staged: Seq[String], layoutOnly: Boolean = false): Option[String] =
+    head.flatMap(declaredCdcKeys).map { ks =>
+      writeChanges(f, root,
+        if (layoutOnly) emptyDiffFrame(spark, schema, ks)
+        else keyedDiff(readFiles(spark, schema, removed),
+          readFiles(spark, schema, staged), ks,
+          schema.fieldNames.filterNot(ks.contains).toSeq))
+    }
 
   /** Persist a commit's net-diff frame under `_changes/` and return
     * its qualified path (the manifest marker content). */
@@ -1925,10 +1900,8 @@ object VersionedTable {
     * concurrent writers via the usual exclusive version claim. */
   def restore(spark: SparkSession, root: String, toVersion: Long): Long = {
     val (_, target) = resolve(fs(spark, root), root, Some(toVersion))
-    // seed the stage cache so the commit resolves the restored files'
-    // stats even when the current head no longer lists them
-    target.stats.foreach { case (p, s) => stagedStats.put(p, s) }
-    commitRetrying(spark, root, target.schema)(_ => target.files)
+    commitRetrying(spark, root, target.schema,
+      staged = Staged(stats = target.stats))(_ => target.files)
   }
 
   /** Delete data files referenced by no retained manifest, and expired
@@ -1981,12 +1954,26 @@ object VersionedTable {
     dead.size
   }
 
-  /** Stats for files staged by THIS process, keyed by qualified path.
-    * Data files are immutable and UUID-named, so the cache can never be
-    * stale; files staged by other processes resolve through the previous
-    * manifest instead. Bounded: cleared past 100k entries. */
-  private val stagedStats =
-    new java.util.concurrent.ConcurrentHashMap[String, FileStats]()
+  /** What a commit brings beyond the head it claims against: the data
+    * `files` it staged and the change log it wrote (both deleted when
+    * the commit fails), and per-file `stats` for its manifest lines —
+    * the staged files' own, or a clone's or restore's source manifest's
+    * (Delta's `add` action likewise carries its file's stats in the
+    * log record). A file with no stats entry commits without stats
+    * unless the head lists it with some. */
+  private final case class Staged(files: Seq[String] = Nil,
+      stats: Map[String, FileStats] = Map.empty,
+      changes: Option[String] = None)
+
+  private def discard(f: FileSystem, s: Staged): Unit = {
+    s.files.foreach(p => scala.util.Try(f.delete(new Path(p), false)))
+    s.changes.foreach(cf => scala.util.Try(f.delete(new Path(cf), true)))
+  }
+
+  /** `body`, deleting `staged` when it throws. */
+  private def discardOnFailure[T](f: FileSystem, staged: => Staged)(
+      body: => T): T =
+    try body catch { case t: Throwable => discard(f, staged); throw t }
 
   /** Canonical string form used in manifest stats: integral/timestamp/
     * date as decimal integers (micros / epoch days), float/double via
@@ -2027,20 +2014,17 @@ object VersionedTable {
     * output type has no per-write option). */
   private object TsConfLock
 
-  /** Stage `df` under data/ as immutable files; return their qualified
-    * paths (vacuum compares against listStatus, which qualifies).
-    * `head` is the manifest the commit builds on (None for a new
-    * table): its column mapping, bloom columns and CHECK constraints
-    * apply to the staged files.
-    * One extra pass over ONLY the newly staged files collects per-file
-    * min/max/null stats for the manifest's data-skipping index, and
-    * EMPTY part files (a write with more shuffle partitions than rows,
-    * or a rewrite whose rows all went, produces them) are deleted
-    * instead of committed — see [[dropEmpty]] — so manifests never
-    * accumulate zero-row entries (at ingest rate, a real file-count
-    * leak), whether or not the stats pass is enabled. */
+  /** Stage `df` under data/ as immutable files, returned with their
+    * qualified paths (vacuum compares against listStatus, which
+    * qualifies) and the per-file stats the commit writes into its
+    * manifest. `head` is the manifest the commit builds on (None for a
+    * new table): its column mapping, bloom columns and CHECK
+    * constraints apply to the staged files. The part files go through
+    * [[publish]]. If staging throws, it deletes what it wrote; once it
+    * returns, the files belong to the commit, and a commit that fails
+    * deletes them ([[commitRetrying]]). */
   private def stageFiles(df0: DataFrame, root: String,
-      head: Option[Manifest]): Seq[String] = {
+      head: Option[Manifest]): Staged = {
     val spark = df0.sparkSession
     val f = fs(spark, root)
     // column mapping: staged parquet stores PHYSICAL names (the head
@@ -2063,69 +2047,82 @@ object VersionedTable {
     // exists); the swap is serialized under TsConfLock so two threads
     // staging concurrently in one session can't interleave set/restore
     // and leak INT96 (or the override) into each other's writes.
-    TsConfLock.synchronized {
-      val tsKey = "spark.sql.parquet.outputTimestampType"
-      val prevTs = spark.conf.getOption(tsKey)
-      spark.conf.set(tsKey, "TIMESTAMP_MICROS")
-      try df.write.mode(SaveMode.Overwrite).parquet(stage.toString)
-      finally prevTs match {
-        case Some(v) => spark.conf.set(tsKey, v)
-        case None => spark.conf.unset(tsKey)
+    try {
+      TsConfLock.synchronized {
+        val tsKey = "spark.sql.parquet.outputTimestampType"
+        val prevTs = spark.conf.getOption(tsKey)
+        spark.conf.set(tsKey, "TIMESTAMP_MICROS")
+        try df.write.mode(SaveMode.Overwrite).parquet(stage.toString)
+        finally prevTs match {
+          case Some(v) => spark.conf.set(tsKey, v)
+          case None => spark.conf.unset(tsKey)
+        }
       }
-    }
+      publish(f, spark, root, f.listStatus(stage).toSeq.map(_.getPath)
+          .filter(_.getName.endsWith(".parquet")), df.schema,
+        df0.columns.toSeq, head)
+    } finally f.delete(stage, true)
+  }
+
+  /** The publish step every write into the lake takes ([[stageFiles]]
+    * for library writes, [[commitReplace]] for row-level ones): move
+    * each part file to an immutable UUID name under data/, drop the
+    * empty ones ([[dropEmpty]], which also collects the stats), and
+    * enforce the head's CHECK constraints. `physical` is the files'
+    * schema; `logical` names its columns as the constraints do.
+    *
+    * Constraints are checked on the STAGED FILES themselves, not the
+    * incoming plan: a non-deterministic plan (rand(), a source mutated
+    * between jobs) could pass a pre-write validation pass yet persist
+    * violating rows. Validating the read-back of what was actually
+    * written checks the exact materialization the commit will publish
+    * (advisor finding, round 7); per-row write-time enforcement
+    * Delta-style would save this one extra scan, at the cost of a
+    * custom write path — the scan only runs when constraints exist.
+    * A failed check deletes the moved files. */
+  private def publish(f: FileSystem, spark: SparkSession, root: String,
+      parts: Seq[Path], physical: StructType, logical: Seq[String],
+      head: Option[Manifest]): Staged = {
     f.mkdirs(dataDir(root))
-    val parts = f.listStatus(stage).toSeq.map(_.getPath)
-      .filter(_.getName.endsWith(".parquet"))
     val moved = parts.map { p =>
       val dst = new Path(dataDir(root), s"${UUID.randomUUID()}.parquet")
       require(f.rename(p, dst), s"stage move failed: $p -> $dst")
       f.makeQualified(dst).toString
     }
-    f.delete(stage, true)
-    val staged = dropEmpty(f, spark, df.schema, moved, head)
-    // stageFiles is the single choke point where data enters the lake
-    // (write/append/appendBatch/upsert/merge/compact all stage through
-    // here), so CHECK constraints are enforced HERE — and on the
-    // STAGED FILES themselves, not the incoming plan: a
-    // non-deterministic plan (rand(), a source mutated between jobs)
-    // could pass a pre-write validation pass yet persist violating
-    // rows. Validating the read-back of what was actually written
-    // checks the exact materialization the commit will publish
-    // (advisor finding, round 7); per-row write-time enforcement
-    // Delta-style would save this one extra scan, at the cost of a
-    // custom write path — the scan only runs when constraints exist.
-    if (staged.nonEmpty)
-      try enforceConstraints( // physical bytes, LOGICAL names (the
-        // constraint expressions reference logical columns)
-        spark.read.schema(df.schema).parquet(staged: _*)
-          .toDF(df0.columns.toIndexedSeq: _*), head)
-      catch { case t: Throwable =>
-        staged.foreach(p => f.delete(new Path(p), false))
-        throw t
-      }
-    staged
+    discardOnFailure(f, Staged(moved)) {
+      val staged = dropEmpty(f, spark, physical, moved, head)
+      if (staged.files.nonEmpty)
+        enforceConstraints(spark.read.schema(physical)
+          .parquet(staged.files: _*).toDF(logical: _*), head)
+      staged
+    }
   }
 
-  /** Freshly staged `files` minus the zero-row ones, deleted from disk
-    * instead of committed: those without a stats row when the stats
-    * pass runs, else (stats off — files without stats just aren't
-    * prunable — or nothing stat-eligible) those whose footers count no
-    * rows, recording no ColStat. An unreadable footer keeps its file. */
+  /** Freshly staged `files` minus the zero-row ones (a write with more
+    * partitions than rows, or a rewrite whose rows all went, makes
+    * them), deleted from disk instead of committed, with the stats of
+    * the rest: the zero-row
+    * files are those without a stats row when the stats pass runs, else
+    * (stats off — files without stats just aren't prunable — or nothing
+    * stat-eligible) those whose footers count no rows, recording no
+    * ColStat. An unreadable footer keeps its file. */
   private def dropEmpty(f: FileSystem, spark: SparkSession,
       schema: StructType, files: Seq[String], head: Option[Manifest])
-      : Seq[String] = {
-    if (files.isEmpty) return files
+      : Staged = {
+    if (files.isEmpty) return Staged()
     val statsOn = spark.conf
       .getOption("spark.graft.lake.stats.enabled").forall(_.toBoolean)
-    val nonEmpty =
-      (if (statsOn) collectStats(spark, schema, files, head) else None)
-        .orElse(footerStats(spark, new StructType(), files)
-          .map(_.collect { case (p, (n, _)) if n > 0 => p }.toSet))
-    nonEmpty.fold(files) { keep =>
+    val stats =
+      if (statsOn) collectStats(spark, schema, files, head) else None
+    val nonEmpty = stats.map(_.keySet)
+      .orElse(footerStats(spark, new StructType(), files)
+        .map(_.collect { case (p, (n, _)) if n > 0 => p }.toSet))
+    val kept = nonEmpty.fold(files) { keep =>
       val (kept, empty) = files.partition(keep.contains)
       empty.foreach(p => f.delete(new Path(p), false))
       kept
     }
+    Staged(kept, stats.getOrElse(Map.empty))
   }
 
   /** Bloom columns are STICKY per table: beyond the session conf, any
@@ -2138,9 +2135,9 @@ object VersionedTable {
       .flatMap(_.collect { case (c, st) if st.bloom.nonEmpty => c }))
       .distinct
 
-  /** Returns the set of paths that produced a stats row (= the
-    * non-empty files), or None when no column is stat-eligible and the
-    * pass was skipped.
+  /** The stats of every file that produced a stats row (= the non-empty
+    * files), keyed by path, or None when no column is stat-eligible and
+    * the pass was skipped.
     *
     * Two collection paths:
     *  - FOOTER (default): per-column min/max/null-count and row counts
@@ -2153,29 +2150,32 @@ object VersionedTable {
     *    NaN/Inf float bounds, unset null counts) is simply OMITTED for
     *    that file — the file then takes readWhere's conservative-keep
     *    and statsAgg's exact slow path, never a wrong bound.
-    *  - SCAN (fallback; forced by `spark.graft.lake.stats.footer=false`
-    *    or when bloom columns are configured, which genuinely need the
-    *    values): one aggregation pass over the staged files.
+    *  - SCAN (when bloom columns are configured, which genuinely need
+    *    the values, or a footer is unreadable): one aggregation pass
+    *    over the staged files.
     * FooterStatsSpec pins byte-identical ColStat output between the two
-    * paths across every eligible type. */
+    * paths across every eligible type, reaching the scan path through
+    * [[restatByScan]]. */
   private def collectStats(spark: SparkSession, schema: StructType,
-      files: Seq[String], head: Option[Manifest]): Option[Set[String]] = {
+      files: Seq[String], head: Option[Manifest])
+      : Option[Map[String, FileStats]] = {
     val cols = schema.fields.filter(fd => statEligible(fd.dataType))
       .map(_.name).toSeq
-    if (cols.isEmpty) return None
-    val footerOn = spark.conf
-      .getOption("spark.graft.lake.stats.footer").forall(_.toBoolean)
-    val anyBloom = bloomColsFor(spark, head, cols).nonEmpty
-    if (footerOn && !anyBloom) footerStats(spark, schema, files) match {
-      case Some(perFile) =>
-        if (stagedStats.size() > 100000) stagedStats.clear()
-        perFile.foreach { case (p, (n, st)) =>
-          if (n > 0) stagedStats.put(p, st) }
-        return Some(perFile.collect {
-          case (p, (n, _)) if n > 0 => p }.toSet)
-      case None => () // unreadable footer etc. — fall through to scan
-    }
-    collectStatsByScan(spark, schema, files, head, cols)
+    if (cols.isEmpty) None
+    else Some((if (bloomColsFor(spark, head, cols).nonEmpty) None
+      else footerStats(spark, schema, files).map(_.collect {
+        case (p, (n, st)) if n > 0 => p -> st }))
+      .getOrElse(collectStatsByScan(spark, schema, files, head)))
+  }
+
+  /** Commit the head's files again with their stats recollected by the
+    * SCAN path — how specs compare it with the footer path on the same
+    * files (the handed-in stats win over the head's). */
+  private[graft] def restatByScan(spark: SparkSession, root: String): Long = {
+    val (_, m) = resolve(fs(spark, root), root)
+    commitRetrying(spark, root, m.schema, staged = Staged(stats =
+      collectStatsByScan(spark, physicalSchema(m.schema), m.files, Some(m))))(
+      _ => m.files)
   }
 
   /** The bloom-opted columns for this table (session conf ∪ columns
@@ -2341,8 +2341,9 @@ object VersionedTable {
   /** The original one-aggregation-pass stats collection (also the bloom
     * path — bloom filters need the values, footers can't provide them). */
   private def collectStatsByScan(spark: SparkSession, schema: StructType,
-      files: Seq[String], head: Option[Manifest], cols: Seq[String])
-      : Option[Set[String]] = {
+      files: Seq[String], head: Option[Manifest]): Map[String, FileStats] = {
+    val cols = schema.fields.filter(fd => statEligible(fd.dataType))
+      .map(_.name).toSeq
     // bloom opt-in: per-file filters over the listed columns (sized by
     // lake.bloom.bits, default 128 Kibit ≈ 16 KiB base64 per col per
     // file) — the point-lookup complement to min/max range stats; the
@@ -2372,28 +2373,23 @@ object VersionedTable {
       bloomCols.map { c => graft.functions.BloomFunctions
         .bloom_agg(col(c), bloomBits / 16, bloomBits).as(s"_bloom_$c") } :+
       count(lit(1)).as("_cnt_all")
-    val rows = spark.read.schema(schema).parquet(files: _*)
+    spark.read.schema(schema).parquet(files: _*)
       .groupBy(col("_metadata.file_path").as("_f"))
       .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    if (stagedStats.size() > 100000) stagedStats.clear()
-    rows.foreach { r =>
-      val path = new Path(r.getAs[String]("_f")).toString
-      val all = r.getAs[Long]("_cnt_all")
-      val st: FileStats = cols.flatMap { c =>
-        if (floatish.contains(c) && r.getAs[Long](s"_bad_$c") > 0) None
-        else Some(c -> ColStat(canonical(r.getAs[Any](s"_min_$c")),
-          canonical(r.getAs[Any](s"_max_$c")),
-          hasNulls = r.getAs[Long](s"_cnt_$c") < all,
-          bloom =
-            if (bloomCols.contains(c))
-              Option(r.getAs[Array[Byte]](s"_bloom_$c"))
-            else None,
-          rows = Some(all)))
+      .collect().map { r =>
+        val all = r.getAs[Long]("_cnt_all")
+        new Path(r.getAs[String]("_f")).toString -> cols.flatMap { c =>
+          if (floatish.contains(c) && r.getAs[Long](s"_bad_$c") > 0) None
+          else Some(c -> ColStat(canonical(r.getAs[Any](s"_min_$c")),
+            canonical(r.getAs[Any](s"_max_$c")),
+            hasNulls = r.getAs[Long](s"_cnt_$c") < all,
+            bloom =
+              if (bloomCols.contains(c))
+                Option(r.getAs[Array[Byte]](s"_bloom_$c"))
+              else None,
+            rows = Some(all)))
+        }.toMap
       }.toMap
-      stagedStats.put(path, st)
-    }
-    Some(rows.map(r => new Path(r.getAs[String]("_f")).toString).toSet)
   }
 
   /** Claim `nextFiles(head)` as the next version, `head` being the
@@ -2409,100 +2405,111 @@ object VersionedTable {
     * junk: recovery clears claim + manifest and the version is
     * re-claimable. Success still requires the token-stamped read-back
     * to return this attempt's own bytes, as a guard against any
-    * recovery interleaving. */
+    * recovery interleaving.
+    *
+    * `staged` is what the commit brings ([[Staged]]): its stats go
+    * straight into the manifest lines (over the head's entry for the
+    * same file), its change log into the `#changes:` marker, and when
+    * the commit throws — a rejected schema, a conflict, contention —
+    * its files and change log are deleted. It is by-name, like
+    * `schema`, for the rewrite commits that restage per attempt;
+    * `opInfo` is evaluated once. */
   private def commitRetrying(spark: SparkSession, root: String,
       schema: => StructType, batchMarker: Option[Long] = None,
       constraintsOverride: Option[Seq[(String, String)]] = None,
       propertiesOverride: => Option[Seq[(String, String)]] = None,
-      opInfo: Option[String] = None,
-      changesFile: => Option[String] = None)
+      opInfo: => Option[String] = None,
+      staged: => Staged = Staged())
       (nextFiles: Option[Manifest] => Seq[String]): Long = {
     // `schema` is by-name: nextFiles may resolve the (possibly evolved)
     // schema against the head it is handed, and the manifest write
     // below must see that resolution, re-done on every retry
     val f = fs(spark, root)
-    f.mkdirs(manifestDir(root))
-    var attempts = 0
-    // 30 attempts outlasts the crashed-manifest grace window: a claim
-    // blocked by a crashed writer's young junk manifest must survive
-    // retrying until recovery is allowed to delete it (~10 s of backoff)
-    while (attempts < 30) {
-      attempts += 1
-      // losing a claim is normal under concurrent writers; a short
-      // jittered pause keeps N losers from re-colliding in lockstep
-      if (attempts > 1)
-        Thread.sleep(10L + scala.util.Random.nextInt(40 * attempts))
-      val head = resolveHead(f, root)
-      val prev = head.map(_._2)
-      val files = nextFiles(prev)
-      // constraints and table properties ride every commit unchanged
-      // unless this commit IS the change (add/drop/set/unset).
-      // Evaluated AFTER nextFiles: propertiesOverride is by-name, so a
-      // closure that resolves its override against the head it just
-      // read (renameColumn's clustering rewrite) is honored.
-      val cons = constraintsOverride.getOrElse(
-        prev.fold(Seq.empty[(String, String)])(_.constraints))
-      val props = propertiesOverride.getOrElse(
-        prev.fold(Seq.empty[(String, String)])(_.properties))
-      val chFile = changesFile
-      val v = head.fold(0L)(_._1 + 1)
-      val target = manifestPath(root, v)
-      // per-file stats: carried-over files keep the previous manifest's
-      // entry; newly staged files resolve from this process's stage cache
-      def statsLine(p: String): String =
-        prev.flatMap(_.stats.get(p)).orElse(Option(stagedStats.get(p)))
-          .fold("")(s => "\t" + statsToJson(s))
-      // crashed-writer recovery: a dead claim (claim file present, no
-      // valid manifest behind it, older than the grace window) blocks
-      // its version number; clear claim + junk manifest before trying.
-      // The grace window keeps a LIVE writer's in-flight claim safe.
-      val claimP = claimPath(root, v)
-      try {
-        val now = System.currentTimeMillis()
-        if (f.exists(claimP)) {
-          if (now - f.getFileStatus(claimP).getModificationTime >
-              CrashedManifestGraceMs &&
-            (!f.exists(target) || readManifestRaw(f, target).isEmpty)) {
-            f.delete(claimP, false); f.delete(target, false)
-          }
-        } else if (f.exists(target) && readManifestRaw(f, target).isEmpty &&
-          now - f.getFileStatus(target).getModificationTime >
-            CrashedManifestGraceMs)
-          f.delete(target, false) // legacy/torn junk without a claim
-      } catch { case _: java.io.FileNotFoundException => () }
-      // THE claim is the separate claim file, created ATOMICALLY
-      // (Hadoop's local create(overwrite=false) is check-then-create: two
-      // racing writers can both pass it, interleave manifest writes, and
-      // even both pass a read-back verification at different moments —
-      // observed as two commits returning the same version). Only the
-      // claim winner may write the manifest, so its bytes have a single
-      // author; the token read-back stays as a final guard against any
-      // recovery interleaving.
-      val payload = (schema.json + "\n" +
-        files.sorted.map(p => p + statsLine(p) + "\n").mkString +
-        batchMarker.fold("")(id => s"$BatchMarker$id\n") +
-        cons.map { case (n, e) => s"$ConstraintMarker$n\t$e\n" }.mkString +
-        props.map { case (n, v0) => s"$PropertyMarker$n\t$v0\n" }.mkString +
-        opInfo.fold("")(j => s"$OpMarker$j\n") +
-        chFile.fold("")(cf => s"$ChangesMarker$cf\n") +
-        WriterMarker + java.util.UUID.randomUUID().toString + "\n" +
-        Terminator + "\n").getBytes(StandardCharsets.UTF_8)
-      val claimed = atomicCreate(f, claimP) &&
-        (try {
-          // overwrite = true: the claim owns this version; any bytes
-          // here are a recovered crash's torn junk
-          val out = f.create(target, true)
-          try out.write(payload) finally out.close()
-          val st = f.getFileStatus(target)
-          val back = new Array[Byte](st.getLen.toInt)
-          val in = f.open(target)
-          try in.readFully(back) finally in.close()
-          java.util.Arrays.equals(back, payload)
-        } catch { case _: java.io.IOException => false })
-      if (claimed) return v
+    discardOnFailure(f, staged) {
+      f.mkdirs(manifestDir(root))
+      val op = opInfo
+      var committed = Option.empty[Long]
+      var attempts = 0
+      // 30 attempts outlasts the crashed-manifest grace window: a claim
+      // blocked by a crashed writer's young junk manifest must survive
+      // retrying until recovery is allowed to delete it (~10 s of backoff)
+      while (committed.isEmpty) {
+        if (attempts == 30) throw new IllegalStateException(
+          s"commit contention: 30 straight version races under $root")
+        attempts += 1
+        // losing a claim is normal under concurrent writers; a short
+        // jittered pause keeps N losers from re-colliding in lockstep
+        if (attempts > 1)
+          Thread.sleep(10L + scala.util.Random.nextInt(40 * attempts))
+        val head = resolveHead(f, root)
+        val prev = head.map(_._2)
+        val files = nextFiles(prev)
+        // constraints and table properties ride every commit unchanged
+        // unless this commit IS the change (add/drop/set/unset).
+        // Evaluated AFTER nextFiles: propertiesOverride is by-name, so a
+        // closure that resolves its override against the head it just
+        // read (renameColumn's clustering rewrite) is honored.
+        val cons = constraintsOverride.getOrElse(
+          prev.fold(Seq.empty[(String, String)])(_.constraints))
+        val props = propertiesOverride.getOrElse(
+          prev.fold(Seq.empty[(String, String)])(_.properties))
+        val add = staged
+        val v = head.fold(0L)(_._1 + 1)
+        val target = manifestPath(root, v)
+        def statsLine(p: String): String =
+          add.stats.get(p).orElse(prev.flatMap(_.stats.get(p)))
+            .fold("")(s => "\t" + statsToJson(s))
+        // crashed-writer recovery: a dead claim (claim file present, no
+        // valid manifest behind it, older than the grace window) blocks
+        // its version number; clear claim + junk manifest before trying.
+        // The grace window keeps a LIVE writer's in-flight claim safe.
+        val claimP = claimPath(root, v)
+        try {
+          val now = System.currentTimeMillis()
+          if (f.exists(claimP)) {
+            if (now - f.getFileStatus(claimP).getModificationTime >
+                CrashedManifestGraceMs &&
+              (!f.exists(target) || readManifestRaw(f, target).isEmpty)) {
+              f.delete(claimP, false); f.delete(target, false)
+            }
+          } else if (f.exists(target) && readManifestRaw(f, target).isEmpty &&
+            now - f.getFileStatus(target).getModificationTime >
+              CrashedManifestGraceMs)
+            f.delete(target, false) // legacy/torn junk without a claim
+        } catch { case _: java.io.FileNotFoundException => () }
+        // THE claim is the separate claim file, created ATOMICALLY
+        // (Hadoop's local create(overwrite=false) is check-then-create: two
+        // racing writers can both pass it, interleave manifest writes, and
+        // even both pass a read-back verification at different moments —
+        // observed as two commits returning the same version). Only the
+        // claim winner may write the manifest, so its bytes have a single
+        // author; the token read-back stays as a final guard against any
+        // recovery interleaving.
+        val payload = (schema.json + "\n" +
+          files.sorted.map(p => p + statsLine(p) + "\n").mkString +
+          batchMarker.fold("")(id => s"$BatchMarker$id\n") +
+          cons.map { case (n, e) => s"$ConstraintMarker$n\t$e\n" }.mkString +
+          props.map { case (n, v0) => s"$PropertyMarker$n\t$v0\n" }.mkString +
+          op.fold("")(j => s"$OpMarker$j\n") +
+          add.changes.fold("")(cf => s"$ChangesMarker$cf\n") +
+          WriterMarker + java.util.UUID.randomUUID().toString + "\n" +
+          Terminator + "\n").getBytes(StandardCharsets.UTF_8)
+        val claimed = atomicCreate(f, claimP) &&
+          (try {
+            // overwrite = true: the claim owns this version; any bytes
+            // here are a recovered crash's torn junk
+            val out = f.create(target, true)
+            try out.write(payload) finally out.close()
+            val st = f.getFileStatus(target)
+            val back = new Array[Byte](st.getLen.toInt)
+            val in = f.open(target)
+            try in.readFully(back) finally in.close()
+            java.util.Arrays.equals(back, payload)
+          } catch { case _: java.io.IOException => false })
+        if (claimed) committed = Some(v)
+      }
+      committed.get
     }
-    throw new IllegalStateException(
-      s"commit contention: 30 straight version races under $root")
   }
 
   private def claimPath(root: String, v: Long) =

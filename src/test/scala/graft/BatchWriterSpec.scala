@@ -321,7 +321,7 @@ class BatchWriterSpec extends SparkSpec {
   }
 
   test("parquet upsert: replace-by-key semantics (S8 analogue)") {
-    val dir = java.nio.file.Files.createTempDirectory("upsert").toString
+    val dir = tmpDir("upsert")
     val path = s"$dir/t"
     spark.range(5).select($"id", lit("old").as("v"))
       .write.parquet(path)
@@ -334,7 +334,7 @@ class BatchWriterSpec extends SparkSpec {
   }
 
   test("partition-pruned upsert leaves untouched partitions byte-identical") {
-    val dir = java.nio.file.Files.createTempDirectory("upsert-part").toString
+    val dir = tmpDir("upsert-part")
     val path = s"$dir/t"
     // partitions p=0,1,2; upsert touches p=0 (update), p=5 (new)
     spark.range(9).select($"id", ($"id" % 3).as("p"), lit("old").as("v"))
@@ -371,7 +371,7 @@ class BatchWriterSpec extends SparkSpec {
 
   test("compaction merges small files, skips compact dirs, keeps data") {
     import graft.sinks.ParquetCompact
-    val dir = java.nio.file.Files.createTempDirectory("compact").toString
+    val dir = tmpDir("compact")
     def parquetFiles(p: String): Seq[java.nio.file.Path] = {
       val d = java.nio.file.Paths.get(p)
       java.nio.file.Files.list(d).iterator().asScala

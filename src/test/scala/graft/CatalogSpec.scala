@@ -10,7 +10,7 @@ class CatalogSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val warehouse: String = {
-    val w = java.nio.file.Files.createTempDirectory("graftwh").toString
+    val w = tmpDir("graftwh")
     spark.conf.set("spark.sql.catalog.graft",
       classOf[graft.sources.v2.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft.root", w)

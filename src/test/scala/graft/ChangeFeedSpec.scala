@@ -16,9 +16,6 @@ import org.apache.spark.sql.streaming.Trigger
 class ChangeFeedSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpBase(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   /** Apply a change-feed frame to a keyed state: last change per key
     * wins (ordered by _commit_version), deletes drop the key. */
   private def applyFeed(base: DataFrame, feed: DataFrame,
@@ -45,7 +42,7 @@ class ChangeFeedSpec extends SparkSpec {
 
   test("library changeFeed: per-commit net changes; replay over the " +
       "base snapshot reproduces the head (incremental == recompute)") {
-    val base = tmpBase("cf1")
+    val base = tmpDir("cf1")
     val root = s"$base/t"
     mkTable(root) // v0..v3
     val v0 = VersionedTable.versions(spark, root).max // = 3
@@ -77,7 +74,7 @@ class ChangeFeedSpec extends SparkSpec {
 
   test("changeFeed is file-pruned per commit: a 1-file MERGE diffs " +
       "one file pair, and layout-only commits emit nothing") {
-    val base = tmpBase("cf2")
+    val base = tmpDir("cf2")
     val root = s"$base/t"
     mkTable(root)
     val v0 = VersionedTable.versions(spark, root).max
@@ -94,7 +91,7 @@ class ChangeFeedSpec extends SparkSpec {
 
   test("a window mixing rewrite, append and change-log commits equals " +
       "the union of per-commit diffs") {
-    val root = s"${tmpBase("cf8")}/t"
+    val root = s"${tmpDir("cf8")}/t"
     mkTable(root)
     val v0 = VersionedTable.versions(spark, root).max
     // two rewrite commits without a change log, one append
@@ -134,7 +131,7 @@ class ChangeFeedSpec extends SparkSpec {
 
   test("batch format read: readChangeFeed=true serves the same net " +
       "changes through spark.read") {
-    val base = tmpBase("cf3")
+    val base = tmpDir("cf3")
     val root = s"$base/t"
     mkTable(root)
     val v0 = VersionedTable.versions(spark, root).max
@@ -168,7 +165,7 @@ class ChangeFeedSpec extends SparkSpec {
 
   test("streaming CDC: a SQL-MERGE-maintained table feeds a stream " +
       "(no ignoreChanges), incremental matview == recompute") {
-    val base = tmpBase("cf4")
+    val base = tmpDir("cf4")
     val root = s"$base/t"; val out = s"$base/out"; val ck = s"$base/ck"
     spark.conf.set("spark.sql.catalog.gcf",
       classOf[graft.sources.v2.GraftCatalog].getName)
@@ -221,7 +218,7 @@ class ChangeFeedSpec extends SparkSpec {
   test("write-side change log (graft.changefeed.keys): DML commits " +
       "persist their diff, feed reads become pure scans, content " +
       "identical to the join fallback, vacuum reclaims") {
-    val base = tmpBase("cf6")
+    val base = tmpDir("cf6")
     val rootA = s"$base/a"; val rootB = s"$base/b"
     spark.conf.set("spark.sql.catalog.gwl",
       classOf[graft.sources.v2.GraftCatalog].getName)
@@ -291,7 +288,7 @@ class ChangeFeedSpec extends SparkSpec {
 
   test("a no-op compact on an opted-in table returns None and writes no " +
       "change log") {
-    val root = s"${tmpBase("cf7")}/t"
+    val root = s"${tmpDir("cf7")}/t"
     VersionedTable.write((1L to 10L).map(k => (k, k * 2)).toDF("k", "v")
       .coalesce(1), root, Seq(VersionedTable.ChangeFeedKeysProp -> "k"))
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
@@ -310,7 +307,7 @@ class ChangeFeedSpec extends SparkSpec {
 
   test("vacuum sweeps orphaned .stage-/.rlstage- dirs past the grace " +
       "window (crashed-writer leftovers)") {
-    val base = tmpBase("cf5")
+    val base = tmpDir("cf5")
     val root = s"$base/t"
     VersionedTable.write((1L to 10L).toDF("k"), root)
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(

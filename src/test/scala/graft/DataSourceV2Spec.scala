@@ -14,7 +14,7 @@ class DataSourceV2Spec extends SparkSpec {
   import spark.implicits._
 
   private def tmpRoot(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
+    tmpDir(prefix) + "/t"
 
   /** The physical parquet scan the V2 path planned (under AQE). */
   private def fileScan(df: DataFrame): FileScan = {

@@ -316,7 +316,7 @@ class DedupSpec extends SparkSpec {
 
   test("replayable incremental minhash: cross-batch near-dup drops, " +
       "hasher is part of the index contract") {
-    val dir = java.nio.file.Files.createTempDirectory("mh-md5").toString
+    val dir = tmpDir("mh-md5")
     val idx = s"$dir/idx"
     val base = "the quick brown fox jumps over the lazy dog again and again"
     val b1 = Seq((1L, base), (2L, "completely different text body here"))
@@ -344,7 +344,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("incremental dedup: cross-batch suppression via the hash index") {
-    val dir = java.nio.file.Files.createTempDirectory("dedup-idx").toString
+    val dir = tmpDir("dedup-idx")
     val idx = s"$dir/hash_index"
     val b1 = Seq((1L, "alpha beta"), (2L, "gamma"), (3L, "alpha beta"))
       .toDF("doc_id", "text")
@@ -367,7 +367,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("incremental NEAR-dup: LSH index suppression, replay-stable") {
-    val dir = java.nio.file.Files.createTempDirectory("neardup-idx").toString
+    val dir = tmpDir("neardup-idx")
     val idx = s"$dir/lsh_index"
     val base = (1 to 20).map(i => s"tok$i").mkString(" ")
     val nearBase = (1 to 19).map(i => s"tok$i").mkString(" ") + " CHANGED"
@@ -610,7 +610,7 @@ class DedupSpec extends SparkSpec {
   test("sink-first ingest loop: a crash at EITHER position, then batch " +
       "redelivery, loses no row and duplicates none") {
     import graft.sinks.VersionedTable
-    val base = java.nio.file.Files.createTempDirectory("crashpos").toString
+    val base = tmpDir("crashpos")
     val root = s"$base/lake"; val idx = s"$base/index"
     def lake() = VersionedTable.read(spark, root)
       .select($"id").as[Long].collect().toSet

@@ -14,7 +14,7 @@ class FooterStatsSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp() =
-    java.nio.file.Files.createTempDirectory("fstats").toString + "/t"
+    tmpDir("fstats") + "/t"
 
   /** The per-file stats JSON multiset of the head manifest (paths and
     * UUID names stripped — contents are deterministic for a fixed
@@ -53,14 +53,30 @@ class FooterStatsSpec extends SparkSpec {
       "eligible types, nulls, and an all-null column") {
     val rootFooter = tmp(); val rootScan = tmp()
     VersionedTable.write(mixedDf, rootFooter)
-    spark.conf.set("spark.graft.lake.stats.footer", "false")
-    try VersionedTable.write(mixedDf, rootScan)
-    finally spark.conf.unset("spark.graft.lake.stats.footer")
+    VersionedTable.write(mixedDf, rootScan)
+    VersionedTable.restatByScan(spark, rootScan)
     val a = statLines(rootFooter)
     val b = statLines(rootScan)
     assert(a.nonEmpty && a == b,
       s"footer-vs-scan stats drift:\n${a.mkString("\n")}\n--- vs " +
         s"scan ---\n${b.mkString("\n")}")
+  }
+
+  test("restatByScan recommits the head's files with scan-path stats") {
+    val root = tmp(); val footer = tmp()
+    spark.conf.set("spark.graft.lake.stats.enabled", "false")
+    try VersionedTable.write(mixedDf, root)
+    finally spark.conf.unset("spark.graft.lake.stats.enabled")
+    assert(statLines(root).isEmpty)
+    VersionedTable.restatByScan(spark, root)
+    VersionedTable.write(mixedDf, footer)
+    assert(statLines(root).nonEmpty && statLines(root) == statLines(footer))
+    // the scan stats replace those the head carries: only the scan path
+    // builds bloom filters
+    spark.conf.set("spark.graft.lake.bloom.cols", "k")
+    try VersionedTable.restatByScan(spark, root)
+    finally spark.conf.unset("spark.graft.lake.bloom.cols")
+    assert(statLines(root).forall(_.contains("\"b\":")))
   }
 
   test("statsAgg answers from footer stats match a full read exactly") {

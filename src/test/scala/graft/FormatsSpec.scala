@@ -23,7 +23,7 @@ class FormatsSpec extends SparkSpec {
 
   private def roundTrips(fmt: String, writeOpts: Map[String, String],
       readOpts: Map[String, String]): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory(s"fmt-$fmt").toString
+    val dir = tmpDir(s"fmt-$fmt")
     docs.write.options(writeOpts).format(fmt).save(s"$dir/t")
     val back = spark.read.options(readOpts).schema(docSchema)
       .format(fmt).load(s"$dir/t")
@@ -49,7 +49,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("malformed JSON: PERMISSIVE quarantines, DROPMALFORMED drops, FAILFAST throws") {
-    val dir = java.nio.file.Files.createTempDirectory("mal").toString
+    val dir = tmpDir("mal")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/data.json"),
       """{"k": 1, "v": "a"}

@@ -9,9 +9,6 @@ import org.apache.spark.sql.functions._
 class JobRunnerSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir() =
-    java.nio.file.Files.createTempDirectory("job").toString
-
   test("reader spec: projection + where + key-range split == plain scan") {
     JobRunner.registerDataset(spark, Sf0, Seq("orders"))
     val json = """{
@@ -55,7 +52,7 @@ class JobRunnerSpec extends SparkSpec {
   }
 
   test("writer spec: insert appends; replace upserts by key; hooks fire") {
-    val target = tmpDir() + "/t"
+    val target = tmpDir("job") + "/t"
     val wInsert = graft.sources.ConfigJson.writer("""{
       "connection": {"table": {"name": "t"}}, "writeMode": "insert",
       "preSQL": ["CREATE TABLE IF NOT EXISTS job_hook_marker(x INT) USING parquet"]
@@ -83,7 +80,7 @@ class JobRunnerSpec extends SparkSpec {
 
   test("full job: reader json -> writer json end-to-end") {
     JobRunner.registerDataset(spark, Sf0, Seq("customer"))
-    val target = tmpDir() + "/c"
+    val target = tmpDir("job") + "/c"
     val n = JobRunner.run(spark,
       """{"connection": {"table": {"name": "customer"}}, "column": ["c_custkey", "c_mktsegment"],
           "where": "c_mktsegment = 'BUILDING'",

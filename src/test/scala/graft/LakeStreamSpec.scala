@@ -10,9 +10,6 @@ import org.apache.spark.sql.streaming.Trigger
 class LakeStreamSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpBase(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   private def runOnce(root: String, out: String, ckpt: String,
       options: Map[String, String] = Map.empty): Unit = {
     var r = spark.readStream.format("graft")
@@ -26,7 +23,7 @@ class LakeStreamSpec extends SparkSpec {
 
   test("snapshot-then-increments with exactly-once replay across " +
       "checkpointed restarts") {
-    val base = tmpBase("lks1")
+    val base = tmpDir("lks1")
     val root = s"$base/t"; val out = s"$base/out"; val ckpt = s"$base/ck"
     VersionedTable.write((1L to 40L).map(i => (i, i * 2)).toDF("k", "v"),
       root)
@@ -50,7 +47,7 @@ class LakeStreamSpec extends SparkSpec {
   }
 
   test("maxVersionsPerTrigger paces catch-up into bounded batches") {
-    val base = tmpBase("lks2")
+    val base = tmpDir("lks2")
     val root = s"$base/t"; val out = s"$base/out"; val ckpt = s"$base/ck"
     (0 until 3).foreach { b =>
       VersionedTable.append(
@@ -71,7 +68,7 @@ class LakeStreamSpec extends SparkSpec {
   }
 
   test("startingVersion streams increments only, skipping the snapshot") {
-    val base = tmpBase("lks3")
+    val base = tmpDir("lks3")
     val root = s"$base/t"; val out = s"$base/out"; val ckpt = s"$base/ck"
     VersionedTable.write((1L to 40L).map(i => (i, i)).toDF("k", "v"), root)
     VersionedTable.append((41L to 55L).map(i => (i, i)).toDF("k", "v"),
@@ -85,7 +82,7 @@ class LakeStreamSpec extends SparkSpec {
 
   test("startingTimestamp resolves through the batch timestampAsOf " +
       "arithmetic and streams strictly-after increments") {
-    val base = tmpBase("lks3t")
+    val base = tmpDir("lks3t")
     val root = s"$base/t"
     VersionedTable.write((1L to 40L).map(i => (i, i)).toDF("k", "v"), root)
     // capture the v0 commit instant, then land a later commit
@@ -123,7 +120,7 @@ class LakeStreamSpec extends SparkSpec {
 
   test("a non-append commit fails the stream loudly; ignoreChanges " +
       "re-emits rewrites instead") {
-    val base = tmpBase("lks4")
+    val base = tmpDir("lks4")
     val root = s"$base/t"; val out = s"$base/out"; val ckpt = s"$base/ck"
     VersionedTable.write((1L to 30L).map(i => (i, i)).toDF("k", "v"), root)
     runOnce(root, out, ckpt)
@@ -145,7 +142,7 @@ class LakeStreamSpec extends SparkSpec {
 
   test("format streaming SINK: exactly-once lake commits per " +
       "micro-batch, idempotent across a checkpointed restart") {
-    val base = tmpBase("lkw1")
+    val base = tmpDir("lkw1")
     val src = s"$base/src"; val dst = s"$base/dst"; val ck = s"$base/ck"
     VersionedTable.append((1L to 30L).map(i => (i, i)).toDF("k", "v"), src)
     VersionedTable.append((31L to 50L).map(i => (i, i)).toDF("k", "v"),
@@ -176,7 +173,7 @@ class LakeStreamSpec extends SparkSpec {
 
   test("format streaming sink rejects non-append output modes and " +
       "partitionBy") {
-    val base = tmpBase("lkw2")
+    val base = tmpDir("lkw2")
     val src = s"$base/src"
     VersionedTable.append((1L to 10L).map(i => (i, i)).toDF("k", "v"), src)
     val agg = spark.readStream.format("graft").load(src)
@@ -193,7 +190,7 @@ class LakeStreamSpec extends SparkSpec {
   }
 
   test("streaming rejects time travel options and empty tables") {
-    val base = tmpBase("lks5")
+    val base = tmpDir("lks5")
     val root = s"$base/t"
     intercept[Exception] { // no committed version yet
       spark.readStream.format("graft").load(root)

@@ -23,8 +23,7 @@ class MatviewSpec extends SparkSpec {
 
   test("randomized mutation rounds: maintained == recompute, chained") {
     val rnd = new scala.util.Random(3)
-    val root = java.nio.file.Files.createTempDirectory("mvspec")
-      .toString + "/t"
+    val root = tmpDir("mvspec") + "/t"
     val base = (0 until 300).map(i =>
       (i.toLong, s"g${rnd.nextInt(6)}", rnd.nextInt(100)))
     val v0 = VersionedTable.write(base.toDF("id", "g", "x"), root)
@@ -66,7 +65,7 @@ class MatviewSpec extends SparkSpec {
 
   test("join view: randomized delta rounds == recompute, through the lake") {
     val rnd = new scala.util.Random(11)
-    val dir = java.nio.file.Files.createTempDirectory("jmv").toString
+    val dir = tmpDir("jmv")
     val (lRoot, rRoot, vRoot) = (s"$dir/l", s"$dir/r", s"$dir/v")
     def mkL(n: Int, tag: String) = (0 until n).map(i =>
       (i.toLong, rnd.nextInt(8).toLong, s"$tag$i")).toDF("lid", "k", "lv")

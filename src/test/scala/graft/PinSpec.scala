@@ -100,7 +100,7 @@ class PinSpec extends SparkSpec {
     assert(plain._1.map(_._1) == (0L until 4L) ++ (10L until 14L))
     assert(plain._3.map(_._2).distinct == Seq(0L))
 
-    val dir = java.nio.file.Files.createTempDirectory("pinspec-ckpt").toFile
+    val dir = new java.io.File(tmpDir("pinspec-ckpt"))
     // every file and directory under f, children first
     def tree(f: java.io.File): Seq[java.io.File] =
       Option(f.listFiles).toSeq.flatten.flatMap(tree) :+ f

@@ -259,7 +259,7 @@ class PlanSpec extends SparkSpec {
 
   test("range-clustered layout prunes a key-range scan to few files") {
     import org.apache.spark.sql.functions.{col, input_file_name}
-    val dir = java.nio.file.Files.createTempDirectory("layout").toString
+    val dir = tmpDir("layout")
     val orders = Tables.orders(spark, Sf0)
     // same table, random vs range-clustered layout, 8 files each
     orders.repartition(8).write.parquet(s"$dir/random")
@@ -282,7 +282,7 @@ class PlanSpec extends SparkSpec {
   test("z-order layout prunes selective filters on EITHER dimension") {
     import org.apache.spark.sql.functions.{col, input_file_name}
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
+    val dir = tmpDir("zorder")
     // 100x100 grid — every (x, y) combination once
     val grid = (for (x <- 0 until 100; y <- 0 until 100) yield (x, y))
       .toDF("x", "y")
@@ -338,7 +338,7 @@ class PlanSpec extends SparkSpec {
       "and preserves content") {
     import org.apache.spark.sql.functions.{col, input_file_name}
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("hilbert").toString
+    val dir = tmpDir("hilbert")
     val grid = (for (x <- 0 until 100; y <- 0 until 100) yield (x, y))
       .toDF("x", "y")
     graft.operators.Layout.writeHilbertOrdered(grid, s"$dir/h",
@@ -360,7 +360,7 @@ class PlanSpec extends SparkSpec {
   test("z-order write handles empty input and all-null columns") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("zorder-edge").toString
+    val dir = tmpDir("zorder-edge")
     // empty input: the min/max probe returns nulls — must write an
     // empty table, not NPE unboxing the probe row
     val empty = Seq.empty[(Int, Int)].toDF("x", "y")

@@ -13,7 +13,7 @@ class RowLevelSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val warehouse: String = {
-    val w = java.nio.file.Files.createTempDirectory("graftrl").toString
+    val w = tmpDir("graftrl")
     spark.conf.set("spark.sql.catalog.grl",
       classOf[graft.sources.v2.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.grl.root", w)

@@ -43,7 +43,7 @@ class Scd2Spec extends SparkSpec {
     import graft.sinks.VersionedTable
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("scd2s").toString + "/t"
+    val root = tmpDir("scd2s") + "/t"
     val mem = MemoryStream[(Long, String)]
     val q = graft.operators.Scd2.streamingSink(
       mem.toDF().toDF("k", "attr"), root, Seq("k")).start()

@@ -19,7 +19,7 @@ class ScratchSpec extends SparkSpec {
       "in tmpdir; each query's directory is gone when the next starts") {
     // start the session and load the parquet codecs first: both unpack
     // files into tmpdir on first use
-    val warm = java.nio.file.Files.createTempDirectory("graft-warm").toFile
+    val warm = new java.io.File(tmpDir("graft-warm"))
     spark.range(10).write.parquet(s"$warm/p")
     assert(spark.read.parquet(s"$warm/p").count() == 10)
     org.apache.commons.io.FileUtils.deleteQuietly(warm)

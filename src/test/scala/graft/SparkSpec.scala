@@ -1,20 +1,29 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs (one per suite, lazily built). */
-trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val builder = SparkSession.builder()
-      .master("local[4]")
-      .appName(getClass.getSimpleName)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    Tables.RequiredConf.foreach { case (k, v) => builder.config(k, v) }
-    builder.getOrCreate()
+/** Shared local SparkSession for specs (one per suite, lazily built), and
+  * the suite's temp directories, deleted when the suite ends. */
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
+  lazy val spark: SparkSession = Sessions.local(4, getClass.getSimpleName)
+
+  private val tmpDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  /** A fresh directory under `java.io.tmpdir`, deleted with everything
+    * in it when the suite ends. */
+  def tmpDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tmpDirs.add(d)
+    d.toString
   }
+
+  override def afterAll(): Unit =
+    try super.afterAll()
+    finally tmpDirs.forEach(d =>
+      org.apache.commons.io.FileUtils.deleteQuietly(d))
 
   def sf(name: String) = s"/root/testdata/$name"
   val Sf0 = "/root/testdata/sf0.001"

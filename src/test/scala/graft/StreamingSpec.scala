@@ -133,7 +133,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[(Long, Long, Long, String, Double)]
     val df = mem.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
-    val dir = java.nio.file.Files.createTempDirectory("supsert").toString
+    val dir = tmpDir("supsert")
     val path = s"$dir/t"
     val q = EventsPipeline.upsertSink(
       df.select($"event_id", $"user_id", $"value"), path, Seq("event_id"))
@@ -457,7 +457,7 @@ class StreamingSpec extends SparkSpec {
   test("AvailableNow drains a file source then stops; resume reads only new files") {
     import org.apache.spark.sql.streaming.Trigger
     import graft.sinks.VersionedTable
-    val dir = java.nio.file.Files.createTempDirectory("an").toString
+    val dir = tmpDir("an")
     val src = s"$dir/in"; val root = s"$dir/t"; val ckpt = s"$dir/ckpt"
     Seq((1L, "a"), (2L, "b")).toDF("k", "v")
       .repartition(1).write.mode("append").parquet(src)

@@ -57,7 +57,7 @@ class TextIndexSpec extends SparkSpec {
   }
 
   test("incremental persisted index: batches accrue, replays are no-ops") {
-    val dir = java.nio.file.Files.createTempDirectory("tidx").toString + "/idx"
+    val dir = tmpDir("tidx") + "/idx"
     val b1 = Seq((1L, "alpha merge batch beta"), (2L, "gamma delta"))
       .toDF("doc_id", "text")
     val b2 = Seq((3L, "the merge batch returns"), (4L, "unrelated words"))

@@ -10,7 +10,7 @@ class VersionedTableSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpRoot() =
-    java.nio.file.Files.createTempDirectory("vtable").toString + "/t"
+    tmpDir("vtable") + "/t"
 
   test("write/read round-trip and version numbering") {
     val root = tmpRoot()
@@ -27,7 +27,7 @@ class VersionedTableSpec extends SparkSpec {
 
   test("shallow clone: zero-copy branch, copy-on-write isolation, " +
       "stats carry, vacuum safety") {
-    val base = java.nio.file.Files.createTempDirectory("vclone").toString
+    val base = tmpDir("vclone")
     val src = base + "/src"; val dst = base + "/clone"
     VersionedTable.write((1L to 100L).map(i => (i, i * 10))
       .toDF("k", "v"), src)
@@ -133,6 +133,46 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.read(spark, root).count() == 7)
     assert(VersionedTable.read(spark, root, Some(1L)).count() == 4,
       "files shared with a retained snapshot must survive vacuum")
+  }
+
+  test("a failed commit deletes what it staged: a rejected append, " +
+      "appendBatch and conflicting row-level commit leave data/ as it was") {
+    val root = tmpRoot()
+    VersionedTable.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), root)
+    VersionedTable.append(Seq((3L, "c")).toDF("k", "v"), root)
+    VersionedTable.setProperties(spark, root,
+      Seq(VersionedTable.ChangeFeedKeysProp -> "k"))
+    def entries(dir: String): Set[String] =
+      Option(new java.io.File(root, dir).list).fold(Set.empty[String])(_.toSet)
+    val before = entries("data")
+    // strict append: a new column is rejected inside the commit loop
+    intercept[IllegalArgumentException](VersionedTable.append(
+      Seq((4L, "d", 1)).toDF("k", "v", "extra"), root))
+    assert(entries("data") == before)
+    // a stream's batch must not drift the column type
+    intercept[IllegalArgumentException](VersionedTable.appendBatch(
+      Seq((4L, 5)).toDF("k", "v"), root, batchId = 7L))
+    assert(entries("data") == before)
+    // a row-level commit whose scanned files a concurrent compact
+    // replaced aborts after it published its files and its change log
+    val scanned = VersionedTable.snapshot(spark, root).files.toSet
+    assert(VersionedTable.compact(spark, root).isDefined)
+    val compacted = entries("data")
+    val changes = entries("_changes")
+    val stage = s"$root/.rlstage-spec"
+    Seq((9L, "z")).toDF("k", "v").coalesce(1).write.parquet(stage)
+    val written = new java.io.File(stage).listFiles.map(_.getPath)
+      .filter(_.endsWith(".parquet")).toSeq
+    val e = intercept[IllegalArgumentException](VersionedTable.commitReplace(
+      spark, root, scanned, written))
+    assert(e.getMessage.contains("row-level commit conflict"))
+    assert(entries("data") == compacted && entries("_changes") == changes)
+    // every data file is one some manifest lists
+    val listed = VersionedTable.versions(spark, root).flatMap(v =>
+      VersionedTable.snapshot(spark, root, Some(v)).files)
+      .map(p => new org.apache.hadoop.fs.Path(p).getName).toSet
+    assert(entries("data").filter(_.endsWith(".parquet")) == listed)
+    assert(VersionedTable.read(spark, root).count() == 3)
   }
 
   test("commit claims are exclusive; manifest dir holds only versions") {
@@ -1116,11 +1156,10 @@ class VersionedTableSpec extends SparkSpec {
     // scan-stats path: collectStatsByScan must likewise omit the
     // column for NaN/Inf-bearing files (no partial bounds)
     val root2 = tmpRoot()
-    spark.conf.set("spark.graft.lake.stats.footer", "false")
-    try VersionedTable.write(Seq((1L, 1.5), (2L, Double.NaN),
+    VersionedTable.write(Seq((1L, 1.5), (2L, Double.NaN),
       (3L, Double.NegativeInfinity), (4L, 7.0)).toDF("k", "x")
       .coalesce(1), root2)
-    finally spark.conf.unset("spark.graft.lake.stats.footer")
+    VersionedTable.restatByScan(spark, root2)
     check(root2)
     // mixed: a clean file still folds from the manifest (fast), the
     // NaN file takes the slow path — NaN must win the max across both

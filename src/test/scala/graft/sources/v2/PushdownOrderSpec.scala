@@ -27,7 +27,7 @@ class PushdownOrderSpec extends SparkSpec {
   test("pushLimit before pushFilters: the filter still disables the " +
       "file-list cut at build()") {
     val root =
-      java.nio.file.Files.createTempDirectory("pushord").toString + "/t"
+      tmpDir("pushord") + "/t"
     Seq(1L to 100L, 101L to 200L, 201L to 300L).foreach { r =>
       VersionedTable.append(r.map(i => (i, i % 7)).toDF("k", "m")
         .coalesce(1), root)
