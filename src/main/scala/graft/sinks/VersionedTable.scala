@@ -5,9 +5,10 @@ import java.util.UUID
 
 import graft.operators.Pin
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis
 import org.apache.spark.sql.catalyst.expressions
+import org.apache.spark.sql.graft.{ManifestFileIndex, WriteBridge, WrittenFile}
 import org.apache.spark.sql.functions.{abs, array, coalesce, col, count, explode, expr, isnan, lit, max => smax, min => smin, struct, sum, when}
 import org.apache.spark.sql.types._
 import org.json4s._
@@ -91,8 +92,15 @@ object VersionedTable {
       rows: Option[Long] = None)
   private[graft] type FileStats = Map[String, ColStat]
 
+  /** A data file's length and modification time, recorded on its
+    * manifest line so that scans, `history` and `compact` plan from the
+    * manifest without a stat. A line written before these fields existed
+    * has none, and its file is stat'ed once when read. */
+  private[graft] final case class FileMeta(length: Long, mtime: Long)
+
   private final case class Manifest(schema: StructType, files: Seq[String],
       batchId: Option[Long], stats: Map[String, FileStats],
+      meta: Map[String, FileMeta],
       constraints: Seq[(String, String)] = Nil,
       properties: Seq[(String, String)] = Nil,
       opInfo: Option[String] = None,
@@ -149,18 +157,25 @@ object VersionedTable {
       if (lines.isEmpty || lines.last != Terminator) None // unterminated
       else {
         val body = lines.tail.dropRight(1)
+        // a file line is `path[\tstats][\tlength\tmtime]`, the stats
+        // field empty when a file with a length has none (see
+        // [[commitRetrying]])
         val fileLines = body.filterNot(isMarkerLine)
-          .map { l => l.split("\t", 2) match {
-            case Array(path, json) => path -> Some(json)
-            case Array(path) => path -> None
+          .map { l => l.split("\t", -1) match {
+            case Array(path, json, len, mtime) => (path,
+              Some(FileMeta(len.toLong, mtime.toLong)),
+              Option(json).filter(_.nonEmpty))
+            case Array(path, json) => (path, None, Some(json))
+            case Array(path) => (path, None, None)
           } }
         Some(Manifest(
           DataType.fromJson(lines.head).asInstanceOf[StructType],
           fileLines.map(_._1),
           body.collectFirst { case l if l.startsWith(BatchMarker) =>
             l.stripPrefix(BatchMarker).toLong },
-          fileLines.collect { case (p0, Some(j)) =>
+          fileLines.collect { case (p0, _, Some(j)) =>
             p0 -> statsFromJson(j) }.toMap,
+          fileLines.collect { case (p0, Some(fm), _) => p0 -> fm }.toMap,
           body.collect { case l if l.startsWith(ConstraintMarker) =>
             l.stripPrefix(ConstraintMarker).split("\t", 2) match {
               case Array(n, e) => n -> e
@@ -331,17 +346,36 @@ object VersionedTable {
   /** Read `files` under the table schema, serving LOGICAL names: the
     * parquet scan resolves by PHYSICAL name (so files written before a
     * rename keep their data) and the frame renames positionally back.
-    * The single read seam every library path goes through. */
+    * The scan is planned from the manifest's file list (`meta` holds the
+    * lengths and mtimes its lines record; see [[statuses]]) — no
+    * data-source lookup, glob check or listing. The single read seam
+    * every library path goes through. */
   private[graft] def readFiles(spark: SparkSession, schema: StructType,
-      files: Seq[String]): DataFrame =
+      files: Seq[String], meta: Map[String, FileMeta]): DataFrame =
     if (files.isEmpty)
       spark.createDataFrame(new java.util.ArrayList[Row](), schema)
     else {
-      val base = spark.read.schema(physicalSchema(schema))
-        .parquet(files: _*)
+      val base = ManifestFileIndex.readParquet(spark, physicalSchema(schema),
+        statuses(spark, files, meta))
       if (!hasMapping(schema)) base
       else base.toDF(schema.fieldNames.toIndexedSeq: _*)
     }
+
+  /** `files` as `FileStatus`es built from their manifest lines' length
+    * and mtime; a file whose line predates those fields (a manifest from
+    * an older writer) is stat'ed, once. */
+  private[graft] def statuses(spark: SparkSession, files: Seq[String],
+      meta: Map[String, FileMeta]): Seq[FileStatus] =
+    files.map { p =>
+      val path = new Path(p)
+      meta.get(p).fold(path.getFileSystem(
+          spark.sparkContext.hadoopConfiguration).getFileStatus(path))(m =>
+        new FileStatus(m.length, false, 1, DataBlockSize, m.mtime, path))
+    }
+
+  /** The block size a local-file stat reports (`fs.local.block.size`'s
+    * default); nothing in a parquet scan's planning reads it. */
+  private val DataBlockSize = 32L << 20
 
   /** Rename a top-level column as a METADATA-ONLY commit: the logical
     * name moves, the physical name freezes at its current value, data
@@ -449,7 +483,7 @@ object VersionedTable {
   def read(spark: SparkSession, root: String,
       version: Option[Long] = None): DataFrame = {
     val (_, m) = resolve(fs(spark, root), root, version)
-    readFiles(spark, m.schema, m.files)
+    readFiles(spark, m.schema, m.files, m.meta)
   }
 
   /** SHALLOW CLONE (Delta-style): commit a new table at `dstRoot`
@@ -472,9 +506,10 @@ object VersionedTable {
   def cloneShallow(spark: SparkSession, srcRoot: String, dstRoot: String,
       asOf: Option[Long] = None): Long = {
     val (_, m) = resolve(fs(spark, srcRoot), srcRoot, asOf)
-    // the source's per-file stats ride the commit: it stages no file
-    commitRetrying(spark, dstRoot, m.schema, staged = Staged(stats = m.stats))(
-      _ => m.files)
+    // the source's per-file stats and lengths ride the commit: it
+    // stages no file
+    commitRetrying(spark, dstRoot, m.schema,
+      staged = Staged(stats = m.stats, meta = m.meta))(_ => m.files)
   }
 
   /** METADATA-ONLY aggregation: `COUNT(*)` plus `MIN`/`MAX` of the
@@ -566,7 +601,7 @@ object VersionedTable {
       val aggs = count(lit(1)).as("_n") +:
         cols.flatMap(c => Seq(smin(col(c)).as(s"_mn_$c"),
           smax(col(c)).as(s"_mx_$c")))
-      val r = readFiles(spark, m.schema, slow)
+      val r = readFiles(spark, m.schema, slow, m.meta)
         .agg(aggs.head, aggs.tail: _*).collect().head
       cnt += r.getAs[Long]("_n")
       cols.foreach { c =>
@@ -638,13 +673,13 @@ object VersionedTable {
     * JSON a row-level DML commit writes: command, group-filter
     * attribute, candidate/scanned/rewritten file counts — the prune
     * audit trail for MERGE/UPDATE/DELETE). Driver-side O(|versions|)
-    * metadata only. */
+    * metadata only: file lengths come from the manifest lines. */
   def history(spark: SparkSession, root: String): DataFrame = {
     val f = fs(spark, root)
     import spark.implicits._
     listed(f, root).flatMap { case (v, st) =>
       readManifestRaw(f, st.getPath).map { m =>
-        val bytes = m.files.map(p => f.getFileStatus(new Path(p)).getLen).sum
+        val bytes = statuses(spark, m.files, m.meta).map(_.getLen).sum
         (v, new java.sql.Timestamp(st.getModificationTime), m.files.size,
           bytes, m.batchId, m.opInfo)
       }
@@ -751,12 +786,12 @@ object VersionedTable {
     * the scan reads. */
   private[graft] final case class Snapshot(root: String, version: Long,
       schema: StructType, files: Seq[String],
-      stats: Map[String, FileStats])
+      stats: Map[String, FileStats], meta: Map[String, FileMeta])
 
   private[graft] def snapshot(spark: SparkSession, root: String,
       version: Option[Long] = None): Snapshot = {
     val (v, m) = resolve(fs(spark, root), root, version)
-    Snapshot(root, v, m.schema, m.files, m.stats)
+    Snapshot(root, v, m.schema, m.files, m.stats, m.meta)
   }
 
   /** Manifest-stat file pruning over a resolved snapshot — the single
@@ -814,7 +849,7 @@ object VersionedTable {
       version: Option[Long] = None): DataFrame = {
     val snap = snapshot(spark, root, version)
     val kept = pruneFiles(spark, snap, cond)
-    readFiles(spark, snap.schema, kept).filter(cond)
+    readFiles(spark, snap.schema, kept, snap.meta).filter(cond)
   }
 
   /** Conservative may-match of a predicate against one file's stats:
@@ -1021,7 +1056,7 @@ object VersionedTable {
     val (_, head) = resolve(fs(spark, root), root)
     require(!head.constraints.exists(_._1 == name),
       s"constraint '$name' already exists")
-    val bad = readFiles(spark, head.schema, head.files)
+    val bad = readFiles(spark, head.schema, head.files, head.meta)
       .filter(!coalesce(expr(exprSql), lit(true))).count()
     require(bad == 0L,
       s"cannot add constraint '$name' ($exprSql): $bad existing row(s) " +
@@ -1103,8 +1138,9 @@ object VersionedTable {
 
   /** One aggregation pass counting violations of every `head` constraint
     * over `df`; throws naming the first violated constraint. No-op
-    * (and no extra job) when the table has no constraints. */
-  private def enforceConstraints(df: DataFrame,
+    * (`df` is never built, no extra job) when the table has no
+    * constraints. */
+  private def enforceConstraints(df: => DataFrame,
       head: Option[Manifest]): Unit = {
     val cons = head.fold(Seq.empty[(String, String)])(_.constraints)
     if (cons.isEmpty) return
@@ -1180,15 +1216,14 @@ object VersionedTable {
     * row-level-operation protocol (SQL `MERGE INTO` / `UPDATE` /
     * `DELETE` through [[graft.sources.v2.GraftRowLevelOperation]]):
     * replace `removed` (the files the row-level scan READ — group
-    * granularity is the file) with the content the executors staged
-    * under a temp dir (`written`, raw parquet from Spark's own
-    * OutputWriter). The staged files go through [[publish]] like
-    * [[stageFiles]] output: moved to immutable UUID names under data/,
-    * footer-stats'd (empties dropped), and CHECK-constraint-validated
-    * on their OWN read-back before the commit publishes them. A table
-    * that declared [[ChangeFeedKeysProp]] gets the commit's change log
-    * (see [[changeLog]]). A commit that fails deletes the published
-    * files and the change log.
+    * granularity is the file) with the files the executors wrote
+    * straight into data/ (`written`, through [[WriteBridge]]'s task
+    * writer, as [[stageFiles]] does). They go through [[publish]]:
+    * footer-stats'd and CHECK-constraint-validated on their OWN
+    * read-back before the commit publishes them. A table that declared
+    * [[ChangeFeedKeysProp]] gets the commit's change log (see
+    * [[changeLog]]). A commit that fails deletes the written files and
+    * the change log.
     *
     * Concurrency: write-serializable per table. A concurrent commit
     * that REMOVED one of the scanned files (another rewrite of the
@@ -1197,18 +1232,18 @@ object VersionedTable {
     * safely (their files are preserved, ours replace only what we
     * scanned). */
   private[graft] def commitReplace(spark: SparkSession, root: String,
-      removed: Set[String], written: Seq[String],
+      removed: Set[String], written: Seq[WrittenFile],
       opJson: Seq[String] => Option[String] = _ => None): Long = {
     val f = fs(spark, root)
     val (_, headM) = resolve(f, root)
     val schema = headM.schema
-    // staged row-level files carry PHYSICAL column names (the write
-    // factory got the physical schema) — stats keys must match
-    val published = publish(f, spark, root, written.map(new Path(_)),
-      physicalSchema(schema), schema.fieldNames.toSeq, Some(headM))
+    // row-level files carry PHYSICAL column names (the write factory
+    // got the physical schema) — stats keys must match
+    val published = publish(f, spark, written, physicalSchema(schema),
+      schema.fieldNames.toSeq, Some(headM))
     val staged = discardOnFailure(f, published)(published.copy(
       changes = changeLog(spark, f, root, Some(headM), schema,
-        removed.toSeq, published.files)))
+        removed.toSeq, published)))
     val removedQ = removed.map(p => new Path(p).toString)
     // the commit publishes the schema of the head each attempt claims
     // against: a concurrent addColumns/renameColumn that landed after
@@ -1390,7 +1425,7 @@ object VersionedTable {
     val baseFiles = resolve(f, root, Some(afterV))._2.files.toSet
     val (_, m) = resolve(f, root, toV)
     val added = m.files.filterNot(baseFiles)
-    readFiles(spark, m.schema, added)
+    readFiles(spark, m.schema, added, m.meta)
   }
 
   /** Key-based upsert as a commit, FILE-PRUNED: only data files that
@@ -1417,7 +1452,7 @@ object VersionedTable {
           // touched = files holding at least one matching key. The probe
           // reads ONLY the key columns (+ file metadata)
           val rewrite = touchedFiles(m.files, readFiles(spark, m.schema,
-              m.files)
+              m.files, m.meta)
             .select(col("_metadata.file_path").as("_f"),
               struct(keys.map(col): _*).as("_k"))
             .join(updates.select(struct(keys.map(col): _*).as("_k"))
@@ -1425,7 +1460,7 @@ object VersionedTable {
             .select(col("_f")))
           val merged =
             if (rewrite.isEmpty) updates
-            else readFiles(spark, m.schema, rewrite)
+            else readFiles(spark, m.schema, rewrite, m.meta)
               .join(updates.select(keys.map(col): _*).distinct(), keys,
                 "left_anti")
               .unionByName(updates, allowMissingColumns = mergeSchema)
@@ -1458,8 +1493,8 @@ object VersionedTable {
     *  - a source key matching no rewritten file matches no head file
     *    (the probe would have rewritten it), so source-only rows ARE the
     *    unmatched source rows — absent from carried files by construction.
-    * The rows stage unprobed: an empty outcome stages zero-row part
-    * files, which staging drops (see [[dropEmpty]]). */
+    * The rows are written unprobed: an empty outcome writes no file (a
+    * task without rows leaves none, see [[stageFiles]]). */
   def merge(source: DataFrame, root: String, keys: Seq[String],
       matchedDelete: Option[Column], matchedUpdate: Map[String, Column],
       insertUnmatched: Boolean = true): Long = {
@@ -1474,7 +1509,8 @@ object VersionedTable {
       require(matchedUpdate.keySet.forall(schema.fieldNames.contains),
         s"update assigns unknown columns: " +
           s"${matchedUpdate.keySet -- schema.fieldNames}")
-      val rewrite = touchedFiles(m.files, readFiles(spark, schema, m.files)
+      val rewrite = touchedFiles(m.files,
+        readFiles(spark, schema, m.files, m.meta)
         .select(col("_metadata.file_path").as("_f"),
           struct(keys.map(col): _*).as("_k"))
         .join(source.select(struct(keys.map(col): _*).as("_k")).distinct(),
@@ -1486,7 +1522,8 @@ object VersionedTable {
         .map(c => isM && coalesce(c, lit(false)))
         .getOrElse(lit(false))
       val rows = Option.when(rewrite.nonEmpty || insertUnmatched)(
-        readFiles(spark, schema, rewrite).withColumn("__target", lit(true))
+        readFiles(spark, schema, rewrite, m.meta)
+          .withColumn("__target", lit(true))
           .join(src, keys, if (insertUnmatched) "full_outer" else "left")
           .filter(!del)
           .select(schema.fieldNames.toSeq.map { c =>
@@ -1502,9 +1539,9 @@ object VersionedTable {
 
   /** Row-deleting commit, file-pruned like [[upsert]]: files with no
     * matching row are carried over untouched; files with matches are
-    * rewritten without the matching rows (a file left empty stages a
-    * zero-row part file that [[dropEmpty]] drops). `condition` is any
-    * Catalyst predicate over the table's columns. */
+    * rewritten without the matching rows (a file left empty is not
+    * written again). `condition` is any Catalyst predicate over the
+    * table's columns. */
   def deleteWhere(spark: SparkSession, root: String,
       condition: Column): Long = {
     // DELETE semantics: remove rows where the predicate is TRUE; rows
@@ -1512,11 +1549,11 @@ object VersionedTable {
     val del = coalesce(condition, lit(false))
     rewriteCommit(spark, root) { h =>
       val m = h.getOrElse(throw noCommit(root))
-      val rewrite = touchedFiles(m.files, readFiles(spark, m.schema, m.files)
-        .filter(del)
+      val rewrite = touchedFiles(m.files,
+        readFiles(spark, m.schema, m.files, m.meta).filter(del)
         .select(col("_metadata.file_path").as("_f")))
       (m.schema, rewrite, Option.when(rewrite.nonEmpty)(
-        readFiles(spark, m.schema, rewrite).filter(!del)))
+        readFiles(spark, m.schema, rewrite, m.meta).filter(!del)))
     }
   }
 
@@ -1539,11 +1576,11 @@ object VersionedTable {
       keys.map(k => left(k) <=> delKeys("__dk_" + k)).reduce(_ && _)
     rewriteCommit(spark, root) { h =>
       val m = h.getOrElse(throw noCommit(root))
-      val head = readFiles(spark, m.schema, m.files)
+      val head = readFiles(spark, m.schema, m.files, m.meta)
       val rewrite = touchedFiles(m.files, head
         .join(delKeys, cond(head), "left_semi")
         .select(col("_metadata.file_path").as("_f")))
-      val rw = readFiles(spark, m.schema, rewrite)
+      val rw = readFiles(spark, m.schema, rewrite, m.meta)
       (m.schema, rewrite, Option.when(rewrite.nonEmpty)(
         rw.join(delKeys, cond(rw), "left_anti")))
     }
@@ -1586,7 +1623,7 @@ object VersionedTable {
       schema = s
       staged = rows.fold(Staged())(stageFiles(_, root, h))
       staged = staged.copy(changes = changeLog(spark, f, root, h, schema,
-        rewrite, staged.files, layoutOnly))
+        rewrite, staged, layoutOnly))
       filesOf(h).filterNot(rewrite.toSet) ++ staged.files
     }
   }
@@ -1659,8 +1696,10 @@ object VersionedTable {
     val (_, mNew) = resolve(f, root, Some(toV))
     val newSet = mNew.files.toSet
     val oldSet = mOld.files.toSet
-    val old = readFiles(spark, mOld.schema, mOld.files.filterNot(newSet))
-    val neu = readFiles(spark, mNew.schema, mNew.files.filterNot(oldSet))
+    val old = readFiles(spark, mOld.schema, mOld.files.filterNot(newSet),
+      mOld.meta)
+    val neu = readFiles(spark, mNew.schema, mNew.files.filterNot(oldSet),
+      mNew.meta)
     (old, neu, old.columns.filterNot(keys.contains).toSeq)
   }
 
@@ -1676,7 +1715,8 @@ object VersionedTable {
 
   /** WRITE-SIDE CHANGE LOG: when `head` declared its identity keys
     * ([[ChangeFeedKeysProp]]), persist the commit's net row diff —
-    * `removed` files against `staged` ones, read under `schema` — and
+    * `removed` head files against the `staged` ones, read under
+    * `schema` — and
     * return its path for the manifest, so [[changeFeed]] serves the
     * commit as a pure scan. A `layoutOnly` rewrite (compact/zorder) logs
     * an EMPTY diff without a join: its content is identical by
@@ -1685,23 +1725,39 @@ object VersionedTable {
     * property); the read-side join fallback stays correct then. */
   private def changeLog(spark: SparkSession, f: FileSystem, root: String,
       head: Option[Manifest], schema: StructType, removed: Seq[String],
-      staged: Seq[String], layoutOnly: Boolean = false): Option[String] =
-    head.flatMap(declaredCdcKeys).map { ks =>
+      staged: Staged, layoutOnly: Boolean = false): Option[String] =
+    head.flatMap(m => declaredCdcKeys(m).map { ks =>
       writeChanges(f, root,
         if (layoutOnly) emptyDiffFrame(spark, schema, ks)
-        else keyedDiff(readFiles(spark, schema, removed),
-          readFiles(spark, schema, staged), ks,
+        else keyedDiff(readFiles(spark, schema, removed, m.meta),
+          readFiles(spark, schema, staged.files, staged.meta), ks,
           schema.fieldNames.filterNot(ks.contains).toSeq))
-    }
+    })
 
-  /** Persist a commit's net-diff frame under `_changes/` and return
-    * its qualified path (the manifest marker content). */
+  /** Persist a commit's net-diff frame as the files of one directory
+    * under `_changes/` and return the directory's qualified path (the
+    * manifest marker content). An empty diff writes no file, and its
+    * directory does not exist ([[readChanges]] reads it as empty). */
   private def writeChanges(f: FileSystem, root: String,
       diff: DataFrame): String = {
-    val out = new Path(new Path(root, "_changes"),
-      java.util.UUID.randomUUID().toString)
-    diff.write.mode(SaveMode.Overwrite).parquet(out.toString)
-    f.makeQualified(out).toString
+    val out = f.makeQualified(new Path(new Path(root, "_changes"),
+      java.util.UUID.randomUUID().toString))
+    WriteBridge.writeParquet(diff, out.toString)
+    out.toString
+  }
+
+  /** A commit's change log ([[writeChanges]]) under `schema`: one
+    * listing of its directory. */
+  private def readChanges(spark: SparkSession, schema: StructType,
+      dir: String): DataFrame = {
+    val d = new Path(dir)
+    val files = (try d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(d).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil })
+      .filter(_.getPath.getName.endsWith(".parquet"))
+    if (files.isEmpty)
+      spark.createDataFrame(new java.util.ArrayList[Row](), schema)
+    else ManifestFileIndex.readParquet(spark, schema, files)
   }
 
   /** A zero-row change frame in [[keyedDiff]]'s column shape — what a
@@ -1785,6 +1841,7 @@ object VersionedTable {
     require(keys.nonEmpty, "changeFeed needs key columns")
     val ms = manifests(fs(spark, root), root)
     val vs = ms.map(_._1)
+    val meta = ms.flatMap(_._2.meta).toMap
     require(vs.contains(fromV), s"version $fromV not in $vs")
     val to = toV.getOrElse(vs.max)
     require(vs.contains(to), s"version $to not in $vs")
@@ -1795,7 +1852,8 @@ object VersionedTable {
     keys.foreach(k => require(outSchema.fieldNames.contains(k),
       s"changeFeed: no key column '$k' in ${outSchema.simpleString}"))
     def readF(v: Long, files: Seq[String]): DataFrame =
-      readFiles(spark, outSchema, files).withColumn("_commit_version", lit(v))
+      readFiles(spark, outSchema, files, meta)
+        .withColumn("_commit_version", lit(v))
     val dataCols = outSchema.fieldNames.filterNot(keys.contains).toSeq
     val feedSchema = StructType(outSchema.fields ++ Seq(
       StructField("change_type", StringType, nullable = false),
@@ -1814,9 +1872,8 @@ object VersionedTable {
       // no keyed join at read time. The recorded diff used the
       // table's declared identity keys, which is authoritative.
       mv.changesFile.map(cf =>
-        spark.read.schema(StructType(outSchema.fields :+
-            StructField("change_type", StringType)))
-          .parquet(cf)
+        readChanges(spark, StructType(outSchema.fields :+
+            StructField("change_type", StringType)), cf)
           .withColumn("_commit_version", lit(v)))
     } ++ appends.map { case (v, _, added) => // append-only: adds insert
       readF(v, added).withColumn("change_type", lit("insert"))
@@ -1849,10 +1906,10 @@ object VersionedTable {
   def compact(spark: SparkSession, root: String,
       smallBytes: Long = 32L << 20,
       targetBytes: Long = 128L << 20): Option[Long] = {
-    val f = fs(spark, root)
     try Some(rewriteCommit(spark, root, layoutOnly = true) { h =>
       val m = h.getOrElse(throw noCommit(root))
-      val small = m.files.map(p => p -> f.getFileStatus(new Path(p)).getLen)
+      // lengths from the manifest lines
+      val small = m.files.zip(statuses(spark, m.files, m.meta).map(_.getLen))
         .filter(_._2 < smallBytes)
       // before any staging, change log or claim
       if (small.size < 2) throw new NothingToCompact
@@ -1860,7 +1917,7 @@ object VersionedTable {
       val nOut = ((totalBytes + targetBytes - 1) / targetBytes).toInt.max(1)
       val rewrite = small.map(_._1)
       (m.schema, rewrite,
-        Some(readFiles(spark, m.schema, rewrite).coalesce(nOut)))
+        Some(readFiles(spark, m.schema, rewrite, m.meta).coalesce(nOut)))
     })
     catch { case _: NothingToCompact => None }
   }
@@ -1883,7 +1940,8 @@ object VersionedTable {
       val m = h.getOrElse(throw noCommit(root))
       require(m.files.nonEmpty, "cannot z-order an empty snapshot")
       (m.schema, m.files, Some(graft.operators.Layout.zOrdered(
-        readFiles(spark, m.schema, m.files), cols, nFiles, bitsPerCol)))
+        readFiles(spark, m.schema, m.files, m.meta), cols, nFiles,
+        bitsPerCol)))
     }
   }
 
@@ -1901,13 +1959,16 @@ object VersionedTable {
   def restore(spark: SparkSession, root: String, toVersion: Long): Long = {
     val (_, target) = resolve(fs(spark, root), root, Some(toVersion))
     commitRetrying(spark, root, target.schema,
-      staged = Staged(stats = target.stats))(_ => target.files)
+      staged = Staged(stats = target.stats, meta = target.meta))(
+      _ => target.files)
   }
 
   /** Delete data files referenced by no retained manifest, and expired
     * manifests themselves. Keeps the newest `keepVersions`; never
     * touches files younger than `graceMs` (a concurrent commit may
-    * have staged them ahead of its claim). Returns files deleted. */
+    * have written them ahead of its claim). Also sweeps, past the same
+    * window, the `.stage-*`/`.rlstage-*` directories older writers
+    * staged in and a crash left behind. Returns files deleted. */
   def vacuum(spark: SparkSession, root: String, keepVersions: Int,
       graceMs: Long = 3600000L): Int = {
     require(keepVersions >= 1, "must retain at least the latest version")
@@ -1921,7 +1982,9 @@ object VersionedTable {
     val kept = ms.collect { case (v, m) if keep.contains(v) => m }
     val live = kept.flatMap(_.files).toSet
     val cutoff = System.currentTimeMillis() - graceMs
-    val dead = f.listStatus(dataDir(root)).toSeq
+    // a table whose writes all had no rows has no data/ directory
+    val dead = (if (f.exists(dataDir(root))) f.listStatus(dataDir(root)).toSeq
+      else Nil)
       .filter(s => s.getModificationTime < cutoff &&
         !live.contains(s.getPath.toString))
       .map(_.getPath)
@@ -1940,11 +2003,11 @@ object VersionedTable {
         .filter(st => st.getModificationTime < cutoff &&
           !liveChanges.contains(f.makeQualified(st.getPath).toString))
         .foreach(st => f.delete(st.getPath, true))
-    // orphaned staging dirs: a driver crash between staging and
-    // commit/abort leaves `.stage-*` (library writes) or `.rlstage-*`
-    // (row-level DSv2 writes) behind forever — nothing else sweeps them
-    // (advisor finding, round 9). Same grace window as data files: a
-    // LIVE writer's stage dir is younger than it.
+    // orphaned staging dirs of older writers, which staged library
+    // writes under `.stage-*` and row-level DSv2 writes under
+    // `.rlstage-*`: a driver crash between staging and commit/abort left
+    // them behind forever — nothing else sweeps them (advisor finding,
+    // round 9). Same grace window as data files.
     f.listStatus(new Path(root)).toSeq
       .filter(s => s.isDirectory &&
         (s.getPath.getName.startsWith(".stage-") ||
@@ -1955,14 +2018,15 @@ object VersionedTable {
   }
 
   /** What a commit brings beyond the head it claims against: the data
-    * `files` it staged and the change log it wrote (both deleted when
-    * the commit fails), and per-file `stats` for its manifest lines —
-    * the staged files' own, or a clone's or restore's source manifest's
-    * (Delta's `add` action likewise carries its file's stats in the
-    * log record). A file with no stats entry commits without stats
-    * unless the head lists it with some. */
+    * `files` it wrote and the change log it wrote (both deleted when the
+    * commit fails), and per-file `stats` and `meta` (length, mtime) for
+    * its manifest lines — the written files' own, or a clone's or
+    * restore's source manifest's (Delta's `add` action likewise carries
+    * its file's size and stats in the log record). A file with no entry
+    * commits with the head's, or without. */
   private final case class Staged(files: Seq[String] = Nil,
       stats: Map[String, FileStats] = Map.empty,
+      meta: Map[String, FileMeta] = Map.empty,
       changes: Option[String] = None)
 
   private def discard(f: FileSystem, s: Staged): Unit = {
@@ -2010,24 +2074,20 @@ object VersionedTable {
     case _ => false
   }
 
-  /** Serializes the session-conf swap in [[stageFiles]] (the timestamp
-    * output type has no per-write option). */
-  private object TsConfLock
-
-  /** Stage `df` under data/ as immutable files, returned with their
-    * qualified paths (vacuum compares against listStatus, which
-    * qualifies) and the per-file stats the commit writes into its
-    * manifest. `head` is the manifest the commit builds on (None for a
-    * new table): its column mapping, bloom columns and CHECK
-    * constraints apply to the staged files. The part files go through
-    * [[publish]]. If staging throws, it deletes what it wrote; once it
-    * returns, the files belong to the commit, and a commit that fails
-    * deletes them ([[commitRetrying]]). */
+  /** Write `df` into data/ as immutable files under unique names and
+    * return them with the per-file stats and lengths the commit writes
+    * into its manifest. `head` is the manifest the commit builds on
+    * (None for a new table): its column mapping, bloom columns and CHECK
+    * constraints apply to the written files. Each task writes its rows
+    * straight into data/ through [[WriteBridge]] (one tracked SQL
+    * execution; no staging directory, rename or listing); a task
+    * without rows writes no file. A failed write job deletes what it
+    * wrote; once this returns, the files belong to the commit, and a
+    * commit that fails deletes them ([[commitRetrying]]). */
   private def stageFiles(df0: DataFrame, root: String,
       head: Option[Manifest]): Staged = {
     val spark = df0.sparkSession
-    val f = fs(spark, root)
-    // column mapping: staged parquet stores PHYSICAL names (the head
+    // column mapping: written parquet stores PHYSICAL names (the head
     // manifest's mapping, matched by logical name), so files written
     // after a RENAME COLUMN stay name-compatible with files written
     // before it. Identity (no mapped column) is a no-op.
@@ -2038,91 +2098,43 @@ object VersionedTable {
       if (headMapping.isEmpty) df0
       else df0.toDF(df0.columns.map(c =>
         headMapping.getOrElse(c, c)).toIndexedSeq: _*)
-    val stage = new Path(root, s".stage-${UUID.randomUUID()}")
-    // write timestamps as standard INT64 TIMESTAMP_MICROS, not Spark's
-    // legacy INT96 default: INT96 column chunks carry NO usable min/max
-    // (deprecated ordering), which would blind the footer stats path —
-    // and the lake's files become standard-interoperable as a bonus.
-    // Session-conf swap restored in finally (no per-write option
-    // exists); the swap is serialized under TsConfLock so two threads
-    // staging concurrently in one session can't interleave set/restore
-    // and leak INT96 (or the override) into each other's writes.
-    try {
-      TsConfLock.synchronized {
-        val tsKey = "spark.sql.parquet.outputTimestampType"
-        val prevTs = spark.conf.getOption(tsKey)
-        spark.conf.set(tsKey, "TIMESTAMP_MICROS")
-        try df.write.mode(SaveMode.Overwrite).parquet(stage.toString)
-        finally prevTs match {
-          case Some(v) => spark.conf.set(tsKey, v)
-          case None => spark.conf.unset(tsKey)
-        }
-      }
-      publish(f, spark, root, f.listStatus(stage).toSeq.map(_.getPath)
-          .filter(_.getName.endsWith(".parquet")), df.schema,
-        df0.columns.toSeq, head)
-    } finally f.delete(stage, true)
+    val f = fs(spark, root)
+    val written = WriteBridge.writeParquet(df,
+      f.makeQualified(dataDir(root)).toString)
+    publish(f, spark, written, df.schema, df0.columns.toSeq, head)
   }
 
   /** The publish step every write into the lake takes ([[stageFiles]]
-    * for library writes, [[commitReplace]] for row-level ones): move
-    * each part file to an immutable UUID name under data/, drop the
-    * empty ones ([[dropEmpty]], which also collects the stats), and
-    * enforce the head's CHECK constraints. `physical` is the files'
-    * schema; `logical` names its columns as the constraints do.
+    * for library writes, [[commitReplace]] for row-level ones): collect
+    * the written files' stats and enforce the head's CHECK constraints.
+    * `physical` is the files' schema; `logical` names its columns as the
+    * constraints do.
     *
-    * Constraints are checked on the STAGED FILES themselves, not the
+    * Constraints are checked on the WRITTEN FILES themselves, not the
     * incoming plan: a non-deterministic plan (rand(), a source mutated
     * between jobs) could pass a pre-write validation pass yet persist
     * violating rows. Validating the read-back of what was actually
     * written checks the exact materialization the commit will publish
     * (advisor finding, round 7); per-row write-time enforcement
     * Delta-style would save this one extra scan, at the cost of a
-    * custom write path — the scan only runs when constraints exist.
-    * A failed check deletes the moved files. */
-  private def publish(f: FileSystem, spark: SparkSession, root: String,
-      parts: Seq[Path], physical: StructType, logical: Seq[String],
+    * custom write path — the read-back is built and scanned only when
+    * constraints exist. A failed check deletes the files. */
+  private def publish(f: FileSystem, spark: SparkSession,
+      written: Seq[WrittenFile], physical: StructType, logical: Seq[String],
       head: Option[Manifest]): Staged = {
-    f.mkdirs(dataDir(root))
-    val moved = parts.map { p =>
-      val dst = new Path(dataDir(root), s"${UUID.randomUUID()}.parquet")
-      require(f.rename(p, dst), s"stage move failed: $p -> $dst")
-      f.makeQualified(dst).toString
+    val files = written.map(_.path)
+    val meta = written.map(w => w.path -> FileMeta(w.length, w.mtime)).toMap
+    discardOnFailure(f, Staged(files)) {
+      val statsOn = spark.conf
+        .getOption("spark.graft.lake.stats.enabled").forall(_.toBoolean)
+      val stats =
+        if (statsOn && files.nonEmpty)
+          collectStats(spark, physical, files, meta, head)
+        else None
+      if (files.nonEmpty) enforceConstraints(
+        readFiles(spark, physical, files, meta).toDF(logical: _*), head)
+      Staged(files, stats.getOrElse(Map.empty), meta)
     }
-    discardOnFailure(f, Staged(moved)) {
-      val staged = dropEmpty(f, spark, physical, moved, head)
-      if (staged.files.nonEmpty)
-        enforceConstraints(spark.read.schema(physical)
-          .parquet(staged.files: _*).toDF(logical: _*), head)
-      staged
-    }
-  }
-
-  /** Freshly staged `files` minus the zero-row ones (a write with more
-    * partitions than rows, or a rewrite whose rows all went, makes
-    * them), deleted from disk instead of committed, with the stats of
-    * the rest: the zero-row
-    * files are those without a stats row when the stats pass runs, else
-    * (stats off — files without stats just aren't prunable — or nothing
-    * stat-eligible) those whose footers count no rows, recording no
-    * ColStat. An unreadable footer keeps its file. */
-  private def dropEmpty(f: FileSystem, spark: SparkSession,
-      schema: StructType, files: Seq[String], head: Option[Manifest])
-      : Staged = {
-    if (files.isEmpty) return Staged()
-    val statsOn = spark.conf
-      .getOption("spark.graft.lake.stats.enabled").forall(_.toBoolean)
-    val stats =
-      if (statsOn) collectStats(spark, schema, files, head) else None
-    val nonEmpty = stats.map(_.keySet)
-      .orElse(footerStats(spark, new StructType(), files)
-        .map(_.collect { case (p, (n, _)) if n > 0 => p }.toSet))
-    val kept = nonEmpty.fold(files) { keep =>
-      val (kept, empty) = files.partition(keep.contains)
-      empty.foreach(p => f.delete(new Path(p), false))
-      kept
-    }
-    Staged(kept, stats.getOrElse(Map.empty))
   }
 
   /** Bloom columns are STICKY per table: beyond the session conf, any
@@ -2157,15 +2169,15 @@ object VersionedTable {
     * paths across every eligible type, reaching the scan path through
     * [[restatByScan]]. */
   private def collectStats(spark: SparkSession, schema: StructType,
-      files: Seq[String], head: Option[Manifest])
-      : Option[Map[String, FileStats]] = {
+      files: Seq[String], meta: Map[String, FileMeta],
+      head: Option[Manifest]): Option[Map[String, FileStats]] = {
     val cols = schema.fields.filter(fd => statEligible(fd.dataType))
       .map(_.name).toSeq
     if (cols.isEmpty) None
     else Some((if (bloomColsFor(spark, head, cols).nonEmpty) None
-      else footerStats(spark, schema, files).map(_.collect {
-        case (p, (n, st)) if n > 0 => p -> st }))
-      .getOrElse(collectStatsByScan(spark, schema, files, head)))
+      else footerStats(spark, schema, statuses(spark, files, meta)).map(
+        _.collect { case (p, (n, st)) if n > 0 => p -> st }))
+      .getOrElse(collectStatsByScan(spark, schema, files, meta, head)))
   }
 
   /** Commit the head's files again with their stats recollected by the
@@ -2174,8 +2186,8 @@ object VersionedTable {
   private[graft] def restatByScan(spark: SparkSession, root: String): Long = {
     val (_, m) = resolve(fs(spark, root), root)
     commitRetrying(spark, root, m.schema, staged = Staged(stats =
-      collectStatsByScan(spark, physicalSchema(m.schema), m.files, Some(m))))(
-      _ => m.files)
+      collectStatsByScan(spark, physicalSchema(m.schema), m.files, m.meta,
+        Some(m))))(_ => m.files)
   }
 
   /** The bloom-opted columns for this table (session conf ∪ columns
@@ -2188,7 +2200,7 @@ object VersionedTable {
       .getOrElse(Seq.empty) ++ inheritedBloomCols(head))
       .distinct.filter(cols.contains)
 
-  /** Footer-metadata stats for freshly staged files: returns
+  /** Footer-metadata stats for freshly written files: returns
     * path -> (rowCount, per-column ColStat), or None if any footer is
     * unreadable (caller falls back to the scan path). Column chunks are
     * merged across row groups with parquet's own per-type comparator;
@@ -2196,22 +2208,27 @@ object VersionedTable {
     * either carries bounds or is provably all-null, with null counts
     * set. Runs on a small driver thread pool — footers are KB-sized,
     * so even a many-thousand-file commit costs seconds of metadata I/O
-    * instead of a full data scan. */
+    * instead of a full data scan. The files are opened from their
+    * statuses (no stat) with read options built once per call: the
+    * one-argument `ParquetFileReader.open` builds them from a fresh
+    * Hadoop `Configuration`, parsing the Hadoop XML resources per
+    * footer. */
   private def footerStats(spark: SparkSession, schema: StructType,
-      files: Seq[String]): Option[Map[String, (Long, FileStats)]] = {
+      files: Seq[FileStatus]): Option[Map[String, (Long, FileStats)]] = {
     import scala.jdk.CollectionConverters._
     val conf = spark.sessionState.newHadoopConf()
+    val options = org.apache.parquet.HadoopReadOptions.builder(conf).build()
     val eligible = schema.fields.filter(fd => statEligible(fd.dataType))
-    def one(pathStr: String): (String, (Long, FileStats)) = {
+    def one(st: FileStatus): (String, (Long, FileStats)) = {
       val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new Path(pathStr), conf))
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf),
+        options)
       try {
         val blocks = rd.getFooter.getBlocks.asScala.toSeq
         val rows = blocks.map(_.getRowCount).sum
-        val st: FileStats = eligible.flatMap { fd =>
+        val cs: FileStats = eligible.flatMap { fd =>
           footerColStat(blocks, fd, rows).map(fd.name -> _) }.toMap
-        pathStr -> (rows, st)
+        st.getPath.toString -> (rows, cs)
       } finally rd.close()
     }
     val pool = java.util.concurrent.Executors
@@ -2341,7 +2358,8 @@ object VersionedTable {
   /** The original one-aggregation-pass stats collection (also the bloom
     * path — bloom filters need the values, footers can't provide them). */
   private def collectStatsByScan(spark: SparkSession, schema: StructType,
-      files: Seq[String], head: Option[Manifest]): Map[String, FileStats] = {
+      files: Seq[String], meta: Map[String, FileMeta],
+      head: Option[Manifest]): Map[String, FileStats] = {
     val cols = schema.fields.filter(fd => statEligible(fd.dataType))
       .map(_.name).toSeq
     // bloom opt-in: per-file filters over the listed columns (sized by
@@ -2373,7 +2391,7 @@ object VersionedTable {
       bloomCols.map { c => graft.functions.BloomFunctions
         .bloom_agg(col(c), bloomBits / 16, bloomBits).as(s"_bloom_$c") } :+
       count(lit(1)).as("_cnt_all")
-    spark.read.schema(schema).parquet(files: _*)
+    readFiles(spark, schema, files, meta)
       .groupBy(col("_metadata.file_path").as("_f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect().map { r =>
@@ -2407,9 +2425,9 @@ object VersionedTable {
     * to return this attempt's own bytes, as a guard against any
     * recovery interleaving.
     *
-    * `staged` is what the commit brings ([[Staged]]): its stats go
-    * straight into the manifest lines (over the head's entry for the
-    * same file), its change log into the `#changes:` marker, and when
+    * `staged` is what the commit brings ([[Staged]]): its stats and
+    * lengths go straight into the manifest lines (over the head's entry
+    * for the same file), its change log into the `#changes:` marker, and when
     * the commit throws — a rejected schema, a conflict, contention —
     * its files and change log are deleted. It is by-name, like
     * `schema`, for the rewrite commits that restage per attempt;
@@ -2426,7 +2444,6 @@ object VersionedTable {
     // below must see that resolution, re-done on every retry
     val f = fs(spark, root)
     discardOnFailure(f, staged) {
-      f.mkdirs(manifestDir(root))
       val op = opInfo
       var committed = Option.empty[Long]
       var attempts = 0
@@ -2442,6 +2459,7 @@ object VersionedTable {
         if (attempts > 1)
           Thread.sleep(10L + scala.util.Random.nextInt(40 * attempts))
         val head = resolveHead(f, root)
+        if (head.isEmpty) f.mkdirs(manifestDir(root))
         val prev = head.map(_._2)
         val files = nextFiles(prev)
         // constraints and table properties ride every commit unchanged
@@ -2456,9 +2474,23 @@ object VersionedTable {
         val add = staged
         val v = head.fold(0L)(_._1 + 1)
         val target = manifestPath(root, v)
-        def statsLine(p: String): String =
-          add.stats.get(p).orElse(prev.flatMap(_.stats.get(p)))
-            .fold("")(s => "\t" + statsToJson(s))
+        // a file an older writer's line listed without its length is
+        // stat'ed, so this manifest records it (a missing file stays
+        // without)
+        def metaOf(p: String): Option[FileMeta] =
+          add.meta.get(p).orElse(prev.flatMap(_.meta.get(p))).orElse(
+            scala.util.Try(f.getFileStatus(new Path(p))).toOption
+              .map(st => FileMeta(st.getLen, st.getModificationTime)))
+        // a file line: path, stats (empty when the file has none),
+        // length and mtime. Length and mtime come last so that a reader
+        // predating them still reads the line: it parses the second
+        // field as the stats JSON and ignores the rest
+        def fileLine(p: String): String = {
+          val stats = add.stats.get(p).orElse(prev.flatMap(_.stats.get(p)))
+            .fold("")(statsToJson)
+          p + metaOf(p).fold(if (stats.isEmpty) "" else "\t" + stats)(m =>
+            s"\t$stats\t${m.length}\t${m.mtime}") + "\n"
+        }
         // crashed-writer recovery: a dead claim (claim file present, no
         // valid manifest behind it, older than the grace window) blocks
         // its version number; clear claim + junk manifest before trying.
@@ -2486,7 +2518,7 @@ object VersionedTable {
         // author; the token read-back stays as a final guard against any
         // recovery interleaving.
         val payload = (schema.json + "\n" +
-          files.sorted.map(p => p + statsLine(p) + "\n").mkString +
+          files.sorted.map(fileLine).mkString +
           batchMarker.fold("")(id => s"$BatchMarker$id\n") +
           cons.map { case (n, e) => s"$ConstraintMarker$n\t$e\n" }.mkString +
           props.map { case (n, v0) => s"$PropertyMarker$n\t$v0\n" }.mkString +

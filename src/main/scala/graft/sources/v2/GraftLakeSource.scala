@@ -9,8 +9,8 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, WriteBuilder}
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, InsertableRelation}
-import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
+import org.apache.spark.sql.graft.ManifestFileIndex
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.DataSourceRegister
@@ -222,7 +222,8 @@ class GraftLakeSource extends TableProvider with DataSourceRegister
       // while the write path works — the first
       // `df.write.format("graft").save(root)` CREATES the table
       if (version.isEmpty && VersionedTable.headVersion(spark, root).isEmpty)
-        VersionedTable.Snapshot(root, -1L, new StructType(), Nil, Map.empty)
+        VersionedTable.Snapshot(root, -1L, new StructType(), Nil, Map.empty,
+          Map.empty)
       else {
         val snap = VersionedTable.snapshot(spark, root, version)
         // parquet file reads always surface nullable fields (a file
@@ -736,9 +737,9 @@ private[graft] class GraftScan(spark: SparkSession,
     val physSchema = VersionedTable.physicalSchema(snap.schema)
     val physOf = snap.schema.fields
       .map(f => f.name -> VersionedTable.physicalName(f)).toMap
-    val index = new InMemoryFileIndex(spark,
-      kept.map(new Path(_)).toIndexedSeq, Map.empty[String, String],
-      Some(physSchema))
+    // planned from the manifest's file list: no listing, no stat
+    val index = new ManifestFileIndex(spark,
+      VersionedTable.statuses(spark, kept, snap.meta), physSchema)
     val pb = ParquetScanBuilder(spark, index, physSchema, physSchema,
       CaseInsensitiveStringMap.empty())
     // forward the same predicate (resolved against the snapshot schema,

@@ -25,15 +25,15 @@ import graft.sinks.VersionedTable
   *     (a 100 TB MERGE touching one key range rewrites a handful of
   *     files, not the table).
   *  2. The rewrite query computes the scanned groups' FULL new content
-  *     (carried rows + updates + inserts − deletes); executors stage it
-  *     as raw parquet through Spark's own OutputWriter
-  *     ([[WriteBridge]]).
+  *     (carried rows + updates + inserts − deletes); executors write it
+  *     straight into the table's data/ as parquet through Spark's own
+  *     OutputWriter ([[WriteBridge]]), each task reporting its file in
+  *     its commit message.
   *  3. Commit = one transactional manifest swap
   *     ([[VersionedTable.commitReplace]]): head − scannedFiles +
-  *     stagedFiles, with footer stats, empty-file drops,
-  *     CHECK-constraint validation of the staged read-back, and a
-  *     write-serializable conflict check (a concurrent rewrite of a
-  *     scanned file aborts the statement).
+  *     writtenFiles, with footer stats, CHECK-constraint validation of
+  *     the written read-back, and a write-serializable conflict check
+  *     (a concurrent rewrite of a scanned file aborts the statement).
   *
   * Old snapshots keep the replaced files until vacuum — MERGE/UPDATE/
   * DELETE are time-travelable commits like every other write. */
@@ -149,31 +149,31 @@ private[v2] class GraftRowLevelScanBuilder(spark: SparkSession,
   }
 }
 
-/** The ReplaceData write: stage parquet on the executors, swap groups
-  * at commit. */
+/** The ReplaceData write: executors write parquet into data/, the
+  * commit swaps groups. */
 private[v2] class GraftReplaceDataWrite(spark: SparkSession,
     snap: VersionedTable.Snapshot, op: GraftRowLevelOperation)
     extends Write with org.apache.spark.internal.Logging {
   override def description(): String = s"GraftReplaceDataWrite(${snap.root})"
   override def toBatch: BatchWrite = new BatchWrite {
-    private val stageDir =
-      new Path(snap.root, s".rlstage-${java.util.UUID.randomUUID()}")
+    private val writeId = java.util.UUID.randomUUID().toString
+    private def dataDir: String = {
+      val d = new Path(snap.root, "data")
+      d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .makeQualified(d).toString
+    }
 
     override def createBatchWriterFactory(info: PhysicalWriteInfo)
-        : DataWriterFactory = {
-      val fs = stageDir.getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      fs.mkdirs(stageDir)
-      // PHYSICAL names: staged rewrite files must be name-compatible
-      // with the table's other data files (column mapping, round 10);
-      // rows are positional so only the parquet column names change
-      WriteBridge.parquetFactory(spark, stageDir.toString,
-        VersionedTable.physicalSchema(snap.schema))
-    }
+        : DataWriterFactory =
+      // PHYSICAL names: rewritten files must be name-compatible with
+      // the table's other data files (column mapping, round 10); rows
+      // are positional so only the parquet column names change
+      WriteBridge.parquetFactory(spark, dataDir,
+        VersionedTable.physicalSchema(snap.schema), writeId)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       val written = messages.toSeq.flatMap {
-        case GraftWrittenFiles(ps) => ps
+        case GraftWrittenFiles(fs) => fs
         case other => throw new IllegalStateException(
           s"unexpected commit message: $other")
       }
@@ -183,34 +183,34 @@ private[v2] class GraftReplaceDataWrite(spark: SparkSession,
           "the rewrite plan did not read the target through this " +
           "operation (unsupported plan shape)")
       // prune audit (VERDICT r9 watch item): the chosen group-filter
-      // attribute and candidate vs rewritten counts go into the
-      // commit's #op: record (history()/DESCRIBE EXTENDED) and the log
-      // — a MERGE that rewrote 400 of 400 files should be VISIBLE
+      // attribute, candidate vs scanned counts, the files the commit
+      // removes (`rewritten_files`) and the files it adds
+      // (`added_files`: one per non-empty write task, so it varies with
+      // the shuffle layout) go into the commit's #op: record
+      // (history()/DESCRIBE EXTENDED) and the log — a MERGE that
+      // rewrote 400 of 400 files should be VISIBLE
       val scanned = scan.keptFiles.size
-      def opJson(staged: Seq[String]): Option[String] = Some(
+      val removed = scan.keptFiles.toSet
+      def opJson(added: Seq[String]): Option[String] = Some(
         s"""{"op":"${op.command()}","group_filter":"${op.groupFilterAttr}"""" +
           s""","table_files":${snap.files.size}""" +
           s""","candidate_files":${scan.staticKeptCount}""" +
           s""","scanned_files":$scanned""" +
-          s""","rewritten_files":${staged.size}}""")
+          s""","rewritten_files":${removed.size}""" +
+          s""","added_files":${added.size}}""")
       logInfo(s"graft row-level ${op.command()} on ${snap.root}: " +
         s"group_filter=${op.groupFilterAttr} " +
         s"candidates=${scan.staticKeptCount}/${snap.files.size} " +
-        s"scanned=$scanned rewritten=${written.size}")
-      try {
-        VersionedTable.commitReplace(spark, snap.root,
-          scan.keptFiles.toSet, written, opJson)
-      } finally {
-        stageDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(stageDir, true)
-      }
+        s"scanned=$scanned rewritten=${removed.size} " +
+        s"added=${written.size} rows=${written.map(_.rows).sum}")
+      VersionedTable.commitReplace(spark, snap.root, removed, written,
+        opJson)
       ()
     }
 
-    override def abort(messages: Array[WriterCommitMessage]): Unit = {
-      stageDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(stageDir, true)
-      ()
-    }
+    /** A failed job or commit: the library writer's cleanup, which
+      * deletes every file this write created once its tasks have ended. */
+    override def abort(messages: Array[WriterCommitMessage]): Unit =
+      WriteBridge.abortWrite(spark, dataDir, writeId)
   }
 }

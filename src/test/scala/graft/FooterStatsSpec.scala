@@ -16,15 +16,17 @@ class FooterStatsSpec extends SparkSpec {
   private def tmp() =
     tmpDir("fstats") + "/t"
 
-  /** The per-file stats JSON multiset of the head manifest (paths and
-    * UUID names stripped — contents are deterministic for a fixed
-    * repartition, names are not). */
+  /** The per-file stats JSON multiset of the head manifest (paths,
+    * UUID names and the files' lengths and mtimes stripped — contents
+    * are deterministic for a fixed repartition, names are not). A file
+    * line's stats are its second field. */
   private def statLines(root: String): Seq[String] = {
     val dir = new java.io.File(root, "_manifests")
     val mf = dir.listFiles().filter(_.getName.endsWith(".json"))
       .maxBy(_.getName)
     scala.io.Source.fromFile(mf, "UTF-8").getLines()
-      .filter(_.contains("\t")).map(_.split("\t", 2)(1))
+      .map(_.split("\t")).filter(l => l.length > 1 && l(1).nonEmpty)
+      .map(_(1))
       .toSeq.sorted
   }
 

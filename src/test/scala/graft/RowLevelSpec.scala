@@ -179,7 +179,9 @@ class RowLevelSpec extends SparkSpec {
     spark.read.parquet(victim).filter(col("k") % 2 === 0).coalesce(1)
       .write.parquet(stage)
     val written = new java.io.File(stage).listFiles.toSeq
-      .filter(_.getName.endsWith(".parquet")).map(_.toString)
+      .filter(_.getName.endsWith(".parquet"))
+      .map(fl => org.apache.spark.sql.graft.WrittenFile(
+        fl.toURI.toString, fl.length, fl.lastModified, 50L))
     // opJson runs after commitReplace has read the head and before the
     // commit loop claims a version: the concurrent writer's window
     VersionedTable.commitReplace(spark, root, Set(victim), written,
@@ -285,6 +287,46 @@ class RowLevelSpec extends SparkSpec {
     spark.catalog.dropTempView("xgf_src")
   }
 
+  test("the prune audit counts files removed and files added apart: " +
+      "with AQE off one rewritten file comes back as several") {
+    warehouse
+    val root = s"$warehouse/xgfna"
+    (0 until 4).foreach { bkt =>
+      VersionedTable.append((bkt * 100L + 1 to bkt * 100L + 100)
+        .map(i => (i % 37, i, "base")).toDF("a", "b", "tag")
+        .coalesce(1), root)
+    }
+    val pre = VersionedTable.snapshot(spark, root).files.toSet
+    Seq((10L, 99L), (20L, 98L)).toDF("b", "nv")
+      .createOrReplaceTempView("xgfna_src")
+    val confs = Seq("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try spark.sql(
+      """MERGE INTO grl.xgfna t USING xgfna_src s ON t.b = s.b
+        |WHEN MATCHED THEN UPDATE SET a = s.nv, tag = 'm'""".stripMargin)
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    val post = VersionedTable.snapshot(spark, root).files.toSet
+    assert(post.intersect(pre).size == 3, "carried 3 of 4 files")
+    val added = post.diff(pre).size
+    assert(added > 1, s"no coalescing: one file per non-empty task, got $added")
+    val op = VersionedTable.history(spark, root)
+      .orderBy(col("version").desc).limit(1)
+      .select("operation").as[Option[String]].head().get
+    assert(op.contains("\"scanned_files\":1") &&
+      op.contains("\"rewritten_files\":1") &&
+      op.contains(s"\"added_files\":$added"), op)
+    assert(spark.sql("SELECT count(*) FROM grl.xgfna WHERE tag = 'm'")
+      .head().getLong(0) == 2)
+    assert(spark.sql("SELECT count(*) FROM grl.xgfna").head()
+      .getLong(0) == 400)
+    spark.catalog.dropTempView("xgfna_src")
+  }
+
   test("Spark-upgrade pins: the row-level protocol classes and plan " +
       "shapes WriteBridge/GraftRowLevel depend on") {
     // fail DESCRIPTIVELY on a Spark upgrade that moves the machinery
@@ -366,6 +408,23 @@ class RowLevelSpec extends SparkSpec {
       .columns.toSeq == Seq("k", "v"))
     spark.sql("DROP TABLE grl.mse")
     spark.catalog.dropTempView("mse_src")
+  }
+
+  test("a row-level write whose task throws leaves data/ with the same " +
+      "files as before") {
+    val root = freshTable("boom")
+    def entries = new java.io.File(root, "data").list.toSet
+    val before = entries
+    spark.udf.register("rl_boom", (k: Long) => {
+      if (k == 350L) throw new IllegalStateException("boom")
+      k
+    })
+    intercept[Exception](
+      spark.sql("UPDATE grl.boom SET v = rl_boom(k) WHERE k > 0"))
+    assert(entries == before)
+    assert(VersionedTable.versions(spark, root).size == 4)
+    assert(spark.sql("SELECT sum(v) FROM grl.boom").head().getLong(0) ==
+      (1L to 400L).map(_ * 2).sum)
   }
 
   test("row-level commits are ordinary history entries: vacuum-able, " +

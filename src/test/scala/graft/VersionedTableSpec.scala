@@ -161,8 +161,10 @@ class VersionedTableSpec extends SparkSpec {
     val changes = entries("_changes")
     val stage = s"$root/.rlstage-spec"
     Seq((9L, "z")).toDF("k", "v").coalesce(1).write.parquet(stage)
-    val written = new java.io.File(stage).listFiles.map(_.getPath)
-      .filter(_.endsWith(".parquet")).toSeq
+    val written = new java.io.File(stage).listFiles
+      .filter(_.getName.endsWith(".parquet")).toSeq
+      .map(fl => org.apache.spark.sql.graft.WrittenFile(
+        fl.toURI.toString, fl.length, fl.lastModified, 1L))
     val e = intercept[IllegalArgumentException](VersionedTable.commitReplace(
       spark, root, scanned, written))
     assert(e.getMessage.contains("row-level commit conflict"))
@@ -923,20 +925,22 @@ class VersionedTableSpec extends SparkSpec {
     }
   }
 
-  /** The SQL executions `body` runs, in order. Listener delivery is
-    * async: a marked action after `body` shows when all have arrived. */
+  /** The SQL executions `body` runs, in order, each with the name of
+    * the action that ran it. Listener delivery is async: a marked action
+    * after `body` shows when all have arrived. */
   private def executions(body: => Unit)
-      : Seq[org.apache.spark.sql.execution.QueryExecution] = {
+      : Seq[(String, org.apache.spark.sql.execution.QueryExecution)] = {
     import org.apache.spark.sql.execution.QueryExecution
-    val seen = scala.collection.mutable.ArrayBuffer.empty[QueryExecution]
+    val seen =
+      scala.collection.mutable.ArrayBuffer.empty[(String, QueryExecution)]
     val l = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
-        seen.synchronized { seen += qe }
+        seen.synchronized { seen += f -> qe }
       override def onFailure(f: String, qe: QueryExecution,
-          e: Exception): Unit = seen.synchronized { seen += qe }
+          e: Exception): Unit = seen.synchronized { seen += f -> qe }
     }
-    def isMark(qe: QueryExecution) =
-      qe.analyzed.toString.contains("executions_end_mark")
+    def isMark(e: (String, QueryExecution)) =
+      e._2.analyzed.toString.contains("executions_end_mark")
     spark.listenerManager.register(l)
     try {
       body
@@ -964,16 +968,16 @@ class VersionedTableSpec extends SparkSpec {
     val merge = executions(VersionedTable.merge(src, root, Seq("k"),
       matchedDelete = Some(col("src_v") < 0),
       matchedUpdate = Map("v" -> col("src_v"))))
-    assert(merge.size == 2, merge.map(_.analyzed.nodeName))
-    val writes = merge.filter(_.analyzed.toString
-      .contains("InsertIntoHadoopFsRelationCommand"))
-    assert(writes.size == 1, merge.map(_.analyzed.nodeName))
+    assert(merge.size == 2, merge.map(_._1))
+    // the lake's writer runs each write as one execution of this name
+    val writes = merge.collect { case ("graft lake write", qe) => qe }
+    assert(writes.size == 1, merge.map(_._1))
     val joins = writes.head.optimizedPlan.collect { case j: Join => j }
     assert(joins.size == 1 && joins.head.joinType.sql == "FULL OUTER",
       joins.map(_.joinType))
     val delete = executions(
       VersionedTable.deleteWhere(spark, root, col("g") === 1L))
-    assert(delete.size == 2, delete.map(_.analyzed.nodeName))
+    assert(delete.size == 2, delete.map(_._1))
     val feedDf = VersionedTable.changeFeed(spark, root, Seq("k"), v0)
     assert(feedDf.queryExecution.optimizedPlan
       .collect { case j: Join => j }.size == 1,
